@@ -148,6 +148,9 @@ object Bench {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     }
+    // a compact pointer to the full JSON first, so a capture that
+    // truncates the long contract line can still find every figure
+    println(s"""{"full":"${out.toAbsolutePath}","total":$total,"nqueries":${results.size}}""")
     // contract line LAST: the driver parses stdout's final line
     println(contract)
     spark.stop()

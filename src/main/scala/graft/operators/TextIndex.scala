@@ -42,8 +42,14 @@ object TextIndex {
   private val FpScale = 22000L
 
   /** One driver-side row of index metadata: corpus stats aggregated
-   *  across append generations, plus the persisted bucket count. */
-  private case class IndexStats(nDocs: Long, totTokens: Long, buckets: Int)
+   *  across append generations, plus the persisted bucket count (None for
+   *  an index that persists none — its callers pass explicit buckets). */
+  private case class IndexStats(nDocs: Long, totTokens: Long, buckets: Option[Int]) {
+    def bucketCount(path: String): Int = buckets.getOrElse(throw new IllegalArgumentException(
+      s"index at $path persists no bucket count (neither in stats nor " +
+        "in a legacy meta/ directory) — pass an explicit buckets " +
+        "argument or rebuild the index"))
+  }
 
   /**
    * Read the index's stats table ONCE (it is needed driver-side anyway:
@@ -53,7 +59,7 @@ object TextIndex {
    * a second tiny parquet read (footer + job) on EVERY query/append.
    * Legacy layout (pre-r12 `meta/` directory) is still read; an index
    * with neither fails with an actionable message instead of a raw
-   * parquet path error downstream.
+   * parquet path error downstream, but only where the count is needed.
    */
   private def readStats(spark: SparkSession, path: String): IndexStats = {
     val raw = spark.read.parquet(s"$path/stats")
@@ -65,19 +71,15 @@ object TextIndex {
       sum(col("tot_tokens")).as("tot_tokens"),
       max(col("buckets")).as("buckets")).collect()(0)
     val b =
-      if (!r.isNullAt(2)) r.getInt(2)
+      if (!r.isNullAt(2)) Some(r.getInt(2))
       else scala.util.Try(
-        spark.read.parquet(s"$path/meta").collect()(0).getAs[Int]("buckets"))
-        .getOrElse(throw new IllegalArgumentException(
-          s"index at $path persists no bucket count (neither in stats nor " +
-            "in a legacy meta/ directory) — pass an explicit buckets " +
-            "argument or rebuild the index"))
+        spark.read.parquet(s"$path/meta").collect()(0).getAs[Int]("buckets")).toOption
     IndexStats(r.getLong(0), r.getLong(1), b)
   }
 
   private def resolveBuckets(spark: SparkSession, path: String, buckets: Int): Int = {
     require(buckets >= 0, "buckets must be positive (or 0 = read from the index stats)")
-    if (buckets == 0) readStats(spark, path).buckets else buckets
+    if (buckets == 0) readStats(spark, path).bucketCount(path) else buckets
   }
 
   /** Build the index at `path` from scratch (overwrites). `buckets = 0`
@@ -174,10 +176,9 @@ object TextIndex {
     // resolves it from either layout (including a legacy src whose count
     // only lives in meta/). A src that persists NO count — a pre-meta
     // index whose callers pass explicit buckets everywhere — still
-    // compacts; its dst then reports the actionable readStats error on
-    // a buckets=0 read instead of the opaque parquet path error the old
-    // silent Try produced.
-    val srcBuckets = scala.util.Try(readStats(spark, src).buckets).toOption
+    // compacts; its dst then reports the actionable missing-count error
+    // on a buckets=0 read, and explicit-buckets reads keep working.
+    val srcBuckets = readStats(spark, src).buckets
     spark.read.parquet(s"$src/postings")
       .repartition(col("bucket")).write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dst/postings")
@@ -203,14 +204,14 @@ object TextIndex {
       buckets: Int = 0): DataFrame = {
     require(queries.nonEmpty, "at least one query is required")
     require(k > 0, "k must be positive")
+    require(buckets >= 0, "buckets must be positive (or 0 = read from the index stats)")
     // one metadata read serves both the bucket count (drives the
     // client-side probe hashing) and the corpus stats (n_docs /
     // tot_tokens enter the scoring as LITERALS — the former stats
     // crossJoin was a second read of the same table plus a broadcast
     // on every query)
     val st = readStats(spark, path)
-    val b = if (buckets == 0) st.buckets else buckets
-    require(buckets >= 0, "buckets must be positive (or 0 = read from the index stats)")
+    val b = if (buckets == 0) st.bucketCount(path) else buckets
     def termsOf(q: String): Seq[String] =
       q.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+")
         .filter(_.nonEmpty).distinct.toSeq

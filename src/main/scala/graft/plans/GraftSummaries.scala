@@ -29,8 +29,8 @@ object GraftSummaries {
       sketchCol: String,
       definition: Option[DataFrame] = None,
       countCol: Option[String] = None): Unit =
-    SummaryCatalog.registerDistinctSummary(
-      basePath, summary, keyCols, valueCol, sketchCol, definition, countCol)
+    SummaryCatalog.register(
+      basePath, summary, keyCols, valueCol, sketchCol, "distinct", definition, countCol)
 
   /** `summary` = SELECT keys..., approx_percentile_accumulate(valueCol) AS sketchCol. */
   def registerQuantileSummary(
@@ -41,8 +41,8 @@ object GraftSummaries {
       sketchCol: String,
       definition: Option[DataFrame] = None,
       countCol: Option[String] = None): Unit =
-    SummaryCatalog.registerQuantileSummary(
-      basePath, summary, keyCols, valueCol, sketchCol, definition, countCol)
+    SummaryCatalog.register(
+      basePath, summary, keyCols, valueCol, sketchCol, "quantile", definition, countCol)
 
   /** `summary` = SELECT keys..., approx_freqitems_accumulate(valueCol) AS sketchCol. */
   def registerFreqItemsSummary(
@@ -53,8 +53,8 @@ object GraftSummaries {
       sketchCol: String,
       definition: Option[DataFrame] = None,
       countCol: Option[String] = None): Unit =
-    SummaryCatalog.registerFreqItemsSummary(
-      basePath, summary, keyCols, valueCol, sketchCol, definition, countCol)
+    SummaryCatalog.register(
+      basePath, summary, keyCols, valueCol, sketchCol, "freq", definition, countCol)
 
   /** `summary` = SELECT keys..., tdigest_accumulate(valueCol) AS sketchCol. */
   def registerTDigestSummary(
@@ -65,8 +65,8 @@ object GraftSummaries {
       sketchCol: String,
       definition: Option[DataFrame] = None,
       countCol: Option[String] = None): Unit =
-    SummaryCatalog.registerTDigestSummary(
-      basePath, summary, keyCols, valueCol, sketchCol, definition, countCol)
+    SummaryCatalog.register(
+      basePath, summary, keyCols, valueCol, sketchCol, "tdigest", definition, countCol)
 
   def unregister(basePath: String): Unit = SummaryCatalog.unregister(basePath)
   def clear(): Unit = SummaryCatalog.clear()
@@ -83,7 +83,7 @@ object GraftSummaries {
    * One pass over the base table; the summary is keyCols-cardinality
    * rows of bounded sketch state — the 100 TB pre-aggregation pattern
    * where the raw table is scanned once and every later estimate reads
-   * only the summary. `kind`: "distinct" | "quantile" | "freq".
+   * only the summary. `kind`: "distinct" | "quantile" | "freq" | "tdigest".
    *
    * A per-key `count(*)` is stored alongside the sketch (column
    * `countCol`) for free — it rides the same aggregate pass — so MIXED
@@ -101,14 +101,7 @@ object GraftSummaries {
       sketchCol: String = "sketch",
       countCol: String = "n_rows"): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column is required")
-    val accumulate = kind match {
-      case "distinct" => "approx_count_distinct_accumulate"
-      case "quantile" => "approx_percentile_accumulate"
-      case "freq" => "approx_freqitems_accumulate"
-      case "tdigest" => "tdigest_accumulate"
-      case other => throw new IllegalArgumentException(
-        s"unknown summary kind '$other' (expected distinct|quantile|freq|tdigest)")
-    }
+    val (accumulate, _) = SummaryCatalog.functions(kind)
     import org.apache.spark.sql.functions.{call_function, col, count, lit}
     val base = spark.read.parquet(basePath)
     base.groupBy(keyCols.map(col): _*)
@@ -116,20 +109,8 @@ object GraftSummaries {
         count(lit(1)).as(countCol))
       .write.mode("overwrite").parquet(summaryPath)
     val summary = spark.read.parquet(summaryPath)
-    kind match {
-      case "distinct" =>
-        registerDistinctSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "quantile" =>
-        registerQuantileSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "freq" =>
-        registerFreqItemsSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "tdigest" =>
-        registerTDigestSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-    }
+    SummaryCatalog.register(basePath, summary, keyCols, valueCol, sketchCol, kind,
+      countCol = Some(countCol))
     summary
   }
 
@@ -161,18 +142,7 @@ object GraftSummaries {
       sketchCol: String = "sketch",
       countCol: String = "n_rows"): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column is required")
-    val (accumulate, combine) = kind match {
-      case "distinct" =>
-        ("approx_count_distinct_accumulate", "approx_count_distinct_combine")
-      case "quantile" =>
-        ("approx_percentile_accumulate", "approx_percentile_combine")
-      case "freq" =>
-        ("approx_freqitems_accumulate", "approx_freqitems_combine")
-      case "tdigest" =>
-        ("tdigest_accumulate", "tdigest_combine")
-      case other => throw new IllegalArgumentException(
-        s"unknown summary kind '$other' (expected distinct|quantile|freq|tdigest)")
-    }
+    val (accumulate, combine) = SummaryCatalog.functions(kind)
     import org.apache.spark.sql.functions.{call_function, col, count, lit, sum}
     val existing = spark.read.parquet(summaryPath)
     require(existing.columns.contains(countCol),
@@ -194,20 +164,8 @@ object GraftSummaries {
     require(fs.rename(new org.apache.hadoop.fs.Path(staging), target),
       s"failed to move refreshed summary into place at $summaryPath")
     val summary = spark.read.parquet(summaryPath)
-    kind match {
-      case "distinct" =>
-        registerDistinctSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "quantile" =>
-        registerQuantileSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "freq" =>
-        registerFreqItemsSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-      case "tdigest" =>
-        registerTDigestSummary(basePath, summary, keyCols, valueCol, sketchCol,
-          countCol = Some(countCol))
-    }
+    SummaryCatalog.register(basePath, summary, keyCols, valueCol, sketchCol, kind,
+      countCol = Some(countCol))
     summary
   }
 }

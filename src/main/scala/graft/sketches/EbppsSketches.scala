@@ -54,7 +54,7 @@ final class EbppsFacade(val k: Int) {
    * item probabilistically (fresh roll per call) — callers needing
    * determinism must arrange integer C (see class doc).
    */
-  def samples: Array[String] = gadget.getResult.iterator().asScala.toArray
+  def samples: Array[String] = EbppsFacade.itemsOf(gadget)
   def toBytes: Array[Byte] = gadget.toByteArray(SERDE)
 }
 
@@ -71,6 +71,10 @@ object EbppsFacade {
   /** Direct read-out of a serialized sketch image. */
   def readSample(bytes: Array[Byte]): (Long, Double, Array[String]) = {
     val sk = EbppsItemsSketch.heapify[String](Memory.wrap(bytes), SERDE)
-    (sk.getN, sk.getCumulativeWeight, sk.getResult.iterator().asScala.toArray)
+    (sk.getN, sk.getCumulativeWeight, itemsOf(sk))
   }
+
+  /** The realized sample; an empty sketch has no result list. */
+  private def itemsOf(sk: EbppsItemsSketch[String]): Array[String] =
+    Option(sk.getResult).map(_.iterator().asScala.toArray).getOrElse(Array.empty)
 }

@@ -82,6 +82,8 @@ sealed trait QuantileSketchFacade {
 
 object QuantileSketchFacade {
   private[sketches] val CRITERIA = QuantileSearchCriteria.EXCLUSIVE
+  private val ReqSerVer: Byte = 1
+  private val ReqFamilyId: Byte = 17
 
   def create(algo: QuantileAlgo, k: Int): QuantileSketchFacade = algo match {
     case QuantileAlgo.KLL => new KllFacade(KllFloatsSketch.newHeapInstance(k), k)
@@ -95,7 +97,13 @@ object QuantileSketchFacade {
     val mem = Memory.wrap(bytes)
     algo match {
       case QuantileAlgo.KLL => new KllFacade(KllFloatsSketch.heapify(mem), k)
-      case QuantileAlgo.REQ => new ReqFacade(ReqSketch.heapify(mem), k)
+      case QuantileAlgo.REQ =>
+        // ReqSketch.heapify checks serial version and family only in
+        // asserts, so it would read arbitrary bytes as item counts and
+        // allocate arrays of that size: reject a foreign header here
+        require(bytes.length >= 8 && bytes(1) == ReqSerVer && bytes(2) == ReqFamilyId,
+          "not a REQ sketch image")
+        new ReqFacade(ReqSketch.heapify(mem), k)
       case QuantileAlgo.MERGEABLE =>
         new MergeableFacade(UpdateDoublesSketch.heapify(mem), k)
     }

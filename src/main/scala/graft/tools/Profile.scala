@@ -64,7 +64,7 @@ object Profile {
           if (sr > 1000000L || sw > 1000000L || durMs > 200L) {
             println(f"  [stage ${si.stageId}%4d] tasks=${si.numTasks}%4d " +
               f"ms=$durMs%5d shufR=${sr / 1e6}%8.2f MB shufW=${sw / 1e6}%8.2f MB " +
-              si.name.linesIterator.next())
+              si.name.linesIterator.nextOption().getOrElse(""))
           }
         }
       }

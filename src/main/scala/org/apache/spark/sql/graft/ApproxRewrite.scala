@@ -52,7 +52,7 @@ case class ApproxCountDistinctRewriteRule(spark: SparkSession)
       return plan
     }
     val impl = GraftConfEntries.getString(GraftConfEntries.APPROX_COUNT_DISTINCT_IMPL)
-    val (algo, lgK) = DistinctParams.resolve(impl)
+    val family = DistinctFamily.forAlgo(impl)
     plan.transform {
       case agg: Aggregate =>
         agg.transformExpressionsUp {
@@ -65,8 +65,8 @@ case class ApproxCountDistinctRewriteRule(spark: SparkSession)
             // keep the AggregateExpression shell (mode, resultId) so the
             // aggregate's output attribute ids and LongType stay intact
             ae.copy(
-              aggregateFunction = ApproxCountDistinctAgg(
-                child, algo, lgK, "approx_count_distinct_ex"),
+              aggregateFunction =
+                SketchOneShot(Seq(child), family, "approx_count_distinct_ex"),
               isDistinct = false)
         }
     }

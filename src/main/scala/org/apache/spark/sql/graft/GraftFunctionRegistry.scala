@@ -1,5 +1,5 @@
 /**
- * Registration of the 67 graft SQL functions — the reference's 18 sketch
+ * Registration of the 92 graft SQL functions — the reference's 18 sketch
  * functions (name surface: shims.scala:32-56) plus the text/vector
  * pipeline primitives. Three mechanisms, mirroring the reference:
  *   1. `SparkSessionExtensions.injectFunction` via [[graft.GraftExtensions]]
@@ -88,8 +88,7 @@ object GraftFunctionRegistry {
         "SELECT _FUNC_(col, array(0.5, 0.95)) FROM VALUES (0), (1), (2), (10) AS tab(col)"
           -> "[1.0,10.0]"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxPercentileAgg(args(0), args(1), a, k, "approx_percentile_ex")
+      SketchOneShot(args, QuantileFamily.fromConf(), "approx_percentile_ex")
     },
     fd("approx_percentile_kll",
       "_FUNC_(col, percentage) - Returns the approximate percentile(s) of `col` via the " +
@@ -98,8 +97,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a numeric column", pctArg),
       Seq("SELECT _FUNC_(col, 0.5) FROM VALUES (0), (1), (2) AS tab(col)" -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolve("KLL")
-      ApproxPercentileAgg(args(0), args(1), a, k, "approx_percentile_kll")
+      SketchOneShot(args, QuantileFamily.forAlgo("KLL"), "approx_percentile_kll")
     },
     fd("approx_percentile_req",
       "_FUNC_(col, percentage) - Returns the approximate percentile(s) of `col` via the " +
@@ -109,8 +107,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a numeric column", pctArg),
       Seq("SELECT _FUNC_(col, 0.5) FROM VALUES (0), (1), (2) AS tab(col)" -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolve("REQ")
-      ApproxPercentileAgg(args(0), args(1), a, k, "approx_percentile_req")
+      SketchOneShot(args, QuantileFamily.forAlgo("REQ"), "approx_percentile_req")
     },
     fd("approx_percentile_mergeable",
       "_FUNC_(col, percentage) - Returns the approximate percentile(s) of `col` via the " +
@@ -120,8 +117,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a numeric column", pctArg),
       Seq("SELECT _FUNC_(col, 0.5) FROM VALUES (0), (1), (2) AS tab(col)" -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolve("MERGEABLE")
-      ApproxPercentileAgg(args(0), args(1), a, k, "approx_percentile_mergeable")
+      SketchOneShot(args, QuantileFamily.forAlgo("MERGEABLE"), "approx_percentile_mergeable")
     },
     fd("approx_percentile_accumulate",
       "_FUNC_(col) - Aggregates numeric `col` into a serialized quantile sketch (BINARY, " +
@@ -131,8 +127,7 @@ object GraftFunctionRegistry {
       Seq("SELECT approx_percentile_estimate(_FUNC_(col), 0.5) FROM VALUES (0), (1), (2) AS tab(col)"
         -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxPercentileAccumulate(args(0), a, k)
+      SketchAccumulate(args, QuantileFamily.fromConf(), "approx_percentile_accumulate")
     },
     fd("approx_percentile_combine",
       "_FUNC_(sketch) - Merges serialized quantile sketches into one (BINARY). Corrupt " +
@@ -143,8 +138,7 @@ object GraftFunctionRegistry {
         "(SELECT approx_percentile_accumulate(col) s FROM VALUES (0), (1), (2) tab(col) GROUP BY col % 2)")
         -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxPercentileCombine(args(0), a, k)
+      SketchCombine(args(0), QuantileFamily.fromConf(), "approx_percentile_combine")
     },
     fd("approx_percentile_estimate",
       "_FUNC_(sketch, percentage) - Returns the percentile(s) stored in a serialized " +
@@ -154,8 +148,7 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(approx_percentile_accumulate(col), 0.5) FROM VALUES (0), (1), (2) AS tab(col)"
         -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxPercentileEstimate(args(0), args(1), a, k)
+      ApproxPercentileEstimate(args(0), args(1), QuantileFamily.fromConf())
     },
     fd("approx_pmf_estimate",
       "_FUNC_(sketch[, numSplits]) - Returns the probability mass function over " +
@@ -166,9 +159,8 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(approx_percentile_accumulate(col), 2) FROM VALUES (0), (1), (2), (3) AS tab(col)"
         -> "[0.5,0.5]"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
       val numSplits = if (args.length == 2) args(1) else Literal(9)
-      ApproxPmfEstimate(args(0), numSplits, a, k)
+      ApproxPmfEstimate(args(0), numSplits, QuantileFamily.fromConf())
     },
     fd("approx_cdf_estimate",
       "_FUNC_(sketch[, numSplits]) - Returns the cumulative distribution over " +
@@ -180,9 +172,8 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(approx_percentile_accumulate(col), 2) FROM VALUES (0), (1), (2), (3) AS tab(col)"
         -> "[0.5,1.0]"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
       val numSplits = if (args.length == 2) args(1) else Literal(9)
-      ApproxCdfEstimate(args(0), numSplits, a, k)
+      ApproxCdfEstimate(args(0), numSplits, QuantileFamily.fromConf())
     },
     fd("approx_rank_estimate",
       "_FUNC_(sketch, value) - Returns the normalized rank of `value` (fraction of " +
@@ -192,8 +183,7 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(approx_percentile_accumulate(col), 2.0) FROM VALUES (0), (1), (2), (3) AS tab(col)"
         -> "0.5"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxRankEstimate(args(0), args(1), a, k)
+      ApproxRankEstimate(args(0), args(1), QuantileFamily.fromConf())
     },
     fd("approx_histogram_estimate",
       "_FUNC_(sketch, splits) - Returns the PMF of a serialized quantile sketch " +
@@ -207,8 +197,7 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(approx_percentile_accumulate(col), array(1.0D, 2.0D)) " +
         "FROM VALUES (0), (1), (2), (3) AS tab(col)" -> "[0.25,0.25,0.5]"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxHistogramEstimate(args(0), args(1), a, k)
+      ApproxHistogramEstimate(args(0), args(1), QuantileFamily.fromConf())
     },
     fd("approx_ks_distance",
       "_FUNC_(sketch_a, sketch_b) - Returns the two-sample Kolmogorov-Smirnov " +
@@ -222,8 +211,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT _FUNC_(approx_percentile_accumulate(a), approx_percentile_accumulate(b)) " +
         "FROM VALUES (0, 10), (1, 11) AS tab(a, b)") -> "1.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxKsDistance(args(0), args(1), a, k)
+      ApproxKsDistance(args(0), args(1), QuantileFamily.fromConf())
     },
     fd("approx_emd_distance",
       "_FUNC_(sketch_a, sketch_b) - Returns the 1-Wasserstein (earth mover's) " +
@@ -238,8 +226,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT _FUNC_(approx_percentile_accumulate(a), approx_percentile_accumulate(b)) " +
         "FROM VALUES (0, 10), (1, 11) AS tab(a, b)") -> "10.0"),
       "agg_funcs") { args =>
-      val (a, k) = QuantileParams.resolveDefault()
-      ApproxEmdDistance(args(0), args(1), a, k)
+      ApproxEmdDistance(args(0), args(1), QuantileFamily.fromConf())
     },
     // --- frequent items ------------------------------------------------
     fd("approx_freqitems",
@@ -251,7 +238,7 @@ object GraftFunctionRegistry {
       Seq("SELECT inline(_FUNC_(col)) FROM VALUES ('a'), ('a'), ('b') AS tab(col)"
         -> "a\t2\n       b\t1"),
       "agg_funcs") { args =>
-      ApproxFreqItemsAgg(args(0), FreqParams.resolveMaxMapSize())
+      SketchOneShot(args, FreqFamily.fromConf(), "approx_freqitems")
     },
     fd("approx_freqitems_accumulate",
       "_FUNC_(col) - Aggregates string `col` into a serialized frequent-items sketch " +
@@ -261,7 +248,7 @@ object GraftFunctionRegistry {
       Seq("SELECT inline(approx_freqitems_estimate(_FUNC_(col))) FROM VALUES ('a'), ('a') AS tab(col)"
         -> "a\t2"),
       "agg_funcs") { args =>
-      ApproxFreqItemsAccumulate(args(0), FreqParams.resolveMaxMapSize())
+      SketchAccumulate(args, FreqFamily.fromConf(), "approx_freqitems_accumulate")
     },
     fd("approx_freqitems_combine",
       "_FUNC_(sketch) - Merges serialized frequent-items sketches into one (BINARY).",
@@ -271,7 +258,7 @@ object GraftFunctionRegistry {
         "(SELECT approx_freqitems_accumulate(col) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)")
         -> "a\t1\n       b\t1"),
       "agg_funcs") { args =>
-      ApproxFreqItemsCombine(args(0), FreqParams.resolveMaxMapSize())
+      SketchCombine(args(0), FreqFamily.fromConf(), "approx_freqitems_combine")
     },
     fd("approx_freqitems_estimate",
       "_FUNC_(sketch) - Returns the frequent items stored in a serialized frequent-items " +
@@ -292,8 +279,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a STRING or integral column"),
       Seq("SELECT _FUNC_(col) FROM VALUES (1), (1), (2) AS tab(col)" -> "2"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolveDefault()
-      ApproxCountDistinctAgg(args(0), a, lgK, "approx_count_distinct_ex")
+      SketchOneShot(args, DistinctFamily.fromConf(), "approx_count_distinct_ex")
     },
     fd("approx_count_distinct_cpc",
       "_FUNC_(col) - Returns the approximate distinct count of `col` via the CPC sketch " +
@@ -302,8 +288,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a STRING or integral column"),
       Seq("SELECT _FUNC_(col) FROM VALUES (1), (1), (2) AS tab(col)" -> "2"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolve("CPC")
-      ApproxCountDistinctAgg(args(0), a, lgK, "approx_count_distinct_cpc")
+      SketchOneShot(args, DistinctFamily.forAlgo("CPC"), "approx_count_distinct_cpc")
     },
     fd("approx_count_distinct_hll",
       "_FUNC_(col) - Returns the approximate distinct count of `col` via the HLL sketch " +
@@ -313,8 +298,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a STRING or integral column"),
       Seq("SELECT _FUNC_(col) FROM VALUES (1), (1), (2) AS tab(col)" -> "2"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolve("HLL")
-      ApproxCountDistinctAgg(args(0), a, lgK, "approx_count_distinct_hll")
+      SketchOneShot(args, DistinctFamily.forAlgo("HLL"), "approx_count_distinct_hll")
     },
     fd("approx_count_distinct_accumulate",
       "_FUNC_(col) - Aggregates string `col` into a serialized distinct-count sketch " +
@@ -324,8 +308,7 @@ object GraftFunctionRegistry {
       Seq("SELECT approx_count_distinct_estimate(_FUNC_(col)) FROM VALUES ('a'), ('b') AS tab(col)"
         -> "2"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolveDefault()
-      ApproxCountDistinctAccumulate(args(0), a, lgK)
+      SketchAccumulate(args, DistinctFamily.fromConf(), "approx_count_distinct_accumulate")
     },
     fd("approx_count_distinct_combine",
       "_FUNC_(sketch) - Merges serialized distinct-count sketches into one (BINARY).",
@@ -335,8 +318,7 @@ object GraftFunctionRegistry {
         "(SELECT approx_count_distinct_accumulate(col) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)")
         -> "2"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolveDefault()
-      ApproxCountDistinctCombine(args(0), a, lgK)
+      SketchCombine(args(0), DistinctFamily.fromConf(), "approx_count_distinct_combine")
     },
     fd("approx_count_distinct_estimate",
       "_FUNC_(sketch) - Returns the distinct count stored in a serialized distinct-count " +
@@ -345,8 +327,7 @@ object GraftFunctionRegistry {
       Seq(sketchArg),
       Seq("SELECT _FUNC_(approx_count_distinct_accumulate(col)) FROM VALUES ('a') AS tab(col)" -> "1"),
       "agg_funcs") { args =>
-      val (a, lgK) = DistinctParams.resolveDefault()
-      ApproxCountDistinctEstimate(args(0), a, lgK)
+      ApproxCountDistinctEstimate(args(0), DistinctFamily.fromConf())
     },
     // --- varopt weighted sampling (beyond the reference surface) ---------
     fd("varopt_sample",
@@ -361,7 +342,8 @@ object GraftFunctionRegistry {
       Seq("SELECT size(_FUNC_(col, w, 10)) FROM VALUES ('a', 2.0), ('b', 1.0) AS tab(col, w)"
         -> "2"),
       "agg_funcs") { args =>
-      VarOptSampleAgg(args(0), args(1), intLiteral("varopt_sample", "k", args(2)))
+      SketchOneShot(args.take(2), VarOptFamily(intLiteral("varopt_sample", "k", args(2))),
+        "varopt_sample")
     },
     fd("varopt_accumulate",
       "_FUNC_(col, weight, k) - Aggregates a weighted string column into a serialized " +
@@ -372,7 +354,8 @@ object GraftFunctionRegistry {
       Seq("SELECT varopt_estimate(_FUNC_(col, 1.0, 10)).n FROM VALUES ('a'), ('b') AS tab(col)"
         -> "2"),
       "agg_funcs") { args =>
-      VarOptAccumulate(args(0), args(1), intLiteral("varopt_accumulate", "k", args(2)))
+      SketchAccumulate(args.take(2), VarOptFamily(intLiteral("varopt_accumulate", "k", args(2))),
+        "varopt_accumulate")
     },
     fd("varopt_combine",
       "_FUNC_(sketch, k) - Merges serialized varopt sketches into one unbiased " +
@@ -383,7 +366,8 @@ object GraftFunctionRegistry {
         "(SELECT varopt_accumulate(col, 1.0, 10) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)")
         -> "2"),
       "agg_funcs") { args =>
-      VarOptCombine(args(0), intLiteral("varopt_combine", "k", args(1)))
+      SketchCombine(args(0), VarOptFamily(intLiteral("varopt_combine", "k", args(1))),
+        "varopt_combine")
     },
     fd("varopt_estimate",
       "_FUNC_(sketch) - Reads a serialized varopt sketch: struct<n: total stream " +
@@ -410,7 +394,8 @@ object GraftFunctionRegistry {
       Seq("SELECT sort_array(_FUNC_(col, 1.0, 10)) FROM VALUES ('a'), ('b') AS tab(col)"
         -> "[\"a\",\"b\"]"),
       "agg_funcs") { args =>
-      EbppsSampleAgg(args(0), args(1), intLiteral("ebpps_sample", "k", args(2)))
+      SketchOneShot(args.take(2), EbppsFamily(intLiteral("ebpps_sample", "k", args(2))),
+        "ebpps_sample")
     },
     fd("ebpps_accumulate",
       "_FUNC_(col, weight, k) - Aggregates a weighted string column into a serialized " +
@@ -421,7 +406,8 @@ object GraftFunctionRegistry {
       Seq("SELECT ebpps_estimate(_FUNC_(col, 1.0, 10)).n FROM VALUES ('a'), ('b') AS tab(col)"
         -> "2"),
       "agg_funcs") { args =>
-      EbppsAccumulate(args(0), args(1), intLiteral("ebpps_accumulate", "k", args(2)))
+      SketchAccumulate(args.take(2), EbppsFamily(intLiteral("ebpps_accumulate", "k", args(2))),
+        "ebpps_accumulate")
     },
     fd("ebpps_combine",
       "_FUNC_(sketch, k) - Merges serialized EBPPS sketches into one strict-PPS " +
@@ -432,7 +418,8 @@ object GraftFunctionRegistry {
         "(SELECT ebpps_accumulate(col, 1.0, 10) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)")
         -> "2"),
       "agg_funcs") { args =>
-      EbppsCombine(args(0), intLiteral("ebpps_combine", "k", args(1)))
+      SketchCombine(args(0), EbppsFamily(intLiteral("ebpps_combine", "k", args(1))),
+        "ebpps_combine")
     },
     fd("ebpps_estimate",
       "_FUNC_(sketch) - Reads a serialized EBPPS sketch: struct<n: total stream " +
@@ -456,7 +443,8 @@ object GraftFunctionRegistry {
       Seq("SELECT sort_array(_FUNC_(col, 10)) FROM VALUES ('a'), ('b') AS tab(col)"
         -> "[\"a\",\"b\"]"),
       "agg_funcs") { args =>
-      ReservoirSampleAgg(args(0), intLiteral("reservoir_sample", "k", args(1)))
+      SketchOneShot(args.take(1), ReservoirFamily(intLiteral("reservoir_sample", "k", args(1))),
+        "reservoir_sample")
     },
     fd("reservoir_accumulate",
       "_FUNC_(col, k) - Aggregates a string column into a serialized reservoir " +
@@ -466,7 +454,8 @@ object GraftFunctionRegistry {
       Seq("SELECT reservoir_estimate(_FUNC_(col, 10)).n FROM VALUES ('a'), ('b') AS tab(col)"
         -> "2"),
       "agg_funcs") { args =>
-      ReservoirAccumulate(args(0), intLiteral("reservoir_accumulate", "k", args(1)))
+      SketchAccumulate(args.take(1),
+        ReservoirFamily(intLiteral("reservoir_accumulate", "k", args(1))), "reservoir_accumulate")
     },
     fd("reservoir_combine",
       "_FUNC_(sketch, k) - Merges serialized reservoir sketches into one unbiased " +
@@ -477,7 +466,8 @@ object GraftFunctionRegistry {
         "(SELECT reservoir_accumulate(col, 10) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)")
         -> "2"),
       "agg_funcs") { args =>
-      ReservoirCombine(args(0), intLiteral("reservoir_combine", "k", args(1)))
+      SketchCombine(args(0), ReservoirFamily(intLiteral("reservoir_combine", "k", args(1))),
+        "reservoir_combine")
     },
     fd("reservoir_estimate",
       "_FUNC_(sketch) - Reads a serialized reservoir sketch: " +
@@ -498,7 +488,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a STRING or integral column"),
       Seq("SELECT theta_estimate(_FUNC_(col)) FROM VALUES ('a'), ('b'), ('a') AS tab(col)" -> "2"),
       "agg_funcs") { args =>
-      ThetaAccumulate(args(0), ThetaParams.resolveLgK())
+      SketchAccumulate(args, ThetaFamily.fromConf(), "theta_accumulate")
     },
     fd("theta_union",
       "_FUNC_(sketch) - Merges serialized theta sketches into their union (BINARY).",
@@ -507,7 +497,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT theta_estimate(_FUNC_(s)) FROM " +
         "(SELECT theta_accumulate(col) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)") -> "2"),
       "agg_funcs") { args =>
-      ThetaUnionAgg(args(0), ThetaParams.resolveLgK())
+      SketchCombine(args(0), ThetaFamily.fromConf(), "theta_union")
     },
     fd("theta_intersect",
       "_FUNC_(sketch) - Intersects serialized theta sketches (BINARY); NULL for an " +
@@ -517,7 +507,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT theta_estimate(_FUNC_(s)) FROM " +
         "(SELECT theta_accumulate(col) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)") -> "0"),
       "agg_funcs") { args =>
-      ThetaIntersectAgg(args(0), ThetaParams.resolveLgK())
+      SketchCombine(args(0), ThetaIntersection(GraftConf.thetaLgK), "theta_intersect")
     },
     fd("theta_a_not_b",
       "_FUNC_(a, b) - The theta difference sketch A \\ B of two serialized sketches " +
@@ -552,7 +542,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT theta_estimate(_FUNC_(theta_accumulate(a), theta_accumulate(b))) " +
         "FROM VALUES ('x', 'y') AS tab(a, b)") -> "2"),
       "agg_funcs") { args =>
-      ThetaUnionPair(args(0), args(1), ThetaParams.resolveLgK())
+      ThetaUnionPair(args(0), args(1), GraftConf.thetaLgK)
     },
     fd("theta_containment",
       "_FUNC_(a, b) - containment |A ∩ B| / |A| of two serialized theta sketches " +
@@ -593,7 +583,7 @@ object GraftFunctionRegistry {
         stringLiteral("tuple_accumulate", "mode", args(2))
       } else "sum"
       graft.sketches.TupleSketchFacade.parseMode(mode)
-      TupleAccumulate(args(0), args(1), mode, TupleParams.resolveLgK())
+      SketchAccumulate(args.take(2), TupleFamily.fromConf(mode), "tuple_accumulate")
     },
     fd("tuple_union",
       "_FUNC_(sketch[, mode]) - Merges serialized tuple sketches into their union " +
@@ -608,7 +598,7 @@ object GraftFunctionRegistry {
       "agg_funcs") { args =>
       val mode = if (args.length > 1) stringLiteral("tuple_union", "mode", args(1)) else "sum"
       graft.sketches.TupleSketchFacade.parseMode(mode)
-      TupleUnionAgg(args(0), mode, TupleParams.resolveLgK())
+      SketchCombine(args(0), TupleFamily.fromConf(mode), "tuple_union")
     },
     fd("tuple_intersect",
       "_FUNC_(sketch[, mode]) - Intersects serialized tuple sketches (BINARY); NULL " +
@@ -624,7 +614,7 @@ object GraftFunctionRegistry {
       "agg_funcs") { args =>
       val mode = if (args.length > 1) stringLiteral("tuple_intersect", "mode", args(1)) else "sum"
       graft.sketches.TupleSketchFacade.parseMode(mode)
-      TupleIntersectAgg(args(0), mode)
+      SketchCombine(args(0), TupleIntersection(mode), "tuple_intersect")
     },
     fd("tuple_a_not_b",
       "_FUNC_(a, b) - The tuple difference sketch A \\ B of two serialized tuple " +
@@ -655,7 +645,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a numeric column", pctArg),
       Seq("SELECT _FUNC_(col, 0.5) FROM VALUES (0.0), (1.0), (2.0) AS tab(col)" -> "1.0"),
       "agg_funcs") { args =>
-      ApproxPercentileTDigest(args(0), args(1), TDigestParams.resolveK())
+      SketchOneShot(args, TDigestFamily.fromConf(), "approx_percentile_tdigest")
     },
     fd("tdigest_accumulate",
       "_FUNC_(col) - Aggregates a numeric column into a serialized t-digest (BINARY), " +
@@ -665,7 +655,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT tdigest_estimate(_FUNC_(col), 0.5) FROM " +
         "VALUES (0.0), (1.0), (2.0) AS tab(col)") -> "1.0"),
       "agg_funcs") { args =>
-      TDigestAccumulate(args(0), TDigestParams.resolveK())
+      SketchAccumulate(args, TDigestFamily.fromConf(), "tdigest_accumulate")
     },
     fd("tdigest_combine",
       "_FUNC_(sketch) - Merges serialized t-digests into one digest (BINARY); digests " +
@@ -677,7 +667,7 @@ object GraftFunctionRegistry {
         "tdigest_accumulate(col) s FROM VALUES (0.0), (1.0), (2.0) tab(col) " +
         "GROUP BY col)") -> "1.0"),
       "agg_funcs") { args =>
-      TDigestCombine(args(0), TDigestParams.resolveK())
+      SketchCombine(args(0), TDigestFamily.fromConf(), "tdigest_combine")
     },
     fd("tdigest_estimate",
       "_FUNC_(sketch, rank) - The approximate quantile at normalized `rank` (in [0,1]) " +
@@ -719,8 +709,7 @@ object GraftFunctionRegistry {
         (1 until n).map(_.toDouble / n).toArray,
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType, containsNull = false))
-      val (a, k) = QuantileParams.resolve("KLL")
-      ApproxPercentileAgg(args(0), pcts, a, k, "approx_partition_bounds")
+      SketchOneShot(Seq(args(0), pcts), QuantileFamily.forAlgo("KLL"), "approx_partition_bounds")
     },
     fd("approx_percentile_str",
       "_FUNC_(col, percentage) - Returns the approximate percentile(s) of a STRING " +
@@ -731,7 +720,7 @@ object GraftFunctionRegistry {
       Seq("col" -> "a STRING column", pctArg),
       Seq("SELECT _FUNC_(col, 0.5) FROM VALUES ('a'), ('b'), ('c') AS tab(col)" -> "b"),
       "agg_funcs") { args =>
-      ApproxPercentileStr(args(0), args(1), GraftConf.quantileMergeableK)
+      SketchOneShot(args, StringQuantileFamily(GraftConf.quantileMergeableK), "approx_percentile_str")
     },
     fd("approx_partition_bounds_str",
       "_FUNC_(col, n) - Returns n-1 approximate split keys (ARRAY<STRING>) dividing a " +
@@ -752,7 +741,7 @@ object GraftFunctionRegistry {
         (1 until n).map(_.toDouble / n).toArray,
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType, containsNull = false))
-      ApproxPercentileStr(args(0), pcts, GraftConf.quantileMergeableK,
+      SketchOneShot(Seq(args(0), pcts), StringQuantileFamily(GraftConf.quantileMergeableK),
         "approx_partition_bounds_str")
     },
     fd("fdt_accumulate",
@@ -767,7 +756,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT fdt_topk(_FUNC_(array(s, id)), array(0), 1)[0].n_distinct FROM " +
         "VALUES ('a', 'x'), ('a', 'y'), ('a', 'y') AS tab(s, id)") -> "2"),
       "agg_funcs") { args =>
-      FdtAccumulate(args(0), TupleParams.resolveLgK())
+      SketchAccumulate(args, FdtFamily.fromConf(), "fdt_accumulate")
     },
     fd("fdt_union",
       "_FUNC_(sketch) - Merges serialized frequent-distinct-tuple sketches into " +
@@ -778,7 +767,7 @@ object GraftFunctionRegistry {
         "fdt_accumulate(array(v, v)) s FROM VALUES ('a'), ('b') tab(v) " +
         "GROUP BY v)") -> "a"),
       "agg_funcs") { args =>
-      FdtUnionAgg(args(0), TupleParams.resolveLgK())
+      SketchCombine(args(0), FdtFamily.fromConf(), "fdt_union")
     },
     fd("fdt_topk",
       "_FUNC_(sketch, indices, k) - The top-k dimension groups by estimated " +
@@ -810,7 +799,7 @@ object GraftFunctionRegistry {
         "VALUES ('a'), ('b') AS tab(col)") -> "true"),
       "agg_funcs") { args =>
       val (m, f) = bloomParams("bloom_accumulate", args)
-      BloomAccumulate(args(0), m, f)
+      SketchAccumulate(args.take(1), BloomFamily(m, f), "bloom_accumulate")
     },
     fd("bloom_union",
       "_FUNC_(sketch[, maxItems, fpp]) - Merges serialized BloomFilters (bitwise OR): " +
@@ -825,7 +814,7 @@ object GraftFunctionRegistry {
         "GROUP BY col)") -> "true"),
       "agg_funcs") { args =>
       val (m, f) = bloomParams("bloom_union", args)
-      BloomUnionAgg(args(0), m, f)
+      SketchCombine(args(0), BloomFamily(m, f), "bloom_union")
     },
     fd("bloom_intersect",
       "_FUNC_(sketch[, maxItems, fpp]) - Intersects serialized BloomFilters (bitwise " +
@@ -840,7 +829,7 @@ object GraftFunctionRegistry {
         -> "false"),
       "agg_funcs") { args =>
       val (m, f) = bloomParams("bloom_intersect", args)
-      BloomIntersectAgg(args(0), m, f)
+      SketchCombine(args(0), BloomIntersection(m, f), "bloom_intersect")
     },
     fd("bloom_might_contain",
       "_FUNC_(sketch, value) - TRUE if `value` may be in the filter, FALSE if it " +
@@ -914,7 +903,8 @@ object GraftFunctionRegistry {
       Seq(2),
       Seq("bloom" -> "a BINARY bloom filter from graft_bloom_agg",
         "value" -> "the value to probe (hashed the same way as at build)"),
-      Seq.empty,
+      Seq(("SELECT _FUNC_((SELECT graft_bloom_agg(c) FROM VALUES ('x') AS t(c)), 'y')")
+        -> "false"),
       "predicate_funcs") { args =>
       // NOT Spark's BloomFilterMightContain: its codegen breaks (Janino
       // cast-vs-subtraction ambiguity) when the probe side folds to a
@@ -1185,7 +1175,7 @@ object GraftFunctionRegistry {
       Seq("SELECT _FUNC_(v) FROM VALUES (array(1.0d, 0.0d)) AS tab(v)" ->
         "[1.0,0.0,0.0,0.0]"),
       "agg_funcs") { args =>
-      VecGramAgg(args(0))
+      SketchOneShot(args, GramFamily, "vec_gram_agg")
     },
     fd("fd_accumulate",
       "_FUNC_(vec[, ell]) - Aggregates ARRAY<DOUBLE> vectors into a serialized " +
@@ -1201,11 +1191,10 @@ object GraftFunctionRegistry {
       Seq(("SELECT fd_error_bound(_FUNC_(v, 8)) FROM " +
         "VALUES (array(1.0d, 0.0d)) AS tab(v)") -> "0.125"),
       "agg_funcs") { args =>
-      if (args.length == 1) {
-        FdAccumulate(args(0), Literal(GraftConf.fdEll), GraftConf.fdEll)
-      } else {
-        FdAccumulate(args(0), args(1), FdAccumulate.resolveEll(args(1)))
-      }
+      val (ellArg, ell) =
+        if (args.length == 1) (Literal(GraftConf.fdEll), GraftConf.fdEll)
+        else (args(1), FdFamily.resolveEll(args(1)))
+      SketchAccumulate(Seq(args(0), ellArg), FdFamily(ell), "fd_accumulate")
     },
     fd("fd_combine",
       "_FUNC_(sketch) - Merges serialized Frequent-Directions sketches into one " +
@@ -1216,7 +1205,7 @@ object GraftFunctionRegistry {
       Seq(("SELECT fd_error_bound(_FUNC_(s)) FROM (SELECT fd_accumulate(v, 8) s " +
         "FROM VALUES (array(1.0d, 0.0d)) tab(v) GROUP BY v)") -> "0.125"),
       "agg_funcs") { args =>
-      FdCombine(args(0))
+      SketchCombine(args(0), FdFamily(GraftConf.fdEll), "fd_combine")
     },
     fd("fd_gram_estimate",
       "_FUNC_(sketch) - The approximate Gram matrix B'B stored in a serialized " +

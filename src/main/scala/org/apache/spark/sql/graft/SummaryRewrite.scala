@@ -40,7 +40,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
 /**
  * One summary key. Plain keys are base columns stored under the same
@@ -56,19 +56,19 @@ case class KeySpec(
   def isPlain: Boolean = template.isEmpty
 }
 
-/** What a registered summary provides for one base table. `countCol`
- *  names a per-key `count(*)` column when the summary stores one
- *  ([[graft.plans.GraftSummaries.buildSummaryTable]] always does) —
- *  it lets MIXED aggregate lists (`sketch_agg(v), count(*)`) rewrite,
- *  the most common dashboard shape. */
+/** What a registered summary provides for one base table: the sketch
+ *  `family` its `_accumulate` froze, and the `combine` function that
+ *  merges its sketches. `countCol` names a per-key `count(*)` column when
+ *  the summary stores one ([[graft.plans.GraftSummaries.buildSummaryTable]]
+ *  always does) — it lets MIXED aggregate lists (`sketch_agg(v), count(*)`)
+ *  rewrite, the most common dashboard shape. */
 case class SummarySpec(
     basePath: String,
     keys: Seq[KeySpec],
     valueCol: String,
     sketchCol: String,
-    kind: String, // "distinct" | "quantile" | "freq"
-    algoName: String,
-    param: Int,
+    family: SketchFamily[_],
+    combine: String,
     summaryPlan: LogicalPlan,
     countCol: Option[String] = None)
 
@@ -77,85 +77,55 @@ object SummaryCatalog {
 
   val ENABLED_KEY = "spark.sql.graft.summaryRewrite.enabled"
 
+  /** A summary kind: the `_accumulate` that builds the sketch column, the
+   *  `_combine` that merges it, and the family `_accumulate` freezes from
+   *  the current session conf. */
+  private case class Kind(accumulate: String, combine: String, family: () => SketchFamily[_])
+
+  private val kinds = Map(
+    "distinct" -> Kind("approx_count_distinct_accumulate", "approx_count_distinct_combine",
+      () => DistinctFamily.fromConf()),
+    "quantile" -> Kind("approx_percentile_accumulate", "approx_percentile_combine",
+      () => QuantileFamily.fromConf()),
+    "freq" -> Kind("approx_freqitems_accumulate", "approx_freqitems_combine",
+      () => FreqFamily.fromConf()),
+    "tdigest" -> Kind("tdigest_accumulate", "tdigest_combine", () => TDigestFamily.fromConf()))
+
+  private def kind(name: String): Kind = kinds.getOrElse(name, throw new IllegalArgumentException(
+    s"unknown summary kind '$name' (expected distinct|quantile|freq|tdigest)"))
+
+  /** The (accumulate, combine) function names of summary kind `name`. */
+  def functions(name: String): (String, String) = {
+    val k = kind(name)
+    (k.accumulate, k.combine)
+  }
+
   /**
-   * Register `summary` (keys + one sketch column built by `*_accumulate`
-   * over `valueCol` of the base parquet table at `basePath`) for rewriting.
-   * Sketch algorithm/parameters are captured from the current session conf,
-   * matching what `_accumulate` froze into the summary. Pass the summary's
-   * defining query as `definition` when any key is a derived bucket (e.g.
-   * `window(ts, '1 day')`) so its expression can be matched against query
-   * groupings.
+   * Register `summary` (keys + one sketch column built by the `kindName`
+   * kind's `_accumulate` over `valueCol` of the base parquet table at
+   * `basePath`) for rewriting. Sketch algorithm/parameters are captured
+   * from the current session conf, matching what `_accumulate` froze into
+   * the summary. Pass the summary's defining query as `definition` when
+   * any key is a derived bucket (e.g. `window(ts, '1 day')`) so its
+   * expression can be matched against query groupings.
    */
-  def registerDistinctSummary(
+  def register(
       basePath: String,
       summary: DataFrame,
       keyCols: Seq[String],
       valueCol: String,
       sketchCol: String,
+      kindName: String,
       definition: Option[DataFrame] = None,
       countCol: Option[String] = None): Unit = {
-    val (algo, lgK) = DistinctParams.resolveDefault()
-    register(basePath, summary, keyCols, valueCol, sketchCol, "distinct", algo, lgK, definition,
-      countCol)
-  }
-
-  def registerQuantileSummary(
-      basePath: String,
-      summary: DataFrame,
-      keyCols: Seq[String],
-      valueCol: String,
-      sketchCol: String,
-      definition: Option[DataFrame] = None,
-      countCol: Option[String] = None): Unit = {
-    val (algo, k) = QuantileParams.resolveDefault()
-    register(basePath, summary, keyCols, valueCol, sketchCol, "quantile", algo, k, definition,
-      countCol)
-  }
-
-  def registerTDigestSummary(
-      basePath: String,
-      summary: DataFrame,
-      keyCols: Seq[String],
-      valueCol: String,
-      sketchCol: String,
-      definition: Option[DataFrame] = None,
-      countCol: Option[String] = None): Unit = {
-    val k = TDigestParams.resolveK()
-    register(basePath, summary, keyCols, valueCol, sketchCol, "tdigest", "TDIGEST", k,
-      definition, countCol)
-  }
-
-  def registerFreqItemsSummary(
-      basePath: String,
-      summary: DataFrame,
-      keyCols: Seq[String],
-      valueCol: String,
-      sketchCol: String,
-      definition: Option[DataFrame] = None,
-      countCol: Option[String] = None): Unit = {
-    val maxMapSize = FreqParams.resolveMaxMapSize()
-    register(basePath, summary, keyCols, valueCol, sketchCol, "freq", "MISRA_GRIES", maxMapSize,
-      definition, countCol)
-  }
-
-  private def register(
-      basePath: String,
-      summary: DataFrame,
-      keyCols: Seq[String],
-      valueCol: String,
-      sketchCol: String,
-      kind: String,
-      algo: String,
-      param: Int,
-      definition: Option[DataFrame],
-      countCol: Option[String]): Unit = {
+    val k = kind(kindName)
     countCol.foreach { c =>
       require(summary.columns.contains(c), s"summary has no count column named $c")
     }
     val keys = keySpecs(keyCols, definition)
     val plan = summary.queryExecution.analyzed
     specs.put(normalize(basePath),
-      SummarySpec(normalize(basePath), keys, valueCol, sketchCol, kind, algo, param, plan,
+      SummarySpec(normalize(basePath), keys, valueCol, sketchCol, k.family(), k.combine, plan,
         countCol))
   }
 
@@ -461,17 +431,19 @@ case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       if (derivedProj.isEmpty) filtered
       else Project(filtered.output ++ derivedProj, filtered)
     logInfo(s"graft summary rewrite: aggregate over ${spec.basePath} now reads the " +
-      s"registered ${spec.kind} summary")
+      s"registered ${spec.family.label} summary")
     Some(Aggregate(newGroupings, newAggExprs, newChild, None))
   }
 
-  /** One-shot agg -> estimate(combine(sketch)), iff params + domain line
-   *  up. `count(*)` (and `count(<non-null literal>)`) additionally maps
-   *  to `sum(countCol)` when the summary stores per-key row counts —
-   *  this is what lets the common `sketch_agg(v), count(*)` dashboard
-   *  list rewrite instead of falling back to the base scan. `count(col)`
-   *  does NOT map (it skips nulls row-by-row, which the stored total
-   *  cannot reproduce). */
+  /** One-shot agg -> estimate(combine(sketch)), iff the one-shot's family
+   *  (its frozen params) is the summary's, its value column is one
+   *  `_accumulate` takes as is (the same hash domain), and the estimate
+   *  has the one-shot's type. `count(*)` (and `count(<non-null literal>)`)
+   *  additionally maps to `sum(countCol)` when the summary stores per-key
+   *  row counts — this is what lets the common `sketch_agg(v), count(*)`
+   *  dashboard list rewrite instead of falling back to the base scan.
+   *  `count(col)` does NOT map (it skips nulls row-by-row, which the
+   *  stored total cannot reproduce). */
   private def rewriteFunction(
       fn: Expression,
       spec: SummarySpec,
@@ -486,34 +458,16 @@ case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       // groups always have >= 1 summary row, so the sum is never null
       Some(AggregateExpression(
         aggregate.Sum(countAttr.get), Complete, isDistinct = false))
-    case ApproxCountDistinctAgg(childAttr: AttributeReference, algo, lgK, _, _, _)
-        if spec.kind == "distinct" && childAttr.name == spec.valueCol &&
-          childAttr.dataType == StringType &&
-          algo == spec.algoName && lgK == spec.param =>
-      val combine = AggregateExpression(
-        ApproxCountDistinctCombine(sketchAttr, algo, lgK), Complete, isDistinct = false)
-      Some(ApproxCountDistinctEstimate(combine, algo, lgK))
-    case ApproxPercentileAgg(childAttr: AttributeReference, pct, algo, k, _, _, _)
-        if spec.kind == "quantile" && childAttr.name == spec.valueCol &&
-          childAttr.dataType == DoubleType && // estimate returns double: domains align
-          algo == spec.algoName && k == spec.param =>
-      val combine = AggregateExpression(
-        ApproxPercentileCombine(sketchAttr, algo, k), Complete, isDistinct = false)
-      Some(ApproxPercentileEstimate(combine, pct, algo, k))
-    case ApproxPercentileTDigest(childAttr: AttributeReference, pct, k, _, _)
-        if spec.kind == "tdigest" && childAttr.name == spec.valueCol &&
-          childAttr.dataType == DoubleType && k == spec.param &&
-          // tdigest_estimate is scalar-rank only; array percentages fall back
-          !pct.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-      val combine = AggregateExpression(
-        TDigestCombine(sketchAttr, k), Complete, isDistinct = false)
-      Some(TDigestEstimate(combine, pct))
-    case ApproxFreqItemsAgg(childAttr: AttributeReference, maxMapSize, _, _)
-        if spec.kind == "freq" && childAttr.name == spec.valueCol &&
-          childAttr.dataType == StringType && maxMapSize == spec.param =>
-      val combine = AggregateExpression(
-        ApproxFreqItemsCombine(sketchAttr, maxMapSize), Complete, isDistinct = false)
-      Some(ApproxFreqItemsEstimate(combine))
+    case oneShot: SketchOneShot[_] if oneShot.family == spec.family =>
+      oneShot.children.head match {
+        case value: AttributeReference if value.name == spec.valueCol &&
+            spec.family.inputTypes.head.acceptsType(value.dataType) =>
+          val combined = AggregateExpression(
+            SketchCombine(sketchAttr, spec.family, spec.combine), Complete, isDistinct = false)
+          spec.family.estimateFromSketch(combined, oneShot.children)
+            .filter(_.dataType == oneShot.dataType)
+        case _ => None
+      }
     case _ => None
   }
 }

@@ -21,19 +21,17 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
+import org.apache.datasketches.filters.bloomfilter.BloomFilter
 
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketches.{BloomIntersectionFacade, BloomSketchFacade, BloomUnionFacade}
 
 private[graft] object BloomParams {
+  val Label = "bloom filter"
   val DefaultMaxItems: Long = 100000L
   val DefaultFpp: Double = 0.01
 
@@ -49,207 +47,78 @@ private[graft] object BloomParams {
   }
 }
 
-/** `bloom_accumulate(col[, maxItems, fpp])` -> BINARY serialized filter. */
-case class BloomAccumulate(
-    child: Expression,
-    maxItems: Long,
-    fpp: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomUnionFacade] with ImplicitCastInputTypes {
+/** DataSketches bloom filters of string / long values: `bloom_accumulate`,
+ *  `bloom_union` (bitwise OR). */
+private[graft] case class BloomFamily(maxItems: Long, fpp: Double)
+  extends SketchFamily[BloomUnionFacade] {
 
-  override def prettyName: String = "bloom_accumulate"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(TypeCollection(StringType, LongType))
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
+  override def label: String = BloomParams.Label
+  override def create(): BloomUnionFacade = BloomUnionFacade.create(maxItems, fpp)
+  override def merge(buf: BloomUnionFacade, other: BloomUnionFacade): Unit = buf.merge(other)
+  override def combine(buf: BloomUnionFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: BloomUnionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): BloomUnionFacade =
+    BloomUnionFacade.fromBytes(maxItems, fpp, bytes)
 
-  @transient private lazy val updateOne: (BloomUnionFacade, Any) => Unit =
-    child.dataType match {
-      case StringType => (buf, v) => buf.update(v.asInstanceOf[UTF8String].toString)
-      case LongType => (buf, v) => buf.update(v.asInstanceOf[Long])
+  override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(StringType, LongType))
+  override def updater(types: Seq[DataType]): (BloomUnionFacade, Any, Any) => Unit =
+    types.head match {
+      case StringType => (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
+      case LongType => (buf, v, _) => buf.update(v.asInstanceOf[Long])
       case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
     }
-
-  override def createAggregationBuffer(): BloomUnionFacade =
-    BloomUnionFacade.create(maxItems, fpp)
-  override def update(buf: BloomUnionFacade, input: InternalRow): BloomUnionFacade = {
-    val v = child.eval(input)
-    if (v != null) updateOne(buf, v)
-    buf
-  }
-  override def merge(buf: BloomUnionFacade, other: BloomUnionFacade): BloomUnionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: BloomUnionFacade): Any = buf.toBytes
-  override def serialize(buf: BloomUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): BloomUnionFacade =
-    BloomUnionFacade.fromBytes(maxItems, fpp, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): BloomAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): BloomAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
 }
 
-/** `bloom_union(sketch[, maxItems, fpp])` -> BINARY bitwise-OR of filters. */
-case class BloomUnionAgg(
-    child: Expression,
-    maxItems: Long,
-    fpp: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomUnionFacade]
-  with ImplicitCastInputTypes with Logging {
+/** `bloom_intersect` (bitwise AND): null for an empty group. */
+private[graft] case class BloomIntersection(maxItems: Long, fpp: Double)
+  extends SketchFamily[BloomIntersectionFacade] {
 
-  override def prettyName: String = "bloom_union"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): BloomUnionFacade =
-    BloomUnionFacade.create(maxItems, fpp)
-  override def update(buf: BloomUnionFacade, input: InternalRow): BloomUnionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for bloom filter state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(buf: BloomUnionFacade, other: BloomUnionFacade): BloomUnionFacade = {
+  override def label: String = BloomParams.Label
+  override def create(): BloomIntersectionFacade = BloomIntersectionFacade.create(maxItems, fpp)
+  override def merge(buf: BloomIntersectionFacade, other: BloomIntersectionFacade): Unit =
     buf.merge(other)
-    buf
-  }
-  override def eval(buf: BloomUnionFacade): Any = buf.toBytes
-  override def serialize(buf: BloomUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): BloomUnionFacade =
-    BloomUnionFacade.fromBytes(maxItems, fpp, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): BloomUnionAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): BloomUnionAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `bloom_intersect(sketch[, maxItems, fpp])` -> BINARY bitwise-AND;
- *  null for an empty group. */
-case class BloomIntersectAgg(
-    child: Expression,
-    maxItems: Long,
-    fpp: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomIntersectionFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "bloom_intersect"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): BloomIntersectionFacade =
-    BloomIntersectionFacade.create(maxItems, fpp)
-  override def update(
-      buf: BloomIntersectionFacade, input: InternalRow): BloomIntersectionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.intersect(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for bloom filter state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(
-      buf: BloomIntersectionFacade,
-      other: BloomIntersectionFacade): BloomIntersectionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: BloomIntersectionFacade): Any = buf.toResultBytes
-  override def serialize(buf: BloomIntersectionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): BloomIntersectionFacade =
+  override def combine(buf: BloomIntersectionFacade, bytes: Array[Byte]): Unit =
+    buf.intersect(bytes)
+  override def result(buf: BloomIntersectionFacade): Array[Byte] = buf.toResultBytes
+  override def toBytes(buf: BloomIntersectionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): BloomIntersectionFacade =
     BloomIntersectionFacade.fromBytes(maxItems, fpp, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): BloomIntersectAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): BloomIntersectAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
 }
 
 /** Scalar `bloom_might_contain(sketch, value)` -> BOOLEAN; null on corrupt
  *  bytes. String and long values hash as the DataSketches standard, so
  *  filters built by OTHER DataSketches consumers answer correctly. */
 case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with BinaryLike[Expression] {
 
   override def prettyName: String = "bloom_might_contain"
+  override protected def label: String = BloomParams.Label
   override def inputTypes: Seq[AbstractDataType] =
     Seq(BinaryType, TypeCollection(StringType, LongType))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = BooleanType
 
-  @transient private[this] lazy val queryOne: (Any, Any) => Any = {
-    val q: (org.apache.datasketches.filters.bloomfilter.BloomFilter, Any) => Boolean =
-      right.dataType match {
-        case StringType => (f, v) => f.query(v.asInstanceOf[UTF8String].toString)
-        case LongType => (f, v) => f.query(v.asInstanceOf[Long])
-        case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-      }
-    // The filter side is almost always a plan constant (broadcast scalar
-    // subquery / literal), so Spark hands the SAME byte array every row:
-    // memo the zero-copy wrap by reference identity. One-element memo is
-    // deliberately tiny — a varying filter column still works, just
-    // re-wraps (no copy either way; wrap is read-only over the bytes).
-    var lastBytes: Array[Byte] = null
-    var lastFilter: org.apache.datasketches.filters.bloomfilter.BloomFilter = null
-    (bytesRaw, v) =>
-      try {
-        val bytes = bytesRaw.asInstanceOf[Array[Byte]]
-        if (bytes ne lastBytes) {
-          lastFilter = BloomSketchFacade.wrapBytes(bytes)
-          lastBytes = bytes
-        }
-        Boolean.box(q(lastFilter, v))
-      } catch {
-        case NonFatal(_) =>
-          logWarning("Illegal input bytes for bloom filter state")
-          null
-      }
-  }
+  @transient private[this] lazy val query: (BloomFilter, Any) => Boolean =
+    right.dataType match {
+      case StringType => (f, v) => f.query(v.asInstanceOf[UTF8String].toString)
+      case LongType => (f, v) => f.query(v.asInstanceOf[Long])
+      case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+    }
 
-  override def nullSafeEval(bytes: Any, v: Any): Any = queryOne(bytes, v)
+  // The filter side is almost always a plan constant (broadcast scalar
+  // subquery / literal), so Spark hands the SAME byte array every row:
+  // memo the zero-copy wrap by reference identity. One-element memo is
+  // deliberately tiny — a varying filter column still works, just
+  // re-wraps (no copy either way; wrap is read-only over the bytes).
+  @transient private[this] var lastBytes: Array[Byte] = _
+  @transient private[this] var lastFilter: BloomFilter = _
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomq", queryOne, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (b, v) =>
-      s"""
-         |Object $result = $ref.apply($b, $v);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (Boolean) $result;
-         |}
-       """.stripMargin)
+  override protected def estimate(bytesRaw: Any, v: Any): Any = {
+    val bytes = bytesRaw.asInstanceOf[Array[Byte]]
+    if (bytes ne lastBytes) {
+      lastFilter = BloomSketchFacade.wrapBytes(bytes)
+      lastBytes = bytes
+    }
+    query(lastFilter, v)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -271,47 +140,24 @@ case class BloomMightContain(left: Expression, right: Expression)
  * [[BloomMightContain]].
  */
 case class SparkBloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with BinaryLike[Expression] {
 
   override def prettyName: String = "graft_might_contain"
+  override protected def label: String = BloomParams.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = BooleanType
 
-  @transient private[this] lazy val queryOne: (Any, Any) => Any = {
-    var lastBytes: Array[Byte] = null
-    var lastFilter: org.apache.spark.util.sketch.BloomFilter = null
-    (bytesRaw, v) =>
-      try {
-        val bytes = bytesRaw.asInstanceOf[Array[Byte]]
-        if (bytes ne lastBytes) {
-          lastFilter = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-          lastBytes = bytes
-        }
-        Boolean.box(lastFilter.mightContainLong(v.asInstanceOf[Long]))
-      } catch {
-        case NonFatal(_) =>
-          logWarning("Illegal input bytes for bloom filter state")
-          null
-      }
-  }
+  @transient private[this] var lastBytes: Array[Byte] = _
+  @transient private[this] var lastFilter: org.apache.spark.util.sketch.BloomFilter = _
 
-  override def nullSafeEval(bytes: Any, v: Any): Any = queryOne(bytes, v)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomq", queryOne, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (b, v) =>
-      s"""
-         |Object $result = $ref.apply($b, java.lang.Long.valueOf($v));
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (Boolean) $result;
-         |}
-       """.stripMargin)
+  override protected def estimate(bytesRaw: Any, v: Any): Any = {
+    val bytes = bytesRaw.asInstanceOf[Array[Byte]]
+    if (bytes ne lastBytes) {
+      lastFilter = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bytes))
+      lastBytes = bytes
+    }
+    lastFilter.mightContainLong(v.asInstanceOf[Long])
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -10,209 +10,78 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.conf.GraftConf
 import graft.sketches.{DistinctAlgo, DistinctSketchFacade}
 
-private[graft] object DistinctParams {
-  def resolve(algoName: String): (String, Int) = {
+/**
+ * CPC / HLL distinct counting. `_accumulate` takes STRING only (cast
+ * integral columns to match the hash domain); the one-shot declares
+ * `TypeCollection(StringType, LongType)` in that order deliberately — it
+ * replicates the reference (distinctCntSketches.scala:161), where
+ * implicit coercion resolves sub-long integrals to STRING first; freq
+ * items uses the opposite order (freqItemSketches.scala:173), also
+ * replicated. Estimates are unaffected (cardinality is type-agnostic),
+ * but sketch images only merge with images built from the same domain.
+ */
+private[graft] case class DistinctFamily(algoName: String, lgK: Int)
+  extends SketchFamily[DistinctSketchFacade] {
+
+  @transient private lazy val algo = DistinctAlgo.fromString(algoName)
+
+  override def label: String = s"$algoName distinct count sketch"
+  override def create(): DistinctSketchFacade = DistinctSketchFacade.create(algo, lgK)
+  override def merge(buf: DistinctSketchFacade, other: DistinctSketchFacade): Unit =
+    buf.merge(other)
+  override def toBytes(buf: DistinctSketchFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): DistinctSketchFacade =
+    DistinctSketchFacade.fromBytes(algo, lgK, bytes)
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def updater(types: Seq[DataType]): (DistinctSketchFacade, Any, Any) => Unit =
+    types.head match {
+      case StringType => (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
+      case LongType => (buf, v, _) => buf.update(v.asInstanceOf[Long])
+      case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+    }
+
+  override def oneShotInputTypes(args: Seq[Expression]): Seq[AbstractDataType] =
+    Seq(TypeCollection(StringType, LongType))
+  override def resultType(args: Seq[Expression]): DataType = LongType
+  override def finisher(args: Seq[Expression]): DistinctSketchFacade => Any = _.estimate
+
+  override def estimateFromSketch(sketch: Expression, args: Seq[Expression]): Option[Expression] =
+    Some(ApproxCountDistinctEstimate(sketch, this))
+}
+
+private[graft] object DistinctFamily {
+  /** The family of `algoName` with its lgK from the session conf. */
+  def forAlgo(algoName: String): DistinctFamily = {
     val algo = DistinctAlgo.fromString(algoName)
     val lgK = algo match {
       case DistinctAlgo.CPC => GraftConf.distinctCntCpcLgK
       case DistinctAlgo.HLL => GraftConf.distinctCntHllLgK
     }
-    (algo.name, lgK)
-  }
-  def resolveDefault(): (String, Int) = resolve(GraftConf.distinctCntSketchImpl)
-
-  /**
-   * Update fn per analyzed input type. NB the one-shot aggregate declares
-   * `TypeCollection(StringType, LongType)` in that order deliberately — it
-   * replicates the reference (distinctCntSketches.scala:161), where
-   * implicit coercion resolves sub-long integrals to STRING first; freq
-   * items uses the opposite order (freqItemSketches.scala:173), also
-   * replicated. Estimates are unaffected (cardinality is type-agnostic),
-   * but sketch images only merge with images built from the same domain.
-   */
-  def updateFn(dt: DataType): (DistinctSketchFacade, Any) => Unit = dt match {
-    case StringType => (buf, v) => buf.update(v.asInstanceOf[UTF8String].toString)
-    case LongType => (buf, v) => buf.update(v.asInstanceOf[Long])
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-}
-
-/** Common plumbing for the distinct-count aggregates. */
-trait DistinctSketchAggBase extends TypedImperativeAggregate[DistinctSketchFacade] {
-  def algoName: String
-  def lgK: Int
-  @transient protected lazy val algo: DistinctAlgo = DistinctAlgo.fromString(algoName)
-
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): DistinctSketchFacade =
-    DistinctSketchFacade.create(algo, lgK)
-  override def merge(buf: DistinctSketchFacade, other: DistinctSketchFacade): DistinctSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def serialize(buf: DistinctSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): DistinctSketchFacade =
-    DistinctSketchFacade.fromBytes(algo, lgK, bytes)
-}
-
-/** One-shot `approx_count_distinct_ex(col)` (and `_cpc` / `_hll` pinned variants) -> BIGINT. */
-case class ApproxCountDistinctAgg(
-    child: Expression,
-    algoName: String,
-    lgK: Int,
-    funcName: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends DistinctSketchAggBase with ImplicitCastInputTypes {
-
-  override def prettyName: String = funcName
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(StringType, LongType))
-  override def dataType: DataType = LongType
-
-  @transient private lazy val updateOne = DistinctParams.updateFn(child.dataType)
-
-  override def update(buf: DistinctSketchFacade, input: InternalRow): DistinctSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) updateOne(buf, v)
-    buf
+    DistinctFamily(algo.name, lgK)
   }
 
-  override def eval(buf: DistinctSketchFacade): Any = buf.estimate
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxCountDistinctAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxCountDistinctAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `approx_count_distinct_accumulate(col)` -> BINARY sketch state. */
-case class ApproxCountDistinctAccumulate(
-    child: Expression,
-    algoName: String,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends DistinctSketchAggBase with ImplicitCastInputTypes {
-
-  override def prettyName: String = "approx_count_distinct_accumulate"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: DistinctSketchFacade, input: InternalRow): DistinctSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-
-  override def eval(buf: DistinctSketchFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxCountDistinctAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxCountDistinctAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `approx_count_distinct_combine(sketch)` -> BINARY merged sketch state. */
-case class ApproxCountDistinctCombine(
-    child: Expression,
-    algoName: String,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends DistinctSketchAggBase with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "approx_count_distinct_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: DistinctSketchFacade, input: InternalRow): DistinctSketchFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(DistinctSketchFacade.fromBytes(algo, lgK, bytes))
-      catch {
-        case NonFatal(e) =>
-          logWarning(s"Illegal input bytes for $algoName distinct count sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: DistinctSketchFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxCountDistinctCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxCountDistinctCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  /** The family `spark.sql.dataSketches.distinctCnt.sketchImpl` selects. */
+  def fromConf(): DistinctFamily = forAlgo(GraftConf.distinctCntSketchImpl)
 }
 
 /** Scalar `approx_count_distinct_estimate(sketch)` -> BIGINT; null on corrupt bytes. */
-case class ApproxCountDistinctEstimate(
-    child: Expression,
-    algoName: String,
-    lgK: Int)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
-
-  @transient private lazy val algo: DistinctAlgo = DistinctAlgo.fromString(algoName)
-
-  def this(child: Expression) = {
-    this(child, DistinctParams.resolveDefault()._1, DistinctParams.resolveDefault()._2)
-  }
+case class ApproxCountDistinctEstimate(child: Expression, family: DistinctFamily)
+  extends SketchEstimator with UnaryLike[Expression] {
 
   override def prettyName: String = "approx_count_distinct_estimate"
+  override protected def label: String = family.label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = LongType
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = DistinctSketchFacade.fromBytes(algo, lgK, bytesRaw.asInstanceOf[Array[Byte]])
-      java.lang.Long.valueOf(buf.estimate)
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName distinct count sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Long) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def estimate(bytes: Any, unused: Any): Any =
+    family.fromBytes(bytes.asInstanceOf[Array[Byte]]).estimate
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -17,135 +17,33 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketches.EbppsFacade
 
-private[graft] object EbppsShapes {
-  val sampleType: ArrayType = ArrayType(StringType, containsNull = false)
+/** EBPPS samples of at most `k` (string, positive weight) items. */
+private[graft] case class EbppsFamily(k: Int) extends SketchFamily[EbppsFacade] {
+  override def label: String = "ebpps sketch"
+  override def create(): EbppsFacade = EbppsFacade.create(k)
+  override def merge(buf: EbppsFacade, other: EbppsFacade): Unit = buf.merge(other)
+  override def combine(buf: EbppsFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: EbppsFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): EbppsFacade = EbppsFacade.fromBytes(k, bytes)
 
-  def samplesToCatalyst(samples: Array[String]): GenericArrayData =
-    new GenericArrayData(samples.map(UTF8String.fromString): Array[Any])
-}
-
-private[graft] trait EbppsAggBase extends TypedImperativeAggregate[EbppsFacade] {
-  def k: Int
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): EbppsFacade = EbppsFacade.create(k)
-  override def merge(buf: EbppsFacade, other: EbppsFacade): EbppsFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def serialize(buf: EbppsFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): EbppsFacade = EbppsFacade.fromBytes(k, bytes)
-}
-
-private[graft] trait EbppsWeightedUpdate extends EbppsAggBase {
-  def child: Expression
-  def weight: Expression
-
-  override def update(buf: EbppsFacade, input: InternalRow): EbppsFacade = {
-    val v = child.eval(input)
-    val w = weight.eval(input)
-    if (v != null && w != null) {
-      val wd = w.asInstanceOf[Double]
-      // zero/negative weights carry no sampling mass; skip like nulls
-      if (wd > 0) buf.update(v.asInstanceOf[UTF8String].toString, wd)
-    }
-    buf
-  }
-}
-
-/** One-shot `ebpps_sample(col, weight, k)` -> ARRAY<STRING>. */
-case class EbppsSampleAgg(
-    child: Expression,
-    weight: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends EbppsWeightedUpdate with ImplicitCastInputTypes {
-
-  override def prettyName: String = "ebpps_sample"
-  override def children: Seq[Expression] = Seq(child, weight)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType, DoubleType)
-  override def dataType: DataType = EbppsShapes.sampleType
-
-  override def eval(buf: EbppsFacade): Any = EbppsShapes.samplesToCatalyst(buf.samples)
-
-  override def withNewMutableAggBufferOffset(n: Int): EbppsSampleAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): EbppsSampleAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), weight = c(1))
-}
-
-/** `ebpps_accumulate(col, weight, k)` -> BINARY sketch state. */
-case class EbppsAccumulate(
-    child: Expression,
-    weight: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends EbppsWeightedUpdate with ImplicitCastInputTypes {
-
-  override def prettyName: String = "ebpps_accumulate"
-  override def children: Seq[Expression] = Seq(child, weight)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, DoubleType)
-  override def dataType: DataType = BinaryType
-
-  override def eval(buf: EbppsFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): EbppsAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): EbppsAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), weight = c(1))
-}
-
-/** `ebpps_combine(sketch, k)` -> BINARY merged state. */
-case class EbppsCombine(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends EbppsAggBase with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "ebpps_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: EbppsFacade, input: InternalRow): EbppsFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for ebpps sketch state")
-          throw e
-      }
-    }
-    buf
+  override def updater(types: Seq[DataType]): (EbppsFacade, Any, Any) => Unit = (buf, v, w) => {
+    val wd = w.asInstanceOf[Double]
+    // zero/negative weights carry no sampling mass; skip like nulls
+    if (wd > 0) buf.update(v.asInstanceOf[UTF8String].toString, wd)
   }
-  override def eval(buf: EbppsFacade): Any = buf.toBytes
 
-  override def withNewMutableAggBufferOffset(n: Int): EbppsCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): EbppsCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  override def resultType(args: Seq[Expression]): DataType = ReservoirFamily.sampleType
+  override def finisher(args: Seq[Expression]): EbppsFacade => Any =
+    buf => ReservoirFamily.samplesToCatalyst(buf.samples)
 }
 
 /**
@@ -153,44 +51,17 @@ case class EbppsCombine(
  * null on corrupt bytes. `n` and `cum_weight` are deterministic; the
  * realized `samples` includes any partial item probabilistically.
  */
-case class EbppsEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
-
+case class EbppsEstimate(child: Expression) extends SketchEstimator with UnaryLike[Expression] {
   override def prettyName: String = "ebpps_estimate"
+  override protected def label: String = "ebpps sketch"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("cum_weight", DoubleType, nullable = false),
-    StructField("samples", EbppsShapes.sampleType, nullable = false)))
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val (n, cumWeight, samples) = EbppsFacade.readSample(bytesRaw.asInstanceOf[Array[Byte]])
-      InternalRow(n, cumWeight, EbppsShapes.samplesToCatalyst(samples))
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for ebpps sketch state")
-        null
-    }
+    StructField("samples", ReservoirFamily.sampleType, nullable = false)))
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    val (n, cumWeight, samples) = EbppsFacade.readSample(bytes.asInstanceOf[Array[Byte]])
+    InternalRow(n, cumWeight, ReservoirFamily.samplesToCatalyst(samples))
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (InternalRow) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -21,162 +21,68 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.conf.GraftConf
 import graft.sketches.{FdtSketchFacade, FdtUnionFacade}
 
-/** `fdt_accumulate(dims)` -> BINARY serialized ArrayOfStrings tuple sketch. */
-case class FdtAccumulate(
-    child: Expression,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FdtUnionFacade] with ImplicitCastInputTypes {
+/** Frequent-distinct-tuple sketches of ARRAY<STRING> tuples. */
+private[graft] case class FdtFamily(lgK: Int) extends SketchFamily[FdtUnionFacade] {
+  override def label: String = "fdt sketch"
+  override def create(): FdtUnionFacade = FdtUnionFacade.create(lgK)
+  override def merge(buf: FdtUnionFacade, other: FdtUnionFacade): Unit = buf.merge(other)
+  override def combine(buf: FdtUnionFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: FdtUnionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): FdtUnionFacade = FdtUnionFacade.fromBytes(lgK, bytes)
 
-  override def prettyName: String = "fdt_accumulate"
-  override def children: Seq[Expression] = child :: Nil
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): FdtUnionFacade = FdtUnionFacade.create(lgK)
-  override def update(buf: FdtUnionFacade, input: InternalRow): FdtUnionFacade = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr != null) {
-      val n = arr.numElements()
-      val tuple = new Array[String](n)
-      var i = 0
-      var ok = n > 0
-      while (ok && i < n) {
-        if (arr.isNullAt(i)) ok = false
-        else {
-          tuple(i) = arr.getUTF8String(i).toString
-          i += 1
-        }
+  override def updater(types: Seq[DataType]): (FdtUnionFacade, Any, Any) => Unit = (buf, v, _) => {
+    val arr = v.asInstanceOf[ArrayData]
+    val n = arr.numElements()
+    val tuple = new Array[String](n)
+    var i = 0
+    var ok = n > 0
+    while (ok && i < n) {
+      if (arr.isNullAt(i)) ok = false
+      else {
+        tuple(i) = arr.getUTF8String(i).toString
+        i += 1
       }
-      // a tuple with a null element has no defined identity — skip the
-      // row (mirrors how the sketch aggs skip null scalar inputs)
-      if (ok) buf.update(tuple)
     }
-    buf
+    // a tuple with a null element has no defined identity — skip the
+    // row (mirrors how the sketch aggs skip null scalar inputs)
+    if (ok) buf.update(tuple)
   }
-  override def merge(buf: FdtUnionFacade, other: FdtUnionFacade): FdtUnionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: FdtUnionFacade): Any = buf.toBytes
-  override def serialize(buf: FdtUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): FdtUnionFacade =
-    FdtUnionFacade.fromBytes(lgK, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): FdtAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): FdtAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
 }
 
-/** `fdt_union(sketch)` -> BINARY union of serialized FDT sketches. */
-case class FdtUnionAgg(
-    child: Expression,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FdtUnionFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "fdt_union"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): FdtUnionFacade = FdtUnionFacade.create(lgK)
-  override def update(buf: FdtUnionFacade, input: InternalRow): FdtUnionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for fdt sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(buf: FdtUnionFacade, other: FdtUnionFacade): FdtUnionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: FdtUnionFacade): Any = buf.toBytes
-  override def serialize(buf: FdtUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): FdtUnionFacade =
-    FdtUnionFacade.fromBytes(lgK, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): FdtUnionAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): FdtUnionAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+private[graft] object FdtFamily {
+  def fromConf(): FdtFamily = FdtFamily(GraftConf.tupleLgK)
 }
 
 /** Scalar `fdt_topk(sketch, indices, k)` -> ARRAY<STRUCT<key STRING,
  *  n_distinct BIGINT>>; null on corrupt bytes. `indices` and `k` are
  *  frozen at resolution (constant literals). */
 case class FdtTopK(child: Expression, indices: Seq[Int], k: Int)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with UnaryLike[Expression] {
 
   require(k > 0, "k must be positive")
   require(indices.nonEmpty, "at least one primary-key index is required")
 
   override def prettyName: String = "fdt_topk"
+  override protected def label: String = "fdt sketch"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("key", StringType, nullable = false),
     StructField("n_distinct", LongType, nullable = false))), containsNull = false)
-
-  @transient private[this] lazy val decodeFn: Any => Any = { bytesRaw =>
-    try {
-      val rows = FdtSketchFacade.topK(bytesRaw.asInstanceOf[Array[Byte]], indices.toArray, k)
-        .map { case (key, est) =>
-          InternalRow(UTF8String.fromString(key), est): Any
-        }
-      new GenericArrayData(rows.toArray)
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for fdt sketch state")
-        null
-    }
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    val rows = FdtSketchFacade.topK(bytes.asInstanceOf[Array[Byte]], indices.toArray, k)
+      .map { case (key, est) => InternalRow(UTF8String.fromString(key), est): Any }
+    new GenericArrayData(rows.toArray)
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -7,13 +7,9 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,223 +17,75 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.conf.GraftConf
 import graft.sketches.FreqSketchFacade
 
-private[graft] object FreqParams {
-  def resolveMaxMapSize(): Int = GraftConf.freqItemsMaxMapSize
-
-  def create(dt: DataType, maxMapSize: Int): FreqSketchFacade = dt match {
-    case StringType => FreqSketchFacade.createString(maxMapSize)
-    case LongType => FreqSketchFacade.createLong(maxMapSize)
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-
-  def fromBytes(dt: DataType, bytes: Array[Byte]): FreqSketchFacade = dt match {
-    case StringType => FreqSketchFacade.stringFromBytes(bytes)
-    case LongType => FreqSketchFacade.longFromBytes(bytes)
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-}
-
 /**
- * One-shot `approx_freqitems(col)` over a STRING or integral column ->
- * `array<struct<item: <inputType>, estimated: bigint>>`, most frequent
- * first. Compose with `inline(...)` to explode into rows.
+ * Frequent items over STRING values, or over integral values kept in a
+ * LongsSketch (`longItems`, chosen by [[forInput]] for the one-shot over
+ * an integral column). `_accumulate` / `_combine` / `_estimate` are
+ * string-only. The one-shot answers `array<struct<item: <inputType>,
+ * estimated: bigint>>`, most frequent first; compose with `inline(...)`
+ * to explode into rows.
  */
-case class ApproxFreqItemsAgg(
-    child: Expression,
-    maxMapSize: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FreqSketchFacade] with ImplicitCastInputTypes {
+private[graft] case class FreqFamily(maxMapSize: Int, longItems: Boolean = false)
+  extends SketchFamily[FreqSketchFacade] {
 
-  override def prettyName: String = "approx_freqitems"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(LongType, StringType))
-  override def nullable: Boolean = true
+  override def label: String = "freq items sketch"
+  override def create(): FreqSketchFacade =
+    if (longItems) FreqSketchFacade.createLong(maxMapSize)
+    else FreqSketchFacade.createString(maxMapSize)
+  override def merge(buf: FreqSketchFacade, other: FreqSketchFacade): Unit = buf.merge(other)
+  override def toBytes(buf: FreqSketchFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): FreqSketchFacade =
+    if (longItems) FreqSketchFacade.longFromBytes(bytes)
+    else FreqSketchFacade.stringFromBytes(bytes)
 
-  override lazy val dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", child.dataType), StructField("estimated", LongType))))
+  override def forInput(types: Seq[DataType]): FreqFamily =
+    copy(longItems = types.head == LongType)
 
-  // The sketch stores UTF8String values as java.lang.String / integrals as Long;
-  // convert on the way in and back out (reference: freqItemSketches.scala:175-182).
-  @transient private lazy val toItem: Any => Any = child.dataType match {
-    case StringType => v => v.asInstanceOf[UTF8String].toString
-    case LongType => v => v
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-  @transient private lazy val fromItem: Any => Any = child.dataType match {
-    case StringType => v => UTF8String.fromString(v.asInstanceOf[String])
-    case LongType => v => v
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-
-  override def createAggregationBuffer(): FreqSketchFacade =
-    FreqParams.create(child.dataType, maxMapSize)
-
-  override def update(buf: FreqSketchFacade, input: InternalRow): FreqSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(toItem(v))
-    buf
-  }
-
-  override def merge(buf: FreqSketchFacade, other: FreqSketchFacade): FreqSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: FreqSketchFacade): Any = {
-    val rows = buf.frequentItems.map { case (item, est) => InternalRow(fromItem(item), est) }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: FreqSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): FreqSketchFacade =
-    FreqParams.fromBytes(child.dataType, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxFreqItemsAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxFreqItemsAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `approx_freqitems_accumulate(col: string)` -> BINARY sketch state (string items only). */
-case class ApproxFreqItemsAccumulate(
-    child: Expression,
-    maxMapSize: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FreqSketchFacade] with ImplicitCastInputTypes {
-
-  override def prettyName: String = "approx_freqitems_accumulate"
-  override def children: Seq[Expression] = child :: Nil
+  // the sketch stores UTF8String values as java.lang.String / integrals as
+  // Long; convert on the way in and back out (freqItemSketches.scala:175-182)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
+  override def updater(types: Seq[DataType]): (FreqSketchFacade, Any, Any) => Unit =
+    if (longItems) (buf, v, _) => buf.update(v)
+    else (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
 
-  override def createAggregationBuffer(): FreqSketchFacade =
-    FreqSketchFacade.createString(maxMapSize)
+  override def oneShotInputTypes(args: Seq[Expression]): Seq[AbstractDataType] =
+    Seq(TypeCollection(LongType, StringType))
+  override def resultType(args: Seq[Expression]): DataType =
+    FreqFamily.itemsType(args.head.dataType)
+  override def finisher(args: Seq[Expression]): FreqSketchFacade => Any = FreqFamily.items
 
-  override def update(buf: FreqSketchFacade, input: InternalRow): FreqSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-
-  override def merge(buf: FreqSketchFacade, other: FreqSketchFacade): FreqSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: FreqSketchFacade): Any = buf.toBytes
-  override def serialize(buf: FreqSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): FreqSketchFacade =
-    FreqSketchFacade.stringFromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxFreqItemsAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxFreqItemsAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  override def estimateFromSketch(sketch: Expression, args: Seq[Expression]): Option[Expression] =
+    Some(ApproxFreqItemsEstimate(sketch))
 }
 
-/** `approx_freqitems_combine(sketch)` -> BINARY merged sketch state (string items only). */
-case class ApproxFreqItemsCombine(
-    child: Expression,
-    maxMapSize: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FreqSketchFacade]
-  with ImplicitCastInputTypes with Logging {
+private[graft] object FreqFamily {
+  def fromConf(): FreqFamily = FreqFamily(GraftConf.freqItemsMaxMapSize)
 
-  override def prettyName: String = "approx_freqitems_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
+  def itemsType(item: DataType): DataType = ArrayType(StructType(Seq(
+    StructField("item", item), StructField("estimated", LongType))))
 
-  override def createAggregationBuffer(): FreqSketchFacade =
-    FreqSketchFacade.createString(maxMapSize)
-
-  override def update(buf: FreqSketchFacade, input: InternalRow): FreqSketchFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(FreqSketchFacade.stringFromBytes(bytes))
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for freq items sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: FreqSketchFacade, other: FreqSketchFacade): FreqSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: FreqSketchFacade): Any = buf.toBytes
-  override def serialize(buf: FreqSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): FreqSketchFacade =
-    FreqSketchFacade.stringFromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxFreqItemsCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxFreqItemsCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  def items(buf: FreqSketchFacade): GenericArrayData =
+    new GenericArrayData(buf.frequentItems.map {
+      case (item: String, est) => InternalRow(UTF8String.fromString(item), est)
+      case (item, est) => InternalRow(item, est)
+    })
 }
 
 /**
  * Scalar `approx_freqitems_estimate(sketch)` ->
- * `array<struct<item: string, estimated: bigint>>`; null on corrupt bytes.
+ * `array<struct<item: string, estimated: bigint>>`; null on corrupt bytes
+ * or an empty sketch.
  */
 case class ApproxFreqItemsEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with UnaryLike[Expression] {
 
   override def prettyName: String = "approx_freqitems_estimate"
+  override protected def label: String = "freq items sketch"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override lazy val dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", StringType), StructField("estimated", LongType))))
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = FreqSketchFacade.stringFromBytes(bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null
-      else {
-        val rows = buf.frequentItems.map { case (item, est) =>
-          InternalRow(UTF8String.fromString(item.asInstanceOf[String]), est)
-        }
-        new GenericArrayData(rows)
-      }
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for freq items sketch state")
-        null
-    }
+  override def dataType: DataType = FreqFamily.itemsType(StringType)
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    val buf = FreqSketchFacade.stringFromBytes(bytes.asInstanceOf[Array[Byte]])
+    if (buf.isEmpty) null else FreqFamily.items(buf)
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

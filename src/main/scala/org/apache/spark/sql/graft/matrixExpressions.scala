@@ -23,12 +23,8 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -44,123 +40,72 @@ private[graft] object MatrixExprUtil {
   }
 }
 
-/** Mutable holder deferring dimension discovery to the first row. */
-private[graft] final class GramBuffer(var acc: GramAccumulator)
+/** The exact Gram matrix of `vec_gram_agg`: d*d doubles merged by
+ *  elementwise addition; d is learned from the first row. */
+private[graft] case object GramFamily extends SketchFamily[LazySketch[GramAccumulator]] {
+  override def label: String = "Gram"
+  override def create(): LazySketch[GramAccumulator] = new LazySketch(null)
+  override def merge(buf: LazySketch[GramAccumulator], other: LazySketch[GramAccumulator]): Unit =
+    if (other.sketch != null) {
+      if (buf.sketch == null) buf.sketch = GramAccumulator.create(other.sketch.d)
+      buf.sketch.merge(other.sketch)
+    }
+  override def toBytes(buf: LazySketch[GramAccumulator]): Array[Byte] =
+    if (buf.sketch == null) Array.emptyByteArray else buf.sketch.toBytes
+  override def fromBytes(bytes: Array[Byte]): LazySketch[GramAccumulator] =
+    new LazySketch(if (bytes.isEmpty) null else GramAccumulator.fromBytes(bytes))
 
-/** `vec_gram_agg(vec)` -> ARRAY<DOUBLE> of length d*d (row-major). */
-case class VecGramAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GramBuffer] with ImplicitCastInputTypes {
-
-  override def prettyName: String = "vec_gram_agg"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType, containsNull = false))
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def createAggregationBuffer(): GramBuffer = new GramBuffer(null)
-
-  override def update(buf: GramBuffer, input: InternalRow): GramBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType, containsNull = false))
+  override def updater(types: Seq[DataType]): (LazySketch[GramAccumulator], Any, Any) => Unit =
+    (buf, v, _) => {
       val row = MatrixExprUtil.toDoubles(v.asInstanceOf[ArrayData])
-      if (buf.acc == null) buf.acc = GramAccumulator.create(row.length)
-      buf.acc.update(row)
+      if (buf.sketch == null) buf.sketch = GramAccumulator.create(row.length)
+      buf.sketch.update(row)
     }
-    buf
-  }
 
-  override def merge(buf: GramBuffer, other: GramBuffer): GramBuffer = {
-    if (other.acc != null) {
-      if (buf.acc == null) buf.acc = GramAccumulator.create(other.acc.d)
-      buf.acc.merge(other.acc)
-    }
-    buf
-  }
-
-  override def eval(buf: GramBuffer): Any =
-    if (buf.acc == null) null else new GenericArrayData(buf.acc.gram)
-
-  override def serialize(buf: GramBuffer): Array[Byte] =
-    if (buf.acc == null) Array.emptyByteArray else buf.acc.toBytes
-  override def deserialize(bytes: Array[Byte]): GramBuffer =
-    if (bytes.isEmpty) new GramBuffer(null)
-    else new GramBuffer(GramAccumulator.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(n: Int): VecGramAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): VecGramAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0))
+  override def resultType(args: Seq[Expression]): DataType =
+    ArrayType(DoubleType, containsNull = false)
+  override def finisher(args: Seq[Expression]): LazySketch[GramAccumulator] => Any =
+    buf => if (buf.sketch == null) null else new GenericArrayData(buf.sketch.gram)
 }
 
-private[graft] final class FdBuffer(val ell: Int, var fd: FrequentDirections)
-
-private[graft] trait FdAggBase extends TypedImperativeAggregate[FdBuffer] {
-  def ell: Int
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): FdBuffer = new FdBuffer(ell, null)
-
-  override def merge(buf: FdBuffer, other: FdBuffer): FdBuffer = {
-    if (other.fd != null) {
-      if (buf.fd == null) buf.fd = FrequentDirections.create(other.fd.ell, other.fd.d)
-      buf.fd.merge(other.fd)
+/** Frequent-Directions sketches of `ell` rows: `fd_accumulate`,
+ *  `fd_combine`. The vector dimension is learned from the first row, and
+ *  a combine adopts each image's own ell, so a merged group keeps its
+ *  input ell; `ell` only sizes sketches built from raw rows. An empty
+ *  group emits null. */
+private[graft] case class FdFamily(ell: Int) extends SketchFamily[LazySketch[FrequentDirections]] {
+  override def label: String = "FD sketch"
+  override def create(): LazySketch[FrequentDirections] = new LazySketch(null)
+  override def merge(
+      buf: LazySketch[FrequentDirections], other: LazySketch[FrequentDirections]): Unit =
+    if (other.sketch != null) {
+      if (buf.sketch == null) {
+        buf.sketch = FrequentDirections.create(other.sketch.ell, other.sketch.d)
+      }
+      buf.sketch.merge(other.sketch)
     }
-    buf
-  }
+  override def combine(buf: LazySketch[FrequentDirections], bytes: Array[Byte]): Unit =
+    merge(buf, new LazySketch(FrequentDirections.fromBytes(bytes)))
+  override def result(buf: LazySketch[FrequentDirections]): Array[Byte] =
+    if (buf.sketch == null) null else buf.sketch.toBytes
+  override def toBytes(buf: LazySketch[FrequentDirections]): Array[Byte] =
+    if (buf.sketch == null) Array.emptyByteArray else buf.sketch.toBytes
+  override def fromBytes(bytes: Array[Byte]): LazySketch[FrequentDirections] =
+    new LazySketch(if (bytes.isEmpty) null else FrequentDirections.fromBytes(bytes))
 
-  override def eval(buf: FdBuffer): Any = if (buf.fd == null) null else buf.fd.toBytes
-
-  override def serialize(buf: FdBuffer): Array[Byte] =
-    if (buf.fd == null) Array.emptyByteArray else buf.fd.toBytes
-  override def deserialize(bytes: Array[Byte]): FdBuffer =
-    if (bytes.isEmpty) new FdBuffer(ell, null)
-    else new FdBuffer(ell, FrequentDirections.fromBytes(bytes))
-}
-
-/** `fd_accumulate(vec, ell)` -> BINARY FD sketch image. */
-case class FdAccumulate(
-    child: Expression,
-    ellExpression: Expression,
-    ell: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends FdAggBase with ImplicitCastInputTypes {
-
-  def this(child: Expression, ellExpression: Expression) =
-    this(child, ellExpression, FdAccumulate.resolveEll(ellExpression))
-
-  override def prettyName: String = "fd_accumulate"
-  override def children: Seq[Expression] = child :: ellExpression :: Nil
+  // the ell literal is an argument too, so `fd_accumulate(v, 8)` keeps its name
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType, containsNull = false), IntegerType)
-
-  override def update(buf: FdBuffer, input: InternalRow): FdBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
+  override def updater(types: Seq[DataType]): (LazySketch[FrequentDirections], Any, Any) => Unit =
+    (buf, v, _) => {
       val row = MatrixExprUtil.toDoubles(v.asInstanceOf[ArrayData])
-      if (buf.fd == null) buf.fd = FrequentDirections.create(ell, row.length)
-      buf.fd.update(row)
+      if (buf.sketch == null) buf.sketch = FrequentDirections.create(ell, row.length)
+      buf.sketch.update(row)
     }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(n: Int): FdAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): FdAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), ellExpression = c(1))
 }
 
-object FdAccumulate {
+private[graft] object FdFamily {
   def resolveEll(e: Expression): Int = e match {
     case Literal(v, IntegerType) if v != null && v.asInstanceOf[Int] >= 2 =>
       v.asInstanceOf[Int]
@@ -169,114 +114,39 @@ object FdAccumulate {
   }
 }
 
-/** `fd_combine(sketch)` -> BINARY merged FD sketch. The sketch size ell
- *  is carried by the images themselves; the aggregate only needs it for
- *  empty-buffer bookkeeping, so any merged group keeps its input ell. */
-case class FdCombine(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends FdAggBase with ImplicitCastInputTypes {
-
-  override def prettyName: String = "fd_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def ell: Int = 2 // placeholder; real ell adopted from the first image
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-
-  override def update(buf: FdBuffer, input: InternalRow): FdBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other =
-        try FrequentDirections.fromBytes(v.asInstanceOf[Array[Byte]])
-        catch {
-          case NonFatal(e) =>
-            throw new IllegalArgumentException(
-              s"fd_combine: invalid FD sketch image: ${e.getMessage}", e)
-        }
-      if (buf.fd == null) buf.fd = FrequentDirections.create(other.ell, other.d)
-      buf.fd.merge(other)
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(n: Int): FdCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): FdCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0))
-}
-
 /** Shared scalar base: decode an FD image, null on corrupt bytes (the
  *  reference's estimator contract, `quantileSketches.scala:614-624`). */
-private[graft] trait FdScalarBase extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
+private[graft] abstract class FdEstimator extends SketchEstimator with UnaryLike[Expression] {
   protected def compute(fd: FrequentDirections): Any
 
-  override def nullSafeEval(input: Any): Any = {
-    val fd =
-      try FrequentDirections.fromBytes(input.asInstanceOf[Array[Byte]])
-      catch { case NonFatal(_) => null }
-    if (fd == null) null else compute(fd)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the reference's addReferenceObj closure-call codegen pattern
-    // (quantileSketches.scala:628-647)
-    val self = ctx.addReferenceObj("fdExpr", this, classOf[FdScalarBase].getName)
-    // boxed cast: `(java.lang.Double) obj` assigned to a primitive slot
-    // unboxes; object types (ArrayData) cast directly
-    val boxedType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .boxedType(dataType)
-    nullSafeCodeGen(ctx, ev, bytes => {
-      val res = ctx.freshName("fdRes")
-      s"""
-         |Object $res = $self.nullSafeEval($bytes);
-         |if ($res == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ($boxedType) $res;
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def label: String = "FD sketch"
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override protected def estimate(bytes: Any, unused: Any): Any =
+    compute(FrequentDirections.fromBytes(bytes.asInstanceOf[Array[Byte]]))
 }
 
 /** `fd_gram_estimate(sketch)` -> ARRAY<DOUBLE> (d*d row-major B'B). */
-case class FdGramEstimate(child: Expression)
-  extends FdScalarBase with ImplicitCastInputTypes {
+case class FdGramEstimate(child: Expression) extends FdEstimator {
   override def prettyName: String = "fd_gram_estimate"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def compute(fd: FrequentDirections): Any =
-    new GenericArrayData(fd.gram)
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def compute(fd: FrequentDirections): Any = new GenericArrayData(fd.gram)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** `fd_singular_values(sketch)` -> ARRAY<DOUBLE>, squared singular values
  *  of the sketch rows, descending, `ell` entries (zero-padded). */
-case class FdSingularValues(child: Expression)
-  extends FdScalarBase with ImplicitCastInputTypes {
+case class FdSingularValues(child: Expression) extends FdEstimator {
   override def prettyName: String = "fd_singular_values"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override protected def compute(fd: FrequentDirections): Any =
     new GenericArrayData(fd.squaredSingularValues)
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** `fd_error_bound(sketch)` -> DOUBLE: ||A||_F^2 / ell. */
-case class FdErrorBound(child: Expression)
-  extends FdScalarBase with ImplicitCastInputTypes {
+case class FdErrorBound(child: Expression) extends FdEstimator {
   override def prettyName: String = "fd_error_bound"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = DoubleType
-  override protected def compute(fd: FrequentDirections): Any =
-    fd.frobeniusSquared / fd.ell
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def compute(fd: FrequentDirections): Any = fd.frobeniusSquared / fd.ell
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -8,642 +8,231 @@
  * (sketches -> merged sketch), `_estimate` / `approx_pmf_estimate`
  * (sketch -> values), plus one-shot aggregates.
  *
- * Scale design notes:
- *   - Aggregates are `TypedImperativeAggregate`, so Spark plans them on
- *     `ObjectHashAggregateExec` with a partial/final split: each executor
- *     builds local sketches and only the (small, bounded-size) serialized
- *     sketch image crosses the shuffle — the same property the reference
- *     relies on, and the reason sketch aggregation scales linearly.
- *   - Sketch parameters (algo, k) are resolved ONCE at expression creation
- *     on the driver and frozen into the plan; executors never consult conf
- *     (the reference re-reads SQLConf on executors:
- *     quantileSketches.scala:52-62).
+ * Sketch parameters (algo, k) are resolved ONCE at expression creation on
+ * the driver and frozen into the plan; executors never consult conf (the
+ * reference re-reads SQLConf on executors: quantileSketches.scala:52-62).
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 import graft.conf.GraftConf
 import graft.sketches.{QuantileAlgo, QuantileSketchFacade}
 
-/** Driver-side resolution of the configured quantile algorithm + its k. */
-private[graft] object QuantileParams {
-  def resolve(algoName: String): (String, Int) = {
+/** KLL / REQ / classic-mergeable quantile sketches over numerics narrowed
+ *  to float, as in the reference (quantileSketches.scala:250-255). The
+ *  one-shot's output preserves the input type (quantileSketches.scala:160-211). */
+private[graft] case class QuantileFamily(algoName: String, k: Int)
+  extends PercentileOneShot[QuantileSketchFacade] {
+
+  @transient private lazy val algo = QuantileAlgo.fromString(algoName)
+
+  override def label: String = s"$algoName quantile sketch"
+  override def create(): QuantileSketchFacade = QuantileSketchFacade.create(algo, k)
+  override def merge(buf: QuantileSketchFacade, other: QuantileSketchFacade): Unit =
+    buf.merge(other)
+  override def toBytes(buf: QuantileSketchFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): QuantileSketchFacade =
+    QuantileSketchFacade.fromBytes(algo, k, bytes)
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(NumericType)
+  override def updater(types: Seq[DataType]): (QuantileSketchFacade, Any, Any) => Unit = {
+    val toFloat: Any => Float = types.head match {
+      case ByteType => v => v.asInstanceOf[Byte].toFloat
+      case ShortType => v => v.asInstanceOf[Short].toFloat
+      case IntegerType => v => v.asInstanceOf[Int].toFloat
+      case LongType => v => v.asInstanceOf[Long].toFloat
+      case FloatType => v => v.asInstanceOf[Float]
+      case DoubleType => v => v.asInstanceOf[Double].toFloat
+      case _: DecimalType => v => v.asInstanceOf[Decimal].toFloat
+      case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+    }
+    (buf, v, _) => buf.update(toFloat(v))
+  }
+
+  override protected def valueType(column: DataType): DataType = column
+  override protected def isEmpty(buf: QuantileSketchFacade): Boolean = buf.isEmpty
+  override protected def quantiles(
+      column: DataType): (QuantileSketchFacade, Array[Double]) => Array[Any] = {
+    val fromDouble: Double => Any = column match {
+      case ByteType => v => v.toByte
+      case ShortType => v => v.toShort
+      case IntegerType => v => v.toInt
+      case LongType => v => v.toLong
+      case FloatType => v => v.toFloat
+      case DoubleType => v => v
+      case d: DecimalType => v => {
+        val dec = Decimal(v)
+        if (!dec.changePrecision(d.precision, d.scale)) {
+          throw new IllegalStateException(
+            s"Cannot represent quantile as decimal(${d.precision},${d.scale})")
+        }
+        dec
+      }
+      case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+    }
+    (buf, ranks) => buf.quantiles(ranks).map(fromDouble)
+  }
+
+  // the estimate is always DOUBLE, so only a DOUBLE one-shot matches it
+  override def estimateFromSketch(sketch: Expression, args: Seq[Expression]): Option[Expression] =
+    Some(ApproxPercentileEstimate(sketch, args(1), this))
+}
+
+private[graft] object QuantileFamily {
+  /** The family of `algoName` with its k from the session conf. */
+  def forAlgo(algoName: String): QuantileFamily = {
     val algo = QuantileAlgo.fromString(algoName)
     val k = algo match {
       case QuantileAlgo.KLL => GraftConf.quantileKllK
       case QuantileAlgo.REQ => GraftConf.quantileReqK
       case QuantileAlgo.MERGEABLE => GraftConf.quantileMergeableK
     }
-    (algo.name, k)
+    QuantileFamily(algo.name, k)
   }
-  def resolveDefault(): (String, Int) = resolve(GraftConf.quantileSketchImpl)
 
-  /** Narrow any NumericType value to Float — all quantile math is
-   *  float-precision, matching the reference (quantileSketches.scala:250-255). */
-  def toFloatFn(dt: DataType): Any => Float = dt match {
-    case ByteType => v => v.asInstanceOf[Byte].toFloat
-    case ShortType => v => v.asInstanceOf[Short].toFloat
-    case IntegerType => v => v.asInstanceOf[Int].toFloat
-    case LongType => v => v.asInstanceOf[Long].toFloat
-    case FloatType => v => v.asInstanceOf[Float]
-    case DoubleType => v => v.asInstanceOf[Double].toFloat
-    case _: DecimalType => v => v.asInstanceOf[Decimal].toFloat
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+  /** The family `spark.sql.dataSketches.quantiles.sketchImpl` selects. */
+  def fromConf(): QuantileFamily = forAlgo(GraftConf.quantileSketchImpl)
+}
+
+/** A binary estimator over one serialized quantile sketch. */
+private[graft] abstract class QuantileEstimator extends SketchEstimator
+  with BinaryLike[Expression] {
+
+  def family: QuantileFamily
+  override protected def label: String = family.label
+
+  /** The body over a decoded, non-empty sketch and the second argument. */
+  protected def fromSketch(sketch: QuantileSketchFacade, arg: Any): Any
+
+  override protected def estimate(bytes: Any, arg: Any): Any = {
+    val sketch = family.fromBytes(bytes.asInstanceOf[Array[Byte]])
+    if (sketch.isEmpty) null else fromSketch(sketch, arg)
   }
 }
 
 /**
- * Shared percentage-argument handling: foldable-literal validation, [0,1]
- * range check, and scalar-vs-array output shape.
+ * `approx_percentile_estimate(sketch, percentage)` — decode a serialized
+ * sketch and return the quantile(s) as DOUBLE (always double, like the
+ * reference — quantileSketches.scala:601-605).
  */
-trait PercentageSupport extends ImplicitCastInputTypes { self: Expression =>
-  def percentageExpression: Expression
-
-  @transient protected lazy val returnsArray: Boolean =
-    percentageExpression.dataType.isInstanceOf[ArrayType]
-
-  @transient protected lazy val percentages: Array[Double] =
-    percentageExpression.eval() match {
-      case null => null
-      case d: Double => Array(d)
-      case arr: ArrayData => arr.toDoubleArray()
-    }
-
-  protected def percentageInputType: AbstractDataType =
-    percentageExpression.dataType match {
-      case _: ArrayType => ArrayType(DoubleType, containsNull = false)
-      case _ => DoubleType
-    }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val defaultCheck = super.checkInputDataTypes()
-    if (defaultCheck.isFailure) {
-      defaultCheck
-    } else if (!percentageExpression.foldable) {
-      TypeCheckFailure(
-        s"The percentage(s) must be a constant literal, but got $percentageExpression")
-    } else if (percentages == null) {
-      TypeCheckFailure("Percentage value must not be null")
-    } else if (percentages.exists(p => p < 0.0 || p > 1.0)) {
-      TypeCheckFailure(
-        s"Percentage(s) must be between 0.0 and 1.0, but got $percentageExpression")
-    } else {
-      TypeCheckSuccess
-    }
-  }
-}
-
-/**
- * One-shot quantile aggregate: `approx_percentile_ex(col, percentage)` and
- * the algorithm-pinned variants. Output preserves the input type
- * (reference: quantileSketches.scala:160-211).
- */
-case class ApproxPercentileAgg(
-    child: Expression,
-    percentageExpression: Expression,
-    algoName: String,
-    k: Int,
-    funcName: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketchFacade] with PercentageSupport {
-
-  private val algo = QuantileAlgo.fromString(algoName)
-
-  override def prettyName: String = funcName
-  override def children: Seq[Expression] = child :: percentageExpression :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(NumericType, percentageInputType)
-  override def nullable: Boolean = true
-
-  override lazy val dataType: DataType = percentageExpression.dataType match {
-    case _: ArrayType => ArrayType(child.dataType, containsNull = false)
-    case _ => child.dataType
-  }
-
-  @transient private lazy val toFloat = QuantileParams.toFloatFn(child.dataType)
-
-  @transient private lazy val fromDouble: Double => Any = child.dataType match {
-    case ByteType => v => v.toByte
-    case ShortType => v => v.toShort
-    case IntegerType => v => v.toInt
-    case LongType => v => v.toLong
-    case FloatType => v => v.toFloat
-    case DoubleType => v => v
-    case d: DecimalType => v => {
-      val dec = Decimal(v)
-      if (!dec.changePrecision(d.precision, d.scale)) {
-        throw new IllegalStateException(
-          s"Cannot represent quantile as decimal(${d.precision},${d.scale})")
-      }
-      dec
-    }
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-
-  override def createAggregationBuffer(): QuantileSketchFacade =
-    QuantileSketchFacade.create(algo, k)
-
-  override def update(buf: QuantileSketchFacade, input: InternalRow): QuantileSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(toFloat(v)) // nulls are skipped, not counted
-    buf
-  }
-
-  override def merge(buf: QuantileSketchFacade, other: QuantileSketchFacade): QuantileSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: QuantileSketchFacade): Any = {
-    if (buf.isEmpty) return null
-    val qs = buf.quantiles(percentages).map(fromDouble)
-    if (returnsArray) new GenericArrayData(qs) else qs.head
-  }
-
-  override def serialize(buf: QuantileSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): QuantileSketchFacade =
-    QuantileSketchFacade.fromBytes(algo, k, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxPercentileAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxPercentileAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), percentageExpression = c(1))
-}
-
-/**
- * `approx_percentile_accumulate(col)` — aggregates raw values into a
- * serialized sketch (BINARY). The emitted bytes are a genuine DataSketches
- * image: accumulate output, shuffle format and combine input are one
- * representation, so summary tables can be persisted and re-aggregated.
- */
-case class ApproxPercentileAccumulate(
-    child: Expression,
-    algoName: String,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketchFacade] with ImplicitCastInputTypes {
-
-  private val algo = QuantileAlgo.fromString(algoName)
-
-  override def prettyName: String = "approx_percentile_accumulate"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(NumericType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private lazy val toFloat = QuantileParams.toFloatFn(child.dataType)
-
-  override def createAggregationBuffer(): QuantileSketchFacade =
-    QuantileSketchFacade.create(algo, k)
-
-  override def update(buf: QuantileSketchFacade, input: InternalRow): QuantileSketchFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(toFloat(v))
-    buf
-  }
-
-  override def merge(buf: QuantileSketchFacade, other: QuantileSketchFacade): QuantileSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: QuantileSketchFacade): Any = buf.toBytes
-  override def serialize(buf: QuantileSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): QuantileSketchFacade =
-    QuantileSketchFacade.fromBytes(algo, k, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxPercentileAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxPercentileAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/**
- * `approx_percentile_combine(sketch)` — merges serialized sketches into one
- * (BINARY -> BINARY). Corrupt input bytes fail the query (an invalid summary
- * table is a data-integrity problem), unlike `_estimate` which returns null.
- */
-case class ApproxPercentileCombine(
-    child: Expression,
-    algoName: String,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketchFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
-
-  override def prettyName: String = "approx_percentile_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): QuantileSketchFacade =
-    QuantileSketchFacade.create(algo, k)
-
-  override def update(buf: QuantileSketchFacade, input: InternalRow): QuantileSketchFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(QuantileSketchFacade.fromBytes(algo, k, bytes))
-      catch {
-        case NonFatal(e) =>
-          logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: QuantileSketchFacade, other: QuantileSketchFacade): QuantileSketchFacade = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: QuantileSketchFacade): Any = buf.toBytes
-  override def serialize(buf: QuantileSketchFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): QuantileSketchFacade =
-    QuantileSketchFacade.fromBytes(algo, k, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxPercentileCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxPercentileCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/**
- * `approx_percentile_estimate(sketch, percentage)` — scalar: decode a
- * serialized sketch and return the quantile(s) as DOUBLE (always double,
- * like the reference — quantileSketches.scala:601-605). Returns null for
- * undecodable bytes so a scan over a partially-corrupt summary table
- * degrades instead of failing.
- */
-case class ApproxPercentileEstimate(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with PercentageSupport with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
-
-  def this(left: Expression, right: Expression) = {
-    this(left, right, QuantileParams.resolveDefault()._1, QuantileParams.resolveDefault()._2)
-  }
+case class ApproxPercentileEstimate(left: Expression, right: Expression, family: QuantileFamily)
+  extends QuantileEstimator {
 
   override def prettyName: String = "approx_percentile_estimate"
-  override def percentageExpression: Expression = right
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, percentageInputType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(BinaryType, Percentages.inputType(right))
+  override lazy val dataType: DataType = Percentages.shape(right, DoubleType)
 
-  override lazy val dataType: DataType = right.dataType match {
-    case _: ArrayType => ArrayType(DoubleType, containsNull = false)
-    case _ => DoubleType
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val defaultCheck = super.checkInputDataTypes()
+    if (defaultCheck.isFailure) defaultCheck else Percentages.check(right)
   }
 
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = QuantileSketchFacade.fromBytes(algo, k, bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null
-      else {
-        val qs = buf.quantiles(percentages)
-        if (returnsArray) new GenericArrayData(qs) else (qs.head: Any)
-      }
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, pct: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (bytes, _) =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
-         |}
-       """.stripMargin)
-  }
+  @transient private lazy val ranks = Percentages.values(right)
+  override protected def fromSketch(sketch: QuantileSketchFacade, pct: Any): Any =
+    Percentages.pick(right, sketch.quantiles(ranks).map(q => q: Any))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
+/** `approx_pmf_estimate` and `approx_cdf_estimate`: a constant number of
+ *  equi-width buckets over the sketch's [min, max]. */
+private[graft] abstract class SplitsEstimator extends QuantileEstimator {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val defaultCheck = super.checkInputDataTypes()
+    if (defaultCheck.isFailure) {
+      defaultCheck
+    } else if (!right.foldable) {
+      TypeCheckFailure(s"The number of splits must be a constant literal, but got $right")
+    } else {
+      right.eval() match {
+        case null => TypeCheckFailure("Number of splits must not be null")
+        case n: Int if n <= 1 =>
+          TypeCheckFailure(s"Number of splits must be greater than 1, but got $n")
+        case _ => TypeCheckSuccess
+      }
+    }
+  }
+}
+
 /**
- * `approx_pmf_estimate(sketch[, numSplits])` — scalar: decode a sketch and
- * return a Probability Mass Function over `numSplits` equi-width buckets.
- * Split points are `i * (max-min)/numSplits` (i in 1..n-1), replicating the
- * reference's un-offset splits (quantileSketches.scala:100-104) for output
+ * `approx_pmf_estimate(sketch[, numSplits])` — Probability Mass Function
+ * over `numSplits` equi-width buckets. Split points are
+ * `i * (max-min)/numSplits` (i in 1..n-1), replicating the reference's
+ * un-offset splits (quantileSketches.scala:100-104) for output
  * compatibility.
  */
-case class ApproxPmfEstimate(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
+case class ApproxPmfEstimate(left: Expression, right: Expression, family: QuantileFamily)
+  extends SplitsEstimator {
 
   override def prettyName: String = "approx_pmf_estimate"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  @transient private lazy val numSplits: Integer = right.eval() match {
-    case null => null
-    case i: Int => i
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val defaultCheck = super.checkInputDataTypes()
-    if (defaultCheck.isFailure) {
-      defaultCheck
-    } else if (!right.foldable) {
-      TypeCheckFailure(s"The number of splits must be a constant literal, but got $right")
-    } else if (numSplits == null) {
-      TypeCheckFailure("Number of splits must not be null")
-    } else if (numSplits <= 1) {
-      TypeCheckFailure(s"Number of splits must be greater than 1, but got $numSplits")
-    } else {
-      TypeCheckSuccess
-    }
-  }
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = QuantileSketchFacade.fromBytes(algo, k, bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null else new GenericArrayData(buf.pmf(numSplits))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, splits: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (bytes, _) =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def fromSketch(sketch: QuantileSketchFacade, numSplits: Any): Any =
+    new GenericArrayData(sketch.pmf(numSplits.asInstanceOf[Int]))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /**
- * `approx_cdf_estimate(sketch[, numSplits])` — scalar: cumulative
- * distribution over the same un-offset split points as
- * [[ApproxPmfEstimate]]; the final element is always 1.0. BEYOND the
- * reference surface (it stops at PMF) — the natural companion estimator
- * from the same sketch state.
+ * `approx_cdf_estimate(sketch[, numSplits])` — cumulative distribution
+ * over the same un-offset split points as [[ApproxPmfEstimate]]; the
+ * final element is always 1.0. BEYOND the reference surface (it stops
+ * at PMF).
  */
-case class ApproxCdfEstimate(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
+case class ApproxCdfEstimate(left: Expression, right: Expression, family: QuantileFamily)
+  extends SplitsEstimator {
 
   override def prettyName: String = "approx_cdf_estimate"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  @transient private lazy val numSplits: Integer = right.eval() match {
-    case null => null
-    case i: Int => i
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val defaultCheck = super.checkInputDataTypes()
-    if (defaultCheck.isFailure) {
-      defaultCheck
-    } else if (!right.foldable) {
-      TypeCheckFailure(s"The number of splits must be a constant literal, but got $right")
-    } else if (numSplits == null) {
-      TypeCheckFailure("Number of splits must not be null")
-    } else if (numSplits <= 1) {
-      TypeCheckFailure(s"Number of splits must be greater than 1, but got $numSplits")
-    } else {
-      TypeCheckSuccess
-    }
-  }
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = QuantileSketchFacade.fromBytes(algo, k, bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null else new GenericArrayData(buf.cdf(numSplits))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, splits: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (bytes, _) =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def fromSketch(sketch: QuantileSketchFacade, numSplits: Any): Any =
+    new GenericArrayData(sketch.cdf(numSplits.asInstanceOf[Int]))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /**
- * `approx_rank_estimate(sketch, value)` — scalar: the normalized rank of
- * `value` under the EXCLUSIVE criterion (fraction of items strictly
- * below `value`). `value` is an ordinary per-row expression, so ranks of
- * a whole column of probes can be computed against one sketch. BEYOND
- * the reference surface (quantile -> value but no value -> rank inverse).
+ * `approx_rank_estimate(sketch, value)` — the normalized rank of `value`
+ * under the EXCLUSIVE criterion (fraction of items strictly below
+ * `value`). `value` is an ordinary per-row expression, so ranks of a
+ * whole column of probes can be computed against one sketch. BEYOND the
+ * reference surface (quantile -> value but no value -> rank inverse).
  */
-case class ApproxRankEstimate(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
+case class ApproxRankEstimate(left: Expression, right: Expression, family: QuantileFamily)
+  extends QuantileEstimator {
 
   override def prettyName: String = "approx_rank_estimate"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val decodeFn: (Any, Any) => Any = { (bytesRaw, valueRaw) =>
-    try {
-      val buf = QuantileSketchFacade.fromBytes(algo, k, bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null
-      else java.lang.Double.valueOf(buf.rank(valueRaw.asInstanceOf[Double]))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, value: Any): Any = decodeFn(bytes, value)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn,
-      classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (bytes, value) =>
-      s"""
-         |Object $result = $fn.apply($bytes, $value);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Double) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def fromSketch(sketch: QuantileSketchFacade, value: Any): Any =
+    sketch.rank(value.asInstanceOf[Double])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /**
- * `approx_ks_distance(sketch_a, sketch_b)` — scalar: the two-sample
- * Kolmogorov–Smirnov distance between two serialized quantile sketches
- * (max absolute difference of the two inclusive ECDFs, evaluated at
- * every retained quantile of either side — see
- * [[graft.sketches.QuantileSketchFacade.ksDelta]]). Exact while both
- * sketches are pre-compaction; the retained-item plug-in estimate
- * afterwards. NULL for undecodable bytes or if either sketch is empty,
- * so drift scans over partially-built summary tables degrade instead of
- * failing. BEYOND the reference surface (its quantile family stops at
- * point/PMF estimates); this is the slice-vs-slice distribution-drift
- * primitive: per-slice sketches roll up with `approx_percentile_combine`
- * and any two rollups compare in O(retained) without re-reading data.
+ * `approx_histogram_estimate(sketch, splits)` — PMF over EXPLICIT
+ * constant ascending split points (EXCLUSIVE criterion: bucket `i` is
+ * the mass in `[splits[i-1], splits[i])`; `splits.length + 1` buckets).
+ * Unlike `approx_pmf_estimate`, whose equi-width bins depend on each
+ * sketch's own [min, max], fixed split points make histograms COMPARABLE
+ * across slices, days, and shards — the input to any binned drift
+ * statistic (total-variation distance, PSI, chi-square).
  */
-case class ApproxKsDistance(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
-
-  override def prettyName: String = "approx_ks_distance"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val decodeFn: (Any, Any) => Any = { (aRaw, bRaw) =>
-    try {
-      val a = QuantileSketchFacade.fromBytes(algo, k, aRaw.asInstanceOf[Array[Byte]])
-      val b = QuantileSketchFacade.fromBytes(algo, k, bRaw.asInstanceOf[Array[Byte]])
-      if (a.isEmpty || b.isEmpty) null
-      else java.lang.Double.valueOf(QuantileSketchFacade.ksDelta(a, b))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = decodeFn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn,
-      classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $fn.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Double) $result;
-         |}
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/**
- * `approx_histogram_estimate(sketch, splits)` — scalar: PMF over
- * EXPLICIT constant ascending split points (EXCLUSIVE criterion: bucket
- * `i` is the mass in `[splits[i-1], splits[i])`; `splits.length + 1`
- * buckets). Unlike `approx_pmf_estimate`, whose equi-width bins depend
- * on each sketch's own [min, max], fixed split points make histograms
- * COMPARABLE across slices, days, and shards — the input to any binned
- * drift statistic (total-variation distance, PSI, chi-square). NULL for
- * undecodable bytes or an empty sketch.
- */
-case class ApproxHistogramEstimate(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
+case class ApproxHistogramEstimate(left: Expression, right: Expression, family: QuantileFamily)
+  extends QuantileEstimator {
 
   override def prettyName: String = "approx_histogram_estimate"
   override def inputTypes: Seq[AbstractDataType] =
     Seq(BinaryType, ArrayType(DoubleType, containsNull = false))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   @transient private lazy val splits: Array[Double] = right.eval() match {
@@ -667,93 +256,62 @@ case class ApproxHistogramEstimate(
     }
   }
 
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val buf = QuantileSketchFacade.fromBytes(algo, k, bytesRaw.asInstanceOf[Array[Byte]])
-      if (buf.isEmpty) null else new GenericArrayData(buf.pmfAt(splits))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
+  override protected def fromSketch(sketch: QuantileSketchFacade, unused: Any): Any =
+    new GenericArrayData(sketch.pmfAt(splits))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** A distance between two serialized quantile sketches; null if either
+ *  side is empty. */
+private[graft] abstract class QuantileDistance extends QuantileEstimator {
+
+  protected def distance(a: QuantileSketchFacade, b: QuantileSketchFacade): Double
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
+  override def dataType: DataType = DoubleType
+
+  override protected def fromSketch(a: QuantileSketchFacade, bBytes: Any): Any = {
+    val b = family.fromBytes(bBytes.asInstanceOf[Array[Byte]])
+    if (b.isEmpty) null else distance(a, b)
   }
+}
 
-  override def nullSafeEval(bytes: Any, splitsRaw: Any): Any = decodeFn(bytes)
+/**
+ * `approx_ks_distance(sketch_a, sketch_b)` — the two-sample
+ * Kolmogorov–Smirnov distance (max absolute difference of the two
+ * inclusive ECDFs, evaluated at every retained quantile of either side —
+ * see [[graft.sketches.QuantileSketchFacade.ksDelta]]). Exact while both
+ * sketches are pre-compaction; the retained-item plug-in estimate
+ * afterwards. BEYOND the reference surface: the slice-vs-slice
+ * distribution-drift primitive — per-slice sketches roll up with
+ * `approx_percentile_combine` and any two rollups compare in
+ * O(retained) without re-reading data.
+ */
+case class ApproxKsDistance(left: Expression, right: Expression, family: QuantileFamily)
+  extends QuantileDistance {
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (bytes, _) =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override def prettyName: String = "approx_ks_distance"
+  override protected def distance(a: QuantileSketchFacade, b: QuantileSketchFacade): Double =
+    QuantileSketchFacade.ksDelta(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /**
- * `approx_emd_distance(sketch_a, sketch_b)` — scalar: the 1-Wasserstein
- * (earth mover's) distance between two serialized quantile sketches
- * (`integral |F_a - F_b| dx` over the merged retained support — see
- * [[graft.sketches.QuantileSketchFacade.emdDelta]]). The
+ * `approx_emd_distance(sketch_a, sketch_b)` — the 1-Wasserstein (earth
+ * mover's) distance (`integral |F_a - F_b| dx` over the merged retained
+ * support — see [[graft.sketches.QuantileSketchFacade.emdDelta]]). The
  * magnitude-sensitive companion to `approx_ks_distance`: KS reports the
- * max ECDF gap (scale-free), EMD reports the shift in VALUE UNITS, so a
- * corpus whose doc lengths all grew 10% shows a proportional EMD. Exact
- * while both sketches are pre-compaction. NULL for undecodable bytes or
- * an empty side.
+ * max ECDF gap (scale-free), EMD reports the shift in VALUE UNITS. Exact
+ * while both sketches are pre-compaction.
  */
-case class ApproxEmdDistance(
-    left: Expression,
-    right: Expression,
-    algoName: String,
-    k: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
-  private val algo = QuantileAlgo.fromString(algoName)
+case class ApproxEmdDistance(left: Expression, right: Expression, family: QuantileFamily)
+  extends QuantileDistance {
 
   override def prettyName: String = "approx_emd_distance"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val decodeFn: (Any, Any) => Any = { (aRaw, bRaw) =>
-    try {
-      val a = QuantileSketchFacade.fromBytes(algo, k, aRaw.asInstanceOf[Array[Byte]])
-      val b = QuantileSketchFacade.fromBytes(algo, k, bRaw.asInstanceOf[Array[Byte]])
-      if (a.isEmpty || b.isEmpty) null
-      else java.lang.Double.valueOf(QuantileSketchFacade.emdDelta(a, b))
-    } catch {
-      case NonFatal(_) =>
-        logWarning(s"Illegal input bytes for $algoName quantile sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = decodeFn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn,
-      classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $fn.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Double) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def distance(a: QuantileSketchFacade, b: QuantileSketchFacade): Double =
+    QuantileSketchFacade.emdDelta(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

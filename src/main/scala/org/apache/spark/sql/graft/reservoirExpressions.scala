@@ -12,163 +12,54 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketches.ReservoirFacade
 
-private[graft] trait ReservoirAggBase extends TypedImperativeAggregate[ReservoirFacade] {
-  def k: Int
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): ReservoirFacade = ReservoirFacade.create(k)
-  override def merge(buf: ReservoirFacade, other: ReservoirFacade): ReservoirFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def serialize(buf: ReservoirFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): ReservoirFacade =
-    ReservoirFacade.fromBytes(k, bytes)
-}
+/** Uniform reservoirs of at most `k` strings. */
+private[graft] case class ReservoirFamily(k: Int) extends SketchFamily[ReservoirFacade] {
+  override def label: String = "reservoir sketch"
+  override def create(): ReservoirFacade = ReservoirFacade.create(k)
+  override def merge(buf: ReservoirFacade, other: ReservoirFacade): Unit = buf.merge(other)
+  override def combine(buf: ReservoirFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: ReservoirFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): ReservoirFacade = ReservoirFacade.fromBytes(k, bytes)
 
-/** One-shot `reservoir_sample(col, k)` -> ARRAY<STRING> uniform sample. */
-case class ReservoirSampleAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends ReservoirAggBase with ImplicitCastInputTypes {
-
-  override def prettyName: String = "reservoir_sample"
-  override def children: Seq[Expression] = child :: Nil
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def updater(types: Seq[DataType]): (ReservoirFacade, Any, Any) => Unit =
+    (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
 
-  override def update(buf: ReservoirFacade, input: InternalRow): ReservoirFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-  override def eval(buf: ReservoirFacade): Any =
-    new GenericArrayData(buf.samples.map(UTF8String.fromString(_): Any))
-
-  override def withNewMutableAggBufferOffset(n: Int): ReservoirSampleAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ReservoirSampleAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  override def resultType(args: Seq[Expression]): DataType = ReservoirFamily.sampleType
+  override def finisher(args: Seq[Expression]): ReservoirFacade => Any =
+    buf => ReservoirFamily.samplesToCatalyst(buf.samples)
 }
 
-/** `reservoir_accumulate(col, k)` -> BINARY reservoir state. */
-case class ReservoirAccumulate(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends ReservoirAggBase with ImplicitCastInputTypes {
+private[graft] object ReservoirFamily {
+  val sampleType: ArrayType = ArrayType(StringType, containsNull = false)
 
-  override def prettyName: String = "reservoir_accumulate"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: ReservoirFacade, input: InternalRow): ReservoirFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-  override def eval(buf: ReservoirFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): ReservoirAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ReservoirAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `reservoir_combine(sketch, k)` -> BINARY merged reservoir state. */
-case class ReservoirCombine(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends ReservoirAggBase with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "reservoir_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: ReservoirFacade, input: InternalRow): ReservoirFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for reservoir sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def eval(buf: ReservoirFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): ReservoirCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ReservoirCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  def samplesToCatalyst(samples: Array[String]): GenericArrayData =
+    new GenericArrayData(samples.map(UTF8String.fromString): Array[Any])
 }
 
 /** Scalar `reservoir_estimate(sketch)` -> STRUCT<n, samples>; null on corrupt. */
 case class ReservoirEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with UnaryLike[Expression] {
 
   override def prettyName: String = "reservoir_estimate"
+  override protected def label: String = "reservoir sketch"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
-    StructField("samples", ArrayType(StringType, containsNull = false), nullable = false)))
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      // direct sketch read-out: the image carries its own k
-      val (n, samples) = ReservoirFacade.readSamples(bytesRaw.asInstanceOf[Array[Byte]])
-      InternalRow(n, new GenericArrayData(samples.map(UTF8String.fromString(_): Any)))
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for reservoir sketch state")
-        null
-    }
+    StructField("samples", ReservoirFamily.sampleType, nullable = false)))
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    // direct sketch read-out: the image carries its own k
+    val (n, samples) = ReservoirFacade.readSamples(bytes.asInstanceOf[Array[Byte]])
+    InternalRow(n, ReservoirFamily.samplesToCatalyst(samples))
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (InternalRow) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -17,65 +17,32 @@
  */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.conf.GraftConf
 import graft.sketches.StringQuantileFacade
 
-/** One-shot string quantile agg; also backs `approx_partition_bounds_str`
- *  (the builder passes evenly-spaced ranks). Null for an empty group. */
-case class ApproxPercentileStr(
-    child: Expression,
-    percentageExpression: Expression,
-    k: Int,
-    override val prettyName: String = "approx_percentile_str",
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[StringQuantileFacade] with PercentageSupport {
+/** String quantiles: the one-shots `approx_percentile_str(col,
+ *  percentage)` and `approx_partition_bounds_str` (the builder passes
+ *  evenly-spaced ranks). Null for an empty group. */
+private[graft] case class StringQuantileFamily(k: Int)
+  extends PercentileOneShot[StringQuantileFacade] {
 
-  override def children: Seq[Expression] = child :: percentageExpression :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, percentageInputType)
-  override def nullable: Boolean = true
-  override def dataType: DataType =
-    if (returnsArray) ArrayType(StringType, containsNull = false) else StringType
-
-  override def createAggregationBuffer(): StringQuantileFacade =
-    StringQuantileFacade.create(k)
-  override def update(buf: StringQuantileFacade, input: InternalRow): StringQuantileFacade = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-  override def merge(
-      buf: StringQuantileFacade, other: StringQuantileFacade): StringQuantileFacade = {
+  override def label: String = "string quantile sketch"
+  override def create(): StringQuantileFacade = StringQuantileFacade.create(k)
+  override def merge(buf: StringQuantileFacade, other: StringQuantileFacade): Unit =
     buf.merge(other)
-    buf
-  }
-  override def eval(buf: StringQuantileFacade): Any = {
-    if (buf.isEmpty) {
-      null
-    } else {
-      val qs = buf.quantiles(percentages)
-      if (returnsArray) {
-        new GenericArrayData(qs.map(q => UTF8String.fromString(q): Any))
-      } else {
-        UTF8String.fromString(qs.head)
-      }
-    }
-  }
-  override def serialize(buf: StringQuantileFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): StringQuantileFacade =
+  override def toBytes(buf: StringQuantileFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): StringQuantileFacade =
     StringQuantileFacade.fromBytes(k, bytes)
 
-  override def withNewMutableAggBufferOffset(n: Int): ApproxPercentileStr =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxPercentileStr =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), percentageExpression = c(1))
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def updater(types: Seq[DataType]): (StringQuantileFacade, Any, Any) => Unit =
+    (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
+
+  override protected def valueType(column: DataType): DataType = StringType
+  override protected def isEmpty(buf: StringQuantileFacade): Boolean = buf.isEmpty
+  override protected def quantiles(
+      column: DataType): (StringQuantileFacade, Array[Double]) => Array[Any] =
+    (buf, ranks) => buf.quantiles(ranks).map(q => UTF8String.fromString(q): Any)
 }

@@ -19,188 +19,56 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
 import org.apache.datasketches.tdigest.TDigestDouble
 
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
 import graft.conf.GraftConf
 import graft.sketches.TDigestFacade
 
-private[graft] object TDigestParams {
-  def resolveK(): Int = GraftConf.tdigestK
-}
+/** t-digests of doubles: `tdigest_accumulate`, `tdigest_combine`, and the
+ *  one-shot `approx_percentile_tdigest(col, percentage)` -> DOUBLE /
+ *  ARRAY<DOUBLE>, null for an empty group. */
+private[graft] case class TDigestFamily(k: Int) extends PercentileOneShot[TDigestDouble] {
+  override def label: String = TDigestFamily.Label
+  override def create(): TDigestDouble = TDigestFacade.create(k)
+  override def merge(buf: TDigestDouble, other: TDigestDouble): Unit = buf.merge(other)
+  override def toBytes(buf: TDigestDouble): Array[Byte] = buf.toByteArray
+  override def fromBytes(bytes: Array[Byte]): TDigestDouble = TDigestFacade.fromBytes(bytes)
 
-/** One-shot `approx_percentile_tdigest(col, percentage)` -> DOUBLE /
- *  ARRAY<DOUBLE>; null for an empty group. */
-case class ApproxPercentileTDigest(
-    child: Expression,
-    percentageExpression: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigestDouble] with PercentageSupport {
-
-  override def prettyName: String = "approx_percentile_tdigest"
-  override def children: Seq[Expression] = child :: percentageExpression :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, percentageInputType)
-  override def nullable: Boolean = true
-  override def dataType: DataType =
-    if (returnsArray) ArrayType(DoubleType, containsNull = false) else DoubleType
-
-  override def createAggregationBuffer(): TDigestDouble = TDigestFacade.create(k)
-  override def update(buf: TDigestDouble, input: InternalRow): TDigestDouble = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
-    buf
-  }
-  override def merge(buf: TDigestDouble, other: TDigestDouble): TDigestDouble = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: TDigestDouble): Any = {
-    if (buf.isEmpty) {
-      null
-    } else if (returnsArray) {
-      new GenericArrayData(percentages.map(buf.getQuantile))
-    } else {
-      buf.getQuantile(percentages.head)
-    }
-  }
-  override def serialize(buf: TDigestDouble): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): TDigestDouble = TDigestFacade.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ApproxPercentileTDigest =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ApproxPercentileTDigest =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), percentageExpression = c(1))
-}
-
-/** `tdigest_accumulate(col)` -> BINARY serialized t-digest. */
-case class TDigestAccumulate(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigestDouble] with ImplicitCastInputTypes {
-
-  override def prettyName: String = "tdigest_accumulate"
-  override def children: Seq[Expression] = child :: Nil
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
+  override def updater(types: Seq[DataType]): (TDigestDouble, Any, Any) => Unit =
+    (buf, v, _) => buf.update(v.asInstanceOf[Double])
 
-  override def createAggregationBuffer(): TDigestDouble = TDigestFacade.create(k)
-  override def update(buf: TDigestDouble, input: InternalRow): TDigestDouble = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
-    buf
-  }
-  override def merge(buf: TDigestDouble, other: TDigestDouble): TDigestDouble = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: TDigestDouble): Any = buf.toByteArray
-  override def serialize(buf: TDigestDouble): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): TDigestDouble = TDigestFacade.fromBytes(bytes)
+  override protected def valueType(column: DataType): DataType = DoubleType
+  override protected def isEmpty(buf: TDigestDouble): Boolean = buf.isEmpty
+  override protected def quantiles(
+      column: DataType): (TDigestDouble, Array[Double]) => Array[Any] =
+    (buf, ranks) => ranks.map(r => buf.getQuantile(r): Any)
 
-  override def withNewMutableAggBufferOffset(n: Int): TDigestAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TDigestAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  // tdigest_estimate takes one rank: array percentages keep the base scan
+  override def estimateFromSketch(sketch: Expression, args: Seq[Expression]): Option[Expression] =
+    if (Percentages.isArray(args(1))) None else Some(TDigestEstimate(sketch, args(1)))
 }
 
-/** `tdigest_combine(sketch)` -> BINARY merged t-digest. */
-case class TDigestCombine(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigestDouble]
-  with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "tdigest_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): TDigestDouble = TDigestFacade.create(k)
-  override def update(buf: TDigestDouble, input: InternalRow): TDigestDouble = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(TDigestFacade.fromBytes(bytes))
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for t-digest state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(buf: TDigestDouble, other: TDigestDouble): TDigestDouble = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: TDigestDouble): Any = buf.toByteArray
-  override def serialize(buf: TDigestDouble): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): TDigestDouble = TDigestFacade.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): TDigestCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TDigestCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+private[graft] object TDigestFamily {
+  val Label = "t-digest"
+  def fromConf(): TDigestFamily = TDigestFamily(GraftConf.tdigestK)
 }
 
 /** Scalar `tdigest_estimate(sketch, rank)` -> DOUBLE quantile; null on
  *  corrupt bytes or an empty digest. */
 case class TDigestEstimate(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with BinaryLike[Expression] {
 
   override def prettyName: String = "tdigest_estimate"
+  override protected def label: String = TDigestFamily.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (bytes, rank) =>
-    try TDigestFacade.quantile(bytes.asInstanceOf[Array[Byte]], rank.asInstanceOf[Double])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for t-digest state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, rank: Any): Any = fn(bytes, rank)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tdq", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (b, r) =>
-      s"""
-         |Object $result = $ref.apply($b, $r);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (Double) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def estimate(bytes: Any, rank: Any): Any =
+    TDigestFacade.quantile(bytes.asInstanceOf[Array[Byte]], rank.asInstanceOf[Double])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -208,39 +76,14 @@ case class TDigestEstimate(left: Expression, right: Expression)
 /** Scalar `tdigest_rank(sketch, value)` -> DOUBLE normalized rank; null on
  *  corrupt bytes or an empty digest. */
 case class TDigestRank(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with BinaryLike[Expression] {
 
   override def prettyName: String = "tdigest_rank"
+  override protected def label: String = TDigestFamily.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (bytes, value) =>
-    try TDigestFacade.rank(bytes.asInstanceOf[Array[Byte]], value.asInstanceOf[Double])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for t-digest state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any, value: Any): Any = fn(bytes, value)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tdr", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (b, v) =>
-      s"""
-         |Object $result = $ref.apply($b, $v);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (Double) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def estimate(bytes: Any, value: Any): Any =
+    TDigestFacade.rank(bytes.asInstanceOf[Array[Byte]], value.asInstanceOf[Double])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -14,239 +14,83 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.conf.GraftConf
 import graft.sketches.{ThetaIntersectionFacade, ThetaSketchFacade, ThetaUnionFacade}
 
-private[graft] object ThetaParams {
-  def resolveLgK(): Int = GraftConf.thetaLgK
+private[graft] object ThetaFamily {
+  val Label = "theta sketch"
+  def fromConf(): ThetaFamily = ThetaFamily(GraftConf.thetaLgK)
 }
 
-/** `theta_accumulate(col)` -> BINARY compact theta sketch. */
-case class ThetaAccumulate(
-    child: Expression,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaUnionFacade] with ImplicitCastInputTypes {
+/** Theta sketches of string / long values: `theta_accumulate`, `theta_union`. */
+private[graft] case class ThetaFamily(lgK: Int) extends SketchFamily[ThetaUnionFacade] {
+  override def label: String = ThetaFamily.Label
+  override def create(): ThetaUnionFacade = ThetaUnionFacade.create(lgK)
+  override def merge(buf: ThetaUnionFacade, other: ThetaUnionFacade): Unit = buf.merge(other)
+  override def combine(buf: ThetaUnionFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: ThetaUnionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): ThetaUnionFacade =
+    ThetaUnionFacade.fromBytes(lgK, bytes)
 
-  override def prettyName: String = "theta_accumulate"
-  override def children: Seq[Expression] = child :: Nil
   override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(StringType, LongType))
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private lazy val updateOne: (ThetaUnionFacade, Any) => Unit = child.dataType match {
-    case StringType => (buf, v) => buf.update(v.asInstanceOf[UTF8String].toString)
-    case LongType => (buf, v) => buf.update(v.asInstanceOf[Long])
-    case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
-  }
-
-  override def createAggregationBuffer(): ThetaUnionFacade = ThetaUnionFacade.create(lgK)
-  override def update(buf: ThetaUnionFacade, input: InternalRow): ThetaUnionFacade = {
-    val v = child.eval(input)
-    if (v != null) updateOne(buf, v)
-    buf
-  }
-  override def merge(buf: ThetaUnionFacade, other: ThetaUnionFacade): ThetaUnionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: ThetaUnionFacade): Any = buf.toBytes
-  override def serialize(buf: ThetaUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): ThetaUnionFacade =
-    ThetaUnionFacade.fromBytes(lgK, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ThetaAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ThetaAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+  override def updater(types: Seq[DataType]): (ThetaUnionFacade, Any, Any) => Unit =
+    types.head match {
+      case StringType => (buf, v, _) => buf.update(v.asInstanceOf[UTF8String].toString)
+      case LongType => (buf, v, _) => buf.update(v.asInstanceOf[Long])
+      case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
+    }
 }
 
-/** `theta_union(sketch)` -> BINARY union of serialized sketches. */
-case class ThetaUnionAgg(
-    child: Expression,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaUnionFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "theta_union"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): ThetaUnionFacade = ThetaUnionFacade.create(lgK)
-  override def update(buf: ThetaUnionFacade, input: InternalRow): ThetaUnionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for theta sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(buf: ThetaUnionFacade, other: ThetaUnionFacade): ThetaUnionFacade = {
+/** `theta_intersect`: null for an empty group. */
+private[graft] case class ThetaIntersection(lgK: Int)
+  extends SketchFamily[ThetaIntersectionFacade] {
+  override def label: String = ThetaFamily.Label
+  override def create(): ThetaIntersectionFacade = ThetaIntersectionFacade.create(lgK)
+  override def merge(buf: ThetaIntersectionFacade, other: ThetaIntersectionFacade): Unit =
     buf.merge(other)
-    buf
-  }
-  override def eval(buf: ThetaUnionFacade): Any = buf.toBytes
-  override def serialize(buf: ThetaUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): ThetaUnionFacade =
-    ThetaUnionFacade.fromBytes(lgK, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): ThetaUnionAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ThetaUnionAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `theta_intersect(sketch)` -> BINARY intersection; null for an empty group. */
-case class ThetaIntersectAgg(
-    child: Expression,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaIntersectionFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "theta_intersect"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): ThetaIntersectionFacade =
-    ThetaIntersectionFacade.create(lgK)
-  override def update(buf: ThetaIntersectionFacade, input: InternalRow): ThetaIntersectionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.intersect(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for theta sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(
-      buf: ThetaIntersectionFacade,
-      other: ThetaIntersectionFacade): ThetaIntersectionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: ThetaIntersectionFacade): Any = buf.toResultBytes
-  override def serialize(buf: ThetaIntersectionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): ThetaIntersectionFacade =
+  override def combine(buf: ThetaIntersectionFacade, bytes: Array[Byte]): Unit =
+    buf.intersect(bytes)
+  override def result(buf: ThetaIntersectionFacade): Array[Byte] = buf.toResultBytes
+  override def toBytes(buf: ThetaIntersectionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): ThetaIntersectionFacade =
     ThetaIntersectionFacade.fromBytes(lgK, bytes)
+}
 
-  override def withNewMutableAggBufferOffset(n: Int): ThetaIntersectAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): ThetaIntersectAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+/** A binary scalar over two serialized theta sketches. */
+private[graft] abstract class ThetaPairOp extends SketchEstimator with BinaryLike[Expression] {
+  protected def op(a: Array[Byte], b: Array[Byte]): Any
+
+  override protected def label: String = ThetaFamily.Label
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
+  override def dataType: DataType = BinaryType
+  override protected def estimate(a: Any, b: Any): Any =
+    op(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 }
 
 /** Scalar `theta_a_not_b(a, b)` -> BINARY difference sketch; null on corrupt. */
-case class ThetaANotB(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
+case class ThetaANotB(left: Expression, right: Expression) extends ThetaPairOp {
   override def prettyName: String = "theta_a_not_b"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (a, b) =>
-    try ThetaSketchFacade.aNotB(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for theta sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = fn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("anotb", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $ref.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (byte[]) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def op(a: Array[Byte], b: Array[Byte]): Any = ThetaSketchFacade.aNotB(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /**
  * Scalar `theta_intersect_pair(a, b)` -> BINARY intersection sketch;
- * null on corrupt. The per-ROW companion to the [[ThetaIntersectAgg]]
+ * null on corrupt. The per-ROW companion to the `theta_intersect`
  * aggregate: once sketches are joined side by side (a pairwise source
  * matrix, a day×day retention grid), set algebra runs inside the row
  * with no extra aggregation pass.
  */
-case class ThetaIntersectPair(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
+case class ThetaIntersectPair(left: Expression, right: Expression) extends ThetaPairOp {
   override def prettyName: String = "theta_intersect_pair"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (a, b) =>
-    try ThetaSketchFacade.intersectPair(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for theta sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = fn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("interPair", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $ref.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (byte[]) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def op(a: Array[Byte], b: Array[Byte]): Any =
+    ThetaSketchFacade.intersectPair(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -254,40 +98,10 @@ case class ThetaIntersectPair(left: Expression, right: Expression)
 /** Scalar `theta_union_pair(a, b)` -> BINARY union sketch; null on
  *  corrupt. `lgK` (the accumulate-side conf) is frozen driver-side at
  *  resolution, bounding the result's nominal size. */
-case class ThetaUnionPair(left: Expression, right: Expression, lgK: Int)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
+case class ThetaUnionPair(left: Expression, right: Expression, lgK: Int) extends ThetaPairOp {
   override def prettyName: String = "theta_union_pair"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (a, b) =>
-    try ThetaSketchFacade.unionPair(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], lgK)
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for theta sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = fn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unionPair", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $ref.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (byte[]) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def op(a: Array[Byte], b: Array[Byte]): Any =
+    ThetaSketchFacade.unionPair(a, b, lgK)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -299,79 +113,22 @@ case class ThetaUnionPair(left: Expression, right: Expression, lgK: Int)
  * both sketches are exact (sub-2^lgK cardinalities). Null on corrupt
  * bytes and for an empty A (the fraction is undefined, not 0).
  */
-case class ThetaContainment(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
-
+case class ThetaContainment(left: Expression, right: Expression) extends ThetaPairOp {
   override def prettyName: String = "theta_containment"
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (a, b) =>
-    try ThetaSketchFacade.containment(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for theta sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = fn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("containFn", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $ref.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Double) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def op(a: Array[Byte], b: Array[Byte]): Any =
+    ThetaSketchFacade.containment(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** Scalar `theta_estimate(sketch)` -> BIGINT; null on corrupt bytes. */
-case class ThetaEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
-
+case class ThetaEstimate(child: Expression) extends SketchEstimator with UnaryLike[Expression] {
   override def prettyName: String = "theta_estimate"
+  override protected def label: String = ThetaFamily.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = LongType
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try java.lang.Long.valueOf(ThetaSketchFacade.estimate(bytesRaw.asInstanceOf[Array[Byte]]))
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for theta sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (java.lang.Long) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def estimate(bytes: Any, unused: Any): Any =
+    ThetaSketchFacade.estimate(bytes.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -21,251 +21,92 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
 import org.apache.datasketches.tuple.adouble.DoubleSummary
 
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.conf.GraftConf
 import graft.sketches.{TupleIntersectionFacade, TupleSketchFacade, TupleUnionFacade}
 
-private[graft] object TupleParams {
-  def resolveLgK(): Int = GraftConf.tupleLgK
+private[graft] object TupleFamily {
+  val Label = "tuple sketch"
+  def fromConf(modeName: String): TupleFamily = TupleFamily(modeName, GraftConf.tupleLgK)
 }
 
-/** `tuple_accumulate(key, value[, mode])` -> BINARY compact tuple sketch. */
-case class TupleAccumulate(
-    key: Expression,
-    value: Expression,
-    modeName: String,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TupleUnionFacade] with ImplicitCastInputTypes {
+/** Tuple sketches of (string / long key, double value) pairs:
+ *  `tuple_accumulate`, `tuple_union`. */
+private[graft] case class TupleFamily(modeName: String, lgK: Int)
+  extends SketchFamily[TupleUnionFacade] {
 
   @transient private lazy val mode: DoubleSummary.Mode = TupleSketchFacade.parseMode(modeName)
 
-  override def prettyName: String = "tuple_accumulate"
-  override def children: Seq[Expression] = key :: value :: Nil
+  override def label: String = TupleFamily.Label
+  override def create(): TupleUnionFacade = TupleUnionFacade.create(lgK, mode)
+  override def merge(buf: TupleUnionFacade, other: TupleUnionFacade): Unit = buf.merge(other)
+  override def combine(buf: TupleUnionFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: TupleUnionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): TupleUnionFacade =
+    TupleUnionFacade.fromBytes(lgK, mode, bytes)
+
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(StringType, LongType), DoubleType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  @transient private lazy val updateOne: (TupleUnionFacade, Any, Double) => Unit =
-    key.dataType match {
-      case StringType => (buf, k, v) => buf.update(k.asInstanceOf[UTF8String].toString, v)
-      case LongType => (buf, k, v) => buf.update(k.asInstanceOf[Long], v)
+  override def updater(types: Seq[DataType]): (TupleUnionFacade, Any, Any) => Unit =
+    types.head match {
+      case StringType => (buf, k, v) =>
+        buf.update(k.asInstanceOf[UTF8String].toString, v.asInstanceOf[Double])
+      case LongType => (buf, k, v) => buf.update(k.asInstanceOf[Long], v.asInstanceOf[Double])
       case t => throw new IllegalStateException(s"Unexpected data type ${t.catalogString}")
     }
-
-  override def createAggregationBuffer(): TupleUnionFacade = TupleUnionFacade.create(lgK, mode)
-  override def update(buf: TupleUnionFacade, input: InternalRow): TupleUnionFacade = {
-    val k = key.eval(input)
-    val v = value.eval(input)
-    if (k != null && v != null) updateOne(buf, k, v.asInstanceOf[Double])
-    buf
-  }
-  override def merge(buf: TupleUnionFacade, other: TupleUnionFacade): TupleUnionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: TupleUnionFacade): Any = buf.toBytes
-  override def serialize(buf: TupleUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): TupleUnionFacade =
-    TupleUnionFacade.fromBytes(lgK, mode, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): TupleAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TupleAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(key = c(0), value = c(1))
 }
 
-/** `tuple_union(sketch[, mode])` -> BINARY union of serialized tuple sketches. */
-case class TupleUnionAgg(
-    child: Expression,
-    modeName: String,
-    lgK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TupleUnionFacade]
-  with ImplicitCastInputTypes with Logging {
+/** `tuple_intersect`: null for an empty group. */
+private[graft] case class TupleIntersection(modeName: String)
+  extends SketchFamily[TupleIntersectionFacade] {
 
   @transient private lazy val mode: DoubleSummary.Mode = TupleSketchFacade.parseMode(modeName)
 
-  override def prettyName: String = "tuple_union"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): TupleUnionFacade = TupleUnionFacade.create(lgK, mode)
-  override def update(buf: TupleUnionFacade, input: InternalRow): TupleUnionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for tuple sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(buf: TupleUnionFacade, other: TupleUnionFacade): TupleUnionFacade = {
+  override def label: String = TupleFamily.Label
+  override def create(): TupleIntersectionFacade = TupleIntersectionFacade.create(mode)
+  override def merge(buf: TupleIntersectionFacade, other: TupleIntersectionFacade): Unit =
     buf.merge(other)
-    buf
-  }
-  override def eval(buf: TupleUnionFacade): Any = buf.toBytes
-  override def serialize(buf: TupleUnionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): TupleUnionFacade =
-    TupleUnionFacade.fromBytes(lgK, mode, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): TupleUnionAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TupleUnionAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
-/** `tuple_intersect(sketch[, mode])` -> BINARY intersection; null for an empty group. */
-case class TupleIntersectAgg(
-    child: Expression,
-    modeName: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TupleIntersectionFacade]
-  with ImplicitCastInputTypes with Logging {
-
-  @transient private lazy val mode: DoubleSummary.Mode = TupleSketchFacade.parseMode(modeName)
-
-  override def prettyName: String = "tuple_intersect"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): TupleIntersectionFacade =
-    TupleIntersectionFacade.create(mode)
-  override def update(buf: TupleIntersectionFacade, input: InternalRow): TupleIntersectionFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.intersect(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for tuple sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def merge(
-      buf: TupleIntersectionFacade,
-      other: TupleIntersectionFacade): TupleIntersectionFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def eval(buf: TupleIntersectionFacade): Any = buf.toResultBytes
-  override def serialize(buf: TupleIntersectionFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): TupleIntersectionFacade =
+  override def combine(buf: TupleIntersectionFacade, bytes: Array[Byte]): Unit =
+    buf.intersect(bytes)
+  override def result(buf: TupleIntersectionFacade): Array[Byte] = buf.toResultBytes
+  override def toBytes(buf: TupleIntersectionFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): TupleIntersectionFacade =
     TupleIntersectionFacade.fromBytes(mode, bytes)
-
-  override def withNewMutableAggBufferOffset(n: Int): TupleIntersectAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TupleIntersectAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
 }
 
 /** Scalar `tuple_a_not_b(a, b)` -> BINARY difference sketch; null on corrupt. */
 case class TupleANotB(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with Logging {
+  extends SketchEstimator with BinaryLike[Expression] {
 
   override def prettyName: String = "tuple_a_not_b"
+  override protected def label: String = TupleFamily.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = BinaryType
-
-  @transient private[this] lazy val fn: (Any, Any) => Any = { (a, b) =>
-    try TupleSketchFacade.aNotB(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for tuple sketch state")
-        null
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = fn(a, b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tanotb", fn, classOf[(Any, Any) => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |Object $result = $ref.apply($a, $b);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (byte[]) $result;
-         |}
-       """.stripMargin)
-  }
-
+  override protected def estimate(a: Any, b: Any): Any =
+    TupleSketchFacade.aNotB(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** Scalar `tuple_estimate(sketch)` -> STRUCT<distinct_keys BIGINT, value_sum DOUBLE>;
  *  null on corrupt bytes. */
-case class TupleEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
-
+case class TupleEstimate(child: Expression) extends SketchEstimator with UnaryLike[Expression] {
   override def prettyName: String = "tuple_estimate"
+  override protected def label: String = TupleFamily.Label
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("distinct_keys", LongType, nullable = false),
     StructField("value_sum", DoubleType, nullable = false)))
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val (distinct, sum) = TupleSketchFacade.estimate(bytesRaw.asInstanceOf[Array[Byte]])
-      InternalRow(distinct, sum)
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for tuple sketch state")
-        null
-    }
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    val (distinct, sum) = TupleSketchFacade.estimate(bytes.asInstanceOf[Array[Byte]])
+    InternalRow(distinct, sum)
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -12,20 +12,37 @@
  */
 package org.apache.spark.sql.graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketches.VarOptFacade
 
-private[graft] object VarOptShapes {
+/** VarOpt samples of at most `k` (string, positive weight) items. */
+private[graft] case class VarOptFamily(k: Int) extends SketchFamily[VarOptFacade] {
+  override def label: String = "varopt sketch"
+  override def create(): VarOptFacade = VarOptFacade.create(k)
+  override def merge(buf: VarOptFacade, other: VarOptFacade): Unit = buf.merge(other)
+  override def combine(buf: VarOptFacade, bytes: Array[Byte]): Unit = buf.merge(bytes)
+  override def toBytes(buf: VarOptFacade): Array[Byte] = buf.toBytes
+  override def fromBytes(bytes: Array[Byte]): VarOptFacade = VarOptFacade.fromBytes(k, bytes)
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, DoubleType)
+  override def updater(types: Seq[DataType]): (VarOptFacade, Any, Any) => Unit = (buf, v, w) => {
+    val wd = w.asInstanceOf[Double]
+    // zero/negative weights carry no sampling mass; skip like nulls
+    if (wd > 0) buf.update(v.asInstanceOf[UTF8String].toString, wd)
+  }
+
+  override def resultType(args: Seq[Expression]): DataType = VarOptFamily.sampleType
+  override def finisher(args: Seq[Expression]): VarOptFacade => Any =
+    buf => VarOptFamily.samplesToCatalyst(buf.samples)
+}
+
+private[graft] object VarOptFamily {
   val sampleType: ArrayType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = false),
     StructField("weight", DoubleType, nullable = false))), containsNull = false)
@@ -36,155 +53,17 @@ private[graft] object VarOptShapes {
     }: Array[Any])
 }
 
-private[graft] trait VarOptAggBase extends TypedImperativeAggregate[VarOptFacade] {
-  def k: Int
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): VarOptFacade = VarOptFacade.create(k)
-  override def merge(buf: VarOptFacade, other: VarOptFacade): VarOptFacade = {
-    buf.merge(other)
-    buf
-  }
-  override def serialize(buf: VarOptFacade): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): VarOptFacade = VarOptFacade.fromBytes(k, bytes)
-}
-
-private[graft] trait VarOptWeightedUpdate extends VarOptAggBase {
-  def child: Expression
-  def weight: Expression
-
-  override def update(buf: VarOptFacade, input: InternalRow): VarOptFacade = {
-    val v = child.eval(input)
-    val w = weight.eval(input)
-    if (v != null && w != null) {
-      val wd = w.asInstanceOf[Double]
-      // zero/negative weights carry no sampling mass; skip like nulls
-      if (wd > 0) buf.update(v.asInstanceOf[UTF8String].toString, wd)
-    }
-    buf
-  }
-}
-
-/** One-shot `varopt_sample(col, weight, k)` -> ARRAY<STRUCT<item, weight>>. */
-case class VarOptSampleAgg(
-    child: Expression,
-    weight: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends VarOptWeightedUpdate with ImplicitCastInputTypes {
-
-  override def prettyName: String = "varopt_sample"
-  override def children: Seq[Expression] = Seq(child, weight)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, DoubleType)
-  override def dataType: DataType = VarOptShapes.sampleType
-
-  override def eval(buf: VarOptFacade): Any = VarOptShapes.samplesToCatalyst(buf.samples)
-
-  override def withNewMutableAggBufferOffset(n: Int): VarOptSampleAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): VarOptSampleAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), weight = c(1))
-}
-
-/** `varopt_accumulate(col, weight, k)` -> BINARY sketch state. */
-case class VarOptAccumulate(
-    child: Expression,
-    weight: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends VarOptWeightedUpdate with ImplicitCastInputTypes {
-
-  override def prettyName: String = "varopt_accumulate"
-  override def children: Seq[Expression] = Seq(child, weight)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, DoubleType)
-  override def dataType: DataType = BinaryType
-
-  override def eval(buf: VarOptFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): VarOptAccumulate =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): VarOptAccumulate =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c(0), weight = c(1))
-}
-
-/** `varopt_combine(sketch, k)` -> BINARY merged state. */
-case class VarOptCombine(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends VarOptAggBase with ImplicitCastInputTypes with Logging {
-
-  override def prettyName: String = "varopt_combine"
-  override def children: Seq[Expression] = child :: Nil
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  override def update(buf: VarOptFacade, input: InternalRow): VarOptFacade = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes != null) {
-      try buf.merge(bytes)
-      catch {
-        case NonFatal(e) =>
-          logWarning("Illegal input bytes for varopt sketch state")
-          throw e
-      }
-    }
-    buf
-  }
-  override def eval(buf: VarOptFacade): Any = buf.toBytes
-
-  override def withNewMutableAggBufferOffset(n: Int): VarOptCombine =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): VarOptCombine =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
-}
-
 /** Scalar `varopt_estimate(sketch)` -> STRUCT<n, samples>; null on corrupt. */
-case class VarOptEstimate(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes with Logging {
-
+case class VarOptEstimate(child: Expression) extends SketchEstimator with UnaryLike[Expression] {
   override def prettyName: String = "varopt_estimate"
+  override protected def label: String = "varopt sketch"
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
-    StructField("samples", VarOptShapes.sampleType, nullable = false)))
-
-  @transient private[this] lazy val decodeFn: Any => Any = { (bytesRaw: Any) =>
-    try {
-      val (n, samples) = VarOptFacade.readSamples(bytesRaw.asInstanceOf[Array[Byte]])
-      InternalRow(n, VarOptShapes.samplesToCatalyst(samples))
-    } catch {
-      case NonFatal(_) =>
-        logWarning("Illegal input bytes for varopt sketch state")
-        null
-    }
+    StructField("samples", VarOptFamily.sampleType, nullable = false)))
+  override protected def estimate(bytes: Any, unused: Any): Any = {
+    val (n, samples) = VarOptFacade.readSamples(bytes.asInstanceOf[Array[Byte]])
+    InternalRow(n, VarOptFamily.samplesToCatalyst(samples))
   }
-
-  override def nullSafeEval(bytes: Any): Any = decodeFn(bytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = ctx.addReferenceObj("decodeFn", decodeFn, classOf[Any => Any].getCanonicalName)
-    val result = ctx.freshName("result")
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |Object $result = $fn.apply($bytes);
-         |if ($result == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (InternalRow) $result;
-         |}
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

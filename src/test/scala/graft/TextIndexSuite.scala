@@ -89,6 +89,29 @@ class TextIndexSuite extends AnyFunSuite with GraftSparkSession {
     intercept[IllegalArgumentException] { TextIndex.compact(spark, inc, inc) }
   }
 
+  test("an index persisting no bucket count answers explicit-bucket queries") {
+    import spark.implicits._
+    val docs = Seq(1L -> "hash join table scan", 2L -> "slow scan filter", 3L -> "join order",
+      4L -> "table filter pushdown", 5L -> "hash table probe").toDF("doc_id", "text")
+    val path = Files.createTempDirectory("graft_tidx_legacy").toString
+    TextIndex.build(docs, "doc_id", "text", path, buckets = 8)
+    def top(p: String) = TextIndex.query(spark, p, queries, k = 10, buckets = 8)
+      .orderBy("qid", "rank").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val expected = top(path)
+    // the oldest layout: stats without the count and no meta/ directory
+    val legacy = Files.createTempDirectory("graft_tidx_legacy2").toString
+    Seq("postings", "terms").foreach { t =>
+      spark.read.parquet(s"$path/$t").write.partitionBy("bucket").parquet(s"$legacy/$t")
+    }
+    spark.read.parquet(s"$path/stats").drop("buckets").write.parquet(s"$legacy/stats")
+    assert(expected.nonEmpty && top(legacy) === expected)
+    val e = intercept[IllegalArgumentException] {
+      TextIndex.query(spark, legacy, queries, k = 10)
+    }
+    assert(e.getMessage.contains("persists no bucket count"), e.getMessage)
+  }
+
   test("streaming ingestion: foreachBatch appends keep the index queryable") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
