@@ -459,23 +459,25 @@ object Dedup {
     val idType = nodes.schema(nodes.schema.fieldIndex(idCol)).dataType
     val integralIds = Seq(edges.schema("id_a").dataType, idType)
       .forall(t => t == LongType || t == IntegerType || t == ShortType)
-    val cachedEdges = edges.select(col("id_a"), col("id_b")).cache()
-    try {
-      if (integralIds && localEdgeThreshold > 0 &&
-          cachedEdges.count() <= localEdgeThreshold) {
-        localComponents(nodes, cachedEdges, idCol, idType)
-      } else {
-        loopComponents(nodes, cachedEdges, idCol, maxIter)
+    withCached(edges.select(col("id_a"), col("id_b"))) { cachedEdges =>
+      val local =
+        if (integralIds && localEdgeThreshold > 0) {
+          LongPairs.collectBounded(cachedEdges, localEdgeThreshold)
+        } else None
+      local match {
+        case Some(pairs) => localComponents(nodes, pairs, idCol, idType)
+        case None => loopComponents(nodes, cachedEdges, idCol, maxIter)
       }
-    } finally cachedEdges.unpersist()
+    }
   }
 
   /** Driver union-find over a bounded pair set; union-by-min keeps every
    *  root the smallest id of its component, path compression keeps finds
-   *  amortized O(alpha). */
+   *  amortized O(alpha). A pair with a null endpoint links nothing, as
+   *  in the distributed loop, where null ids never join. */
   private def localComponents(
       nodes: DataFrame,
-      edges: DataFrame,
+      edges: LongPairs,
       idCol: String,
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.Row
@@ -489,9 +491,9 @@ object Dedup {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    edges.collect().foreach { row =>
-      val a = row.getAs[Number](0).longValue()
-      val b = row.getAs[Number](1).longValue()
+    for (i <- 0 until edges.size if !edges.aNull(i) && !edges.bNull(i)) {
+      val a = edges.a(i)
+      val b = edges.b(i)
       add(a); add(b)
       val ra = find(a)
       val rb = find(b)

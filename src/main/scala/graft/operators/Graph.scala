@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 /**
  * Graph analytics over corpus-derived graphs (near-dup similarity edges,
@@ -52,12 +54,18 @@ object Graph {
    * Dangling-node mass is dropped (the standard simplification; ranks
    * remain comparable, they just don't sum to SCALE).
    *
-   * Scale design: each iteration is one broadcast-or-shuffle join of
-   * the rank vector (8+8 bytes per node) against the edge list plus one
-   * partial-aggregable sum by `dst` — document payloads never
-   * participate. The driver holds one scalar (N). Iterations re-cache
-   * the rank vector and unpersist the previous one, so lineage stays
-   * O(1) regardless of `iters`.
+   * Scale design: three regimes behind one bound, Spark's own
+   * `spark.sql.autoBroadcastJoinThreshold` (T; T <= 0 means sort-merge):
+   *  - nodes x 32 and edges x 16 bytes both within T, integral ids: the
+   *    edge list is counted, collected once into primitive arrays, and
+   *    every iteration runs on the driver; the result is a local frame.
+   *  - only nodes x 32 within T: each iteration is one join of the
+   *    broadcast rank vector (8+8 bytes per node) against the edge list
+   *    plus one partial-aggregable sum by `dst`, with no exchange.
+   *  - otherwise the same join sort-merges; only the rank vector moves.
+   * Document payloads never participate. Distributed iterations
+   * re-cache the rank vector and unpersist the previous one, so lineage
+   * stays O(1) regardless of `iters`.
    */
   def pageRankFp(
       nodes: DataFrame,
@@ -69,14 +77,60 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    // the edge list is consumed once per iteration — pin it (and the
-    // node table) so an expensive upstream (e.g. a similarity join
-    // producing the edges) runs once, not `iters` times; N comes from
-    // the same cached table, not a second distinct pass
-    val ids = nodes.select(col(idCol).as("id")).distinct().cache()
-    val n = ids.count()
+    val bcThresh = broadcastThreshold(nodes)
+    val nodeIds = nodes.select(col(idCol).as("id"))
+    // N comes from the cached distinct ids the distributed rounds join
+    // against, not a second distinct pass; the driver-local regime
+    // skips it when the raw node rows already fit
+    lazy val ids = nodeIds.distinct().cache()
+    lazy val n = ids.count()
+    // Driver-local regime (see [[localGraph]]): every round runs on the
+    // driver over primitive arrays — two jobs in all (count, collect)
+    // instead of a join, an aggregation and their exchanges per round, which on a small
+    // graph cost far more in per-job latency than the data does. Same
+    // integer rule, so the ranks are bit-identical. Integral ids only:
+    // the arrays are longs, and other id types keep Spark's comparison
+    // semantics on the distributed paths.
+    val integral = (nodeIds.schema.head.dataType +:
+      Seq("src", "dst").map(c => edges.schema(c).dataType)).forall(isIntegral)
+    if (bcThresh <= 0 || !integral) {
+      distributedPageRank(ids, n, edges, bcThresh, iters, dampNum, dampDen)
+    } else {
+      // the edge list is counted, then collected or read once per
+      // iteration — pin it so an expensive upstream (e.g. a similarity
+      // join producing the edges) runs once
+      withCached(edges.select(col("src"), col("dst"))) { pairs =>
+        localGraph(nodeIds, ids, n, pairs, bcThresh) match {
+          case None => distributedPageRank(ids, n, pairs, bcThresh, iters, dampNum, dampDen)
+          case Some((idArr, hasNull, e)) =>
+            ids.unpersist(blocking = false) // the gate caches it only to count it
+            val nAll = idArr.length + (if (hasNull) 1 else 0)
+            require(nAll > 0, "pageRankFp: empty node set")
+            val base = RankScale / nAll
+            val ranks = localPageRank(idArr, e, base, iters, dampNum, dampDen)
+            val idField = nodeIds.schema.head
+            // a null id matches no edge, so it keeps only the teleport mass
+            val rows = idArr.indices.map(i => Row(ofLong(idArr(i), idField.dataType), ranks(i))) ++
+              (if (hasNull) Seq(Row(null, (dampDen - dampNum).toLong * base / dampDen)) else Nil)
+            localFrame(nodes.sparkSession, rows,
+              StructType(Seq(idField, StructField("rank_fp", LongType, nullable = true))))
+        }
+      }
+    }
+  }
+
+  /** [[pageRankFp]]'s Spark rounds over the cached distinct `ids`, `n`
+   *  of them. */
+  private def distributedPageRank(
+      ids: DataFrame,
+      n: Long,
+      edges: DataFrame,
+      bcThresh: Long,
+      iters: Int,
+      dampNum: Int,
+      dampDen: Int): DataFrame = {
     require(n > 0, "pageRankFp: empty node set")
-    val base = (RankScale / n) // SCALE DIV N, exact long division
+    val base = RankScale / n // SCALE DIV N, exact long division
     // Two edge layouts, picked by whether the rank vector is
     // broadcastable (the [[labelPropagation]] regime gate):
     //  - broadcast regime: cache the bare edge list hash-partitioned by
@@ -95,7 +149,6 @@ object Graph {
     // not the plan estimate: narrow-projection estimates overestimate
     // severalfold and mis-file moderate graphs into the SMJ regime
     // (see [[labelPropagation]]).
-    val bcThresh = broadcastThreshold(nodes)
     val bcast = bcThresh > 0 && n * 32L <= bcThresh
     val e =
       if (bcast) edges.select(col("src"), col("dst"))
@@ -156,6 +209,44 @@ object Graph {
     if (degF != null) degF.unpersist(blocking = false)
     ids.unpersist(blocking = false)
     ranks
+  }
+
+  /** [[pageRankFp]]'s rounds on the driver: `ids` sorted and distinct,
+   *  ranks returned in the same order. Exactly the distributed rule —
+   *  out-degree counts every edge of a node (duplicates, self-loops,
+   *  edges to foreign or null endpoints), `share = rank DIV outdeg`,
+   *  mass sent outside `ids` and dangling mass are dropped. */
+  private def localPageRank(
+      ids: Array[Long],
+      e: LongPairs,
+      base: Long,
+      iters: Int,
+      dampNum: Int,
+      dampDen: Int): Array[Long] = {
+    val n = ids.length
+    val deg = new Array[Long](n)
+    // the edges that carry mass, as (src, dst) node indices
+    val from = new Array[Int](e.size)
+    val to = new Array[Int](e.size)
+    var m = 0
+    for (i <- 0 until e.size) {
+      val u = if (e.aNull(i)) -1 else indexOf(ids, e.a(i))
+      if (u >= 0) {
+        deg(u) += 1
+        val v = if (e.bNull(i)) -1 else indexOf(ids, e.b(i))
+        if (v >= 0) { from(m) = u; to(m) = v; m += 1 }
+      }
+    }
+    val teleport = Math.multiplyExact((dampDen - dampNum).toLong, base)
+    var rank = Array.fill(n)(base)
+    val share = new Array[Long](n)
+    for (_ <- 1 to iters) {
+      for (u <- 0 until n) share(u) = if (deg(u) > 0) rank(u) / deg(u) else 0L
+      val s = new Array[Long](n)
+      for (k <- 0 until m) s(to(k)) = Math.addExact(s(to(k)), share(from(k)))
+      rank = s.map(x => Math.addExact(teleport, Math.multiplyExact(dampNum.toLong, x)) / dampDen)
+    }
+    rank
   }
 
   /**
@@ -455,13 +546,15 @@ object Graph {
     // generous 64 bytes/row — plan estimates of narrow projections
     // overestimate several-fold and would mis-file moderate graphs into
     // the SMJ regime (see [[labelPropagation]]); a frontier that truly
-    // outgrows the threshold demotes the hint for all later rounds.
+    // outgrows the threshold demotes the hint for all later rounds, and
+    // the adjacency is re-partitioned by `m` once, at the demotion, so
+    // the sort-merge rounds after it move only the frontier.
     val bcThresh = broadcastThreshold(seedsFrame)
     var lab = mat(seedsFrame)
     var frontierRows = lab.count()
     var hintFrontier = bcThresh > 0 && frontierRows * 64L <= bcThresh
-    val adjKey = if (hintFrontier) "x" else "m"
-    val adj = matPartitioned(mat, symmetric(canon).repartition(col(adjKey)))
+    var adjKey = if (hintFrontier) "x" else "m"
+    var adj = matPartitioned(mat, symmetric(canon).repartition(col(adjKey)))
     // the visited accumulator stays a LAZY union of the per-round
     // checkpointed frontiers: each leaf is already materialized, so
     // re-checkpointing the whole union every round (a full copy of all
@@ -472,6 +565,10 @@ object Graph {
     var frontier = lab
     var d = 1
     while (d <= maxDepth && frontierRows > 0) {
+      if (!hintFrontier && adjKey == "x") {
+        adj = matPartitioned(mat, adj.repartition(col("m")))
+        adjKey = "m"
+      }
       val fSide = if (hintFrontier) broadcast(frontier) else frontier
       val nbrs = fSide.join(adj, fSide("node") === adj("m"))
         .select(col("x").as("node")).distinct()
@@ -550,6 +647,59 @@ object Graph {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try mat(df) finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
+
+  private def isIntegral(t: DataType): Boolean =
+    t == LongType || t == IntegerType || t == ShortType || t == ByteType
+
+  /** A long id back as a value of integral type `t`. */
+  private def ofLong(v: Long, t: DataType): Any = t match {
+    case IntegerType => v.toInt
+    case ShortType => v.toShort
+    case ByteType => v.toByte
+    case _ => v
+  }
+
+  /**
+   * The driver-local regime's gate, and its inputs. The regime needs the
+   * distinct node ids at 32 bytes each (the broadcast regime's own gate)
+   * and the edges at 16 bytes each both within `bcThresh`. One job counts
+   * the raw node rows, an upper bound of the distinct ids, and the edge
+   * rows; only when the raw rows do not fit does the exact distinct count
+   * decide, which the distributed regimes need anyway. When both fit, one
+   * more job collects the node ids (returned sorted and distinct, and
+   * whether a null is among them) and the edges; `None` otherwise.
+   * `cachedEdges` is read twice.
+   */
+  private def localGraph(
+      nodeIds: DataFrame,
+      distinctIds: => DataFrame,
+      distinctCount: => Long,
+      cachedEdges: DataFrame,
+      bcThresh: Long): Option[(Array[Long], Boolean, LongPairs)] = {
+    val Seq(nodeRows, edgeRows) = LongPairs.count(nodeIds, cachedEdges)
+    val nodeSource =
+      if (edgeRows * 16L > bcThresh) None
+      else if (nodeRows * 32L <= bcThresh) Some(nodeIds)
+      else if (distinctCount * 32L <= bcThresh) {
+        Some(distinctIds.select(col(nodeIds.columns.head)))
+      } else None
+    nodeSource.map { source =>
+      val Seq(ns, e) = LongPairs.collect(source, cachedEdges)
+      val ids = (0 until ns.size).filterNot(ns.aNull).map(ns.a).distinct.sorted.toArray
+      (ids, (0 until ns.size).exists(ns.aNull), e)
+    }
+  }
+
+  /** Position of `v` in the sorted `ids`, or -1. */
+  private def indexOf(ids: Array[Long], v: Long): Int = {
+    val i = java.util.Arrays.binarySearch(ids, v)
+    if (i >= 0) i else -1
+  }
+
+  /** A driver-computed result as a local relation: exact size
+   *  statistics, so later joins can still broadcast it. */
+  private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private def broadcastThreshold(df: DataFrame): Long = {
     val raw = df.sparkSession.conf
@@ -1022,13 +1172,16 @@ object Graph {
    * engines, partitionings, and retries — unlike classical
    * random-order LPA.
    *
-   * Scale shape: per round, one shuffle join of the (node, label)
-   * vector against the symmetric edge list, one partial-aggregable
-   * (node, label) count, one node-partitioned window argmax, and one
-   * left join back — all keyed on node, no driver participation.
-   * Rounds materialize via [[materializer]] (localCheckpoint, or
-   * reliable `checkpoint()` when `checkpointDir` is set) so lineage
-   * stays O(1) in `rounds`.
+   * Scale shape: the [[pageRankFp]] regimes. When nodes x 32 and
+   * edges x 16 bytes both fit `spark.sql.autoBroadcastJoinThreshold`,
+   * the edge list is collected once and the rounds run on the driver.
+   * Otherwise, per round, one join of the (node, label) vector
+   * (broadcast while nodes x 32 fits) against the symmetric edge list,
+   * one partial-aggregable (node, label) count, one argmax aggregation
+   * and one left join back — all keyed on node. Distributed rounds
+   * materialize via [[materializer]] (localCheckpoint, or reliable
+   * `checkpoint()` when `checkpointDir` is set) so lineage stays O(1)
+   * in `rounds`.
    */
   def labelPropagation(
       nodes: DataFrame,
@@ -1040,11 +1193,48 @@ object Graph {
       checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val mat = materializer(edges, checkpointDir)
-    val canon = canonical(
-      edges.select(longId(col(srcCol)).as("s"), longId(col(dstCol)).as("d")),
-      "s", "d")
-    val labelsFrame = nodes.select(longId(col(idCol)).as("node")).distinct()
-      .withColumn("label", col("node"))
+    val idEdges = edges.select(longId(col(srcCol)).as("s"), longId(col(dstCol)).as("d"))
+    val nodeIds = nodes.select(longId(col(idCol)).as("node"))
+    val bcThresh = broadcastThreshold(nodes)
+    // The regime gate uses the EXACT node count of the just-materialized
+    // label vector (one cheap job over its blocks) times a conservative
+    // 32 bytes/row, not the optimizer's estimate: the plan estimate of
+    // an 8-byte projection overestimates 3-5x and mis-filed the bench's
+    // x10 probe (200k nodes ~ 6 MB of broadcast) into the SMJ regime,
+    // putting the per-round exchanges back at exactly the scale the
+    // probe measures. At true cluster scale the count is billions and
+    // the gate still flips to SMJ.
+    lazy val matLabels = mat(nodeIds.distinct().withColumn("label", col("node")))
+    lazy val n = matLabels.count()
+    // Driver-local regime (the [[pageRankFp]] rationale): when nodes
+    // and edges both fit, the rounds run on the driver with the same
+    // rule, tie-break and early stop
+    if (bcThresh <= 0) distributedLabelPropagation(mat, matLabels, n, idEdges, bcThresh, rounds)
+    else withCached(idEdges) { pairs =>
+      localGraph(nodeIds, matLabels, n, pairs, bcThresh) match {
+        case None => distributedLabelPropagation(mat, matLabels, n, pairs, bcThresh, rounds)
+        case Some((ids, hasNull, e)) =>
+          val labels = localLabelPropagation(ids, e, rounds)
+          // a null id joins no edge and keeps its (null) label
+          val rows = ids.indices.map(i => Row(ids(i), labels(i))) ++
+            (if (hasNull) Seq(Row(null, null)) else Nil)
+          localFrame(nodes.sparkSession, rows, StructType(Seq(
+            StructField("node", LongType, nullable = true),
+            StructField("label", LongType, nullable = true))))
+      }
+    }
+  }
+
+  /** [[labelPropagation]]'s Spark rounds from the materialized label
+   *  vector `labels0` (`n` nodes) over the long-id edges `idEdges`. */
+  private def distributedLabelPropagation(
+      mat: DataFrame => DataFrame,
+      labels0: DataFrame,
+      n: Long,
+      idEdges: DataFrame,
+      bcThresh: Long,
+      rounds: Int): DataFrame = {
+    val bcastRegime = bcThresh > 0 && n * 32L <= bcThresh
     // Pre-partition the adjacency ONCE, by the key every round's dominant
     // exchange would otherwise re-derive (guide §2.4 exchange reuse):
     //  - label side broadcastable (the common case until |V| outgrows the
@@ -1062,20 +1252,10 @@ object Graph {
     // Either way: one 2|E| exchange at setup vs one or two per round.
     // The materialization runs with AQE off ([[matPartitioned]]) so the
     // checkpointed RDD RECORDS the hash partitioning.
-    //
-    // The regime gate uses the EXACT node count of the just-materialized
-    // label vector (one cheap job over its blocks) times a conservative
-    // 32 bytes/row, not the optimizer's estimate: the plan estimate of
-    // an 8-byte projection overestimates 3-5x and mis-filed the bench's
-    // x10 probe (200k nodes ~ 6 MB of broadcast) into the SMJ regime,
-    // putting the per-round exchanges back at exactly the scale the
-    // probe measures. At true cluster scale the count is billions and
-    // the gate still flips to SMJ.
-    var matLabels = mat(labelsFrame)
-    val bcThresh = broadcastThreshold(labelsFrame)
-    val bcastRegime = bcThresh > 0 && matLabels.count() * 32L <= bcThresh
+    val canon = canonical(idEdges, "s", "d")
     val adjKey = if (bcastRegime) "m" else "x"
     val adj = matPartitioned(mat, symmetric(canon).repartition(col(adjKey)))
+    var matLabels = labels0
     var labels = matLabels
     var r = 0
     var converged = false
@@ -1106,5 +1286,151 @@ object Graph {
     }
     IterationDiagnostics.lastLpaRounds = r
     labels
+  }
+
+  /** [[labelPropagation]]'s rounds on the driver: `ids` sorted and
+   *  distinct, labels returned in the same order. The graph is the
+   *  distributed one — undirected, self-loops and duplicate edges
+   *  dropped, edges with an endpoint outside `ids` ignored — and so is
+   *  the rule: the most frequent neighbor label, ties to the larger
+   *  `-label` (`max_by(nl, (c, -nl))`), neighborless nodes keep theirs,
+   *  and a round that changes no label ends the loop. */
+  private def localLabelPropagation(ids: Array[Long], e: LongPairs, rounds: Int): Array[Long] = {
+    val n = ids.length
+    // canonical edges as lo * n + hi over node indices, deduplicated
+    val keys = new Array[Long](e.size)
+    var m = 0
+    for (i <- 0 until e.size if !e.aNull(i) && !e.bNull(i)) {
+      val a = indexOf(ids, e.a(i))
+      val b = indexOf(ids, e.b(i))
+      if (a >= 0 && b >= 0 && a != b) {
+        keys(m) = math.min(a, b).toLong * n + math.max(a, b)
+        m += 1
+      }
+    }
+    val uniq = keys.take(m).distinct
+    // symmetric adjacency in CSR form
+    val start = new Array[Int](n + 1)
+    uniq.foreach { k => start((k / n).toInt + 1) += 1; start((k % n).toInt + 1) += 1 }
+    for (v <- 0 until n) start(v + 1) += start(v)
+    val nbr = new Array[Int](start(n))
+    val fill = start.clone()
+    uniq.foreach { k =>
+      val (a, b) = ((k / n).toInt, (k % n).toInt)
+      nbr(fill(a)) = b; fill(a) += 1
+      nbr(fill(b)) = a; fill(b) += 1
+    }
+    var labels = ids.clone()
+    val maxDegree = (0 until n).map(v => start(v + 1) - start(v)).maxOption.getOrElse(0)
+    val scratch = new Array[Long](maxDegree)
+    var r = 0
+    var converged = false
+    while (r < rounds && !converged) {
+      val next = labels.clone()
+      var changed = false
+      for (v <- 0 until n if start(v + 1) > start(v)) {
+        val d = start(v + 1) - start(v)
+        for (j <- 0 until d) scratch(j) = labels(nbr(start(v) + j))
+        java.util.Arrays.sort(scratch, 0, d)
+        var best = scratch(0)
+        var bestC = 0
+        var j = 0
+        while (j < d) {
+          val l = scratch(j)
+          var c = 0
+          while (j < d && scratch(j) == l) { c += 1; j += 1 }
+          if (c > bestC || (c == bestC && -l > -best)) { best = l; bestC = c }
+        }
+        if (best != labels(v)) changed = true
+        next(v) = best
+      }
+      labels = next
+      converged = !changed
+      r += 1
+    }
+    IterationDiagnostics.lastLpaRounds = r
+    labels
+  }
+}
+
+/**
+ * Rows of one or two long columns collected to the driver as primitive
+ * arrays: row `i` is `(a(i), b(i))`, and `aNull(i)` / `bNull(i)` mark a
+ * null (its array slot then holds 0; a one-column frame has every `b`
+ * null). The driver-local regimes of [[Graph.pageRankFp]],
+ * [[Graph.labelPropagation]] and [[Dedup.connectedComponents]] hold
+ * their node ids and edge lists this way and iterate over them instead
+ * of starting Spark jobs per round.
+ */
+private[operators] final class LongPairs(
+    val a: Array[Long], val b: Array[Long], nulls: java.util.BitSet) {
+  def size: Int = a.length
+  def aNull(i: Int): Boolean = nulls.get(2 * i)
+  def bNull(i: Int): Boolean = nulls.get(2 * i + 1)
+}
+
+private[operators] object LongPairs {
+
+  /** Row counts of the frames in one job: each partition counts its own
+   *  rows, so there is no aggregation exchange (and no second job). */
+  def count(frames: DataFrame*): Seq[Long] = {
+    val spark = frames.head.sparkSession
+    import spark.implicits._
+    val n = frames.length
+    val counts = frames.zipWithIndex.map { case (f, t) => f.select(lit(t).as("t")) }
+      .reduce(_ unionAll _)
+      .mapPartitions { rows =>
+        val c = new Array[Long](n)
+        rows.foreach(r => c(r.getInt(0)) += 1)
+        Iterator(c)
+      }.collect()
+    (0 until n).map(t => counts.map(_(t)).sum)
+  }
+
+  /** When `df` has at most `maxRows` rows, its first two columns
+   *  collected by [[collect]]; `None` when it is larger. `df` is read
+   *  twice, to count and to collect: cache it first when its plan is
+   *  expensive. */
+  def collectBounded(df: DataFrame, maxRows: Long): Option[LongPairs] =
+    if (count(df).head > maxRows) None else Some(collect(df).head)
+
+  /** The first one or two columns of each frame, cast to long, collected
+   *  in one job. Each partition packs its rows into arrays, so the driver
+   *  receives a few arrays per partition, not one object per row. The
+   *  caller bounds the sizes (see [[collectBounded]]). */
+  def collect(frames: DataFrame*): Seq[LongPairs] = {
+    val spark = frames.head.sparkSession
+    import spark.implicits._
+    val tagged = frames.zipWithIndex.map { case (f, t) =>
+      val cs = f.columns.take(2).map(c => f.col(c).cast("long"))
+      f.select(lit(t).as("t"), cs(0).as("a"),
+        (if (cs.length > 1) cs(1) else lit(null).cast("long")).as("b"))
+    }.reduce(_ unionAll _)
+    val n = frames.length
+    // per partition and frame: (frame, a, b, null slots 2i / 2i+1)
+    val parts = tagged.mapPartitions { rows =>
+      val a = Array.fill(n)(Array.newBuilder[Long])
+      val b = Array.fill(n)(Array.newBuilder[Long])
+      val nulls = Array.fill(n)(Array.newBuilder[Int])
+      val len = new Array[Int](n)
+      rows.foreach { r =>
+        val t = r.getInt(0)
+        val i = len(t)
+        if (r.isNullAt(1)) { nulls(t) += 2 * i; a(t) += 0L } else a(t) += r.getLong(1)
+        if (r.isNullAt(2)) { nulls(t) += 2 * i + 1; b(t) += 0L } else b(t) += r.getLong(2)
+        len(t) += 1
+      }
+      Iterator.tabulate(n)(t => (t, a(t).result(), b(t).result(), nulls(t).result()))
+    }.collect()
+    (0 until n).map { t =>
+      val mine = parts.filter(_._1 == t)
+      val nulls = new java.util.BitSet()
+      var offset = 0
+      mine.foreach { case (_, pa, _, ns) =>
+        ns.foreach(j => nulls.set(2 * offset + j))
+        offset += pa.length
+      }
+      new LongPairs(mine.flatMap(_._2), mine.flatMap(_._3), nulls)
+    }
   }
 }

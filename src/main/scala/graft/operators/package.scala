@@ -37,6 +37,18 @@ package object operators {
   import org.apache.spark.sql.functions.{array, element_at, transform}
 
   /**
+   * `body` over `df` cached, with the cache released afterwards — unless
+   * the caller has already cached the same plan: `cache()` is then a
+   * no-op, and `unpersist()` would drop the caller's own blocks (every
+   * later read of them recomputing the whole upstream).
+   */
+  private[operators] def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val c = if (owned) df.cache() else df
+    try body(c) finally if (owned) c.unpersist(blocking = false)
+  }
+
+  /**
    * Round-robin fan-out for a CPU-heavy per-row stage downstream of an
    * unsplittable input (optimization guide §2.5 "input skew: one huge
    * unsplittable file — repartition immediately after the read"): the

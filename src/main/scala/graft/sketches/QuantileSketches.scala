@@ -84,6 +84,7 @@ object QuantileSketchFacade {
   private[sketches] val CRITERIA = QuantileSearchCriteria.EXCLUSIVE
   private val ReqSerVer: Byte = 1
   private val ReqFamilyId: Byte = 17
+  private val ReqMaxK = 1024
 
   def create(algo: QuantileAlgo, k: Int): QuantileSketchFacade = algo match {
     case QuantileAlgo.KLL => new KllFacade(KllFloatsSketch.newHeapInstance(k), k)
@@ -98,14 +99,50 @@ object QuantileSketchFacade {
     algo match {
       case QuantileAlgo.KLL => new KllFacade(KllFloatsSketch.heapify(mem), k)
       case QuantileAlgo.REQ =>
-        // ReqSketch.heapify checks serial version and family only in
-        // asserts, so it would read arbitrary bytes as item counts and
-        // allocate arrays of that size: reject a foreign header here
-        require(bytes.length >= 8 && bytes(1) == ReqSerVer && bytes(2) == ReqFamilyId,
-          "not a REQ sketch image")
+        checkReqImage(bytes)
         new ReqFacade(ReqSketch.heapify(mem), k)
       case QuantileAlgo.MERGEABLE =>
         new MergeableFacade(UpdateDoublesSketch.heapify(mem), k)
+    }
+  }
+
+  /**
+   * ReqSketch.heapify checks serial version and family only in asserts,
+   * and trusts every count in the image: it allocates a float array of
+   * each compactor's item count (and of its nominal capacity) before
+   * reading a byte of it. So walk the layout first — an 8-byte header;
+   * up to 255 raw items; or, with more than one compactor, 16 bytes of
+   * n/min/max and then per compactor a 20-byte header (state, section
+   * size, lgWeight, section count, pad, item count) and its items — and
+   * reject any claim larger than the bytes left, or a section size above
+   * the header's k or REQ's largest k (the capacity is 4 x section size
+   * x sections).
+   */
+  private def checkReqImage(bytes: Array[Byte]): Unit = {
+    require(bytes.length >= 8 && bytes(1) == ReqSerVer && bytes(2) == ReqFamilyId,
+      "not a REQ sketch image")
+    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val flags = bytes(3) & 0xff
+    val k = buf.getShort(4) & 0xffff
+    val numCompactors = bytes(6) & 0xff
+    var pos = 8L
+    def take(n: Long): Unit = {
+      require(n >= 0 && n <= bytes.length - pos, "truncated REQ sketch image")
+      pos += n
+    }
+    def compactor(): Unit = {
+      take(20)
+      val at = (pos - 20).toInt
+      require(math.round(buf.getFloat(at + 8)) <= math.min(k, ReqMaxK),
+        "corrupt REQ sketch image")
+      take(4L * buf.getInt(at + 16))
+    }
+    if (numCompactors > 1) {
+      take(16)
+      (0 until numCompactors).foreach(_ => compactor())
+    } else if ((flags & 4) == 0) { // not empty
+      if ((flags & 16) != 0) take(4L * (bytes(7) & 0xff)) // raw items
+      else compactor()
     }
   }
 

@@ -97,6 +97,22 @@ class SketchFamilyLawsSuite extends AnyFunSuite with GraftSparkSession {
       }
     }
   }
+
+  test("a REQ image with a valid header and a bogus item count is rejected, not allocated") {
+    import spark.implicits._
+    val images = Seq(bogusReq(estimation = false), bogusReq(estimation = true))
+    val df = images.toDF("s")
+    val estimates = estimators.map(e => s"$e IS NULL")
+    Seq(df, df.repartition(2)).foreach { d =>
+      val flags = d.selectExpr(estimates: _*).collect()
+      estimators.indices.foreach(i => assert(flags.forall(_.getBoolean(i)), estimators(i)))
+    }
+    intercept[Exception](df.selectExpr("approx_percentile_combine(s)").collect())
+    for (image <- images; law <- laws) assert(combineFails(law, image), law.name)
+  }
+
+  private def combineFails[B](law: Law[B], bytes: Array[Byte]): Boolean =
+    scala.util.Try(law.family.combine(law.family.create(), bytes)).isFailure
 }
 
 private object SketchFamilyLawsSuite {
@@ -239,6 +255,19 @@ private object SketchFamilyLawsSuite {
     Gen.const("not a sketch".getBytes("UTF-8")),
     Gen.choose(1, 64).flatMap(n => Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue)))
       .map(bs => (0.toByte :: bs).toArray))
+
+  /** A REQ image (k = 12) whose header is valid but whose one compactor
+   *  claims nearly 2^31 items and carries four bytes of them; with
+   *  `estimation`, the same compactor follows an estimation-mode header. */
+  def bogusReq(estimation: Boolean): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(64).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    b.put((if (estimation) 4 else 2).toByte).put(1.toByte).put(17.toByte).put(0.toByte)
+      .putShort(12.toShort).put((if (estimation) 2 else 1).toByte).put(0.toByte)
+    if (estimation) b.putLong(100L).putFloat(0f).putFloat(1f)
+    b.putLong(0L).putFloat(12f).put(0.toByte).put(3.toByte).putShort(0.toShort)
+      .putInt(Int.MaxValue - 8).putFloat(1f)
+    java.util.Arrays.copyOf(b.array(), b.position())
+  }
 
   /** Every scalar estimator over a sketch column `s`. */
   val estimators: Seq[String] = Seq(
