@@ -11,7 +11,7 @@ object Bench {
     if (sys.env.contains("SPARK_GRAFT_SCALE_CHILD")) { scaleChildMain(); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // noop sink materializes every row without collecting to the driver.
     def exec(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -156,16 +156,6 @@ object Bench {
     spark.stop()
   }
 
-  private def buildSession(cpus: String): SparkSession =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-
   /** Per-query minimum over every prior run in the history file —
    *  the cheapest "is this read plausible?" oracle available at
    *  record time. The main queries map is the FIRST flat
@@ -212,7 +202,7 @@ object Bench {
   private def scaleChildMain(): Unit = {
     import scala.jdk.CollectionConverters._
     val sfDir = sys.env("SPARK_GRAFT_SF_DIR")
-    val spark = buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files
       .readAllLines(java.nio.file.Paths.get(sys.env("SPARK_GRAFT_SCALE_BASE")))

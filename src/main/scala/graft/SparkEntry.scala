@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.conf.GraftConf
+import graft.conf.GraftConf.withConfs
 import graft.operators.{AsofJoin, BloomIndex, Clustering, Contracts, Dedup, Embeddings, EventOps,
   Graph, IvfIndex, JoinStats, Linkage, Multimodal, Pq, Privacy, Profiler, RangeJoin, Retrieval,
   Sampling, Similarity, SkewJoin, Spectral, Sq8, TextOps, UrlOps}
@@ -50,6 +52,26 @@ object SparkEntry {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
+
+  /** The harness session (Bench, Verify, Profile, Explain): `local[cpus]`
+   *  with as many shuffle partitions, AQE on, graft installed. */
+  def localSession(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** KLL, exact while a group holds at most k = 200 rows. A query scopes
+   *  it around the frames it builds: the impl freezes into their plans at
+   *  analysis time, so later queries on the session keep the default. */
+  private val KllImpl = GraftConf.QUANTILE_SKETCH_IMPL_KEY -> "KLL"
+
+  /** Shuffle partitions of a bounded streaming replay: see q69. */
+  private val StateParts = "spark.sql.shuffle.partitions" -> "4"
 
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -234,18 +256,9 @@ object SparkEntry {
         |   FROM sub, stats GROUP BY n) AS pmf_2,
         |  (SELECT round(sum(CASE WHEN v >= 3*(mx-mn)/4 THEN 1 ELSE 0 END)/n, 9)
         |   FROM sub, stats GROUP BY n) AS pmf_3""".stripMargin) { (s, d) =>
-      // KLL (exact to n<=200) is frozen into this query's plan at analysis
-      // time; restore the previous impl right after so the session default
-      // doesn't leak into queries planned later.
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "lineitem")
         buildQ04(s)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -267,10 +280,7 @@ object SparkEntry {
         |  round((SELECT sum(CASE WHEN v < 3*(mx-mn)/4 THEN 1 ELSE 0 END)/n FROM sub, stats GROUP BY n, mn, mx), 9)
         |    AS cdf_2,
         |  CAST(1.0 AS DOUBLE) AS cdf_3""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "lineitem")
         s.sql("""
           |WITH m AS (
@@ -282,9 +292,6 @@ object SparkEntry {
           |       round(approx_cdf_estimate(s, 4)[2], 9) AS cdf_2,
           |       round(approx_cdf_estimate(s, 4)[3], 9) AS cdf_3
           |FROM m""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -1857,23 +1864,19 @@ object SparkEntry {
       // per micro-batch, so partitions size to STATE THROUGHPUT, not to
       // the batch-side core count: a bounded replay of this volume on 32
       // partitions spends 2x the wall clock on 32 store commits/batch
-      // (measured 4.4 s -> 2.1 s at sf0.1 with 4). The query binds its
-      // partitioning at start(); the session conf is restored right after.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val qy = admitted.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        input.addData(b1.toSeq)
-        qy.processAllAvailable()
-        input.addData(b2.toSeq)
-        qy.processAllAvailable()
-      } finally {
-        qy.stop()
-        // restored only after the replay: the query thread reads the conf
-        // while planning batch 0, which may run after start() returns
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // (measured 4.4 s -> 2.1 s at sf0.1 with 4). The conf is restored
+      // only after the replay: the query thread reads it while planning
+      // batch 0, which may run after start() returns.
+      withConfs(s, StateParts) {
+        val qy = admitted.writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try {
+          val (b1, b2) = rows.splitAt(rows.length / 2)
+          input.addData(b1.toSeq)
+          qy.processAllAvailable()
+          input.addData(b2.toSeq)
+          qy.processAllAvailable()
+        } finally qy.stop()
       }
       s.table(sink).groupBy("user_id")
         .agg(count(lit(1)).as("n_admitted")).orderBy("user_id")
@@ -1917,25 +1920,22 @@ object SparkEntry {
       val sink = "graft_q70_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // q69's state-partition sizing (one store commit per partition per
       // micro-batch; measured 7.3 s -> 3.4 s at sf0.1 with 4)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val qy = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        rin.addData(rrows.toSeq)
-        lin.addData(lrows.toSeq)
-        qy.processAllAvailable()
-        // two watermark pushes: the first finalizes everything older than
-        // max(real) - delay, the second flushes the final minute's lefts.
-        // Far-future RIGHT rows emit nothing and can match no left.
-        val maxMs = (lrows ++ rrows).map(_._2.getTime).max
-        rin.addData((-1L, new java.sql.Timestamp(maxMs + 400L * 24 * 3600 * 1000), -1L))
-        qy.processAllAvailable()
-        rin.addData((-2L, new java.sql.Timestamp(maxMs + 800L * 24 * 3600 * 1000), -1L))
-        qy.processAllAvailable()
-      } finally {
-        qy.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConfs(s, StateParts) {
+        val qy = out.writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try {
+          rin.addData(rrows.toSeq)
+          lin.addData(lrows.toSeq)
+          qy.processAllAvailable()
+          // two watermark pushes: the first finalizes everything older than
+          // max(real) - delay, the second flushes the final minute's lefts.
+          // Far-future RIGHT rows emit nothing and can match no left.
+          val maxMs = (lrows ++ rrows).map(_._2.getTime).max
+          rin.addData((-1L, new java.sql.Timestamp(maxMs + 400L * 24 * 3600 * 1000), -1L))
+          qy.processAllAvailable()
+          rin.addData((-2L, new java.sql.Timestamp(maxMs + 800L * 24 * 3600 * 1000), -1L))
+          qy.processAllAvailable()
+        } finally qy.stop()
       }
       s.table(sink).select(col("event_id"), col("user_id"),
           unix_micros(col("t")).as("t"),
@@ -3095,10 +3095,7 @@ object SparkEntry {
       """SELECT event_type, count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       view(s, d, "events")
-      val key = "spark.sql.graft.approxCountDistinct.enabled"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      withConfs(s, "spark.sql.graft.approxCountDistinct.enabled" -> "true") {
         val df = s.sql("""SELECT event_type, count(DISTINCT user_id) AS n_users
                          |FROM events GROUP BY event_type
                          |ORDER BY event_type""".stripMargin)
@@ -3107,11 +3104,6 @@ object SparkEntry {
           "approx rewrite did not fire")
         val rows = df.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      } finally {
-        saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
       }
     },
 
@@ -3176,10 +3168,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(summaryDir)
       graft.plans.GraftSummaries.registerDistinctSummary(
         basePath, s.read.parquet(summaryDir), Seq("event_type"), "props", "sk")
-      val key = graft.plans.GraftSummaries.ENABLED_KEY
-      val saved = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      try withConfs(s, graft.plans.GraftSummaries.ENABLED_KEY -> "true") {
         val df = s.sql(
           """SELECT event_type, approx_count_distinct_ex(props) AS n_props
             |FROM q112_events GROUP BY event_type
@@ -3188,13 +3177,7 @@ object SparkEntry {
           "summary rewrite did not fire: the base scan survived")
         val rows = df.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      } finally {
-        saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-        graft.plans.GraftSummaries.clear()
-      }
+      } finally graft.plans.GraftSummaries.clear()
     },
 
     // ebpps_sample (beyond reference surface): strict-PPS sampling.
@@ -3576,19 +3559,16 @@ object SparkEntry {
       val sink = "graft_q123_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // q69's state-partition sizing rationale: one state-store commit
       // per partition per micro-batch dominates a bounded replay
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val qy = pairs.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        input.addData(b1.toSeq)
-        qy.processAllAvailable()
-        input.addData(b2.toSeq)
-        qy.processAllAvailable()
-      } finally {
-        qy.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConfs(s, StateParts) {
+        val qy = pairs.writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try {
+          val (b1, b2) = rows.splitAt(rows.length / 2)
+          input.addData(b1.toSeq)
+          qy.processAllAvailable()
+          input.addData(b2.toSeq)
+          qy.processAllAvailable()
+        } finally qy.stop()
       }
       s.table(sink).distinct().orderBy("id_a", "id_b")
     },
@@ -3830,19 +3810,16 @@ object SparkEntry {
         input.toDF().toDF("doc_id", "lang", "text"),
         "lang", "doc_id", "text", budgetTokens = 2000L)
       val sink = "graft_q130_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val qy = admitted.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        input.addData(b1.toSeq)
-        qy.processAllAvailable()
-        input.addData(b2.toSeq)
-        qy.processAllAvailable()
-      } finally {
-        qy.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConfs(s, StateParts) {
+        val qy = admitted.writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try {
+          val (b1, b2) = rows.splitAt(rows.length / 2)
+          input.addData(b1.toSeq)
+          qy.processAllAvailable()
+          input.addData(b2.toSeq)
+          qy.processAllAvailable()
+        } finally qy.stop()
       }
       s.table(sink).select("doc_id", "lang").orderBy("doc_id")
     },
@@ -3922,10 +3899,7 @@ object SparkEntry {
         |         CAST((SELECT count(*) FROM b WHERE b.v <= pts.v) AS DOUBLE) / nb.n fb
         |  FROM pts, na, nb)
         |SELECT round(max(abs(fa - fb)), 9) AS ks FROM ecdf""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "lineitem")
         s.sql("""
           |WITH a AS (SELECT approx_percentile_combine(s) sk FROM (
@@ -3937,9 +3911,6 @@ object SparkEntry {
           |        FROM lineitem WHERE l_orderkey < 40 AND l_linenumber % 2 = 1
           |        GROUP BY l_suppkey))
           |SELECT round(approx_ks_distance(a.sk, b.sk), 9) AS ks FROM a, b""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -3973,12 +3944,7 @@ object SparkEntry {
       view(s, d, "events")
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, KllImpl, StateParts) {
         val rows = s.table("events").where(col("user_id") < 12)
           .select(expr("timestamp_micros(ts DIV 1000)").as("t"), col("value"))
           .orderBy("t").collect()
@@ -4005,12 +3971,6 @@ object SparkEntry {
           .select(col("day"),
             round(expr("approx_ks_distance(sk, ref_sk)"), 9).as("ks"))
           .orderBy("day")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
       }
     },
 
@@ -4120,10 +4080,7 @@ object SparkEntry {
         |SELECT CAST(pa.bin AS BIGINT) AS bin, round(pa.p, 9) AS p_a, round(pb.p, 9) AS p_b,
         |       CAST(round(abs(pa.p - pb.p) * 1e9) AS BIGINT) AS absdiff_fp
         |FROM pa JOIN pb ON pa.bin = pb.bin ORDER BY bin""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "events")
         s.sql("""
           |WITH a AS (SELECT approx_percentile_accumulate(value) s FROM events
@@ -4139,9 +4096,6 @@ object SparkEntry {
           |       CAST(round(abs(e.p - pb[e.pos]) * 1e9) AS BIGINT) AS absdiff_fp
           |FROM h LATERAL VIEW posexplode(pa) e AS pos, p
           |ORDER BY bin""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -4167,10 +4121,7 @@ object SparkEntry {
         |      FROM pts, na, nb)
         |SELECT round(sum(abs(gap) * (nv - v)), 6) AS emd FROM f WHERE nv IS NOT NULL""".stripMargin) {
       (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "lineitem")
         s.sql("""
           |WITH a AS (SELECT approx_percentile_accumulate(l_quantity) s
@@ -4178,9 +4129,6 @@ object SparkEntry {
           |b AS (SELECT approx_percentile_accumulate(l_quantity) s
           |      FROM lineitem WHERE l_orderkey < 40 AND l_linenumber % 2 = 1)
           |SELECT round(approx_emd_distance(a.s, b.s), 6) AS emd FROM a, b""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -4216,10 +4164,7 @@ object SparkEntry {
         |SELECT CAST(sum(CAST(round((pa.p - pb.p) * ln(pa.p / pb.p) * 1e8) AS BIGINT))
         |            AS BIGINT) AS psi_fp
         |FROM pa JOIN pb ON pa.bin = pb.bin""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "events")
         s.sql("""
           |WITH a AS (SELECT approx_percentile_accumulate(value) s FROM events
@@ -4233,9 +4178,6 @@ object SparkEntry {
           |SELECT CAST(sum(CAST(round((e.p - pb[e.pos]) * ln(e.p / pb[e.pos]) * 1e8)
           |                     AS BIGINT)) AS BIGINT) AS psi_fp
           |FROM h LATERAL VIEW posexplode(pa) e AS pos, p""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -4330,10 +4272,7 @@ object SparkEntry {
         |           SELECT v FROM ev e4 WHERE e4.g = grp.g AND e4.day = grp.day
         |           UNION ALL SELECT v FROM b WHERE b.g = grp.g)) p) AS ks
         |FROM grp ORDER BY event_type, day""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "events")
         s.sql("""
           |WITH sk AS (
@@ -4345,9 +4284,6 @@ object SparkEntry {
           |       round(approx_ks_distance(sk.s, base.s0), 9) AS ks
           |FROM sk JOIN base ON sk.event_type = base.event_type
           |ORDER BY event_type, day""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -4393,9 +4329,7 @@ object SparkEntry {
       view(s, d, "events")
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val rows = s.table("events").where(col("user_id") < 12)
           .select(expr("timestamp_micros(ts DIV 1000)").as("t"), col("event_type"))
           .orderBy("t").collect()
@@ -4420,7 +4354,7 @@ object SparkEntry {
           .select(col("day"), expr("inline(approx_freqitems_estimate(sk))"))
           .toDF("day", "item", "estimated")
           .orderBy("day", "item")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Per-source percentile normalization: rank-based percentile of the
@@ -4515,28 +4449,13 @@ object SparkEntry {
         |       CASE WHEN p.p75 <> p.p25
         |            THEN round((t.score - p.p50) / (p.p75 - p.p25), 9) END AS robust
         |FROM t JOIN p USING (lang) ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val implKey = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val kKey = conf.GraftConf.QUANTILE_KLL_K_KEY
-      val prevImpl = s.conf.getOption(implKey)
-      val prevK = s.conf.getOption(kKey)
-      s.conf.set(implKey, "KLL")
-      s.conf.set(kKey, "400")
-      try {
+      withConfs(s, KllImpl, GraftConf.QUANTILE_KLL_K_KEY -> "400") {
         view(s, d, "documents")
         val scored = s.table("documents").select(col("doc_id"), col("lang"),
           graft.functions.graft_hashed_bow_score(col("text"), bowWeights(64))
             .as("score"))
         Sampling.groupRobustScale(scored, "doc_id", "lang", "score")
           .orderBy("doc_id")
-      } finally {
-        (prevImpl match {
-          case Some(v) => s.conf.set(implKey, v)
-          case None => s.conf.unset(implKey)
-        })
-        (prevK match {
-          case Some(v) => s.conf.set(kKey, v)
-          case None => s.conf.unset(kKey)
-        })
       }
     },
 
@@ -4562,13 +4481,7 @@ object SparkEntry {
         |        / (SELECT n FROM n WHERE n.lang = pr.lb))), 9)
         |   FROM (SELECT DISTINCT v FROM t WHERE t.lang IN (pr.la, pr.lb)) p) AS ks
         |FROM pr ORDER BY lang_a, lang_b""".stripMargin) { (s, d) =>
-      val implKey = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val kKey = conf.GraftConf.QUANTILE_KLL_K_KEY
-      val prevImpl = s.conf.getOption(implKey)
-      val prevK = s.conf.getOption(kKey)
-      s.conf.set(implKey, "KLL")
-      s.conf.set(kKey, "400")
-      try {
+      withConfs(s, KllImpl, GraftConf.QUANTILE_KLL_K_KEY -> "400") {
         view(s, d, "documents")
         s.sql("""
           |WITH sk AS (
@@ -4579,15 +4492,6 @@ object SparkEntry {
           |       round(approx_ks_distance(a.s, b.s), 9) AS ks
           |FROM sk a JOIN sk b ON a.lang < b.lang
           |ORDER BY lang_a, lang_b""".stripMargin)
-      } finally {
-        (prevImpl match {
-          case Some(v) => s.conf.set(implKey, v)
-          case None => s.conf.unset(implKey)
-        })
-        (prevK match {
-          case Some(v) => s.conf.set(kKey, v)
-          case None => s.conf.unset(kKey)
-        })
       }
     },
 
@@ -4633,10 +4537,7 @@ object SparkEntry {
         |  (SELECT CAST(sum(CAST(round((pa.p - pb.p) * ln(pa.p / pb.p) * 1e8) AS BIGINT))
         |          AS BIGINT)
         |   FROM pa JOIN pb ON pa.bin = pb.bin) AS psi_fp""".stripMargin) { (s, d) =>
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      try {
+      withConfs(s, KllImpl) {
         view(s, d, "lineitem")
         s.sql("""
           |WITH a AS (SELECT approx_percentile_accumulate(l_quantity) s
@@ -4656,9 +4557,6 @@ object SparkEntry {
           |           (x, y) -> CAST(round((x - y) * ln(x / y) * 1e8) AS BIGINT)),
           |         CAST(0 AS BIGINT), (acc, t) -> acc + t) AS psi_fp
           |FROM h""".stripMargin)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
 
@@ -4810,12 +4708,7 @@ object SparkEntry {
       view(s, d, "events")
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      val key = conf.GraftConf.QUANTILE_SKETCH_IMPL_KEY
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "KLL")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, KllImpl, StateParts) {
         val rows = s.table("events")
           .select(expr("timestamp_micros(ts DIV 1000)").as("t"),
             col("event_type"), col("value"))
@@ -4852,12 +4745,6 @@ object SparkEntry {
           .select(col("event_type"), col("day"),
             round(expr("approx_ks_distance(sk, s0)"), 9).as("ks"))
           .orderBy("event_type", "day")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
       }
     },
 
@@ -6074,9 +5961,7 @@ object SparkEntry {
       // 4 state-store partitions for the bounded replay (q134's
       // pattern): 32 would mean 32 per-batch state commits for a
       // 40-user slice
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(java.sql.Timestamp, Long)](s)
         val sess = graft.streaming.StreamingOps.sessionize(
           input.toDF().toDF("t", "user_id"), "user_id", "t",
@@ -6099,7 +5984,7 @@ object SparkEntry {
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
           .orderBy("user_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // CDC merge: planted change batch (updates on %10, deletes on %17,
@@ -6320,9 +6205,7 @@ object SparkEntry {
       val docs = s.table("documents").select(col("doc_id"), col("text"))
         .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
       val dups = docs.filter(_._1 % 4 == 0).map { case (i, t) => (i + 1000000L, t) }
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(Long, String)](s)
         val deduped = graft.streaming.StreamingOps.dedupByContent(
           input.toDF().toDF("doc_id", "text")
@@ -6341,7 +6224,7 @@ object SparkEntry {
           .select(md5(col("text").cast("binary")).as("content_hash"))
           .groupBy("content_hash").agg(count(lit(1)).as("n_kept"))
           .orderBy("content_hash")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Weighted PageRank over the co-part graph: rank mass flows
@@ -6386,9 +6269,7 @@ object SparkEntry {
         .orderBy("t").collect()
         .map(r => (r.getTimestamp(0), r.getLong(1)))
       val maxT = rows.map(_._1.getTime).max
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(java.sql.Timestamp, Long)](s)
         val agg = input.toDF().toDF("t", "user_id")
           .withWatermark("t", "0 seconds")
@@ -6413,7 +6294,7 @@ object SparkEntry {
             expr("approx_count_distinct_estimate(sk)").as("n_users"))
           .where(col("day") <= maxRealDay)
           .orderBy("day")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Pixel-level multimodal features: decode the REAL planted PNGs,
@@ -6898,9 +6779,7 @@ object SparkEntry {
         .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
       val maxT = rows.map(_._1.getTime).max
       val dim = s.table("customer").select("c_custkey", "c_mktsegment")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(java.sql.Timestamp, Long, Double)](s)
         val agg = graft.streaming.StreamingOps.enrichedWindowStats(
           input.toDF().toDF("t", "key", "value"), "t", "key", "value",
@@ -6926,7 +6805,7 @@ object SparkEntry {
             col("total_value").cast("double").as("total_value"))
           .where(col("day") <= maxRealDay)
           .orderBy("day", "attr")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Continuous CDC apply: two micro-batches of ordered change ops
@@ -6982,9 +6861,7 @@ object SparkEntry {
         .unionAll(docs.where(col("doc_id") % 20 === 0)
           .select(col("doc_id"), lit(4L), lit("U"),
             concat(lit("final "), col("text")), col("source"))))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(Long, Long, String, String, String)](s)
         val qy = graft.streaming.StreamingOps.cdcSnapshotSink(
             input.toDF().toDF("doc_id", "seq", "op", "text", "source"),
@@ -7002,7 +6879,7 @@ object SparkEntry {
             sum(expr("conv(substring(md5(cast(text as binary)), 1, 15), 16, 10)")
               .cast("long") % 1000000L).as("checksum_fp"))
           .orderBy("source")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Streaming SLIDING-window volume: 2-day windows hopping by 1 day,
@@ -7025,9 +6902,7 @@ object SparkEntry {
         .orderBy("t").collect()
         .map(r => (r.getTimestamp(0), r.getString(1)))
       val maxT = rows.map(_._1.getTime).max
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConfs(s, StateParts) {
         val input = MemoryStream[(java.sql.Timestamp, String)](s)
         val agg = input.toDF().toDF("t", "event_type")
           .withWatermark("t", "0 seconds")
@@ -7051,7 +6926,7 @@ object SparkEntry {
             col("event_type"), col("n_events"))
           .where(col("win_day") <= maxRealDay)
           .orderBy("win_day", "event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
 
     // Privacy-preserving release: per-language document counts noised
@@ -7086,9 +6961,7 @@ object SparkEntry {
       // set). The impl freezes into the expressions at build time, so
       // the conf restores immediately after — no leak into later
       // queries sharing this session.
-      val prevImpl = s.conf.get("spark.sql.dataSketches.distinctCnt.sketchImpl")
-      s.conf.set("spark.sql.dataSketches.distinctCnt.sketchImpl", "HLL")
-      try s.sql(
+      withConfs(s, GraftConf.DISTINCT_CNT_SKETCH_IMPL_KEY -> "HLL")(s.sql(
         """WITH sk AS (
           |  SELECT lang, source,
           |         approx_count_distinct_accumulate(cast(doc_id % 97 AS string)) AS sk,
@@ -7099,8 +6972,7 @@ object SparkEntry {
           |         AS n_shards_distinct,
           |       sum(n) AS n_docs
           |FROM sk GROUP BY CUBE(lang, source)
-          |ORDER BY lang NULLS LAST, source NULLS LAST""".stripMargin)
-      finally s.conf.set("spark.sql.dataSketches.distinctCnt.sketchImpl", prevImpl)
+          |ORDER BY lang NULLS LAST, source NULLS LAST""".stripMargin))
     },
 
     // PIVOT: daily event volume spread into one column per event type
@@ -7429,17 +7301,14 @@ object SparkEntry {
         rin.toDF().toDF("event_id", "t", "user_id"),
         "user_id", "t", lookback = "60 MINUTE", watermarkDelay = "1 minute")
       val sink = "graft_q239_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val qy = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        lin.addData(side("purchase").toSeq)
-        rin.addData(side("view").toSeq)
-        qy.processAllAvailable() // inner join: matches emit eagerly
-      } finally {
-        qy.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withConfs(s, StateParts) {
+        val qy = out.writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try {
+          lin.addData(side("purchase").toSeq)
+          rin.addData(side("view").toSeq)
+          qy.processAllAvailable() // inner join: matches emit eagerly
+        } finally qy.stop()
       }
       s.table(sink)
         .select(col("event_id"), col("event_id_r"))
@@ -7600,10 +7469,7 @@ object SparkEntry {
       // detect, making the exchange-free assertion VACUOUS — the
       // bucketed co-location must carry the join for the proof to mean
       // anything
-      val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-      val prevBcast = s.conf.get(bcastKey)
-      s.conf.set(bcastKey, "-1")
-      try {
+      try withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         graft.operators.Sinks.writeBucketedTable(
           s.table("lineitem"), "graft_q244_li", s"$dir/li", "l_orderkey", 8)
         graft.operators.Sinks.writeBucketedTable(
@@ -7629,7 +7495,6 @@ object SparkEntry {
             org.apache.spark.sql.types.StructField("revenue",
               org.apache.spark.sql.types.DoubleType))))
       } finally {
-        s.conf.set(bcastKey, prevBcast)
         s.sql("DROP TABLE IF EXISTS graft_q244_li")
         s.sql("DROP TABLE IF EXISTS graft_q244_ord")
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -1,5 +1,6 @@
 package graft.conf
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.GraftConfEntries
 
 /**
@@ -58,4 +59,21 @@ object GraftConf {
 
   /** Frequent-Directions sketch rows; spectral error <= ||A||_F^2 / ell. */
   def fdEll: Int = GraftConfEntries.getInt(GraftConfEntries.FD_ELL)
+
+  /** Run `body` with the given session confs set, then put each key back:
+   *  its old value if it had one, unset otherwise. The confs are
+   *  session-wide while `body` runs, so this is for single-threaded code
+   *  that owns its session (the query catalogue, the tests); operator
+   *  code passes per-write options or uses its own session instead. */
+  def withConfs[T](spark: SparkSession, pairs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val explicit = conf.getAll // set keys only: a key left at its default is unset again
+    val saved = pairs.map { case (k, _) => k -> explicit.get(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

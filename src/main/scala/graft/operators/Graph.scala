@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.IsolatedSession
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
   StructField, StructType}
 
@@ -627,26 +628,17 @@ object Graph {
     canon.select(col("a").as("m"), col("b").as("x"))
       .unionAll(canon.select(col("b").as("m"), col("a").as("x")))
 
-  /** Would the optimizer broadcast `df` as a join side? Conservative:
-   *  unknown/overflowed size estimates answer no — at true scale the
-   *  per-round small side of an iterative op stops being broadcastable,
-   *  and the caller must pick the shuffle-avoiding layout for the SMJ
-   *  regime instead. */
   /** Materialize a deliberately-partitioned frame with AQE off for that
    *  one eager action: AQE coalesces the repartition's shuffle read and
    *  records UnknownPartitioning on the checkpointed RDD — erasing
    *  exactly the layout the pre-partition paid for. Without AQE the
    *  LogicalRDD keeps its HashPartitioning, and every later consumer
-   *  (with AQE back on) skips its exchange when the layout satisfies
-   *  its distribution. The conf flip is scoped to the materialization
-   *  and restored in a finally. */
+   *  (with AQE on) skips its exchange when the layout satisfies its
+   *  distribution. The action runs on a clone of the caller's session,
+   *  so the caller's own queries never see AQE off. */
   private def matPartitioned(
-      mat: DataFrame => DataFrame, df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try mat(df) finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+      mat: DataFrame => DataFrame, df: DataFrame): DataFrame =
+    IsolatedSession.run(df, "spark.sql.adaptive.enabled" -> "false")(mat)
 
   private def isIntegral(t: DataType): Boolean =
     t == LongType || t == IntegerType || t == ShortType || t == ByteType
@@ -701,6 +693,11 @@ object Graph {
   private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
+  /** The session's broadcast-join threshold in bytes; <= 0 means off.
+   *  Callers are conservative: unknown/overflowed size estimates do not
+   *  broadcast — at true scale the per-round small side of an iterative
+   *  op stops being broadcastable, and the caller must pick the
+   *  shuffle-avoiding layout for the SMJ regime instead. */
   private def broadcastThreshold(df: DataFrame): Long = {
     val raw = df.sparkSession.conf
       .get("spark.sql.autoBroadcastJoinThreshold", "10MB")

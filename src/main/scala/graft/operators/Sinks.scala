@@ -180,12 +180,9 @@ object Sinks {
     val keptShards = survivors.select("shard").distinct()
       .collect().map(_.getInt(0)).toSet
 
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      survivors.repartition(touched.size, col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(s"$path/data")
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    survivors.repartition(touched.size, col("shard"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("shard").parquet(s"$path/data")
 
     // dynamic overwrite only replaces partitions PRESENT in the written
     // data — a fully-deleted shard's stale directory must go explicitly

@@ -544,13 +544,9 @@ object StreamingOps {
           val merged = graft.operators.Cdc
             .mergeChanges(snap, latest, idCol, opCol)
             .localCheckpoint(true) // cut lineage off snapshotDir pre-overwrite
-          val prevMode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try merged.write.mode("overwrite").partitionBy("__bucket")
-            .parquet(snapshotDir)
-          finally spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prevMode)
+          merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket").parquet(snapshotDir)
           // dynamic overwrite only replaces partitions PRESENT in the
           // written data — a batch that deletes every row of a touched
           // bucket leaves the stale partition on disk and the deleted

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusAccess
 
 import graft.SparkEntry
 
@@ -25,14 +25,7 @@ object Profile {
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_PROFILE_STAGES=1 additionally prints one line per
@@ -107,14 +100,14 @@ object Profile {
       try {
         exec(n) // warm: JIT + codegen + footer caches, as the bench does
         spark.sharedState.cacheManager.clearCache()
-        // listener events are async; a short settle keeps the counters
+        // listener events are async; draining the bus keeps the counters
         // attributable to the timed pass (counts here are diagnostic)
-        Thread.sleep(400)
+        ListenerBusAccess.drain(spark.sparkContext)
         Counters.reset()
         val t0 = System.nanoTime()
         exec(n)
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(400)
+        ListenerBusAccess.drain(spark.sparkContext)
         println(f"$n%-34s $sec%8.3f ${Counters.jobs}%5d ${Counters.stages}%6d " +
           f"${Counters.tasks}%6d ${Counters.shuffleRead / 1e6}%9.2f " +
           f"${Counters.shuffleWrite / 1e6}%9.2f")

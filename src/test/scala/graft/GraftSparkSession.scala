@@ -10,16 +10,8 @@ trait GraftSparkSession extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = GraftSparkSession.session
 
   /** Run `body` with the given SQL confs set, restoring them afterwards. */
-  def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
-    val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+  def withSQLConf[T](pairs: (String, String)*)(body: => T): T =
+    graft.conf.GraftConf.withConfs(spark, pairs: _*)(body)
 }
 
 object GraftSparkSession {

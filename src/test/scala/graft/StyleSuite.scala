@@ -18,8 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
  * (FileTabChecker), no trailing whitespace (WhitespaceEndOfLineChecker),
  * line length <= 120 (FileLineLengthChecker, widened from 100 for
  * embedded SQL), newline at EOF (NewLineAtEofChecker), no
- * `NotImplementedError` placeholders (NotImplementedErrorUsage), and
- * `println` confined to the CLI mains (RegexChecker on println).
+ * `NotImplementedError` placeholders (NotImplementedErrorUsage),
+ * `println` confined to the CLI mains (RegexChecker on println), and
+ * session-conf writes confined to the scoped `withConfs` helper, the
+ * catalogue's timezone pin and the CLI mains: graft runs inside the
+ * caller's session, so operator code never flips a conf its other
+ * queries read.
  */
 class StyleSuite extends AnyFunSuite {
 
@@ -29,6 +33,11 @@ class StyleSuite extends AnyFunSuite {
   private val printlnAllowed = Set(
     "graft/Bench.scala", "graft/Verify.scala", "graft/tools/Explain.scala",
     "graft/tools/Profile.scala")
+
+  // the scoped helper, plus the CLI mains, which own their session
+  private val confWriteAllowed = printlnAllowed + "graft/conf/GraftConf.scala"
+  // SparkEntry.prep's one line: results must not depend on the harness's timezone
+  private val timezonePin = """spark.conf.set("spark.sql.session.timeZone", "UTC")"""
 
   private def sources: Seq[Path] = roots.flatMap { r =>
     val root = Paths.get(r)
@@ -84,6 +93,17 @@ class StyleSuite extends AnyFunSuite {
       printlnAllowed.exists(rel.endsWith)) Nil
     else lines.zipWithIndex.collect {
       case (l, i) if l.matches(""".*\bprintln\(.*""") => s"$p:${i + 1}: println"
+    }
+  }
+
+  check("session confs written only by withConfs, the timezone pin and CLI mains") { (p, lines) =>
+    val rel = p.toString.replace('\\', '/')
+    if (!rel.startsWith("src/main/scala") ||
+      confWriteAllowed.exists(rel.endsWith)) Nil
+    else lines.zipWithIndex.collect {
+      case (l, i) if l.matches(""".*\bconf\.(set|unset)\w*\(.*""") &&
+        !(rel.endsWith("graft/SparkEntry.scala") && l.trim == timezonePin) =>
+        s"$p:${i + 1}: session conf write"
     }
   }
 }
