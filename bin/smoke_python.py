@@ -171,6 +171,23 @@ assert fdrow["d2"] == 64 * 64 and fdrow["eps"] > 0 and fdrow["sv0"] > 0
 km = DataFrame(api.kmeansAssign(emb._jdf, "vec_id", "embedding", 4, 2), spark)
 assert km.count() == emb.count()
 assert km.select("cluster").distinct().count() <= 4
+# persisted IVF index round trip: every vector indexed once, k rows a query
+import shutil
+ivf = tempfile.mkdtemp(prefix="graft_smoke_ivf")
+try:
+    api.ivfIndexBuild(emb._jdf, "vec_id", "embedding", ivf, 8, 2)
+    n_emb = emb.count()
+    cells = spark.read.parquet(os.path.join(ivf, "cells"))
+    assert cells.count() == n_emb, (cells.count(), n_emb)
+    assert cells.select("id").distinct().count() == n_emb
+    probes = emb.where("vec_id % 50 = 0")
+    hits = DataFrame(api.ivfIndexQuery(spark._jsparkSession, ivf, probes._jdf,
+                                       "vec_id", "embedding", 3, 8), spark)
+    per_query = hits.groupBy("query_id").count().collect()
+    assert len(per_query) == probes.count(), per_query
+    assert all(r["count"] == 3 for r in per_query), per_query
+finally:
+    shutil.rmtree(ivf, ignore_errors=True)
 cov = DataFrame(api.covarianceN2(emb._jdf, "embedding"), spark)
 assert cov.count() == 64 * 65 // 2
 pca = DataFrame(api.pcaProject(emb._jdf, "vec_id", "embedding", 4), spark)

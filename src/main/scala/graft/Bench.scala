@@ -101,6 +101,7 @@ object Bench {
       counters(name) = s"""{"jobs":${Counters.jobs},"tasks":${Counters.tasks},""" +
         s""""shuf_read":${Counters.shufR},"shuf_write":${Counters.shufW}}"""
       spark.sharedState.cacheManager.clearCache()
+      SparkEntry.deleteScratchDirs()
       // ContextCleaner reclaims finished queries' broadcasts/shuffles only
       // on GC; nudge it so 114 queries' debris doesn't crowd later timings
       // (runs outside the timed region; ~100ms per query)
@@ -397,6 +398,7 @@ object Bench {
         } else first
         val rScaled = rounds()
         spark.sharedState.cacheManager.clearCache()
+        SparkEntry.deleteScratchDirs()
         System.gc()
         val ratio = if (tN > 0 && t1 > 0) tN / t1 else -1.0
         val parentBase = base.getOrElse(name, -1.0)

@@ -103,6 +103,25 @@ object SparkEntry {
   private def qNoOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, (s, d) => { prep(s); fn(s, d) }, None)
 
+  /** Scratch directories made by [[scratchDir]] and not yet deleted. */
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new temp directory for the running query's files (an index, shard
+   *  sink or snapshot). The query's result may still read it lazily, so
+   *  the harness deletes it with [[deleteScratchDirs]] once the result is
+   *  written. */
+  private def scratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    scratchDirs.add(dir)
+    dir.toString
+  }
+
+  /** Deletes every directory [[scratchDir]] made since the last call:
+   *  Verify, Bench, Profile and Explain call it after each query. */
+  def deleteScratchDirs(): Unit =
+    Iterator.continually(scratchDirs.poll()).takeWhile(_ != null)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+
   /** Register the sf tables for `name` as temp views (idempotent). */
   private def view(spark: SparkSession, dir: String, names: String*): Unit =
     names.foreach { n =>
@@ -1824,7 +1843,7 @@ object SparkEntry {
         |FROM embeddings WHERE vec_id < 20""".stripMargin) { (s, d) =>
       view(s, d, "embeddings")
       val e = s.table("embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_q68").toString
+      val path = scratchDir("graft_q68_ivf")
       IvfIndex.build(e.where(col("vec_id") % 10 =!= 0), "vec_id", "embedding", path,
         nlist = 16, kmeansIters = 3)
       IvfIndex.append(s, path, e.where(col("vec_id") % 10 === 0), "vec_id", "embedding",
@@ -2335,7 +2354,7 @@ object SparkEntry {
         |FROM (SELECT 1)""".stripMargin) { (s, d) =>
       view(s, d, "documents")
       val docs = s.table("documents")
-      val dir = java.nio.file.Files.createTempDirectory("graft_q86_idx").toString
+      val dir = scratchDir("graft_q86_idx")
       BloomIndex.build(s, dir, docs, "text", maxItems = 100000L, fpp = 0.01)
       val replays = docs.where(col("doc_id") % 5 === 0)
         .select(col("doc_id").as("id"), col("text"))
@@ -2790,7 +2809,7 @@ object SparkEntry {
     // inline operator while scanning only the probed buckets
     q("q101_text_index", bm25OracleSql) { (s, d) =>
       view(s, d, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_q101_tidx").toString
+      val path = scratchDir("graft_q101_tidx")
       // bucket count left to the scale-adaptive default (persisted in
       // the index meta; query reads it back) — see adaptiveBuckets
       graft.operators.TextIndex.build(
@@ -3161,8 +3180,7 @@ object SparkEntry {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       val basePath = s"$d/events.parquet"
       s.read.parquet(basePath).createOrReplaceTempView("q112_events")
-      val summaryDir =
-        java.nio.file.Files.createTempDirectory("graft_q112_summary").toString
+      val summaryDir = scratchDir("graft_q112_summary")
       s.sql("""SELECT event_type, approx_count_distinct_accumulate(props) AS sk
               |FROM q112_events GROUP BY event_type""".stripMargin)
         .write.mode("overwrite").parquet(summaryDir)
@@ -3237,7 +3255,7 @@ object SparkEntry {
         |FROM pairs WHERE inter * 5 >= uni * 4 ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       view(s, d, "documents")
       val docs = s.table("documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_q114_lsh").toString
+      val path = scratchDir("graft_q114_lsh")
       graft.operators.LshIndex.build(
         docs.where(col("doc_id") % 2 === 0), "doc_id", "text", path)
       graft.operators.LshIndex.query(
@@ -4200,7 +4218,7 @@ object SparkEntry {
         |       CAST(bit_xor(fp) AS BIGINT) AS xor_fp
         |FROM v GROUP BY shard ORDER BY shard""".stripMargin) { (s, d) =>
       view(s, d, "documents")
-      val out = java.nio.file.Files.createTempDirectory("graft_q140_").toString
+      val out = scratchDir("graft_q140_")
       operators.Sinks.writeShardsWithManifest(
           s.table("documents"), "doc_id", "text", out, numShards = 8)
         .orderBy("shard")
@@ -4639,8 +4657,8 @@ object SparkEntry {
         |FROM a LEFT JOIN b ON a.shard = b.shard ORDER BY shard""".stripMargin) { (s, d) =>
       view(s, d, "documents")
       val docs = s.table("documents")
-      val out1 = java.nio.file.Files.createTempDirectory("graft_q153a_").toString
-      val out2 = java.nio.file.Files.createTempDirectory("graft_q153b_").toString
+      val out1 = scratchDir("graft_q153a_")
+      val out2 = scratchDir("graft_q153b_")
       val full = operators.Sinks.writeShardsWithManifest(
         docs, "doc_id", "text", out1, numShards = 8)
       val pruned = operators.Sinks.writeShardsWithManifest(
@@ -5493,7 +5511,7 @@ object SparkEntry {
         |      FROM v WHERE doc_id % 17 <> 0 GROUP BY shard) g
         |LEFT JOIN delc d USING (shard) ORDER BY shard""".stripMargin) { (s, d) =>
       view(s, d, "documents")
-      val out = java.nio.file.Files.createTempDirectory("graft_q181_").toString
+      val out = scratchDir("graft_q181_")
       operators.Sinks.writeShardsWithManifest(
         s.table("documents"), "doc_id", "text", out, numShards = 8)
       val deletes = s.table("documents")
@@ -6142,7 +6160,7 @@ object SparkEntry {
         |       CAST(sum(octet_length(encode(text))) AS BIGINT) AS n_bytes
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       view(s, d, "documents")
-      val out = java.nio.file.Files.createTempDirectory("graft_q204_").toString
+      val out = scratchDir("graft_q204_")
       graft.sources.TarShards.write(s.table("documents"), "doc_id", "text",
         out, numShards = 4)
       graft.sources.TarShards.read(s, out)
@@ -6844,7 +6862,7 @@ object SparkEntry {
       import s.implicits._
       val docs = s.table("documents").select(col("doc_id"), col("text"),
         col("source"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_q225").toString
+      val dir = scratchDir("graft_q225")
       graft.streaming.StreamingOps.seedCdcSnapshot(docs, "doc_id", dir, nBuckets = 8)
       def ops(df: DataFrame): Array[(Long, Long, String, String, String)] =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
@@ -7047,7 +7065,7 @@ object SparkEntry {
         |UNION ALL SELECT NULL, 1, 1
         |ORDER BY shard NULLS LAST""".stripMargin) { (s, d) =>
       view(s, d, "documents")
-      val dir = java.nio.file.Files.createTempDirectory("graft_q231").toString
+      val dir = scratchDir("graft_q231")
       graft.operators.Sinks.writeShardsWithManifest(
         s.table("documents"), "doc_id", "text", dir, numShards = 8)
       val stale = java.nio.file.Paths.get(dir, "data", "shard=99")
@@ -7072,7 +7090,7 @@ object SparkEntry {
         |       CAST((count(*) + 499) // 500 AS BIGINT) AS n_files_after
         |FROM documents""".stripMargin) { (s, d) =>
       view(s, d, "documents")
-      val base = java.nio.file.Files.createTempDirectory("graft_q232").toString
+      val base = scratchDir("graft_q232")
       // hash-by-value partitioning: the 64-file input layout must not
       // depend on session parallelism (round-robin does)
       s.table("documents").repartition(64, col("doc_id"))
@@ -7463,7 +7481,7 @@ object SparkEntry {
         |JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
       view(s, d, "lineitem", "orders")
-      val dir = java.nio.file.Files.createTempDirectory("graft_q244_").toString
+      val dir = scratchDir("graft_q244_")
       // force the sort-merge path: at test scale the orders side is
       // under the broadcast threshold and a BHJ has no shuffle to
       // detect, making the exchange-free assertion VACUOUS — the
@@ -7483,8 +7501,8 @@ object SparkEntry {
               .cast("double").as("revenue"))
           .orderBy("o_orderpriority")
           .collect()
-        // terminal query: materialized above, so the scratch tables and
-        // the temp dir can be dropped instead of leaking per execution
+        // terminal query: materialized above, so the scratch tables can
+        // be dropped instead of leaking per execution
         s.createDataFrame(
           s.sparkContext.parallelize(out.toIndexedSeq, 1),
           org.apache.spark.sql.types.StructType(Seq(
@@ -7497,7 +7515,6 @@ object SparkEntry {
       } finally {
         s.sql("DROP TABLE IF EXISTS graft_q244_li")
         s.sql("DROP TABLE IF EXISTS graft_q244_ord")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       }
     },
 
@@ -7720,8 +7737,7 @@ object SparkEntry {
       view(s, d, "documents")
       import graft.operators.Versioned
       val docs = s.table("documents").select(col("doc_id"), col("text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q251").toString
+      val dir = scratchDir("graft_q251")
       Versioned.init(docs, "doc_id", dir, nBuckets = 8)
       val b1 = docs.where(col("doc_id") % 10 === 0)
         .select(col("doc_id"), lit(1L).as("seq"), lit("U").as("op"),
@@ -7786,8 +7802,7 @@ object SparkEntry {
       view(s, d, "documents")
       import graft.operators.{CorpusDiff, Versioned}
       val docs = s.table("documents").select(col("doc_id"), col("text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q252").toString
+      val dir = scratchDir("graft_q252")
       Versioned.init(docs, "doc_id", dir, nBuckets = 8)
       val batch = docs.where(col("doc_id") % 10 === 0)
         .select(col("doc_id"), lit(1L).as("seq"), lit("U").as("op"),
@@ -7882,8 +7897,7 @@ object SparkEntry {
       view(s, d, "documents")
       import graft.operators.Versioned
       val docs = s.table("documents").select(col("doc_id"), col("text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q254").toString
+      val dir = scratchDir("graft_q254")
       Versioned.init(docs, "doc_id", dir, nBuckets = 8)
       val b1 = docs.where(col("doc_id") % 10 === 0)
         .select(col("doc_id"), lit(1L).as("seq"), lit("U").as("op"),

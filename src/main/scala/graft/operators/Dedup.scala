@@ -857,19 +857,16 @@ object Dedup {
       kmeansIters: Int = 3): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .where(Similarity.dot(col("v"), col("v")) > 0)
-      .cache() // consumed by the Lloyd loop AND the assignment below
-    // The packed centroid frame MUST be materialized before the self-join
-    // is built: left lazy, each self-join branch re-executes the k-means
-    // chain — whose Lloyd iterations each nest their own broadcast of the
-    // previous iteration — and the repeated nested-broadcast re-execution
-    // measured 30x slower than this one count() of ONE row at sf0.1
-    // (0.6 s vs 20 s). The same one-row-materialization precedent as the
-    // bloom scalar in incrementalDedup.
-    val packedCents = Similarity
-      .packedCentroids(Similarity.kmeansCentroids(c, "v", nlist, kmeansIters))
-      .cache()
-    packedCents.count()
-    val cents = broadcast(packedCents)
+    // A distributed packed centroid frame MUST be materialized before the
+    // self-join is built: left lazy, each self-join branch re-executes
+    // the k-means chain — whose Lloyd iterations each nest their own
+    // broadcast of the previous iteration — and the repeated
+    // nested-broadcast re-execution measured 30x slower than this one
+    // count() of ONE row at sf0.1 (0.6 s vs 20 s). The same
+    // one-row-materialization precedent as the bloom scalar in
+    // incrementalDedup.
+    val cents = broadcast(
+      Similarity.packedKmeans(c, "v", nlist, kmeansIters, materialize = true))
     val assigned = c.join(cents)
       .select(col("id"), col("v"), Similarity.bestCell(col("v"), col("cents")).as("cell"),
         sqrt(Similarity.dot(col("v"), col("v"))).as("nrm"))

@@ -693,21 +693,6 @@ object Graph {
   private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-  /** The session's broadcast-join threshold in bytes; <= 0 means off.
-   *  Callers are conservative: unknown/overflowed size estimates do not
-   *  broadcast — at true scale the per-round small side of an iterative
-   *  op stops being broadcastable, and the caller must pick the
-   *  shuffle-avoiding layout for the SMJ regime instead. */
-  private def broadcastThreshold(df: DataFrame): Long = {
-    val raw = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try raw.toLong
-    catch {
-      case _: NumberFormatException =>
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    }
-  }
-
 
   /** Node id cast to long that FAILS FAST on non-numeric ids: a string
    *  id casts to null, and `collect_list` would silently drop it —

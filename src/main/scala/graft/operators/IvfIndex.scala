@@ -24,6 +24,11 @@ object IvfIndex {
    * Build the index at `path`: `centroids/` (cell, centroid) and `cells/`
    * (id, vec) partitioned by cell. Deterministic for a given corpus and
    * (nlist, kmeansIters) — see [[Similarity.kmeansCentroids]].
+   *
+   * A corpus that fits the driver-local k-means ([[LocalKmeans]]) is
+   * written by one task per directory: one centroid file and one file per
+   * cell, with no shuffle. Otherwise the Lloyd rounds run in Spark too.
+   * Either way the caches it takes are released before it returns.
    */
   def build(
       corpus: DataFrame,
@@ -32,16 +37,26 @@ object IvfIndex {
       path: String,
       nlist: Int = 16,
       kmeansIters: Int = 3): Unit = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
+    val c0 = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
       .where(Similarity.dot(col("vec"), col("vec")) > 0)
-      .cache()
-    val centroids = Similarity.kmeansCentroids(c, "vec", nlist, kmeansIters).cache()
+    withCached(c0) { c =>
+      LocalKmeans(c, "vec", nlist, kmeansIters) match {
+        case Some(km) => write(c.coalesce(1), km.centroids.coalesce(1), km.packed, path)
+        case None =>
+          withCached(Similarity.distributedKmeans(c, "vec", nlist, kmeansIters)) { centroids =>
+            write(c, centroids, Similarity.packedCentroids(centroids), path)
+          }
+      }
+    }
+  }
+
+  /** Writes `centroids/`, then `c` assigned to the `packed` centroids
+   *  under `cells/`, partitioned by cell. */
+  private def write(c: DataFrame, centroids: DataFrame, packed: DataFrame, path: String): Unit = {
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val cents = broadcast(Similarity.packedCentroids(centroids))
-    c.join(cents)
+    c.join(broadcast(packed))
       .select(col("id"), col("vec"), Similarity.bestCell(col("vec"), col("cents")).as("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    c.unpersist()
   }
 
   /**

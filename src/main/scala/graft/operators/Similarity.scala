@@ -237,12 +237,59 @@ object Similarity {
    * partitionings, and cluster sizes. Cosine normalizes, so centroids
    * need no re-normalization; cells that lose all members drop out
    * (fewer, denser cells — standard Lloyd behavior).
+   *
+   * A corpus within `spark.sql.autoBroadcastJoinThreshold` (rows x 24 +
+   * elements x 8 bytes, `array<double>` vectors with finite elements
+   * under 1e9 in magnitude) takes the driver-local regime instead
+   * ([[LocalKmeans]]): two jobs, then every round on the driver, with
+   * bit-identical centroids returned as a local relation. Anything else,
+   * and every corpus when the threshold is <= 0, runs the plan above.
    */
   def kmeansCentroids(
       corpus: DataFrame,
       vecCol: String,
       nlist: Int,
-      iters: Int = 3): DataFrame = {
+      iters: Int = 3): DataFrame =
+    LocalKmeans(corpus, vecCol, nlist, iters)
+      .fold(distributedKmeans(corpus, vecCol, nlist, iters))(_.centroids)
+
+  /**
+   * [[packedCentroids]] of `c`'s [[kmeansCentroids]], for an operator
+   * that goes on to assign `c` to them in a lazy plan. Driver-local
+   * regime: a one-row local relation, and `c` is cached only while the
+   * gate and the collect read it. Distributed regime: `c` and the packed
+   * centroids are cached and stay cached for that plan (the Lloyd chain
+   * and the assignment both read `c`, and the packed row feeds every
+   * branch that probes it); `materialize` computes the packed row now.
+   * A plan the caller already cached is used as it is and never
+   * released here.
+   */
+  private[operators] def packedKmeans(
+      c: DataFrame,
+      vecCol: String,
+      nlist: Int,
+      iters: Int,
+      materialize: Boolean = false): DataFrame = {
+    val owned = c.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) c.cache()
+    LocalKmeans(c, vecCol, nlist, iters) match {
+      case Some(km) =>
+        if (owned) c.unpersist(blocking = false)
+        km.packed
+      case None =>
+        val p = packedCentroids(distributedKmeans(c, vecCol, nlist, iters)).cache()
+        if (materialize) p.count()
+        p
+    }
+  }
+
+  /** [[kmeansCentroids]]' Spark plan: every Lloyd round is a broadcast of
+   *  the packed centroids, a join and two aggregations. */
+  private[operators] def distributedKmeans(
+      corpus: DataFrame,
+      vecCol: String,
+      nlist: Int,
+      iters: Int): DataFrame = {
     val c = corpus.select(col(vecCol).as("cv"))
     // secondary key disambiguates hash collisions between distinct vectors
     val seedW = Window.orderBy("h", "s")
@@ -284,10 +331,7 @@ object Similarity {
       kmeansIters: Int = 3): DataFrame = {
     val c = corpus.select(col(idCol).as("cid"), col(vecCol).cast("array<double>").as("cv"))
       .where(dot(col("cv"), col("cv")) > 0)
-      .cache()
-    // cached: consumed by both the assign and probe sides — without it the
-    // whole Lloyd chain would execute twice per action
-    val cents = broadcast(packedCentroids(kmeansCentroids(c, "cv", nlist, kmeansIters)).cache())
+    val cents = broadcast(packedKmeans(c, "cv", nlist, kmeansIters))
     val assigned = c.join(cents)
       .select(col("cid").as("neighbor_id"), col("cv"),
         bestCell(col("cv"), col("cents")).as("cell"))

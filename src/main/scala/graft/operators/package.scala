@@ -48,6 +48,24 @@ package object operators {
     try body(c) finally if (owned) c.unpersist(blocking = false)
   }
 
+  /** The session's broadcast-join threshold in bytes; <= 0 means off.
+   *  It is the one gate of the operators' driver-local and broadcast
+   *  regimes: graph rounds, and the k-means behind IVF and semantic
+   *  dedup. Callers are
+   *  conservative: unknown/overflowed size estimates do not broadcast —
+   *  at true scale the per-round small side of an iterative op stops
+   *  being broadcastable, and the caller must pick the shuffle-avoiding
+   *  layout for the SMJ regime instead. */
+  private[operators] def broadcastThreshold(df: DataFrame): Long = {
+    val raw = df.sparkSession.conf
+      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    try raw.toLong
+    catch {
+      case _: NumberFormatException =>
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+    }
+  }
+
   /**
    * Round-robin fan-out for a CPU-heavy per-row stage downstream of an
    * unsplittable input (optimization guide §2.5 "input skew: one huge

@@ -14,7 +14,8 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      finally SparkEntry.deleteScratchDirs()
     }
     spark.stop()
   }

@@ -115,7 +115,7 @@ object Profile {
         System.gc()
       } catch {
         case e: Throwable => println(s"$n FAILED: ${e.getMessage}")
-      }
+      } finally SparkEntry.deleteScratchDirs()
     }
     spark.stop()
   }

@@ -170,47 +170,31 @@ case class NearestCells(vec: Expression, cents: Expression, nprobe: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
+  /** The centroid list last unpacked into primitive arrays, with a copy
+   *  of the list it came from: every row of a plan carries the same
+   *  broadcast list, so it is unpacked once per task instead of per row.
+   *  The list is matched by content, because a reused row buffer can hold
+   *  a different list at the same address. One immutable snapshot, so
+   *  concurrent callers at worst unpack twice. */
+  @transient @volatile private var unpacked: (ArrayData, Array[Long], Array[Array[Double]]) = _
+
   def compute(v: ArrayData, cs: ArrayData): ArrayData = {
-    val n = cs.numElements()
-    val cells = new Array[Long](n)
-    val scores = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val row = cs.getStruct(i, 2)
-      cells(i) = row.getLong(0)
-      val cent = row.getArray(1)
-      val d = math.min(v.numElements(), cent.numElements())
-      var dotVC = 0.0
-      var dotCC = 0.0
-      var j = 0
-      while (j < d) {
-        val c = cent.getDouble(j)
-        dotVC += v.getDouble(j) * c
-        dotCC += c * c
-        j += 1
+    var u = unpacked
+    if (u == null || u._1 != cs) {
+      val n = cs.numElements()
+      val cells = new Array[Long](n)
+      val centroids = new Array[Array[Double]](n)
+      var i = 0
+      while (i < n) {
+        val row = cs.getStruct(i, 2)
+        cells(i) = row.getLong(0)
+        centroids(i) = row.getArray(1).toDoubleArray()
+        i += 1
       }
-      scores(i) = dotVC / math.sqrt(dotCC)
-      i += 1
+      u = (cs.copy(), cells, centroids)
+      unpacked = u
     }
-    // the array_sort comparator verbatim: score desc with NaN comparing
-    // as a tie (both > and < false), then cell asc; TimSort keeps it
-    // reproducing the lambda formulation's order bit for bit
-    val idx = Array.tabulate[Integer](n)(Integer.valueOf)
-    java.util.Arrays.sort(idx, (a: Integer, b: Integer) => {
-      val sa = scores(a)
-      val sb = scores(b)
-      if (sa > sb) -1
-      else if (sa < sb) 1
-      else java.lang.Long.compare(cells(a), cells(b))
-    })
-    val k = math.min(nprobe, n)
-    val out = new Array[Long](k)
-    i = 0
-    while (i < k) {
-      out(i) = cells(idx(i))
-      i += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(NearestCells.nearest(v.toDoubleArray(), u._2, u._3, nprobe))
   }
 
   override def nullSafeEval(v: Any, cs: Any): Any =
@@ -223,6 +207,65 @@ case class NearestCells(vec: Expression, cents: Expression, nprobe: Int)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(vec = l, cents = r)
+}
+
+object NearestCells {
+
+  /**
+   * The `nprobe` cells nearest `v`, best first: the one scoring and
+   * ordering routine behind `graft_nearest_cells` and the driver-local
+   * k-means, so both assign every vector alike. Centroid `i` is
+   * `cents(i)` with id `cells(i)`; it scores `dot(v, c) / sqrt(dot(c, c))`
+   * over the length both share. The order is the `array_sort`
+   * comparator verbatim: score descending with NaN comparing as a tie
+   * (both > and < false), then cell ascending. The sort is stable, so
+   * where NaN ties make that order partial, the input order decides.
+   * With no NaN score that order is total up to equal (score, cell)
+   * pairs, so one nearest cell is the first best one, found by a scan.
+   */
+  def nearest(v: Array[Double], cells: Array[Long], cents: Array[Array[Double]],
+      nprobe: Int): Array[Long] = {
+    val n = cells.length
+    val scores = new Array[Double](n)
+    var anyNaN = false
+    var i = 0
+    while (i < n) {
+      val cent = cents(i)
+      val d = math.min(v.length, cent.length)
+      var dotVC = 0.0
+      var dotCC = 0.0
+      var j = 0
+      while (j < d) {
+        val c = cent(j)
+        dotVC += v(j) * c
+        dotCC += c * c
+        j += 1
+      }
+      scores(i) = dotVC / math.sqrt(dotCC)
+      anyNaN ||= java.lang.Double.isNaN(scores(i))
+      i += 1
+    }
+    if (nprobe == 1 && n > 0 && !anyNaN) {
+      var best = 0
+      i = 1
+      while (i < n) {
+        val s = scores(i)
+        if (s > scores(best) || (s == scores(best) && cells(i) < cells(best))) best = i
+        i += 1
+      }
+      Array(cells(best))
+    } else {
+      val idx = Array.tabulate[Integer](n)(Integer.valueOf)
+      java.util.Arrays.sort(idx, (a: Integer, b: Integer) => {
+        val sa = scores(a)
+        val sb = scores(b)
+        if (sa > sb) -1
+        else if (sa < sb) 1
+        else java.lang.Long.compare(cells(a), cells(b))
+      })
+      Array.tabulate(math.min(nprobe, n))(r => cells(idx(r)))
+    }
+  }
 }
 
 /**

@@ -43,4 +43,26 @@ class HarnessContractSuite extends AnyFunSuite with GraftSparkSession {
         |FROM VALUES (CAST(1.25 AS DECIMAL(10,2))) AS t(c)""".stripMargin)
     assert(oneDec.schema("p").dataType === DecimalType(10, 2))
   }
+
+  test("a query's scratch dirs are gone once the harness has written its result") {
+    import spark.implicits._
+    def scratch(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
+        .filter(_.matches("graft_q\\d+.*"))
+    val before = scratch()
+    val sf = java.nio.file.Files.createTempDirectory("graft_harness_sf").toFile
+    val out = java.nio.file.Files.createTempDirectory("graft_harness_out").toFile
+    try {
+      (1 to 40).map(i => (i.toLong, s"doc $i says ${"word " * (i % 7)}end")).toDF("doc_id", "text")
+        .write.parquet(s"$sf/documents.parquet")
+      Seq("q140_shard_manifest", "q231_vacuum_orphans").foreach { name =>
+        Verify.dump(spark, sf.toString, out.toString, name, SparkEntry.queries(name))
+        assert(new java.io.File(out, name).isDirectory, s"$name wrote no result")
+      }
+      assert(scratch() -- before === Set.empty)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(sf)
+      org.apache.commons.io.FileUtils.deleteQuietly(out)
+    }
+  }
 }
