@@ -136,12 +136,16 @@ assert rw.count() == docs.count()
 assert rw.agg(F.sum("n_dropped")).collect()[0][0] >= 0
 
 # persisted text index + forward as-of
+import shutil
 import tempfile
 tidx = tempfile.mkdtemp(prefix="graft_smoke_tidx")
-api.textIndexBuild(docs._jdf, "doc_id", "text", tidx, 8)
-ih = DataFrame(api.textIndexQuery(spark._jsparkSession, tidx,
-                                  [[1, "hash join"]], 5, 8), spark)
-assert ih.count() == 5
+try:
+    api.textIndexBuild(docs._jdf, "doc_id", "text", tidx, 8)
+    ih = DataFrame(api.textIndexQuery(spark._jsparkSession, tidx,
+                                      [[1, "hash join"]], 5, 8), spark)
+    assert ih.count() == 5
+finally:
+    shutil.rmtree(tidx, ignore_errors=True)
 # events.ts is parquet timestamp[us] (TIMESTAMP_NTZ) since r6 — micros as
 # the asof key; NTZ->LTZ cast is exact under the UTC session timezone
 ev = tbl("events") \
@@ -172,7 +176,6 @@ km = DataFrame(api.kmeansAssign(emb._jdf, "vec_id", "embedding", 4, 2), spark)
 assert km.count() == emb.count()
 assert km.select("cluster").distinct().count() <= 4
 # persisted IVF index round trip: every vector indexed once, k rows a query
-import shutil
 ivf = tempfile.mkdtemp(prefix="graft_smoke_ivf")
 try:
     api.ivfIndexBuild(emb._jdf, "vec_id", "embedding", ivf, 8, 2)
@@ -192,6 +195,15 @@ cov = DataFrame(api.covarianceN2(emb._jdf, "embedding"), spark)
 assert cov.count() == 64 * 65 // 2
 pca = DataFrame(api.pcaProject(emb._jdf, "vec_id", "embedding", 4), spark)
 assert pca.agg(F.min("residual_sq")).collect()[0][0] >= -1e-9
+
+# fixed-point PageRank over a small edge table (node 5 has no edges):
+# one row a node, and rank mass never exceeds the 1e12 scale
+nodes = spark.range(6)
+edges = spark.createDataFrame(
+    [(0, 1), (1, 2), (2, 0), (3, 2), (4, 3), (2, 4), (1, 1)], "src long, dst long")
+ranks = DataFrame(api.pageRankFp(nodes._jdf, edges._jdf, "id", 3, 85, 100), spark).collect()
+assert sorted(r["id"] for r in ranks) == list(range(6)), ranks
+assert sum(r["rank_fp"] for r in ranks) <= 10 ** 12, ranks
 
 print("PYTHON-SMOKE OK", agg, scalar, js)
 spark.stop()

@@ -421,13 +421,15 @@ object Dedup {
    * Scale design — two paths behind one size test, the same shape as
    * Spark's own broadcast-vs-shuffle join choice:
    *
-   *  - Edge sets at or under `localEdgeThreshold` (default 1M pairs,
-   *    ~16 MB — near-dup pair sets are tiny relative to the corpus)
-   *    collect to the driver for UNION-FIND: exact, one job to produce
-   *    the pairs, no iteration. The resulting endpoint->component map
-   *    broadcast-joins back to `nodes`, so the corpus itself still
-   *    never moves. The collect is bounded by the threshold exactly as
-   *    the IVF probe-set collect is bounded by |queries|*nprobe.
+   *  - Edge sets whose pairs, at 16 bytes each, fit the operators' one
+   *    gate, `spark.sql.autoBroadcastJoinThreshold` (655,360 pairs at
+   *    the default 10 MB — near-dup pair sets are tiny relative to the
+   *    corpus), collect to the driver for UNION-FIND: exact, one job to
+   *    count the pairs and one to collect them, no iteration. The
+   *    resulting endpoint->component map broadcast-joins back to
+   *    `nodes`, so the corpus itself still never moves. The collect is
+   *    bounded by the threshold exactly as the IVF probe-set collect is
+   *    bounded by |queries|*nprobe.
    *  - Larger edge sets run iterative min-label propagation in
    *    DataFrame ops, restricted to EDGE-TOUCHED nodes (a singleton's
    *    component is its own id by definition; joining every corpus row
@@ -446,24 +448,22 @@ object Dedup {
    * output is still restricted to `nodes`), and singletons rejoin with
    * `comp = id`. The local path requires integral ids (the min-label
    * semantics already presuppose ordered numeric ids); non-integral ids
-   * always take the distributed loop. Pass `localEdgeThreshold = 0` to
-   * force the distributed path.
+   * always take the distributed loop, and so does every edge set when
+   * the threshold is off (<= 0).
    */
   def connectedComponents(
       nodes: DataFrame,
       edges: DataFrame,
       idCol: String = "id",
-      maxIter: Int = 20,
-      localEdgeThreshold: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
+      maxIter: Int = 20): DataFrame = {
     val idType = nodes.schema(nodes.schema.fieldIndex(idCol)).dataType
-    val integralIds = Seq(edges.schema("id_a").dataType, idType)
-      .forall(t => t == LongType || t == IntegerType || t == ShortType)
+    val integralIds = Seq(edges.schema("id_a").dataType, edges.schema("id_b").dataType, idType)
+      .forall(Graph.isIntegral)
+    val bcThresh = broadcastThreshold(nodes)
     withCached(edges.select(col("id_a"), col("id_b"))) { cachedEdges =>
       val local =
-        if (integralIds && localEdgeThreshold > 0) {
-          LongPairs.collectBounded(cachedEdges, localEdgeThreshold)
-        } else None
+        if (integralIds && bcThresh > 0) LongPairs.collectBounded(cachedEdges, bcThresh / 16)
+        else None
       local match {
         case Some(pairs) => localComponents(nodes, pairs, idCol, idType)
         case None => loopComponents(nodes, cachedEdges, idCol, maxIter)

@@ -42,6 +42,10 @@ object Graph {
    *  latency stops dominating small graphs. */
   private val MaterializeEvery: Int = 4
 
+  /** The largest weight the driver-local rank rounds take: rank mass
+   *  never exceeds [[RankScale]], so `rank * w` cannot overflow. */
+  private val MaxLocalWeight: Long = Long.MaxValue / RankScale
+
   /**
    * `iters` synchronous PageRank iterations with damping
    * `dampNum/dampDen` (default 85/100). `nodes` is one column `idCol`;
@@ -53,20 +57,10 @@ object Graph {
    *   rank'(v)  = ((dampDen - dampNum) * (SCALE DIV N)
    *               + dampNum * sum_{u->v} share(u)) DIV dampDen
    * Dangling-node mass is dropped (the standard simplification; ranks
-   * remain comparable, they just don't sum to SCALE).
-   *
-   * Scale design: three regimes behind one bound, Spark's own
-   * `spark.sql.autoBroadcastJoinThreshold` (T; T <= 0 means sort-merge):
-   *  - nodes x 32 and edges x 16 bytes both within T, integral ids: the
-   *    edge list is counted, collected once into primitive arrays, and
-   *    every iteration runs on the driver; the result is a local frame.
-   *  - only nodes x 32 within T: each iteration is one join of the
-   *    broadcast rank vector (8+8 bytes per node) against the edge list
-   *    plus one partial-aggregable sum by `dst`, with no exchange.
-   *  - otherwise the same join sort-merges; only the rank vector moves.
-   * Document payloads never participate. Distributed iterations
-   * re-cache the rank vector and unpersist the previous one, so lineage
-   * stays O(1) regardless of `iters`.
+   * remain comparable, they just don't sum to SCALE). This is
+   * [[weightedPageRankFp]]'s rule with every weight 1; all three
+   * PageRanks run one core, [[pageRankCore]], which describes the
+   * regimes.
    */
   def pageRankFp(
       nodes: DataFrame,
@@ -74,189 +68,17 @@ object Graph {
       idCol: String,
       iters: Int,
       dampNum: Int = 85,
-      dampDen: Int = 100): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    val bcThresh = broadcastThreshold(nodes)
-    val nodeIds = nodes.select(col(idCol).as("id"))
-    // N comes from the cached distinct ids the distributed rounds join
-    // against, not a second distinct pass; the driver-local regime
-    // skips it when the raw node rows already fit
-    lazy val ids = nodeIds.distinct().cache()
-    lazy val n = ids.count()
-    // Driver-local regime (see [[localGraph]]): every round runs on the
-    // driver over primitive arrays — two jobs in all (count, collect)
-    // instead of a join, an aggregation and their exchanges per round, which on a small
-    // graph cost far more in per-job latency than the data does. Same
-    // integer rule, so the ranks are bit-identical. Integral ids only:
-    // the arrays are longs, and other id types keep Spark's comparison
-    // semantics on the distributed paths.
-    val integral = (nodeIds.schema.head.dataType +:
-      Seq("src", "dst").map(c => edges.schema(c).dataType)).forall(isIntegral)
-    if (bcThresh <= 0 || !integral) {
-      distributedPageRank(ids, n, edges, bcThresh, iters, dampNum, dampDen)
-    } else {
-      // the edge list is counted, then collected or read once per
-      // iteration — pin it so an expensive upstream (e.g. a similarity
-      // join producing the edges) runs once
-      withCached(edges.select(col("src"), col("dst"))) { pairs =>
-        localGraph(nodeIds, ids, n, pairs, bcThresh) match {
-          case None => distributedPageRank(ids, n, pairs, bcThresh, iters, dampNum, dampDen)
-          case Some((idArr, hasNull, e)) =>
-            ids.unpersist(blocking = false) // the gate caches it only to count it
-            val nAll = idArr.length + (if (hasNull) 1 else 0)
-            require(nAll > 0, "pageRankFp: empty node set")
-            val base = RankScale / nAll
-            val ranks = localPageRank(idArr, e, base, iters, dampNum, dampDen)
-            val idField = nodeIds.schema.head
-            // a null id matches no edge, so it keeps only the teleport mass
-            val rows = idArr.indices.map(i => Row(ofLong(idArr(i), idField.dataType), ranks(i))) ++
-              (if (hasNull) Seq(Row(null, (dampDen - dampNum).toLong * base / dampDen)) else Nil)
-            localFrame(nodes.sparkSession, rows,
-              StructType(Seq(idField, StructField("rank_fp", LongType, nullable = true))))
-        }
-      }
-    }
-  }
-
-  /** [[pageRankFp]]'s Spark rounds over the cached distinct `ids`, `n`
-   *  of them. */
-  private def distributedPageRank(
-      ids: DataFrame,
-      n: Long,
-      edges: DataFrame,
-      bcThresh: Long,
-      iters: Int,
-      dampNum: Int,
-      dampDen: Int): DataFrame = {
-    require(n > 0, "pageRankFp: empty node set")
-    val base = RankScale / n // SCALE DIV N, exact long division
-    // Two edge layouts, picked by whether the rank vector is
-    // broadcastable (the [[labelPropagation]] regime gate):
-    //  - broadcast regime: cache the bare edge list hash-partitioned by
-    //    `dst` — the per-iteration inbound aggregation's key — and carry
-    //    the rank-and-degree side into the join as a STATIC broadcast.
-    //    cache() preserves the explicit partitioning (AQE leaves cached
-    //    plan partitioning alone by default), so every iteration's join
-    //    + sum-by-dst run with ZERO exchange; out-degrees come from one
-    //    tiny aggregation over the cache instead of a 2|E| window
-    //    exchange.
-    //  - rank vector too big to broadcast: the original shape — degree
-    //    as a window count over src, cache hash-partitioned by src so
-    //    the per-iteration sort-merge join never re-exchanges the edge
-    //    side; only the rank vector (small relative to edges) moves.
-    // Gated on the EXACT node count (already in hand) x 32 bytes/row,
-    // not the plan estimate: narrow-projection estimates overestimate
-    // severalfold and mis-file moderate graphs into the SMJ regime
-    // (see [[labelPropagation]]).
-    val bcast = bcThresh > 0 && n * 32L <= bcThresh
-    val e =
-      if (bcast) edges.select(col("src"), col("dst"))
-        .repartition(col("dst")).cache()
-      else edges
-        .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .select(col("src"), col("dst"), col("deg"))
-        .cache()
-    e.count() // materialize before the loop references it per iteration
-    // toDF: fresh attribute ids, so joining the shares side back against
-    // the edge cache (degF derives FROM e) is not an ambiguous self-join
-    val degF =
-      if (bcast) e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .toDF("psrc", "deg").cache()
-      else null
-    var ranks: DataFrame = ids.withColumn("rank_fp", lit(base))
-    var pinned: DataFrame = null
-    for (i <- 1 to iters) {
-      val inbound =
-        if (bcast) {
-          // per-src share on the SMALL side (|V| rows), broadcast onto
-          // the dst-partitioned edge cache
-          val shares = ranks.join(degF, ranks("id") === degF("psrc"))
-            .select(col("psrc"), expr("rank_fp DIV deg").as("share"))
-          broadcast(shares).join(e, col("psrc") === e("src"))
-            .select(col("dst"), col("share"))
-            .groupBy(col("dst").as("id"))
-            .agg(sum("share").as("s"))
-        } else ranks
-          .join(e, ranks("id") === e("src"))
-          .select(col("dst"), expr("rank_fp DIV deg").as("share"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum("share").as("s"))
-      ranks = ids.join(inbound, Seq("id"), "left")
-        .select(col("id"),
-          expr(s"(${(dampDen - dampNum).toLong}L * ${base}L + " +
-            s"${dampNum.toLong}L * coalesce(s, 0L)) DIV ${dampDen.toLong}L")
-            .as("rank_fp"))
-      // materialize every 4th round (and at the end), not every round:
-      // a count() barrier per iteration costs a fixed job latency that
-      // dominates small/medium graphs, while a 4-step lazy segment
-      // keeps the plan shallow (each step adds one join over cached
-      // leaves) and lineage stays O(1) via the rolling pin
-      if (i % MaterializeEvery == 0 || i == iters) {
-        val c = ranks.cache()
-        c.count()
-        if (pinned != null) pinned.unpersist()
-        pinned = c
-        ranks = c
-      }
-    }
-    // the final rank vector is already materialized, so the working
-    // tables can go; the returned frame itself stays cached (per-query
-    // working state; the harness/caller clears it) — unpersisting IT
-    // would force a full all-iterations recompute on first use
-    e.unpersist(blocking = false)
-    if (degF != null) degF.unpersist(blocking = false)
-    ids.unpersist(blocking = false)
-    ranks
-  }
-
-  /** [[pageRankFp]]'s rounds on the driver: `ids` sorted and distinct,
-   *  ranks returned in the same order. Exactly the distributed rule —
-   *  out-degree counts every edge of a node (duplicates, self-loops,
-   *  edges to foreign or null endpoints), `share = rank DIV outdeg`,
-   *  mass sent outside `ids` and dangling mass are dropped. */
-  private def localPageRank(
-      ids: Array[Long],
-      e: LongPairs,
-      base: Long,
-      iters: Int,
-      dampNum: Int,
-      dampDen: Int): Array[Long] = {
-    val n = ids.length
-    val deg = new Array[Long](n)
-    // the edges that carry mass, as (src, dst) node indices
-    val from = new Array[Int](e.size)
-    val to = new Array[Int](e.size)
-    var m = 0
-    for (i <- 0 until e.size) {
-      val u = if (e.aNull(i)) -1 else indexOf(ids, e.a(i))
-      if (u >= 0) {
-        deg(u) += 1
-        val v = if (e.bNull(i)) -1 else indexOf(ids, e.b(i))
-        if (v >= 0) { from(m) = u; to(m) = v; m += 1 }
-      }
-    }
-    val teleport = Math.multiplyExact((dampDen - dampNum).toLong, base)
-    var rank = Array.fill(n)(base)
-    val share = new Array[Long](n)
-    for (_ <- 1 to iters) {
-      for (u <- 0 until n) share(u) = if (deg(u) > 0) rank(u) / deg(u) else 0L
-      val s = new Array[Long](n)
-      for (k <- 0 until m) s(to(k)) = Math.addExact(s(to(k)), share(from(k)))
-      rank = s.map(x => Math.addExact(teleport, Math.multiplyExact(dampNum.toLong, x)) / dampDen)
-    }
-    rank
-  }
+      dampDen: Int = 100): DataFrame =
+    pageRankCore("pageRankFp: empty node set", nodes.select(col(idCol).as("id")), None,
+      edges.select(col("src"), col("dst")), iters, dampNum, dampDen)
 
   /**
    * Personalized PageRank (integer fixed point): teleport mass restarts
    * at the `seeds` set instead of uniformly — ranks measure proximity
    * to the seeds, the "find more like these" primitive (seed = known-
    * good documents, rank = curation priority; seed = known spam, rank =
-   * contamination risk). Same integer update rule, cache discipline,
-   * and scale shape as [[pageRankFp]]; non-seed nodes get zero restart
+   * contamination risk). Same integer update rule, regimes and cache
+   * discipline as [[pageRankFp]]; non-seed nodes get zero restart
    * mass, so their rank is purely inherited.
    *
    * `seeds` is one column `idCol`; seeds not present in `nodes` are
@@ -270,78 +92,254 @@ object Graph {
       seeds: DataFrame,
       iters: Int,
       dampNum: Int = 85,
-      dampDen: Int = 100): DataFrame = {
+      dampDen: Int = 100): DataFrame =
+    pageRankCore("personalizedPageRankFp: no seed overlaps the node set",
+      nodes.select(col(idCol).as("id")), Some(seeds.select(col(idCol).as("id"))),
+      edges.select(col("src"), col("dst")), iters, dampNum, dampDen)
+
+  /**
+   * Weighted PageRank (integer fixed point): rank mass flows along
+   * edges proportionally to their weights — on a co-occurrence graph,
+   * a pair seen together in 5 baskets carries 5x the endorsement of a
+   * one-off. Update per edge: `share = (rank * w) DIV wsum(src)`, so
+   * `rank_fp * w` must stay under 2^63 (w <= ~9e6 at the 1e12 rank
+   * scale; rescale weights upstream beyond that). Same iteration
+   * shape, regimes, cache discipline, and determinism contract as
+   * [[pageRankFp]]; `edges` carries (src, dst, `weightCol`), weights
+   * must be positive integers.
+   */
+  def weightedPageRankFp(
+      nodes: DataFrame,
+      edges: DataFrame,
+      idCol: String,
+      weightCol: String,
+      iters: Int,
+      dampNum: Int = 85,
+      dampDen: Int = 100): DataFrame =
+    pageRankCore("weightedPageRankFp: empty node set", nodes.select(col(idCol).as("id")), None,
+      edges.select(col("src"), col("dst"), col(weightCol).cast("long").as("w")),
+      iters, dampNum, dampDen)
+
+  /**
+   * The rank core of the three PageRanks. `nodeIds` and `seedIds` are one
+   * column `id`; `edges` is (src, dst) or (src, dst, w) with a long `w`.
+   * The restart (base) mass is `RankScale DIV nSeeds` on each seed that is
+   * a node and 0 elsewhere; with no `seedIds` every node, a null id
+   * included, is a seed. Unweighted edges weigh the literal 1, so their
+   * share `(rank * 1) DIV sum(1)` is `rank DIV outdeg`. Per round:
+   *   share(u->v) = (rank(u) * w) DIV wsum(u)   (wsum over all u's edges)
+   *   rank'(v)    = ((dampDen - dampNum) * base(v)
+   *                  + dampNum * sum_{u->v} share(u->v)) DIV dampDen
+   * Mass sent outside the node set and dangling mass are dropped.
+   *
+   * Scale design: three regimes behind one bound, Spark's own
+   * `spark.sql.autoBroadcastJoinThreshold` (T; T <= 0 means sort-merge):
+   *  - nodes (and seeds) x 32 bytes and edges x 8 bytes a column both
+   *    within T, integral ids, and every weight in 1..[[MaxLocalWeight]]:
+   *    the edge list is counted, collected once into primitive arrays,
+   *    and every iteration runs on the driver; the result is a local
+   *    frame. A null, non-positive or larger weight declines, so Spark's
+   *    plan keeps owning their nulls and errors.
+   *  - only nodes x 32 within T: each iteration is one join of the
+   *    broadcast (src, rank, wsum) vector against the edge list plus one
+   *    partial-aggregable sum by `dst`, with no exchange.
+   *  - otherwise the same join sort-merges; only the rank vector moves.
+   * Document payloads never participate. Distributed iterations
+   * re-cache the rank vector and unpersist the previous one, so lineage
+   * stays O(1) regardless of `iters`.
+   */
+  private def pageRankCore(
+      emptyMessage: String,
+      nodeIds: DataFrame,
+      seedIds: Option[DataFrame],
+      edges: DataFrame,
+      iters: Int,
+      dampNum: Int,
+      dampDen: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    val ids = nodes.select(col(idCol).as("id")).distinct()
-      .join(seeds.select(col(idCol).as("id")).distinct()
-        .withColumn("is_seed", lit(true)), Seq("id"), "left")
-      .cache()
-    val nSeeds = ids.where(col("is_seed")).count()
-    require(nSeeds > 0, "personalizedPageRankFp: no seed overlaps the node set")
-    val base = RankScale / nSeeds
-    val withBase = ids.select(col("id"),
-      when(col("is_seed"), base).otherwise(0L).as("base_fp")).cache()
-    val nNodes = withBase.count()
-    ids.unpersist(blocking = false)
-    // regime-gated edge layout — see [[pageRankFp]]: dst-partitioned
-    // cache + broadcast share side (zero per-iteration exchange) when the
-    // rank vector is broadcastable, the src-window shape otherwise;
-    // gated on the exact node count (see pageRankFp)
-    val bcThresh = broadcastThreshold(nodes)
-    val bcast = bcThresh > 0 && nNodes * 32L <= bcThresh
+    val bcThresh = broadcastThreshold(nodeIds)
+    // (id, is_seed) over the distinct ids, which the distributed rounds
+    // join against; its node and seed counts come from one job, which the
+    // driver-local regime skips when the raw node rows already fit
+    lazy val ids = seedIds.fold(nodeIds.distinct().withColumn("is_seed", lit(true))) { s =>
+      nodeIds.distinct()
+        .join(s.distinct().withColumn("is_seed", lit(true)), Seq("id"), "left")
+    }.cache()
+    lazy val counts = LongPairs.count(ids, ids.where(col("is_seed")))
+    // Driver-local regime (see [[localGraph]]): every round runs on the
+    // driver over primitive arrays — two jobs in all (count, collect)
+    // instead of a join, an aggregation and their exchanges per round,
+    // which on a small graph cost far more in per-job latency than the
+    // data does. Same integer rule, so the ranks are bit-identical.
+    // Integral ids only: the arrays are longs, and other id types keep
+    // Spark's comparison semantics on the distributed paths.
+    val integral = (Seq(nodeIds.schema.head, edges.schema("src"), edges.schema("dst")) ++
+      seedIds.map(_.schema.head)).forall(f => isIntegral(f.dataType))
+    if (bcThresh <= 0 || !integral) {
+      distributedRank(emptyMessage, ids, counts, edges, bcThresh, iters, dampNum, dampDen)
+    } else {
+      // the edge list is counted, then collected or read once per
+      // iteration — pin it so an expensive upstream (e.g. a similarity
+      // join producing the edges) runs once
+      withCached(edges) { e =>
+        localGraph(nodeIds, ids.select(col("id")), counts.head, e, bcThresh, seedIds)
+          // a weight the driver rounds cannot take declines (see above);
+          // a null weight's slot holds 0
+          .filter(g => g.edges.width < 3 ||
+            g.edges.c.forall(w => w > 0 && w <= MaxLocalWeight)) match {
+          case None =>
+            distributedRank(emptyMessage, ids, counts, e, bcThresh, iters, dampNum, dampDen)
+          case Some(g) =>
+            ids.unpersist(blocking = false) // the gate may have cached it to count it
+            // a null id matches no seed and no edge; it is a seed only
+            // when every node is, and keeps its restart mass alone
+            val seeded = g.ids.map(id => g.seeds.forall(indexOf(_, id) >= 0)) ++
+              (if (g.hasNull) Seq(seedIds.isEmpty) else Nil)
+            val nSeeds = seeded.count(identity)
+            require(nSeeds > 0, emptyMessage)
+            val base = seeded.map(s => if (s) RankScale / nSeeds else 0L)
+            val ranks = localRanks(g.ids, base, g.edges, iters, dampNum, dampDen)
+            val idField = nodeIds.schema.head
+            val rows = ranks.indices.map { i =>
+              Row(if (i < g.ids.length) ofLong(g.ids(i), idField.dataType) else null, ranks(i))
+            }
+            localFrame(nodeIds.sparkSession, rows,
+              StructType(Seq(idField, StructField("rank_fp", LongType, nullable = true))))
+        }
+      }
+    }
+  }
+
+  /** [[pageRankCore]]'s Spark rounds over the cached (id, is_seed)
+   *  `ids`, whose `counts` are its rows and its seeds. */
+  private def distributedRank(
+      emptyMessage: String,
+      ids: DataFrame,
+      counts: => Seq[Long],
+      edges: DataFrame,
+      bcThresh: Long,
+      iters: Int,
+      dampNum: Int,
+      dampDen: Int): DataFrame = {
+    val Seq(n, nSeeds) = counts
+    require(nSeeds > 0, emptyMessage)
+    val base = ids.select(col("id"),
+      when(col("is_seed"), RankScale / nSeeds).otherwise(0L).as("base_fp"))
+    // the weight term of the share: the weight column, or the literal 1
+    val w = if (edges.columns.contains("w")) "w" else "1L"
+    // Two edge layouts, picked by whether the rank vector is
+    // broadcastable (the [[labelPropagation]] regime gate):
+    //  - broadcast regime: cache the bare edge list hash-partitioned by
+    //    `dst` — the per-iteration inbound aggregation's key — and carry
+    //    the rank-and-wsum side into the join as a STATIC broadcast.
+    //    cache() preserves the explicit partitioning (AQE leaves cached
+    //    plan partitioning alone by default), so every iteration's join
+    //    + sum-by-dst run with ZERO exchange; the per-src weight totals
+    //    come from one tiny aggregation over the cache instead of a
+    //    2|E| window exchange.
+    //  - rank vector too big to broadcast: the original shape — the
+    //    weight total as a window sum over src, cache hash-partitioned
+    //    by src so the per-iteration sort-merge join never re-exchanges
+    //    the edge side; only the rank vector (small relative to edges)
+    //    moves.
+    // Gated on the EXACT node count (already in hand) x 32 bytes/row,
+    // not the plan estimate: narrow-projection estimates overestimate
+    // severalfold and mis-file moderate graphs into the SMJ regime
+    // (see [[labelPropagation]]).
+    val bcast = bcThresh > 0 && n * 32L <= bcThresh
     val e =
-      if (bcast) edges.select(col("src"), col("dst"))
-        .repartition(col("dst")).cache()
-      else edges
-        .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .select(col("src"), col("dst"), col("deg"))
-        .cache()
-    e.count()
-    // toDF: fresh attribute ids, so joining the shares side back against
-    // the edge cache (degF derives FROM e) is not an ambiguous self-join
-    val degF =
-      if (bcast) e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .toDF("psrc", "deg").cache()
+      if (bcast) edges.repartition(col("dst")).cache()
+      else edges.withColumn("wsum", sum(expr(w)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))).cache()
+    LongPairs.count(e) // materialize before the loop references it per iteration
+    // toDF: fresh attribute ids, so joining the rank side back against
+    // the edge cache (wsumF derives FROM e) is not an ambiguous self-join
+    val wsumF =
+      if (bcast) e.groupBy("src").agg(sum(expr(w)).as("wsum"))
+        .toDF("psrc", "wsum").cache()
       else null
-    var ranks: DataFrame = withBase.withColumn("rank_fp", col("base_fp"))
+    val share = expr(s"(rank_fp * $w) DIV wsum").as("share")
+    var ranks: DataFrame = base.withColumnRenamed("base_fp", "rank_fp")
     var pinned: DataFrame = null
     for (i <- 1 to iters) {
-      val inbound =
+      val shares =
         if (bcast) {
-          val shares = ranks.join(degF, ranks("id") === degF("psrc"))
-            .select(col("psrc"), expr("rank_fp DIV deg").as("share"))
-          broadcast(shares).join(e, col("psrc") === e("src"))
-            .select(col("dst"), col("share"))
-            .groupBy(col("dst").as("id"))
-            .agg(sum("share").as("s"))
-        } else ranks
-          .join(e, ranks("id") === e("src"))
-          .select(col("dst"), expr("rank_fp DIV deg").as("share"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum("share").as("s"))
-      ranks = withBase.join(inbound, Seq("id"), "left")
-        .select(col("id"), col("base_fp"),
+          // the share is per EDGE, so the broadcast side carries
+          // (src, rank_fp, wsum) and the division runs on the edge rows
+          val srcSide = ranks.join(wsumF, ranks("id") === wsumF("psrc"))
+            .select(col("psrc"), col("rank_fp"), col("wsum"))
+          broadcast(srcSide).join(e, col("psrc") === e("src")).select(col("dst"), share)
+        } else ranks.join(e, ranks("id") === e("src")).select(col("dst"), share)
+      val inbound = shares.groupBy(col("dst").as("id")).agg(sum("share").as("s"))
+      ranks = base.join(inbound, Seq("id"), "left")
+        .select(col("id"),
           expr(s"(${(dampDen - dampNum).toLong}L * base_fp + " +
             s"${dampNum.toLong}L * coalesce(s, 0L)) DIV ${dampDen.toLong}L")
             .as("rank_fp"))
-      // batched materialization — see [[pageRankFp]]
+      // materialize every 4th round (and at the end), not every round:
+      // a barrier per iteration costs a fixed job latency that dominates
+      // small/medium graphs, while a 4-step lazy segment keeps the plan
+      // shallow (each step adds one join over cached leaves) and lineage
+      // stays O(1) via the rolling pin
       if (i % MaterializeEvery == 0 || i == iters) {
         val c = ranks.cache()
-        c.count()
+        LongPairs.count(c)
         if (pinned != null) pinned.unpersist()
         pinned = c
         ranks = c
       }
     }
+    // the final rank vector is already materialized, so the working
+    // tables can go; the returned frame itself stays cached (per-query
+    // working state; the harness/caller clears it) — unpersisting IT
+    // would force a full all-iterations recompute on first use
     e.unpersist(blocking = false)
-    if (degF != null) degF.unpersist(blocking = false)
-    // withBase stays pinned: it feeds the returned (cached) rank frame's
-    // lineage only until that cache fills, which already happened
-    withBase.unpersist(blocking = false)
-    ranks.select(col("id"), col("rank_fp"))
+    if (wsumF != null) wsumF.unpersist(blocking = false)
+    ids.unpersist(blocking = false)
+    ranks
+  }
+
+  /** [[pageRankCore]]'s rounds on the driver: `ids` sorted and
+   *  distinct, `base` their restart mass plus, when the node set holds a
+   *  null id, one more entry for it (no edge reaches it); ranks are
+   *  returned in `base`'s order. Exactly the distributed rule — wsum
+   *  counts every edge of a node (duplicates, self-loops, edges to
+   *  foreign or null endpoints), mass sent outside `ids` and dangling
+   *  mass are dropped. Weights are in 1..[[MaxLocalWeight]]. */
+  private def localRanks(
+      ids: Array[Long],
+      base: Array[Long],
+      e: LongPairs,
+      iters: Int,
+      dampNum: Int,
+      dampDen: Int): Array[Long] = {
+    val n = base.length
+    val wsum = new Array[Long](n)
+    // the edges that carry mass, as (src, dst) node indices and weight
+    val from = new Array[Int](e.size)
+    val to = new Array[Int](e.size)
+    val w = new Array[Long](e.size)
+    var m = 0
+    for (i <- 0 until e.size) {
+      val u = if (e.aNull(i)) -1 else indexOf(ids, e.a(i))
+      if (u >= 0) {
+        val wi = if (e.width > 2) e.c(i) else 1L
+        wsum(u) = Math.addExact(wsum(u), wi)
+        val v = if (e.bNull(i)) -1 else indexOf(ids, e.b(i))
+        if (v >= 0) { from(m) = u; to(m) = v; w(m) = wi; m += 1 }
+      }
+    }
+    var ranks = base
+    for (_ <- 1 to iters) {
+      val s = new Array[Long](n)
+      for (k <- 0 until m) s(to(k)) += ranks(from(k)) * w(k) / wsum(from(k))
+      ranks = Array.tabulate(n)(v => Math.addExact(
+        Math.multiplyExact((dampDen - dampNum).toLong, base(v)),
+        Math.multiplyExact(dampNum.toLong, s(v))) / dampDen)
+    }
+    ranks
   }
 
   /**
@@ -640,7 +638,7 @@ object Graph {
       mat: DataFrame => DataFrame, df: DataFrame): DataFrame =
     IsolatedSession.run(df, "spark.sql.adaptive.enabled" -> "false")(mat)
 
-  private def isIntegral(t: DataType): Boolean =
+  private[operators] def isIntegral(t: DataType): Boolean =
     t == LongType || t == IntegerType || t == ShortType || t == ByteType
 
   /** A long id back as a value of integral type `t`. */
@@ -651,34 +649,46 @@ object Graph {
     case _ => v
   }
 
+  /** A graph on the driver: the node ids sorted and distinct, whether a
+   *  null is among them, the edges, and the seed ids (sorted, distinct,
+   *  nulls dropped) when seeds were given. */
+  private final case class LocalGraph(
+      ids: Array[Long], hasNull: Boolean, edges: LongPairs, seeds: Option[Array[Long]])
+
   /**
    * The driver-local regime's gate, and its inputs. The regime needs the
-   * distinct node ids at 32 bytes each (the broadcast regime's own gate)
-   * and the edges at 16 bytes each both within `bcThresh`. One job counts
-   * the raw node rows, an upper bound of the distinct ids, and the edge
-   * rows; only when the raw rows do not fit does the exact distinct count
-   * decide, which the distributed regimes need anyway. When both fit, one
-   * more job collects the node ids (returned sorted and distinct, and
-   * whether a null is among them) and the edges; `None` otherwise.
-   * `cachedEdges` is read twice.
+   * distinct node ids (and any seed rows) at 32 bytes each — the
+   * broadcast regime's own gate — and the edges at 8 bytes a column (16
+   * a pair, 24 weighted) both within `bcThresh`. One job counts the raw
+   * node rows, an upper bound of the distinct ids, the edge rows and the
+   * seed rows; only when the raw node rows do not fit does the exact
+   * distinct count decide, which the distributed regimes need anyway.
+   * When all fit, one more job collects the node ids, the edges and the
+   * seeds; `None` otherwise. `cachedEdges` is read twice.
    */
   private def localGraph(
       nodeIds: DataFrame,
       distinctIds: => DataFrame,
       distinctCount: => Long,
       cachedEdges: DataFrame,
-      bcThresh: Long): Option[(Array[Long], Boolean, LongPairs)] = {
-    val Seq(nodeRows, edgeRows) = LongPairs.count(nodeIds, cachedEdges)
+      bcThresh: Long,
+      seeds: Option[DataFrame] = None): Option[LocalGraph] = {
+    val counts = LongPairs.count(nodeIds +: cachedEdges +: seeds.toSeq: _*)
+    val Seq(nodeRows, edgeRows) = counts.take(2)
+    val seedRows = counts.drop(2).sum
     val nodeSource =
-      if (edgeRows * 16L > bcThresh) None
-      else if (nodeRows * 32L <= bcThresh) Some(nodeIds)
-      else if (distinctCount * 32L <= bcThresh) {
+      if (edgeRows * 8L * cachedEdges.columns.length > bcThresh) None
+      else if ((nodeRows + seedRows) * 32L <= bcThresh) Some(nodeIds)
+      else if ((distinctCount + seedRows) * 32L <= bcThresh) {
         Some(distinctIds.select(col(nodeIds.columns.head)))
       } else None
     nodeSource.map { source =>
-      val Seq(ns, e) = LongPairs.collect(source, cachedEdges)
-      val ids = (0 until ns.size).filterNot(ns.aNull).map(ns.a).distinct.sorted.toArray
-      (ids, (0 until ns.size).exists(ns.aNull), e)
+      val collected = LongPairs.collect(source +: cachedEdges +: seeds.toSeq: _*)
+      def sortedIds(p: LongPairs) =
+        (0 until p.size).filterNot(p.aNull).map(p.a).distinct.sorted.toArray
+      val ns = collected.head
+      LocalGraph(sortedIds(ns), (0 until ns.size).exists(ns.aNull), collected(1),
+        collected.lift(2).map(sortedIds))
     }
   }
 
@@ -885,94 +895,6 @@ object Graph {
     val strong = finish(cn.where(col("cn") >= 2L)).cache()
     if (strong.count() >= topN) strong
     else { strong.unpersist(blocking = false); finish(cn) }
-  }
-
-  /**
-   * Weighted PageRank (integer fixed point): rank mass flows along
-   * edges proportionally to their weights — on a co-occurrence graph,
-   * a pair seen together in 5 baskets carries 5x the endorsement of a
-   * one-off. Update per edge: `share = (rank * w) DIV wsum(src)`, so
-   * `rank_fp * w` must stay under 2^63 (w <= ~9e6 at the 1e12 rank
-   * scale; rescale weights upstream beyond that). Same iteration
-   * shape, cache discipline, and determinism contract as
-   * [[pageRankFp]]; `edges` carries (src, dst, `weightCol`), weights
-   * must be positive integers.
-   */
-  def weightedPageRankFp(
-      nodes: DataFrame,
-      edges: DataFrame,
-      idCol: String,
-      weightCol: String,
-      iters: Int,
-      dampNum: Int = 85,
-      dampDen: Int = 100): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    val ids = nodes.select(col(idCol).as("id")).distinct().cache()
-    val n = ids.count()
-    require(n > 0, "weightedPageRankFp: empty node set")
-    val base = RankScale / n
-    // regime-gated edge layout — see [[pageRankFp]]: dst-partitioned
-    // cache + broadcast rank-and-wsum side (zero per-iteration exchange)
-    // when the rank vector is broadcastable; otherwise the original
-    // shape, per-src weight total as a window sum over the
-    // src-partitioned cache. Gated on the exact node count (see
-    // pageRankFp)
-    val bcThresh = broadcastThreshold(nodes)
-    val bcast = bcThresh > 0 && n * 32L <= bcThresh
-    val e =
-      if (bcast) edges.select(col("src"), col("dst"),
-          col(weightCol).cast("long").as("w"))
-        .repartition(col("dst")).cache()
-      else edges.select(col("src"), col("dst"),
-          col(weightCol).cast("long").as("w"))
-        .withColumn("wsum", sum(col("w")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .cache()
-    e.count()
-    // toDF: fresh attribute ids — see pageRankFp's self-join note
-    val wsumF =
-      if (bcast) e.groupBy("src").agg(sum(col("w")).as("wsum"))
-        .toDF("psrc", "wsum").cache()
-      else null
-    var ranks: DataFrame = ids.withColumn("rank_fp", lit(base))
-    var pinned: DataFrame = null
-    for (i <- 1 to iters) {
-      val inbound =
-        if (bcast) {
-          // the share here is per-EDGE ((rank * w) DIV wsum), so the
-          // broadcast side carries (src, rank_fp, wsum) and the division
-          // runs on the edge rows
-          val srcSide = ranks.join(wsumF, ranks("id") === wsumF("psrc"))
-            .select(col("psrc"), col("rank_fp"), col("wsum"))
-          broadcast(srcSide).join(e, col("psrc") === e("src"))
-            .select(col("dst"), expr("(rank_fp * w) DIV wsum").as("share"))
-            .groupBy(col("dst").as("id"))
-            .agg(sum("share").as("s"))
-        } else ranks
-          .join(e, ranks("id") === e("src"))
-          .select(col("dst"), expr("(rank_fp * w) DIV wsum").as("share"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum("share").as("s"))
-      ranks = ids.join(inbound, Seq("id"), "left")
-        .select(col("id"),
-          expr(s"(${(dampDen - dampNum).toLong}L * ${base}L + " +
-            s"${dampNum.toLong}L * coalesce(s, 0L)) DIV ${dampDen.toLong}L")
-            .as("rank_fp"))
-      // batched materialization — see [[pageRankFp]]
-      if (i % MaterializeEvery == 0 || i == iters) {
-        val c = ranks.cache()
-        c.count()
-        if (pinned != null) pinned.unpersist()
-        pinned = c
-        ranks = c
-      }
-    }
-    e.unpersist(blocking = false)
-    if (wsumF != null) wsumF.unpersist(blocking = false)
-    ids.unpersist(blocking = false)
-    ranks
   }
 
   /**
@@ -1195,11 +1117,11 @@ object Graph {
     else withCached(idEdges) { pairs =>
       localGraph(nodeIds, matLabels, n, pairs, bcThresh) match {
         case None => distributedLabelPropagation(mat, matLabels, n, pairs, bcThresh, rounds)
-        case Some((ids, hasNull, e)) =>
-          val labels = localLabelPropagation(ids, e, rounds)
+        case Some(g) =>
+          val labels = localLabelPropagation(g.ids, g.edges, rounds)
           // a null id joins no edge and keeps its (null) label
-          val rows = ids.indices.map(i => Row(ids(i), labels(i))) ++
-            (if (hasNull) Seq(Row(null, null)) else Nil)
+          val rows = g.ids.indices.map(i => Row(g.ids(i), labels(i))) ++
+            (if (g.hasNull) Seq(Row(null, null)) else Nil)
           localFrame(nodes.sparkSession, rows, StructType(Seq(
             StructField("node", LongType, nullable = true),
             StructField("label", LongType, nullable = true))))
@@ -1336,19 +1258,23 @@ object Graph {
 }
 
 /**
- * Rows of one or two long columns collected to the driver as primitive
- * arrays: row `i` is `(a(i), b(i))`, and `aNull(i)` / `bNull(i)` mark a
- * null (its array slot then holds 0; a one-column frame has every `b`
- * null). The driver-local regimes of [[Graph.pageRankFp]],
- * [[Graph.labelPropagation]] and [[Dedup.connectedComponents]] hold
- * their node ids and edge lists this way and iterate over them instead
- * of starting Spark jobs per round.
+ * Rows of one to three long columns collected to the driver as primitive
+ * arrays: row `i` is `(a(i), b(i), c(i))` as far as the frame has
+ * columns (`width`); `aNull(i)` and `bNull(i)` mark a null (its array
+ * slot then holds 0, as does the slot of a null `c`). The driver-local
+ * regimes of the PageRanks, [[Graph.labelPropagation]] and
+ * [[Dedup.connectedComponents]] hold their node ids, seed ids and edge
+ * lists (weighted or not) this way and iterate over them instead of
+ * starting Spark jobs per round.
  */
-private[operators] final class LongPairs(
-    val a: Array[Long], val b: Array[Long], nulls: java.util.BitSet) {
-  def size: Int = a.length
-  def aNull(i: Int): Boolean = nulls.get(2 * i)
-  def bNull(i: Int): Boolean = nulls.get(2 * i + 1)
+private[operators] final class LongPairs(cols: Array[Array[Long]], nulls: java.util.BitSet) {
+  def width: Int = cols.length
+  def size: Int = cols(0).length
+  def a: Array[Long] = cols(0)
+  def b: Array[Long] = cols(1)
+  def c: Array[Long] = cols(2)
+  def aNull(i: Int): Boolean = nulls.get(3 * i)
+  def bNull(i: Int): Boolean = nulls.get(3 * i + 1)
 }
 
 private[operators] object LongPairs {
@@ -1369,50 +1295,50 @@ private[operators] object LongPairs {
     (0 until n).map(t => counts.map(_(t)).sum)
   }
 
-  /** When `df` has at most `maxRows` rows, its first two columns
-   *  collected by [[collect]]; `None` when it is larger. `df` is read
-   *  twice, to count and to collect: cache it first when its plan is
-   *  expensive. */
+  /** When `df` has at most `maxRows` rows, its columns collected by
+   *  [[collect]]; `None` when it is larger. `df` is read twice, to count
+   *  and to collect: cache it first when its plan is expensive. */
   def collectBounded(df: DataFrame, maxRows: Long): Option[LongPairs] =
     if (count(df).head > maxRows) None else Some(collect(df).head)
 
-  /** The first one or two columns of each frame, cast to long, collected
-   *  in one job. Each partition packs its rows into arrays, so the driver
-   *  receives a few arrays per partition, not one object per row. The
-   *  caller bounds the sizes (see [[collectBounded]]). */
+  /** The first one to three columns of each frame, cast to long,
+   *  collected in one job. Each partition packs its rows into arrays, so
+   *  the driver receives a few arrays per partition, not one object per
+   *  row. The caller bounds the sizes (see [[collectBounded]]). */
   def collect(frames: DataFrame*): Seq[LongPairs] = {
     val spark = frames.head.sparkSession
     import spark.implicits._
+    val widths = frames.map(f => math.min(f.columns.length, 3)).toArray
     val tagged = frames.zipWithIndex.map { case (f, t) =>
-      val cs = f.columns.take(2).map(c => f.col(c).cast("long"))
-      f.select(lit(t).as("t"), cs(0).as("a"),
-        (if (cs.length > 1) cs(1) else lit(null).cast("long")).as("b"))
+      val cs = f.columns.take(3).map(c => f.col(c).cast("long"))
+        .padTo(3, lit(null).cast("long"))
+      f.select(lit(t).as("t") +: cs.toSeq.zipWithIndex.map { case (c, j) => c.as(s"c$j") }: _*)
     }.reduce(_ unionAll _)
     val n = frames.length
-    // per partition and frame: (frame, a, b, null slots 2i / 2i+1)
+    // per partition and frame: (frame, columns, null slots 3i + column)
     val parts = tagged.mapPartitions { rows =>
-      val a = Array.fill(n)(Array.newBuilder[Long])
-      val b = Array.fill(n)(Array.newBuilder[Long])
+      val cols = widths.map(w => Array.fill(w)(Array.newBuilder[Long]))
       val nulls = Array.fill(n)(Array.newBuilder[Int])
       val len = new Array[Int](n)
       rows.foreach { r =>
         val t = r.getInt(0)
-        val i = len(t)
-        if (r.isNullAt(1)) { nulls(t) += 2 * i; a(t) += 0L } else a(t) += r.getLong(1)
-        if (r.isNullAt(2)) { nulls(t) += 2 * i + 1; b(t) += 0L } else b(t) += r.getLong(2)
+        for (j <- 0 until widths(t)) {
+          if (r.isNullAt(j + 1)) { nulls(t) += 3 * len(t) + j; cols(t)(j) += 0L }
+          else cols(t)(j) += r.getLong(j + 1)
+        }
         len(t) += 1
       }
-      Iterator.tabulate(n)(t => (t, a(t).result(), b(t).result(), nulls(t).result()))
+      Iterator.tabulate(n)(t => (t, cols(t).map(_.result()), nulls(t).result()))
     }.collect()
     (0 until n).map { t =>
       val mine = parts.filter(_._1 == t)
       val nulls = new java.util.BitSet()
       var offset = 0
-      mine.foreach { case (_, pa, _, ns) =>
-        ns.foreach(j => nulls.set(2 * offset + j))
-        offset += pa.length
+      mine.foreach { case (_, pc, ns) =>
+        ns.foreach(j => nulls.set(3 * offset + j))
+        offset += pc(0).length
       }
-      new LongPairs(mine.flatMap(_._2), mine.flatMap(_._3), nulls)
+      new LongPairs(Array.tabulate(widths(t))(j => mine.flatMap(_._2(j))), nulls)
     }
   }
 }

@@ -230,14 +230,14 @@ class ApproxSketchSuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("sketch state round-trips through parquet persistence") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_summaries").toString
-    spark.sql(
-      "SELECT approx_percentile_accumulate(c) AS s FROM VALUES (0), (1), (2), (10) AS t(c)")
-      .write.mode("overwrite").parquet(dir)
-    val est = spark.read.parquet(dir)
-      .selectExpr("approx_percentile_estimate(s, 0.5) AS p50").collect()
-    assert(est.toSeq === Seq(Row(2.0)))
+    withTempDir("graft_summaries") { dir =>
+      spark.sql(
+        "SELECT approx_percentile_accumulate(c) AS s FROM VALUES (0), (1), (2), (10) AS t(c)")
+        .write.mode("overwrite").parquet(dir)
+      val est = spark.read.parquet(dir)
+        .selectExpr("approx_percentile_estimate(s, 0.5) AS p50").collect()
+      assert(est.toSeq === Seq(Row(2.0)))
+    }
   }
 
   test("approx_ks_distance: exact two-sample KS on tiny inputs, all impls") {

@@ -115,34 +115,35 @@ class BloomFilterSuite extends AnyFunSuite with GraftSparkSession {
   test("persisted bloom index: build once, filter batches, append without corpus IO") {
     import spark.implicits._
     import graft.operators.BloomIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomidx").toString
-    val corpus = (0 until 500).map(i => (i.toLong, s"doc-content-$i")).toDF("id", "text")
-    BloomIndex.build(spark, dir, corpus, "text", maxItems = 10000, fpp = 0.01)
+    withTempDir("graft_bloomidx") { dir =>
+      val corpus = (0 until 500).map(i => (i.toLong, s"doc-content-$i")).toDF("id", "text")
+      BloomIndex.build(spark, dir, corpus, "text", maxItems = 10000, fpp = 0.01)
 
-    // batch: 100 replayed corpus docs + 100 genuinely new ones
-    val batch = ((0 until 100).map(i => (1000L + i, s"doc-content-$i")) ++
-      (0 until 100).map(i => (2000L + i, s"fresh-content-$i"))).toDF("id", "text")
-    val kept = BloomIndex.filterNew(spark, dir, batch, "text")
-    val keptIds = kept.select("id").as[Long].collect().toSet
-    // no false negatives: every replayed doc is dropped
-    assert(keptIds.forall(_ >= 2000L))
-    // ~fpp of the fresh docs may be lost; at 1% over 100 expect ~1
-    assert(keptIds.size >= 90, s"kept only ${keptIds.size} of 100 fresh docs")
-    // the probe is map-side: no exchange in the filter plan
-    val plan = kept.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
+      // batch: 100 replayed corpus docs + 100 genuinely new ones
+      val batch = ((0 until 100).map(i => (1000L + i, s"doc-content-$i")) ++
+        (0 until 100).map(i => (2000L + i, s"fresh-content-$i"))).toDF("id", "text")
+      val kept = BloomIndex.filterNew(spark, dir, batch, "text")
+      val keptIds = kept.select("id").as[Long].collect().toSet
+      // no false negatives: every replayed doc is dropped
+      assert(keptIds.forall(_ >= 2000L))
+      // ~fpp of the fresh docs may be lost; at 1% over 100 expect ~1
+      assert(keptIds.size >= 90, s"kept only ${keptIds.size} of 100 fresh docs")
+      // the probe is map-side: no exchange in the filter plan
+      val plan = kept.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), plan)
 
-    // append the fresh docs; a replay of them is now dropped too
-    BloomIndex.append(spark, dir, kept, "text")
-    val replay = BloomIndex.filterNew(spark, dir,
-      (0 until 100).map(i => (3000L + i, s"fresh-content-$i")).toDF("id", "text"), "text")
-    assert(replay.count() === 0)
-    // and a genuinely-new third batch still passes
-    val third = BloomIndex.filterNew(spark, dir,
-      (0 until 50).map(i => (4000L + i, s"third-content-$i")).toDF("id", "text"), "text")
-    assert(third.count() >= 45)
-    // stored parameters survived the append
-    val stored = spark.read.parquet(dir).collect()(0)
-    assert(stored.getLong(stored.fieldIndex("max_items")) === 10000L)
+      // append the fresh docs; a replay of them is now dropped too
+      BloomIndex.append(spark, dir, kept, "text")
+      val replay = BloomIndex.filterNew(spark, dir,
+        (0 until 100).map(i => (3000L + i, s"fresh-content-$i")).toDF("id", "text"), "text")
+      assert(replay.count() === 0)
+      // and a genuinely-new third batch still passes
+      val third = BloomIndex.filterNew(spark, dir,
+        (0 until 50).map(i => (4000L + i, s"third-content-$i")).toDF("id", "text"), "text")
+      assert(third.count() >= 45)
+      // stored parameters survived the append
+      val stored = spark.read.parquet(dir).collect()(0)
+      assert(stored.getLong(stored.fieldIndex("max_items")) === 10000L)
+    }
   }
 }

@@ -1536,9 +1536,10 @@ class CurationOpsSuite extends AnyFunSuite with GraftSparkSession {
     // not silently truncate
     val longId = "x" * 120
     val bad = Seq((longId, "payload")).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tar_bad").toString
-    intercept[org.apache.spark.SparkException] {
-      graft.sources.TarShards.write(bad, "id", "text", dir, numShards = 1)
+    withTempDir("graft_tar_bad") { dir =>
+      intercept[org.apache.spark.SparkException] {
+        graft.sources.TarShards.write(bad, "id", "text", dir, numShards = 1)
+      }
     }
   }
 
@@ -1563,24 +1564,26 @@ class CurationOpsSuite extends AnyFunSuite with GraftSparkSession {
     assert(e2.getMessage.contains("rescale"))
     // a flipped payload-size byte breaks the header checksum: read()
     // must reject the shard loudly, not decode garbage entries
-    val dir = java.nio.file.Files.createTempDirectory("graft_tar_chk").toString
-    graft.sources.TarShards.write(
-      Seq((1L, "hello world")).toDF("id", "text"), "id", "text", dir, numShards = 1)
-    val shard = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".tar")).head.toPath
-    val bytes = java.nio.file.Files.readAllBytes(shard)
-    bytes(130) = '7' // inside the size field, header checksum now stale
-    // fresh dir via plain nio: rewriting in place would trip Hadoop's
-    // .crc sidecar first and shadow the ustar-level validation under test
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_tar_chk2")
-    java.nio.file.Files.write(dir2.resolve("shard-0.tar"), bytes)
-    val e3 = intercept[Exception] {
-      graft.sources.TarShards.read(spark, dir2.toString).collect()
+    withTempDir("graft_tar_chk") { dir =>
+      graft.sources.TarShards.write(
+        Seq((1L, "hello world")).toDF("id", "text"), "id", "text", dir, numShards = 1)
+      val shard = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".tar")).head.toPath
+      val bytes = java.nio.file.Files.readAllBytes(shard)
+      bytes(130) = '7' // inside the size field, header checksum now stale
+      // fresh dir via plain nio: rewriting in place would trip Hadoop's
+      // .crc sidecar first and shadow the ustar-level validation under test
+      val e3 = withTempDir("graft_tar_chk2") { dir2 =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir2, "shard-0.tar"), bytes)
+        intercept[Exception] {
+          graft.sources.TarShards.read(spark, dir2).collect()
+        }
+      }
+      val chainDesc = Iterator.iterate(e3: Throwable)(_.getCause)
+        .takeWhile(_ != null)
+        .map(x => x.getClass.getName + ": " + x.getMessage).mkString(" ||| ")
+      assert(chainDesc.contains("checksum"), chainDesc)
     }
-    val chainDesc = Iterator.iterate(e3: Throwable)(_.getCause)
-      .takeWhile(_ != null)
-      .map(x => x.getClass.getName + ": " + x.getMessage).mkString(" ||| ")
-    assert(chainDesc.contains("checksum"), chainDesc)
   }
 
   test("labelAgreement: hand-computed kappa, sign-safe negatives, degenerate NULL") {

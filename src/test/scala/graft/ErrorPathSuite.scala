@@ -110,28 +110,31 @@ class ErrorPathSuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("summary build/refresh validate kind and missing count column") {
-    import java.nio.file.Files
     SparkEntry.prep(spark) // events.parquet is TIMESTAMP(NANOS): needs nanosAsLong
-    val bad = intercept[IllegalArgumentException] {
+    def buildBad(dir: String) = intercept[IllegalArgumentException] {
       graft.plans.GraftSummaries.buildSummaryTable(
         spark, "/root/testdata/sf0.001/events.parquet",
-        Files.createTempDirectory("err_sum").toString + "/s",
+        s"$dir/s",
         Seq("event_type"), "props", "hll-ish")
     }
+    val bad = withTempDir("err_sum")(buildBad)
     assert(bad.getMessage.contains("distinct|quantile|freq"), bad.getMessage)
     // a pre-counts summary (no n_rows column) must be rejected by the
     // incremental refresh with a message pointing at the rebuild path
-    val dir = Files.createTempDirectory("err_sum2").toString + "/s"
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .createOrReplaceTempView("err_events")
-    spark.sql(
-      """SELECT event_type, approx_count_distinct_accumulate(props) AS sketch
-        |FROM err_events GROUP BY event_type""".stripMargin)
-      .write.mode("overwrite").parquet(dir)
-    val noCounts = intercept[IllegalArgumentException] {
+    def appendWithoutCounts(dir: String) = intercept[IllegalArgumentException] {
       graft.plans.GraftSummaries.appendToSummaryTable(
         spark, "/root/testdata/sf0.001/events.parquet", dir,
         spark.table("err_events"), Seq("event_type"), "props", "distinct")
+    }
+    val noCounts = withTempDir("err_sum2") { tmp =>
+      val dir = s"$tmp/s"
+      spark.sql(
+        """SELECT event_type, approx_count_distinct_accumulate(props) AS sketch
+          |FROM err_events GROUP BY event_type""".stripMargin)
+        .write.mode("overwrite").parquet(dir)
+      appendWithoutCounts(dir)
     }
     assert(noCounts.getMessage.contains("buildSummaryTable"), noCounts.getMessage)
   }

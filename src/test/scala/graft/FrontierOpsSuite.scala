@@ -101,34 +101,12 @@ class FrontierOpsSuite extends AnyFunSuite with GraftSparkSession {
     // synchronous LPA on it oscillates by label swap forever.)
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("src", "dst")
     val nodes = Seq(1L, 2L, 3L, 99L).toDF("id")
-    def countJobs(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // listener events post async: poll until the count is stable
-        var last = -1
-        var stable = 0
-        var waited = 0
-        while (stable < 4 && waited < 10000) {
-          val c = counter.get()
-          if (c == last) stable += 1 else { stable = 0; last = c }
-          Thread.sleep(50); waited += 50
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
     def run(rounds: Int): Map[Long, Long] =
       Graph.labelPropagation(nodes, edges, "id", "src", "dst", rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 99L -> 99L)
-    val j5 = countJobs(assert(run(5) === expected))
-    val j50 = countJobs(assert(run(50) === expected))
+    val j5 = jobsIn(assert(run(5) === expected))
+    val j50 = jobsIn(assert(run(50) === expected))
     assert(j50 === j5, s"rounds=50 ran $j50 jobs vs $j5 for rounds=5")
   }
 

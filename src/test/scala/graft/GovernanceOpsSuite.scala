@@ -212,80 +212,83 @@ class GovernanceOpsSuite extends AnyFunSuite with GraftSparkSession {
   test("streaming cdc: batched last-op-wins apply maintains the snapshot") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_test").toString
-    val seedDf = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload")
-    graft.streaming.StreamingOps.seedCdcSnapshot(seedDf, "id", dir, nBuckets = 2)
-    val input = MemoryStream[(Long, Long, String, String)](spark)
-    val qy = graft.streaming.StreamingOps.cdcSnapshotSink(
-        input.toDF().toDF("id", "seq", "op", "payload"),
-        "id", "op", "seq", dir, nBuckets = 2)
-      .start()
-    try {
-      // batch 1: update 1, delete 2, and a WITHIN-batch race on 3
-      // (update seq 3 then delete seq 4 — the delete must win)
-      input.addData(Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""),
-        (3L, 3L, "U", "c2"), (3L, 4L, "D", "")))
-      qy.processAllAvailable()
-      // batch 2: insert 4, re-insert deleted 2
-      input.addData(Seq((4L, 5L, "I", "d"), (2L, 6L, "U", "b2")))
-      qy.processAllAvailable()
-      val mid = spark.read.parquet(dir).select("id", "payload")
+    withTempDir("graft_cdc_test") { dir =>
+      val seedDf = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload")
+      graft.streaming.StreamingOps.seedCdcSnapshot(seedDf, "id", dir, nBuckets = 2)
+      val input = MemoryStream[(Long, Long, String, String)](spark)
+      val qy = graft.streaming.StreamingOps.cdcSnapshotSink(
+          input.toDF().toDF("id", "seq", "op", "payload"),
+          "id", "op", "seq", dir, nBuckets = 2)
+        .start()
+      try {
+        // batch 1: update 1, delete 2, and a WITHIN-batch race on 3
+        // (update seq 3 then delete seq 4 — the delete must win)
+        input.addData(Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""),
+          (3L, 3L, "U", "c2"), (3L, 4L, "D", "")))
+        qy.processAllAvailable()
+        // batch 2: insert 4, re-insert deleted 2
+        input.addData(Seq((4L, 5L, "I", "d"), (2L, 6L, "U", "b2")))
+        qy.processAllAvailable()
+        val mid = spark.read.parquet(dir).select("id", "payload")
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(mid === Map(1L -> "a2", 2L -> "b2", 4L -> "d"))
+        // batch 3 EMPTIES bucket 1 (id 1 is its last survivor): dynamic
+        // partition overwrite alone would leave the stale partition on
+        // disk and 1 -> a2 would resurrect
+        input.addData(Seq((1L, 7L, "D", "")))
+        qy.processAllAvailable()
+      } finally qy.stop()
+      val got = spark.read.parquet(dir).select("id", "payload")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(mid === Map(1L -> "a2", 2L -> "b2", 4L -> "d"))
-      // batch 3 EMPTIES bucket 1 (id 1 is its last survivor): dynamic
-      // partition overwrite alone would leave the stale partition on
-      // disk and 1 -> a2 would resurrect
-      input.addData(Seq((1L, 7L, "D", "")))
-      qy.processAllAvailable()
-    } finally qy.stop()
-    val got = spark.read.parquet(dir).select("id", "payload")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got === Map(2L -> "b2", 4L -> "d"))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "__bucket=1")))
+      assert(got === Map(2L -> "b2", 4L -> "d"))
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "__bucket=1")))
+    }
   }
 
   test("vacuum orphans: audit classifies and delete pass removes exactly the orphans") {
     import spark.implicits._
     import graft.operators.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_vac_test").toString
-    val df = Seq.tabulate(40)(i => (i.toLong, s"doc $i text")).toDF("id", "text")
-    Sinks.writeShardsWithManifest(df, "id", "text", dir, numShards = 4)
-    val stale = java.nio.file.Paths.get(dir, "data", "shard=77")
-    java.nio.file.Files.createDirectories(stale)
-    java.nio.file.Files.write(stale.resolve("zombie.parquet"), "x".getBytes)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "data", "stray.tmp"), "y".getBytes)
-    def audit() = Sinks.vacuumOrphans(spark, dir).collect()
-      .map(r => (if (r.isNullAt(0)) -1 else r.getInt(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    assert(audit() === Set((0, 1L, 0L), (1, 1L, 0L), (2, 1L, 0L), (3, 1L, 0L),
-      (77, 0L, 1L), (-1, 1L, 1L))) // root: _SUCCESS kept, stray orphan
-    // delete pass removes exactly the orphans; a re-audit is clean and
-    // the data itself is untouched
-    Sinks.vacuumOrphans(spark, dir, deleteOrphans = true)
-    assert(audit() === Set((0, 1L, 0L), (1, 1L, 0L), (2, 1L, 0L), (3, 1L, 0L),
-      (-1, 1L, 0L)))
-    assert(spark.read.parquet(s"$dir/data").count() === 40L)
+    withTempDir("graft_vac_test") { dir =>
+      val df = Seq.tabulate(40)(i => (i.toLong, s"doc $i text")).toDF("id", "text")
+      Sinks.writeShardsWithManifest(df, "id", "text", dir, numShards = 4)
+      val stale = java.nio.file.Paths.get(dir, "data", "shard=77")
+      java.nio.file.Files.createDirectories(stale)
+      java.nio.file.Files.write(stale.resolve("zombie.parquet"), "x".getBytes)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "data", "stray.tmp"), "y".getBytes)
+      def audit() = Sinks.vacuumOrphans(spark, dir).collect()
+        .map(r => (if (r.isNullAt(0)) -1 else r.getInt(0), r.getLong(1), r.getLong(2)))
+        .toSet
+      assert(audit() === Set((0, 1L, 0L), (1, 1L, 0L), (2, 1L, 0L), (3, 1L, 0L),
+        (77, 0L, 1L), (-1, 1L, 1L))) // root: _SUCCESS kept, stray orphan
+      // delete pass removes exactly the orphans; a re-audit is clean and
+      // the data itself is untouched
+      Sinks.vacuumOrphans(spark, dir, deleteOrphans = true)
+      assert(audit() === Set((0, 1L, 0L), (1, 1L, 0L), (2, 1L, 0L), (3, 1L, 0L),
+        (-1, 1L, 0L)))
+      assert(spark.read.parquet(s"$dir/data").count() === 40L)
+    }
   }
 
   test("compaction: exact output file count, content preserved") {
     import spark.implicits._
     import graft.operators.Sinks
-    val base = java.nio.file.Files.createTempDirectory("graft_cpt_test").toString
-    // exactly 5 input files: five single-writer appends of 2 rows each
-    (0 until 5).foreach { b =>
-      Seq(2 * b, 2 * b + 1).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
+    withTempDir("graft_cpt_test") { base =>
+      // exactly 5 input files: five single-writer appends of 2 rows each
+      (0 until 5).foreach { b =>
+        Seq(2 * b, 2 * b + 1).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+          .coalesce(1).write.mode("append").parquet(s"$base/in")
+      }
+      val rep = Sinks.compactFiles(spark, s"$base/in", s"$base/out", targetRows = 4L)
+        .collect()(0)
+      assert((rep.getLong(0), rep.getLong(1), rep.getLong(2)) === ((5L, 10L, 3L)))
+      val got = spark.read.parquet(s"$base/out")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got === Seq.tabulate(10)(i => (i.toLong, s"v$i")).toSet)
+      assertThrows[IllegalArgumentException](
+        Sinks.compactFiles(spark, s"$base/in", s"$base/out2", 0L))
     }
-    val rep = Sinks.compactFiles(spark, s"$base/in", s"$base/out", targetRows = 4L)
-      .collect()(0)
-    assert((rep.getLong(0), rep.getLong(1), rep.getLong(2)) === ((5L, 10L, 3L)))
-    val got = spark.read.parquet(s"$base/out")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got === Seq.tabulate(10)(i => (i.toLong, s"v$i")).toSet)
-    assertThrows[IllegalArgumentException](
-      Sinks.compactFiles(spark, s"$base/in", s"$base/out2", 0L))
   }
 
   test("label noise matrix: per-class thresholds gate the confident cells") {
@@ -330,220 +333,227 @@ class GovernanceOpsSuite extends AnyFunSuite with GraftSparkSession {
   test("versioned store: time travel, touched-buckets-only commits, emptied bucket drops") {
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_ver_test").toString
-    // buckets (mod 4): 1->1, 2->2, 3->3, 5->1
-    val v1df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (5L, "e")).toDF("id", "pay")
-    assert(Versioned.init(v1df, "id", dir, nBuckets = 4) === 1)
-    assertThrows[IllegalArgumentException](
-      Versioned.init(v1df, "id", dir, 4)) // double init
-    def state(v: Int): Map[Long, String] =
-      Versioned.read(spark, dir, v).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(state(1) === Map(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "e"))
-    // commit: update 1, delete 2 (bucket 2's ONLY row), insert 4 with a
-    // within-batch race (U seq 3 then final U seq 4 must win)
-    val b1 = Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""),
-      (4L, 3L, "U", "d-stale"), (4L, 4L, "U", "d"))
-      .toDF("id", "seq", "op", "pay")
-    assert(Versioned.commit(b1, "id", "op", "seq", dir, 4) === 2)
-    assert(state(2) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e"))
-    // TIME TRAVEL: v1 still reads exactly as committed
-    assert(state(1) === Map(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "e"))
-    // only touched buckets got v2 dirs: bucket 1 (id 1), 0 (id 4),
-    // 2 (id 2, emptied -> NO dir); bucket 3 untouched (dir names carry
-    // an attempt suffix: b<bucket>_v<ver>_<attempt>)
-    val dataDirs = new java.io.File(s"$dir/data").listFiles()
-      .map(_.getName).toSet
-    assert(dataDirs.exists(_.startsWith("b0_v2_")) &&
-      dataDirs.exists(_.startsWith("b1_v2_")))
-    assert(!dataDirs.exists(_.startsWith("b2_v2_")) &&
-      !dataDirs.exists(_.startsWith("b3_v2_")))
-    // latest() resolves to v2; a third commit re-fills bucket 2
-    assert(Versioned.read(spark, dir).count() === 4L)
-    val b2 = Seq((6L, 5L, "I", "f")).toDF("id", "seq", "op", "pay")
-    assert(Versioned.commit(b2, "id", "op", "seq", dir, 4) === 3)
-    assert(state(3) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e", 6L -> "f"))
-    // commit on an uninitialized dir fails loudly
-    val fresh = java.nio.file.Files.createTempDirectory("graft_ver2").toString
-    assertThrows[IllegalArgumentException](
-      Versioned.commit(b2, "id", "op", "seq", fresh, 4))
-    // vacuum keeping 2 versions: v1's manifest goes, its now-unreferenced
-    // dirs go (b2_v1: id 2 existed only in v1), shared dirs survive
-    val (droppedV, deletedD) = Versioned.vacuum(spark, dir, keepVersions = 2)
-    assert(droppedV === 1)
-    assert(deletedD >= 1) // at least b2_v1
-    assertThrows[IllegalArgumentException](Versioned.read(spark, dir, 1))
-    assert(state(2) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e"))
-    assert(state(3)(6L) === "f") // kept versions byte-exact after GC
+    withTempDir("graft_ver_test") { dir =>
+      // buckets (mod 4): 1->1, 2->2, 3->3, 5->1
+      val v1df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (5L, "e")).toDF("id", "pay")
+      assert(Versioned.init(v1df, "id", dir, nBuckets = 4) === 1)
+      assertThrows[IllegalArgumentException](
+        Versioned.init(v1df, "id", dir, 4)) // double init
+      def state(v: Int): Map[Long, String] =
+        Versioned.read(spark, dir, v).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(state(1) === Map(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "e"))
+      // commit: update 1, delete 2 (bucket 2's ONLY row), insert 4 with a
+      // within-batch race (U seq 3 then final U seq 4 must win)
+      val b1 = Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""),
+        (4L, 3L, "U", "d-stale"), (4L, 4L, "U", "d"))
+        .toDF("id", "seq", "op", "pay")
+      assert(Versioned.commit(b1, "id", "op", "seq", dir, 4) === 2)
+      assert(state(2) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e"))
+      // TIME TRAVEL: v1 still reads exactly as committed
+      assert(state(1) === Map(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "e"))
+      // only touched buckets got v2 dirs: bucket 1 (id 1), 0 (id 4),
+      // 2 (id 2, emptied -> NO dir); bucket 3 untouched (dir names carry
+      // an attempt suffix: b<bucket>_v<ver>_<attempt>)
+      val dataDirs = new java.io.File(s"$dir/data").listFiles()
+        .map(_.getName).toSet
+      assert(dataDirs.exists(_.startsWith("b0_v2_")) &&
+        dataDirs.exists(_.startsWith("b1_v2_")))
+      assert(!dataDirs.exists(_.startsWith("b2_v2_")) &&
+        !dataDirs.exists(_.startsWith("b3_v2_")))
+      // latest() resolves to v2; a third commit re-fills bucket 2
+      assert(Versioned.read(spark, dir).count() === 4L)
+      val b2 = Seq((6L, 5L, "I", "f")).toDF("id", "seq", "op", "pay")
+      assert(Versioned.commit(b2, "id", "op", "seq", dir, 4) === 3)
+      assert(state(3) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e", 6L -> "f"))
+      // commit on an uninitialized dir fails loudly
+      withTempDir("graft_ver2") { fresh =>
+        assertThrows[IllegalArgumentException](
+          Versioned.commit(b2, "id", "op", "seq", fresh, 4))
+        // vacuum keeping 2 versions: v1's manifest goes, its now-unreferenced
+        // dirs go (b2_v1: id 2 existed only in v1), shared dirs survive
+        val (droppedV, deletedD) = Versioned.vacuum(spark, dir, keepVersions = 2)
+        assert(droppedV === 1)
+        assert(deletedD >= 1) // at least b2_v1
+        assertThrows[IllegalArgumentException](Versioned.read(spark, dir, 1))
+        assert(state(2) === Map(1L -> "a2", 3L -> "c", 4L -> "d", 5L -> "e"))
+        assert(state(3)(6L) === "f") // kept versions byte-exact after GC
+      }
+    }
   }
 
   test("versioned streaming commit sink: each micro-batch is a readable version") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vsink").toString
-    Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 2)
-    val input = MemoryStream[(Long, Long, String, String)](spark)
-    val qy = Versioned.commitSink(
-        input.toDF().toDF("id", "seq", "op", "pay"), "id", "op", "seq", dir, 2)
-      .start()
-    try {
-      input.addData(Seq((1L, 1L, "U", "a2")))
-      qy.processAllAvailable()
-      input.addData(Seq((2L, 2L, "D", ""), (3L, 3L, "I", "c")))
-      qy.processAllAvailable()
-    } finally qy.stop()
-    assert(Versioned.latestVersion(spark, dir) === 3)
-    def st(v: Int) = Versioned.read(spark, dir, v).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(st(1) === Map(1L -> "a", 2L -> "b"))
-    assert(st(2) === Map(1L -> "a2", 2L -> "b"))
-    assert(st(3) === Map(1L -> "a2", 3L -> "c"))
+    withTempDir("graft_vsink") { dir =>
+      Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 2)
+      val input = MemoryStream[(Long, Long, String, String)](spark)
+      val qy = Versioned.commitSink(
+          input.toDF().toDF("id", "seq", "op", "pay"), "id", "op", "seq", dir, 2)
+        .start()
+      try {
+        input.addData(Seq((1L, 1L, "U", "a2")))
+        qy.processAllAvailable()
+        input.addData(Seq((2L, 2L, "D", ""), (3L, 3L, "I", "c")))
+        qy.processAllAvailable()
+      } finally qy.stop()
+      assert(Versioned.latestVersion(spark, dir) === 3)
+      def st(v: Int) = Versioned.read(spark, dir, v).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(st(1) === Map(1L -> "a", 2L -> "b"))
+      assert(st(2) === Map(1L -> "a2", 2L -> "b"))
+      assert(st(3) === Map(1L -> "a2", 3L -> "c"))
+    }
   }
 
   test("versioned racing commits: at most one winner per version, loser garbage vacuumable") {
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vrace").toString
-    Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 4)
-    // two commits race for version 2 (deliberate single-writer-contract
-    // violation): distinct payloads so a manifest clobber is detectable
-    val batches = Seq(
-      Seq((10L, 1L, "I", "x")).toDF("id", "seq", "op", "pay"),
-      Seq((11L, 1L, "I", "y")).toDF("id", "seq", "op", "pay"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val outcomes = batches.map { b =>
-      pool.submit(new java.util.concurrent.Callable[Either[Throwable, Int]] {
-        def call(): Either[Throwable, Int] = {
-          gate.await()
-          try Right(Versioned.commit(b, "id", "op", "seq", dir, 4))
-          catch { case t: Throwable => Left(t) }
-        }
-      })
+    withTempDir("graft_vrace") { dir =>
+      Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 4)
+      // two commits race for version 2 (deliberate single-writer-contract
+      // violation): distinct payloads so a manifest clobber is detectable
+      val batches = Seq(
+        Seq((10L, 1L, "I", "x")).toDF("id", "seq", "op", "pay"),
+        Seq((11L, 1L, "I", "y")).toDF("id", "seq", "op", "pay"))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val outcomes = batches.map { b =>
+        pool.submit(new java.util.concurrent.Callable[Either[Throwable, Int]] {
+          def call(): Either[Throwable, Int] = {
+            gate.await()
+            try Right(Versioned.commit(b, "id", "op", "seq", dir, 4))
+            catch { case t: Throwable => Left(t) }
+          }
+        })
+      }
+      gate.countDown()
+      val results = outcomes.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdown()
+      val wins = results.collect { case Right(v) => v }
+      assert(wins.nonEmpty, s"both racers failed: $results")
+      // versions must be DISTINCT: two commits both claiming the same
+      // version number is exactly the silent corruption the exclusive
+      // manifest create + read-back verify exists to prevent
+      assert(wins.distinct.size === wins.size, s"duplicate version claimed: $results")
+      val latest = Versioned.latestVersion(spark, dir)
+      assert(latest === 1 + wins.size)
+      // every committed version reads consistently: v1 exact, each later
+      // version = v1 plus a prefix of the winning inserts
+      def st(v: Int) = Versioned.read(spark, dir, v).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(st(1) === Map(1L -> "a", 2L -> "b"))
+      (2 to latest).foreach { v =>
+        val s = st(v)
+        assert(s.size === 2 + (v - 1), s"version $v inconsistent: $s")
+        assert(s(1L) === "a" && s(2L) === "b")
+      }
+      // a retry of any LOSING batch lands cleanly on top (attempt-unique
+      // dir names: the loser's orphans cannot collide), reads stay consistent
+      results.zip(batches).collect { case (Left(_), b) => b }.foreach { b =>
+        val v = Versioned.commit(b, "id", "op", "seq", dir, 4)
+        assert(Versioned.read(spark, dir, v).count() === 2L + (v - 1))
+      }
+      val finalV = Versioned.latestVersion(spark, dir)
+      assert(st(finalV).keySet === Set(1L, 2L, 10L, 11L))
+      // vacuum with full retention deletes ONLY unreferenced garbage;
+      // every version stays byte-exact afterwards
+      Versioned.vacuum(spark, dir, keepVersions = finalV)
+      (1 to finalV).foreach(v => assert(st(v).size === 2 + (v - 1)))
     }
-    gate.countDown()
-    val results = outcomes.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
-    pool.shutdown()
-    val wins = results.collect { case Right(v) => v }
-    assert(wins.nonEmpty, s"both racers failed: $results")
-    // versions must be DISTINCT: two commits both claiming the same
-    // version number is exactly the silent corruption the exclusive
-    // manifest create + read-back verify exists to prevent
-    assert(wins.distinct.size === wins.size, s"duplicate version claimed: $results")
-    val latest = Versioned.latestVersion(spark, dir)
-    assert(latest === 1 + wins.size)
-    // every committed version reads consistently: v1 exact, each later
-    // version = v1 plus a prefix of the winning inserts
-    def st(v: Int) = Versioned.read(spark, dir, v).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(st(1) === Map(1L -> "a", 2L -> "b"))
-    (2 to latest).foreach { v =>
-      val s = st(v)
-      assert(s.size === 2 + (v - 1), s"version $v inconsistent: $s")
-      assert(s(1L) === "a" && s(2L) === "b")
-    }
-    // a retry of any LOSING batch lands cleanly on top (attempt-unique
-    // dir names: the loser's orphans cannot collide), reads stay consistent
-    results.zip(batches).collect { case (Left(_), b) => b }.foreach { b =>
-      val v = Versioned.commit(b, "id", "op", "seq", dir, 4)
-      assert(Versioned.read(spark, dir, v).count() === 2L + (v - 1))
-    }
-    val finalV = Versioned.latestVersion(spark, dir)
-    assert(st(finalV).keySet === Set(1L, 2L, 10L, 11L))
-    // vacuum with full retention deletes ONLY unreferenced garbage;
-    // every version stays byte-exact afterwards
-    Versioned.vacuum(spark, dir, keepVersions = finalV)
-    (1 to finalV).foreach(v => assert(st(v).size === 2 + (v - 1)))
   }
 
   test("versioned crashed-attempt garbage: kept while possibly in-flight, swept once overtaken") {
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vcrash").toString
-    Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 4)
-    // simulate a commit that renamed one bucket dir and died before its
-    // manifest: an orphan attempt dir (with stale parquet) + a stage dir
-    val data = new java.io.File(s"$dir/data")
-    Seq((9L, "stale")).toDF("id", "pay").withColumn("__bucket", lit(1L))
-      .write.parquet(s"$dir/data/b1_v2_deadatt")
-    new java.io.File(data, "__stage_v2_deadbeef").mkdirs()
-    // vacuum must NOT touch them yet (version 2 > latest 1: could be an
-    // in-flight commit mid-rename)
-    val (_, deleted) = Versioned.vacuum(spark, dir, keepVersions = 10)
-    assert(deleted === 0)
-    assert(data.listFiles().map(_.getName).toSet.contains("b1_v2_deadatt"))
-    // a retry commit lands cleanly beside the orphan (attempt-unique
-    // names: no collision), and the orphan never leaks into reads
-    val v = Versioned.commit(
-      Seq((1L, 1L, "U", "a2")).toDF("id", "seq", "op", "pay"),
-      "id", "op", "seq", dir, 4)
-    assert(v === 2)
-    val s2 = Versioned.read(spark, dir, 2).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(s2 === Map(1L -> "a2", 2L -> "b"), "stale crash dir leaked into v2")
-    // now latest(2) >= the orphan's version: vacuum sweeps BOTH orphans
-    // and only them, and every version still reads byte-exact
-    val (_, deleted2) = Versioned.vacuum(spark, dir, keepVersions = 10)
-    assert(deleted2 === 2)
-    val names = data.listFiles().map(_.getName).toSet
-    assert(!names.contains("b1_v2_deadatt") && !names.contains("__stage_v2_deadbeef"))
-    assert(s2 === Versioned.read(spark, dir, 2).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap)
-    assert(Versioned.read(spark, dir, 1).count() === 2L)
+    withTempDir("graft_vcrash") { dir =>
+      Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 4)
+      // simulate a commit that renamed one bucket dir and died before its
+      // manifest: an orphan attempt dir (with stale parquet) + a stage dir
+      val data = new java.io.File(s"$dir/data")
+      Seq((9L, "stale")).toDF("id", "pay").withColumn("__bucket", lit(1L))
+        .write.parquet(s"$dir/data/b1_v2_deadatt")
+      new java.io.File(data, "__stage_v2_deadbeef").mkdirs()
+      // vacuum must NOT touch them yet (version 2 > latest 1: could be an
+      // in-flight commit mid-rename)
+      val (_, deleted) = Versioned.vacuum(spark, dir, keepVersions = 10)
+      assert(deleted === 0)
+      assert(data.listFiles().map(_.getName).toSet.contains("b1_v2_deadatt"))
+      // a retry commit lands cleanly beside the orphan (attempt-unique
+      // names: no collision), and the orphan never leaks into reads
+      val v = Versioned.commit(
+        Seq((1L, 1L, "U", "a2")).toDF("id", "seq", "op", "pay"),
+        "id", "op", "seq", dir, 4)
+      assert(v === 2)
+      val s2 = Versioned.read(spark, dir, 2).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(s2 === Map(1L -> "a2", 2L -> "b"), "stale crash dir leaked into v2")
+      // now latest(2) >= the orphan's version: vacuum sweeps BOTH orphans
+      // and only them, and every version still reads byte-exact
+      val (_, deleted2) = Versioned.vacuum(spark, dir, keepVersions = 10)
+      assert(deleted2 === 2)
+      val names = data.listFiles().map(_.getName).toSet
+      assert(!names.contains("b1_v2_deadatt") && !names.contains("__stage_v2_deadbeef"))
+      assert(s2 === Versioned.read(spark, dir, 2).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap)
+      assert(Versioned.read(spark, dir, 1).count() === 2L)
+    }
   }
 
   test("versioned change data feed: state-diff ops, unchanged rewrites silent, range checks") {
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vcdf").toString
-    // nBuckets=2: ids 1,3 -> bucket 1; 2,4 -> bucket 0
-    Versioned.init(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "pay"),
-      "id", dir, 2)
-    // v2: update 1, delete 3, REWRITE 2's bucket with an unchanged U
-    Versioned.commit(Seq((1L, 1L, "U", "a2"), (3L, 2L, "D", ""),
-      (2L, 3L, "U", "b")).toDF("id", "seq", "op", "pay"),
-      "id", "op", "seq", dir, 2)
-    // v3: 'U' on the deleted key 3 (upsert -> state-diff reads I), new 4
-    Versioned.commit(Seq((3L, 4L, "U", "c2"), (4L, 5L, "I", "d"))
-      .toDF("id", "seq", "op", "pay"), "id", "op", "seq", dir, 2)
-    val ch = Versioned.changes(spark, dir, "id", 1, 3).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getString(3)))
-      .toSet
-    assert(ch === Set(
-      (2, "U", 1L, "a2"),   // payload changed
-      (2, "D", 3L, "c"),    // D carries the OLD payload
-      (3, "I", 3L, "c2"),   // upsert of a deleted key is an INSERT by state
-      (3, "I", 4L, "d")))
-    // id 2's bucket was rewritten in v2 but the row didn't change: silent
-    assert(!ch.exists(_._3 == 2L))
-    // single-step read
-    assert(Versioned.changes(spark, dir, "id", 2, 3).collect().length === 2)
-    // bad ranges fail loudly
-    assertThrows[IllegalArgumentException](
-      Versioned.changes(spark, dir, "id", 2, 2))
-    assertThrows[IllegalArgumentException](
-      Versioned.changes(spark, dir, "id", 1, 9))
+    withTempDir("graft_vcdf") { dir =>
+      // nBuckets=2: ids 1,3 -> bucket 1; 2,4 -> bucket 0
+      Versioned.init(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "pay"),
+        "id", dir, 2)
+      // v2: update 1, delete 3, REWRITE 2's bucket with an unchanged U
+      Versioned.commit(Seq((1L, 1L, "U", "a2"), (3L, 2L, "D", ""),
+        (2L, 3L, "U", "b")).toDF("id", "seq", "op", "pay"),
+        "id", "op", "seq", dir, 2)
+      // v3: 'U' on the deleted key 3 (upsert -> state-diff reads I), new 4
+      Versioned.commit(Seq((3L, 4L, "U", "c2"), (4L, 5L, "I", "d"))
+        .toDF("id", "seq", "op", "pay"), "id", "op", "seq", dir, 2)
+      val ch = Versioned.changes(spark, dir, "id", 1, 3).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getString(3)))
+        .toSet
+      assert(ch === Set(
+        (2, "U", 1L, "a2"),   // payload changed
+        (2, "D", 3L, "c"),    // D carries the OLD payload
+        (3, "I", 3L, "c2"),   // upsert of a deleted key is an INSERT by state
+        (3, "I", 4L, "d")))
+      // id 2's bucket was rewritten in v2 but the row didn't change: silent
+      assert(!ch.exists(_._3 == 2L))
+      // single-step read
+      assert(Versioned.changes(spark, dir, "id", 2, 3).collect().length === 2)
+      // bad ranges fail loudly
+      assertThrows[IllegalArgumentException](
+        Versioned.changes(spark, dir, "id", 2, 2))
+      assertThrows[IllegalArgumentException](
+        Versioned.changes(spark, dir, "id", 1, 9))
+    }
   }
 
   test("versioned read of a fully-emptied version returns an EMPTY frame with schema") {
     import spark.implicits._
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vempty").toString
-    Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 2)
-    // delete EVERYTHING -> v2 is a legal committed empty snapshot
-    val b = Seq((1L, 1L, "D", ""), (2L, 2L, "D", ""))
-      .toDF("id", "seq", "op", "pay")
-    assert(Versioned.commit(b, "id", "op", "seq", dir, 2) === 2)
-    val empty = Versioned.read(spark, dir, 2)
-    assert(empty.count() === 0L)
-    assert(empty.columns.toSeq === Seq("id", "pay"))
-    // neighbors unaffected; latest resolves to the empty v2
-    assert(Versioned.read(spark, dir, 1).count() === 2L)
-    assert(Versioned.read(spark, dir).count() === 0L)
-    // and the store keeps working: a later insert is readable on top
-    assert(Versioned.commit(Seq((3L, 3L, "I", "c")).toDF("id", "seq", "op", "pay"),
-      "id", "op", "seq", dir, 2) === 3)
-    assert(Versioned.read(spark, dir, 3).count() === 1L)
+    withTempDir("graft_vempty") { dir =>
+      Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "pay"), "id", dir, 2)
+      // delete EVERYTHING -> v2 is a legal committed empty snapshot
+      val b = Seq((1L, 1L, "D", ""), (2L, 2L, "D", ""))
+        .toDF("id", "seq", "op", "pay")
+      assert(Versioned.commit(b, "id", "op", "seq", dir, 2) === 2)
+      val empty = Versioned.read(spark, dir, 2)
+      assert(empty.count() === 0L)
+      assert(empty.columns.toSeq === Seq("id", "pay"))
+      // neighbors unaffected; latest resolves to the empty v2
+      assert(Versioned.read(spark, dir, 1).count() === 2L)
+      assert(Versioned.read(spark, dir).count() === 0L)
+      // and the store keeps working: a later insert is readable on top
+      assert(Versioned.commit(Seq((3L, 3L, "I", "c")).toDF("id", "seq", "op", "pay"),
+        "id", "op", "seq", dir, 2) === 3)
+      assert(Versioned.read(spark, dir, 3).count() === 1L)
+    }
   }
 }

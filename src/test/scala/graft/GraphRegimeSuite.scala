@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBusAccess
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,24 +65,124 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getAs[Number](0).longValue)
 
   /** Runs `op` in every regime; checks that only the local threshold
-   *  gives a local frame and that all regimes agree. */
-  private def sameInEveryRegime(nodes: DataFrame, edges: DataFrame)(op: => DataFrame): Unit = {
+   *  gives a local frame and that all regimes agree. Returns the jobs
+   *  each regime ran, the result's collect included. */
+  private def sameInEveryRegime(nodes: DataFrame, edges: DataFrame)(
+      op: => DataFrame): Map[String, Int] = {
     val out = regimes(nodes, edges).map { case (name, t) =>
       withSQLConf(Threshold -> t) {
-        val df = op
-        assert(isLocal(df) === (name == "local"), name)
-        name -> (df.schema.map(f => (f.name, f.dataType)), rows(df))
+        var got: (Seq[(String, DataType)], Seq[Row]) = null
+        val jobs = jobsIn {
+          val df = op
+          assert(isLocal(df) === (name == "local"), name)
+          got = (df.schema.map(f => (f.name, f.dataType)), rows(df))
+        }
+        (name, got, jobs)
       }
     }
-    out.tail.foreach { case (name, got) => assert(got === out.head._2, s"$name vs local") }
+    out.tail.foreach { case (name, got, _) => assert(got === out.head._2, s"$name vs local") }
+    out.map { case (name, _, jobs) => name -> jobs }.toMap
   }
 
-  Seq(1, 5).foreach { iters =>
-    test(s"pageRankFp: local, broadcast and sort-merge regimes agree ($iters iterations)") {
+  /** The value of `f`, or the class of its error's root cause. */
+  private def outcome[T](f: => T): Either[String, T] =
+    try Right(f) catch {
+      case e: Exception =>
+        Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
+          .getClass.getName)
+    }
+
+  /** The seeds of the personalized runs: every 7th node. */
+  private def seedsOf(nodes: DataFrame): DataFrame = nodes.where(col("id") % 7 === 0)
+
+  /** The edges with a weight in 1..5 derived from the endpoints. */
+  private def weighted(edges: DataFrame): DataFrame =
+    edges.withColumn("w", (abs(hash(col("src"), col("dst"))) % 5 + 1).cast("long"))
+
+  /** The jobs each operator ran in the broadcast and sort-merge regimes
+   *  before the three PageRanks shared one core, on both graphs, the
+   *  result's collect included: operator -> iterations -> regime -> jobs. */
+  private val jobsBefore = Map(
+    "pageRankFp" -> Map(1 -> Map("broadcast" -> 17, "sort-merge" -> 13),
+      5 -> Map("broadcast" -> 31, "sort-merge" -> 20)),
+    "personalizedPageRankFp" -> Map(1 -> Map("broadcast" -> 21, "sort-merge" -> 17),
+      5 -> Map("broadcast" -> 35, "sort-merge" -> 24)),
+    "weightedPageRankFp" -> Map(1 -> Map("broadcast" -> 16, "sort-merge" -> 13),
+      5 -> Map("broadcast" -> 30, "sort-merge" -> 20)))
+
+  private def pageRank(name: String, nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    name match {
+      case "pageRankFp" => Graph.pageRankFp(nodes, edges, "id", iters)
+      case "personalizedPageRankFp" =>
+        Graph.personalizedPageRankFp(nodes, edges, "id", seedsOf(nodes), iters)
+      case "weightedPageRankFp" => Graph.weightedPageRankFp(nodes, weighted(edges), "id", "w", iters)
+    }
+
+  for (name <- jobsBefore.keys.toSeq.sorted; iters <- Seq(1, 5)) {
+    test(s"$name: local, broadcast and sort-merge regimes agree ($iters iterations)") {
       Seq(awkward(), intGraph()).foreach { case (nodes, edges) =>
-        sameInEveryRegime(nodes, edges)(Graph.pageRankFp(nodes, edges, "id", iters))
+        val jobs = sameInEveryRegime(nodes, edges)(pageRank(name, nodes, edges, iters))
+        assert(jobs("local") <= 2, jobs)
+        Seq("broadcast", "sort-merge").foreach { regime =>
+          assert(jobs(regime) <= jobsBefore(name)(iters)(regime), s"$regime: $jobs")
+        }
       }
     }
+  }
+
+  test("personalizedPageRankFp: seed edge cases agree in every regime") {
+    import spark.implicits._
+    val (nodes, edges) = awkward()
+    val (intNodes, intEdges) = intGraph()
+    Seq(
+      // a seed outside the node set and a null seed are ignored
+      (nodes, edges, Seq(Option(3L), Option(1000L)).toDF("id")),
+      (nodes, edges, Seq(Option(3L), None).toDF("id")),
+      // every node a seed (the null node matches no seed)
+      (nodes, edges, nodes),
+      (intNodes, intEdges, intNodes),
+      (intNodes, intEdges, Seq(5L, 77L).toDF("id"))).foreach { case (n, e, seeds) =>
+      sameInEveryRegime(n, e)(Graph.personalizedPageRankFp(n, e, "id", seeds, 3))
+    }
+    // no seed in the node set: the same error in every regime
+    regimes(nodes, edges).foreach { case (name, t) =>
+      val e = intercept[IllegalArgumentException](withSQLConf(Threshold -> t) {
+        Graph.personalizedPageRankFp(nodes, edges, "id", Seq(1000L, 2000L).toDF("id"), 3)
+      })
+      assert(e.getMessage.contains("no seed overlaps the node set"), name)
+    }
+  }
+
+  test("weightedPageRankFp: null, non-positive and overflowing weights stay with Spark's plan") {
+    val (nodes, edges) = intGraph()
+    val bound = Long.MaxValue / Graph.RankScale
+    // the first edge, whose weight most cases replace
+    val first = edges.head()
+    val isFirst = col("src") === first.getInt(0) && col("dst") === first.getInt(1)
+    def firstWeighs(w: Column): Column = when(isFirst, w).otherwise(col("w"))
+    Seq(
+      "a null weight" -> firstWeighs(lit(null).cast("long")),
+      "a zero weight beside positive ones" -> firstWeighs(lit(0L)),
+      "a node whose weights sum to 0" -> when(col("src") === first.getInt(0), 0L).otherwise(col("w")),
+      "a negative weight" -> firstWeighs(lit(-3L)),
+      "a weight just above the bound" -> firstWeighs(lit(bound + 1)),
+      "a weight whose rank * w overflows" -> firstWeighs(lit(Long.MaxValue / 2))).foreach {
+      case (name, w) =>
+        val e = weighted(edges).withColumn("w", w)
+        val got = Seq("10485760", "-1").map { t =>
+          withSQLConf(Threshold -> t) {
+            outcome(Graph.weightedPageRankFp(nodes, e, "id", "w", 3)).map { df =>
+              assert(!isLocal(df), s"the local regime took $name")
+              rows(df)
+            }
+          }
+        }
+        assert(got.head === got.last, name)
+    }
+    // the largest weight the local regime takes
+    sameInEveryRegime(nodes, edges)(
+      Graph.weightedPageRankFp(nodes, weighted(edges).withColumn("w", firstWeighs(lit(bound))),
+        "id", "w", 3))
   }
 
   Seq(3, 10).foreach { rounds =>
@@ -128,11 +229,12 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     val nodes = (1L to 5L).toDF("id")
     val pairs = Seq((Option(1L), Option(2L)), (Option(2L), None), (None, Option(4L)))
       .toDF("id_a", "id_b")
-    def comps(threshold: Long) =
-      Dedup.connectedComponents(nodes, pairs, "id", localEdgeThreshold = threshold)
+    def comps(threshold: String) = withSQLConf(Threshold -> threshold) {
+      Dedup.connectedComponents(nodes, pairs, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comps(1000000L) === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
-    assert(comps(0L) === comps(1000000L))
+    }
+    assert(comps("10485760") === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
+    assert(comps("-1") === comps("10485760"))
   }
 
   test("connectedComponents leaves a pair set the caller cached in the cache") {
@@ -142,8 +244,8 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
       .select("id_a", "id_b").cache()
     try {
       pairs.count()
-      Seq(1000000L, 0L).foreach { threshold =>
-        Dedup.connectedComponents(nodes, pairs, "id", localEdgeThreshold = threshold).collect()
+      Seq("10485760", "-1").foreach { threshold =>
+        withSQLConf(Threshold -> threshold)(Dedup.connectedComponents(nodes, pairs, "id").collect())
         assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE, threshold)
       }
     } finally pairs.unpersist()

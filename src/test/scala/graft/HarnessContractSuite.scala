@@ -50,19 +50,14 @@ class HarnessContractSuite extends AnyFunSuite with GraftSparkSession {
       Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
         .filter(_.matches("graft_q\\d+.*"))
     val before = scratch()
-    val sf = java.nio.file.Files.createTempDirectory("graft_harness_sf").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft_harness_out").toFile
-    try {
+    withTempDir("graft_harness_sf")(sf => withTempDir("graft_harness_out") { out =>
       (1 to 40).map(i => (i.toLong, s"doc $i says ${"word " * (i % 7)}end")).toDF("doc_id", "text")
         .write.parquet(s"$sf/documents.parquet")
       Seq("q140_shard_manifest", "q231_vacuum_orphans").foreach { name =>
-        Verify.dump(spark, sf.toString, out.toString, name, SparkEntry.queries(name))
+        Verify.dump(spark, sf, out, name, SparkEntry.queries(name))
         assert(new java.io.File(out, name).isDirectory, s"$name wrote no result")
       }
-      assert(scratch() -- before === Set.empty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(sf)
-      org.apache.commons.io.FileUtils.deleteQuietly(out)
-    }
+    })
+    assert(scratch() -- before === Set.empty)
   }
 }

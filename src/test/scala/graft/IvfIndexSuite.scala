@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,27 +11,28 @@ class IvfIndexSuite extends AnyFunSuite with GraftSparkSession {
   test("index query equals inline ivfKnn and physically prunes unprobed cells") {
     val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val queries = e.where(col("vec_id") < 20)
-    val path = Files.createTempDirectory("graft_ivf").toString
+    withTempDir("graft_ivf") { path =>
 
-    IvfIndex.build(e, "vec_id", "embedding", path, nlist = 8, kmeansIters = 3)
-    val fromIndex = IvfIndex.query(spark, path, queries, "vec_id", "embedding",
-      k = 3, nprobe = 4)
-    val inline = Similarity.ivfKnn(e, queries, "vec_id", "embedding",
-      k = 3, nlist = 8, nprobe = 4)
-    // the quantizer is deterministic, so the persisted index must answer
-    // identically to the inline computation
-    assert(fromIndex.orderBy("query_id", "rk").collect().toSeq ===
-      inline.orderBy("query_id", "rk").collect().toSeq)
+      IvfIndex.build(e, "vec_id", "embedding", path, nlist = 8, kmeansIters = 3)
+      val fromIndex = IvfIndex.query(spark, path, queries, "vec_id", "embedding",
+        k = 3, nprobe = 4)
+      val inline = Similarity.ivfKnn(e, queries, "vec_id", "embedding",
+        k = 3, nlist = 8, nprobe = 4)
+      // the quantizer is deterministic, so the persisted index must answer
+      // identically to the inline computation
+      assert(fromIndex.orderBy("query_id", "rk").collect().toSeq ===
+        inline.orderBy("query_id", "rk").collect().toSeq)
 
-    // pruning is physical: the scan's partition filter keeps unprobed
-    // cells (and their files) out of the plan entirely
-    val plan = fromIndex.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"))
-    // with 8 cells and 20 queries x 4 probes, at least one cell must be
-    // probed; sanity-check the index layout on disk
-    val cellDirs = new java.io.File(s"$path/cells").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.length > 1 && cellDirs.length <= 8)
+      // pruning is physical: the scan's partition filter keeps unprobed
+      // cells (and their files) out of the plan entirely
+      val plan = fromIndex.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("cell"))
+      // with 8 cells and 20 queries x 4 probes, at least one cell must be
+      // probed; sanity-check the index layout on disk
+      val cellDirs = new java.io.File(s"$path/cells").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      assert(cellDirs.length > 1 && cellDirs.length <= 8)
+    }
   }
 
   test("append ingests new vectors against the frozen quantizer, O(batch) not O(index)") {
@@ -41,52 +40,55 @@ class IvfIndexSuite extends AnyFunSuite with GraftSparkSession {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val half1 = e.where(col("vec_id") % 2 === 0)
     val half2 = e.where(col("vec_id") % 2 === 1)
-    val path = Files.createTempDirectory("graft_ivf_app").toString
+    withTempDir("graft_ivf_app") { path =>
 
-    IvfIndex.build(half1, "vec_id", "embedding", path, nlist = 4, kmeansIters = 2)
-    IvfIndex.append(spark, path, half2, "vec_id", "embedding")
+      IvfIndex.build(half1, "vec_id", "embedding", path, nlist = 4, kmeansIters = 2)
+      IvfIndex.append(spark, path, half2, "vec_id", "embedding")
 
-    // every vector of both halves is indexed exactly once
-    val indexed = spark.read.parquet(s"$path/cells")
-    assert(indexed.count() === e.count())
-    assert(indexed.select("id").distinct().count() === e.count())
+      // every vector of both halves is indexed exactly once
+      val indexed = spark.read.parquet(s"$path/cells")
+      assert(indexed.count() === e.count())
+      assert(indexed.select("id").distinct().count() === e.count())
 
-    // appended vectors are reachable: a query that IS an appended vector
-    // finds itself... excluded; so plant an exact duplicate of an
-    // appended vector under a fresh id and expect it as rank-1
-    val probe = e.where(col("vec_id") === 1)
-      .select(lit(900001L).as("vec_id"), col("embedding"))
-    val res = IvfIndex.query(spark, path, probe, "vec_id", "embedding", k = 1, nprobe = 4)
-      .collect()
-    assert(res.length === 1)
-    assert(res(0).getLong(2) === 1L) // its duplicate, an APPENDED vector
+      // appended vectors are reachable: a query that IS an appended vector
+      // finds itself... excluded; so plant an exact duplicate of an
+      // appended vector under a fresh id and expect it as rank-1
+      val probe = e.where(col("vec_id") === 1)
+        .select(lit(900001L).as("vec_id"), col("embedding"))
+      val res = IvfIndex.query(spark, path, probe, "vec_id", "embedding", k = 1, nprobe = 4)
+        .collect()
+      assert(res.length === 1)
+      assert(res(0).getLong(2) === 1L) // its duplicate, an APPENDED vector
+    }
   }
 
   test("append with skipExistingIds is idempotent under batch replay") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val half1 = e.where(col("vec_id") % 2 === 0)
     val half2 = e.where(col("vec_id") % 2 === 1)
-    val path = Files.createTempDirectory("graft_ivf_replay").toString
-    IvfIndex.build(half1, "vec_id", "embedding", path, nlist = 4, kmeansIters = 2)
-    IvfIndex.append(spark, path, half2, "vec_id", "embedding", skipExistingIds = true)
-    // replay the same batch (an at-least-once upstream retry): without the
-    // anti-join the partitioned append would double-index every vector
-    IvfIndex.append(spark, path, half2, "vec_id", "embedding", skipExistingIds = true)
-    val indexed = spark.read.parquet(s"$path/cells")
-    assert(indexed.count() === e.count())
-    assert(indexed.select("id").distinct().count() === e.count())
+    withTempDir("graft_ivf_replay") { path =>
+      IvfIndex.build(half1, "vec_id", "embedding", path, nlist = 4, kmeansIters = 2)
+      IvfIndex.append(spark, path, half2, "vec_id", "embedding", skipExistingIds = true)
+      // replay the same batch (an at-least-once upstream retry): without the
+      // anti-join the partitioned append would double-index every vector
+      IvfIndex.append(spark, path, half2, "vec_id", "embedding", skipExistingIds = true)
+      val indexed = spark.read.parquet(s"$path/cells")
+      assert(indexed.count() === e.count())
+      assert(indexed.select("id").distinct().count() === e.count())
+    }
   }
 
   test("querying more probes than cells degrades gracefully to exhaustive") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = e.where(col("vec_id") < 5)
-    val path = Files.createTempDirectory("graft_ivf_small").toString
-    IvfIndex.build(e, "vec_id", "embedding", path, nlist = 4)
-    val res = IvfIndex.query(spark, path, queries, "vec_id", "embedding",
-      k = 2, nprobe = 16)
-    // nprobe > nlist: every cell probed -> identical to exact brute force
-    val exact = Similarity.bruteForceKnn(e, queries, "vec_id", "embedding", 2)
-    assert(res.orderBy("query_id", "rk").collect().toSeq ===
-      exact.orderBy("query_id", "rk").collect().toSeq)
+    withTempDir("graft_ivf_small") { path =>
+      IvfIndex.build(e, "vec_id", "embedding", path, nlist = 4)
+      val res = IvfIndex.query(spark, path, queries, "vec_id", "embedding",
+        k = 2, nprobe = 16)
+      // nprobe > nlist: every cell probed -> identical to exact brute force
+      val exact = Similarity.bruteForceKnn(e, queries, "vec_id", "embedding", 2)
+      assert(res.orderBy("query_id", "rk").collect().toSeq ===
+        exact.orderBy("query_id", "rk").collect().toSeq)
+    }
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ListenerBusAccess, NearestCells}
+import org.apache.spark.sql.graft.NearestCells
 import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,12 +54,6 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     (local, dist)
   }
 
-  /** `body` over a new temp dir, deleted afterwards. */
-  private def withTempDir[T](prefix: String)(body: String => T): T = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
-
   /** The outcome of `f`: its value, or the class and message of its error. */
   private def outcome[T](f: => T): Either[(String, String), T] =
     try Right(f) catch {
@@ -103,17 +94,8 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
   private def buildBoth(local: String, dist: String): Unit = {
     val vecs = corpus()
     val queries = vecs.where(col("id") % 20 === 0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      IvfIndex.build(vecs, "id", "vec", local, nlist = 16, kmeansIters = 3)
-      ListenerBusAccess.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 5, s"${jobs.get} jobs")
+    val jobs = jobsIn(IvfIndex.build(vecs, "id", "vec", local, nlist = 16, kmeansIters = 3))
+    assert(jobs <= 5, s"$jobs jobs")
     withSQLConf(Off)(IvfIndex.build(vecs, "id", "vec", dist, nlist = 16, kmeansIters = 3))
 
     assert(bits(spark.read.parquet(s"$local/centroids")) ===

@@ -183,8 +183,9 @@ class PipelineOpsSuite extends AnyFunSuite with GraftSparkSession {
     val edges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(nodes, edges, "doc_id").collect().isEmpty)
     // forced-distributed path too
-    assert(Dedup.connectedComponents(nodes, edges, "doc_id", localEdgeThreshold = 0)
-      .collect().isEmpty)
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(Dedup.connectedComponents(nodes, edges, "doc_id").collect().isEmpty)
+    }
   }
 
   test("local union-find and distributed propagation agree") {
@@ -199,8 +200,10 @@ class PipelineOpsSuite extends AnyFunSuite with GraftSparkSession {
       .toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(nodes, edges, "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.connectedComponents(nodes, edges, "doc_id", localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Dedup.connectedComponents(nodes, edges, "doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(local === dist)
     assert(local(8L) === 1L)   // chain fully collapsed
     assert(local(11L) === 10L) // bridged through the out-of-nodes endpoint
@@ -944,32 +947,33 @@ class PipelineOpsSuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("range-sorted sink: disjoint ordered shards, sorted files, balanced") {
-    import java.nio.file.Files
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_extendedprice").cast("double").as("price"))
-    val path = Files.createTempDirectory("graft_sink").toString + "/out"
-    val bounds = graft.operators.Sinks.writeRangeSorted(
-      li, "price", path, shards = 8, tiebreakCols = Seq("l_orderkey"))
-    assert(bounds.length === 7 && bounds.sorted.toSeq === bounds.toSeq)
-    val back = spark.read.parquet(path)
-    assert(back.count() === li.count())
-    // shard directories are globally ordered and near-balanced
-    val stats = back.groupBy("shard")
-      .agg(min("price").as("lo"), max("price").as("hi"), count(lit(1)).as("n"))
-      .orderBy("shard").collect()
-    assert(stats.length === 8)
-    stats.sliding(2).foreach { w =>
-      if (w.length == 2) assert(w(0).getDouble(2) <= w(1).getDouble(1))
-    }
-    val total = li.count().toDouble
-    stats.foreach(r => assert(math.abs(r.getLong(3) / total - 0.125) < 0.07))
-    // rows within each file are sorted by (price, l_orderkey)
-    val shard0 = new java.io.File(path).listFiles().filter(_.getName.startsWith("shard=")).head
-    shard0.listFiles().filter(_.getName.endsWith(".parquet")).take(2).foreach { f =>
-      val rows = spark.read.parquet(f.toString)
-        .select("price", "l_orderkey").collect()
-        .map(r => (r.getDouble(0), r.getLong(1)))
-      assert(rows.toSeq === rows.toSeq.sorted)
+    withTempDir("graft_sink") { tmp =>
+      val path = s"$tmp/out"
+      val bounds = graft.operators.Sinks.writeRangeSorted(
+        li, "price", path, shards = 8, tiebreakCols = Seq("l_orderkey"))
+      assert(bounds.length === 7 && bounds.sorted.toSeq === bounds.toSeq)
+      val back = spark.read.parquet(path)
+      assert(back.count() === li.count())
+      // shard directories are globally ordered and near-balanced
+      val stats = back.groupBy("shard")
+        .agg(min("price").as("lo"), max("price").as("hi"), count(lit(1)).as("n"))
+        .orderBy("shard").collect()
+      assert(stats.length === 8)
+      stats.sliding(2).foreach { w =>
+        if (w.length == 2) assert(w(0).getDouble(2) <= w(1).getDouble(1))
+      }
+      val total = li.count().toDouble
+      stats.foreach(r => assert(math.abs(r.getLong(3) / total - 0.125) < 0.07))
+      // rows within each file are sorted by (price, l_orderkey)
+      val shard0 = new java.io.File(path).listFiles().filter(_.getName.startsWith("shard=")).head
+      shard0.listFiles().filter(_.getName.endsWith(".parquet")).take(2).foreach { f =>
+        val rows = spark.read.parquet(f.toString)
+          .select("price", "l_orderkey").collect()
+          .map(r => (r.getDouble(0), r.getLong(1)))
+        assert(rows.toSeq === rows.toSeq.sorted)
+      }
     }
   }
 
@@ -1012,115 +1016,121 @@ class PipelineOpsSuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("shard manifest sink: counts/tokens/checksums match source, xor order-free") {
-    import java.nio.file.Files
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = Files.createTempDirectory("graft_manifest").toString + "/out"
-    val manifest = graft.operators.Sinks
-      .writeShardsWithManifest(docs, "doc_id", "text", path, numShards = 4)
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(manifest.keySet === Set(0, 1, 2, 3))
-    assert(manifest.values.map(_._1).sum === docs.count())
-    // recomputing any one shard's stats from its own directory alone
-    // reproduces the manifest row (the incremental re-validation path),
-    // and a repartition (row-order change) does not move the xor
-    val shard0 = spark.read.parquet(s"$path/data/shard=0").repartition(7)
-    val re = shard0
-      .withColumn("fp", expr(
-        "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
-      .agg(count(lit(1)),
-        sum(graft.operators.TextOps.tokenCount(col("text")).cast("long")),
-        expr("bit_xor(fp)"))
-      .collect().head
-    assert((re.getLong(0), re.getLong(1), re.getLong(2)) === manifest(0))
+    withTempDir("graft_manifest") { tmp =>
+      val path = s"$tmp/out"
+      val manifest = graft.operators.Sinks
+        .writeShardsWithManifest(docs, "doc_id", "text", path, numShards = 4)
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      assert(manifest.keySet === Set(0, 1, 2, 3))
+      assert(manifest.values.map(_._1).sum === docs.count())
+      // recomputing any one shard's stats from its own directory alone
+      // reproduces the manifest row (the incremental re-validation path),
+      // and a repartition (row-order change) does not move the xor
+      val shard0 = spark.read.parquet(s"$path/data/shard=0").repartition(7)
+      val re = shard0
+        .withColumn("fp", expr(
+          "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+        .agg(count(lit(1)),
+          sum(graft.operators.TextOps.tokenCount(col("text")).cast("long")),
+          expr("bit_xor(fp)"))
+        .collect().head
+      assert((re.getLong(0), re.getLong(1), re.getLong(2)) === manifest(0))
+    }
   }
 
   test("shard manifest sink: null id fails fast, empty input yields empty manifest") {
-    import java.nio.file.Files
     import spark.implicits._
     val withNull = Seq((Some(1L), "a b"), (None, "c d"))
       .toDF("doc_id", "text")
-    val p1 = Files.createTempDirectory("graft_manifest_null").toString + "/out"
-    // validation is fused into the write pass (raise_error in the shard
-    // expression), so the failure surfaces as a SparkException at write
-    val ex = intercept[Exception] {
-      graft.operators.Sinks.writeShardsWithManifest(withNull, "doc_id", "text", p1, 2)
+    withTempDir("graft_manifest_null") { tmp =>
+      val p1 = s"$tmp/out"
+      // validation is fused into the write pass (raise_error in the shard
+      // expression), so the failure surfaces as a SparkException at write
+      val ex = intercept[Exception] {
+        graft.operators.Sinks.writeShardsWithManifest(withNull, "doc_id", "text", p1, 2)
+      }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(ex).exists(_.contains("every exported row must be fingerprintable")),
+        messages(ex).mkString(" | "))
+      withTempDir("graft_manifest_empty") { tmp =>
+        val p2 = s"$tmp/out"
+        val empty = graft.operators.Sinks.writeShardsWithManifest(
+          withNull.where(lit(false)), "doc_id", "text", p2, 2)
+        assert(empty.collect().isEmpty)
+        assert(empty.schema.fieldNames.toSeq ===
+          Seq("shard", "n_rows", "n_tokens", "xor_fp"))
+      }
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("every exported row must be fingerprintable")),
-      messages(ex).mkString(" | "))
-    val p2 = Files.createTempDirectory("graft_manifest_empty").toString + "/out"
-    val empty = graft.operators.Sinks.writeShardsWithManifest(
-      withNull.where(lit(false)), "doc_id", "text", p2, 2)
-    assert(empty.collect().isEmpty)
-    assert(empty.schema.fieldNames.toSeq ===
-      Seq("shard", "n_rows", "n_tokens", "xor_fp"))
   }
 
   test("applyDeletes: touched shards rewritten, untouched bytes intact, xor attests") {
-    import java.nio.file.Files
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = Files.createTempDirectory("graft_del").toString + "/out"
-    val before = graft.operators.Sinks
-      .writeShardsWithManifest(docs, "doc_id", "text", path, numShards = 4)
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(3)))).toMap
-    // untouched-shard mtime probe: record a file list per shard dir
-    def files(sh: Int) = new java.io.File(s"$path/data/shard=$sh")
-      .listFiles().map(f => f.getName -> f.lastModified).toMap
-    val deletes = docs.where(col("doc_id") % 17 === 0).select("doc_id")
-    val delByShard = spark.read.parquet(s"$path/data")
-      .join(deletes, "doc_id").groupBy("shard").count()
-      .collect().map(r => r.get(0).toString.toInt -> r.getLong(1)).toMap
-    val untouched = (0 to 3).find(sh => !delByShard.contains(sh))
-    val probe = untouched.map(sh => sh -> files(sh))
-    val after = graft.operators.Sinks
-      .applyDeletes(spark, path, "doc_id", "text", deletes)
-      .collect().map(r =>
-        r.getInt(0) -> ((r.getLong(1), r.getLong(3), r.getLong(4)))).toMap
-    assert(after.values.map(_._1).sum === docs.count() - deletes.count())
-    after.foreach { case (sh, (n, xorAfter, nd)) =>
-      assert(nd === delByShard.getOrElse(sh, 0L))
-      assert(n === before(sh)._1 - nd)
-      // xor(before) ^ xor(after) == xor of the deleted ids' fingerprints
-      val delXor = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .where(col("doc_id") % 17 === 0)
-        .withColumn("fp", expr(
-          "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
-        .withColumn("sh", expr(
-          "CAST(CAST(conv(substring(md5(CAST(CONCAT('0:', CAST(doc_id AS STRING))" +
-            " AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 4 AS INT)"))
-        .where(col("sh") === sh).agg(expr("bit_xor(fp)")).collect().head.getLong(0)
-      if (nd > 0) assert((before(sh)._2 ^ xorAfter) === delXor)
-      else assert(xorAfter === before(sh)._2)
+    withTempDir("graft_del") { tmp =>
+      val path = s"$tmp/out"
+      val before = graft.operators.Sinks
+        .writeShardsWithManifest(docs, "doc_id", "text", path, numShards = 4)
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(3)))).toMap
+      // untouched-shard mtime probe: record a file list per shard dir
+      def files(sh: Int) = new java.io.File(s"$path/data/shard=$sh")
+        .listFiles().map(f => f.getName -> f.lastModified).toMap
+      val deletes = docs.where(col("doc_id") % 17 === 0).select("doc_id")
+      val delByShard = spark.read.parquet(s"$path/data")
+        .join(deletes, "doc_id").groupBy("shard").count()
+        .collect().map(r => r.get(0).toString.toInt -> r.getLong(1)).toMap
+      val untouched = (0 to 3).find(sh => !delByShard.contains(sh))
+      val probe = untouched.map(sh => sh -> files(sh))
+      val after = graft.operators.Sinks
+        .applyDeletes(spark, path, "doc_id", "text", deletes)
+        .collect().map(r =>
+          r.getInt(0) -> ((r.getLong(1), r.getLong(3), r.getLong(4)))).toMap
+      assert(after.values.map(_._1).sum === docs.count() - deletes.count())
+      after.foreach { case (sh, (n, xorAfter, nd)) =>
+        assert(nd === delByShard.getOrElse(sh, 0L))
+        assert(n === before(sh)._1 - nd)
+        // xor(before) ^ xor(after) == xor of the deleted ids' fingerprints
+        val delXor = docs
+          .where(col("doc_id") % 17 === 0)
+          .withColumn("fp", expr(
+            "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+          .withColumn("sh", expr(
+            "CAST(CAST(conv(substring(md5(CAST(CONCAT('0:', CAST(doc_id AS STRING))" +
+              " AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 4 AS INT)"))
+          .where(col("sh") === sh).agg(expr("bit_xor(fp)")).collect().head.getLong(0)
+        if (nd > 0) assert((before(sh)._2 ^ xorAfter) === delXor)
+        else assert(xorAfter === before(sh)._2)
+      }
+      // untouched shard's files were not rewritten
+      probe.foreach { case (sh, old) => assert(files(sh) === old) }
+      // no deleted id survives in the data
+      assert(spark.read.parquet(s"$path/data").join(deletes, "doc_id").count() === 0L)
     }
-    // untouched shard's files were not rewritten
-    probe.foreach { case (sh, old) => assert(files(sh) === old) }
-    // no deleted id survives in the data
-    assert(spark.read.parquet(s"$path/data").join(deletes, "doc_id").count() === 0L)
   }
 
   test("applyDeletes: no-op list keeps manifest; full-shard delete drops its row") {
-    import java.nio.file.Files
     import spark.implicits._
     val df = Seq((1L, "a b"), (2L, "c d"), (3L, "e f"), (4L, "g h"))
       .toDF("doc_id", "text")
-    val path = Files.createTempDirectory("graft_del2").toString + "/out"
-    graft.operators.Sinks.writeShardsWithManifest(df, "doc_id", "text", path, 2)
-    // no-op
-    val noop = graft.operators.Sinks.applyDeletes(
-      spark, path, "doc_id", "text", df.where(lit(false)).select("doc_id"))
-    assert(noop.collect().map(_.getLong(4)).forall(_ === 0L))
-    // wipe one whole shard: its manifest row and directory must go
-    val shardOf = spark.read.parquet(s"$path/data")
-      .select(col("doc_id"), col("shard").cast("int").as("sh")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val victim = shardOf.values.head
-    val ids = shardOf.collect { case (id, sh) if sh == victim => id }.toSeq
-    val after = graft.operators.Sinks.applyDeletes(
-      spark, path, "doc_id", "text", ids.toDF("doc_id"))
-    assert(!after.collect().map(_.getInt(0)).contains(victim))
-    assert(!new java.io.File(s"$path/data/shard=$victim").exists())
-    assert(spark.read.parquet(s"$path/data").count() === 4L - ids.size)
+    withTempDir("graft_del2") { tmp =>
+      val path = s"$tmp/out"
+      graft.operators.Sinks.writeShardsWithManifest(df, "doc_id", "text", path, 2)
+      // no-op
+      val noop = graft.operators.Sinks.applyDeletes(
+        spark, path, "doc_id", "text", df.where(lit(false)).select("doc_id"))
+      assert(noop.collect().map(_.getLong(4)).forall(_ === 0L))
+      // wipe one whole shard: its manifest row and directory must go
+      val shardOf = spark.read.parquet(s"$path/data")
+        .select(col("doc_id"), col("shard").cast("int").as("sh")).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val victim = shardOf.values.head
+      val ids = shardOf.collect { case (id, sh) if sh == victim => id }.toSeq
+      val after = graft.operators.Sinks.applyDeletes(
+        spark, path, "doc_id", "text", ids.toDF("doc_id"))
+      assert(!after.collect().map(_.getInt(0)).contains(victim))
+      assert(!new java.io.File(s"$path/data/shard=$victim").exists())
+      assert(spark.read.parquet(s"$path/data").count() === 4L - ids.size)
+    }
   }
 
   test("sparse cosine pairs: near-dups found, unrelated doc excluded, case-folded dup exact") {

@@ -138,32 +138,33 @@ class SequenceOpsSuite extends AnyFunSuite with GraftSparkSession {
 
   test("bucketed join is exchange-free; mismatched buckets raise") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
-    val a = (1L to 100L).map(i => (i, i * 2)).toDF("k", "va")
-    val b = (1L to 100L).map(i => (i, s"r$i")).toDF("k2", "vb")
-    graft.operators.Sinks.writeBucketedTable(a, "t_bkt_a", s"$dir/a", "k", 4)
-    graft.operators.Sinks.writeBucketedTable(b, "t_bkt_b", s"$dir/b", "k2", 4)
-    // disable broadcast: tiny test tables would otherwise BHJ and never
-    // exercise the bucketed sort-merge path the assert is about
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val j = graft.operators.Sinks.bucketedEquiJoin(
-        spark, "t_bkt_a", "k", "t_bkt_b", "k2")
-      assert(j.count() === 100)
-      // a mismatched bucket count reintroduces a shuffle -> must raise
-      graft.operators.Sinks.writeBucketedTable(b, "t_bkt_c", s"$dir/c", "k2", 8)
-      val e = intercept[IllegalArgumentException] {
-        graft.operators.Sinks.bucketedEquiJoin(
-          spark, "t_bkt_a", "k", "t_bkt_c", "k2")
+    withTempDir("graft_bkt_") { dir =>
+      val a = (1L to 100L).map(i => (i, i * 2)).toDF("k", "va")
+      val b = (1L to 100L).map(i => (i, s"r$i")).toDF("k2", "vb")
+      graft.operators.Sinks.writeBucketedTable(a, "t_bkt_a", s"$dir/a", "k", 4)
+      graft.operators.Sinks.writeBucketedTable(b, "t_bkt_b", s"$dir/b", "k2", 4)
+      // disable broadcast: tiny test tables would otherwise BHJ and never
+      // exercise the bucketed sort-merge path the assert is about
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val j = graft.operators.Sinks.bucketedEquiJoin(
+          spark, "t_bkt_a", "k", "t_bkt_b", "k2")
+        assert(j.count() === 100)
+        // a mismatched bucket count reintroduces a shuffle -> must raise
+        graft.operators.Sinks.writeBucketedTable(b, "t_bkt_c", s"$dir/c", "k2", 8)
+        val e = intercept[IllegalArgumentException] {
+          graft.operators.Sinks.bucketedEquiJoin(
+            spark, "t_bkt_a", "k", "t_bkt_c", "k2")
+        }
+        assert(e.getMessage.contains("still shuffles"))
+        // catalog death: drop + re-register from the files alone via
+        // CLUSTERED BY DDL -> the join is exchange-free again
+        spark.sql("DROP TABLE t_bkt_b")
+        graft.operators.Sinks.registerBucketedTable(spark, "t_bkt_b",
+          s"$dir/b", "k2", "BIGINT", 4, Seq("vb" -> "STRING"))
+        val j2 = graft.operators.Sinks.bucketedEquiJoin(
+          spark, "t_bkt_a", "k", "t_bkt_b", "k2")
+        assert(j2.count() === 100)
       }
-      assert(e.getMessage.contains("still shuffles"))
-      // catalog death: drop + re-register from the files alone via
-      // CLUSTERED BY DDL -> the join is exchange-free again
-      spark.sql("DROP TABLE t_bkt_b")
-      graft.operators.Sinks.registerBucketedTable(spark, "t_bkt_b",
-        s"$dir/b", "k2", "BIGINT", 4, Seq("vb" -> "STRING"))
-      val j2 = graft.operators.Sinks.bucketedEquiJoin(
-        spark, "t_bkt_a", "k", "t_bkt_b", "k2")
-      assert(j2.count() === 100)
     }
   }
 

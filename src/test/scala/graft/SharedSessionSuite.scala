@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.concurrent.{Await, Future}
@@ -72,11 +71,12 @@ class SharedSessionSuite extends AnyFunSuite with GraftSparkSession {
    *  returns the manifest rows (shard, n_rows, n_deleted). */
   private def deleteFromShards(): Set[(Int, Long, Long)] = {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_shared_del").toString
-    val docs = Seq.tabulate(40)(i => (i.toLong, s"doc $i text")).toDF("id", "text")
-    Sinks.writeShardsWithManifest(docs, "id", "text", path, numShards = 4)
-    Sinks.applyDeletes(spark, path, "id", "text", docs.where(col("id") % 3 === 0))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(4))).toSet
+    withTempDir("graft_shared_del") { path =>
+      val docs = Seq.tabulate(40)(i => (i.toLong, s"doc $i text")).toDF("id", "text")
+      Sinks.writeShardsWithManifest(docs, "id", "text", path, numShards = 4)
+      Sinks.applyDeletes(spark, path, "id", "text", docs.where(col("id") % 3 === 0))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(4))).toSet
+    }
   }
 
   test("bfsDistances leaves the caller's confs alone in the broadcast regime") {
@@ -104,22 +104,23 @@ class SharedSessionSuite extends AnyFunSuite with GraftSparkSession {
 
   test("a StreamingOps snapshot-merge batch leaves the caller's confs alone") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_shared_cdc").toString
-    StreamingOps.seedCdcSnapshot(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload"), "id", dir, nBuckets = 2)
-    val input = MemoryStream[(Long, Long, String, String)](spark)
-    probed() {
-      val qy = StreamingOps.cdcSnapshotSink(
-        input.toDF().toDF("id", "seq", "op", "payload"), "id", "op", "seq", dir, nBuckets = 2)
-        .start()
-      try {
-        input.addData(Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""), (4L, 3L, "I", "d")))
-        qy.processAllAvailable()
-      } finally qy.stop()
+    withTempDir("graft_shared_cdc") { dir =>
+      StreamingOps.seedCdcSnapshot(
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload"), "id", dir, nBuckets = 2)
+      val input = MemoryStream[(Long, Long, String, String)](spark)
+      probed() {
+        val qy = StreamingOps.cdcSnapshotSink(
+          input.toDF().toDF("id", "seq", "op", "payload"), "id", "op", "seq", dir, nBuckets = 2)
+          .start()
+        try {
+          input.addData(Seq((1L, 1L, "U", "a2"), (2L, 2L, "D", ""), (4L, 3L, "I", "d")))
+          qy.processAllAvailable()
+        } finally qy.stop()
+      }
+      val got = spark.read.parquet(dir).select("id", "payload")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got === Map(1L -> "a2", 3L -> "c", 4L -> "d"))
     }
-    val got = spark.read.parquet(dir).select("id", "payload")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got === Map(1L -> "a2", 3L -> "c", 4L -> "d"))
   }
 
   test("two conf-sensitive operators run concurrently on one session") {

@@ -70,52 +70,53 @@ class StreamingPipelineSuite extends AnyFunSuite with GraftSparkSession {
   test("foreachBatch maintains a summary table incrementally across micro-batches") {
     import spark.implicits._
     SparkEntry.prep(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_sum").toString
-    val baseDir = root + "/base"
-    val sumDir = root + "/sum"
-    val input = MemoryStream[(String, String)](spark)
-    // the continuous-ingestion shape: each micro-batch lands in the base
-    // table AND refreshes the materialized sketch summary at O(batch) —
-    // the base is never re-read after its batch is written
-    val q = input.toDF().toDF("event_type", "props").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        batch.persist()
-        batch.write.mode("append").parquet(baseDir)
-        if (id == 0) {
-          graft.plans.GraftSummaries.buildSummaryTable(
-            spark, baseDir, sumDir, Seq("event_type"), "props", "distinct")
-        } else {
-          graft.plans.GraftSummaries.appendToSummaryTable(
-            spark, baseDir, sumDir, batch, Seq("event_type"), "props", "distinct")
+    withTempDir("graft_stream_sum") { root =>
+      val baseDir = root + "/base"
+      val sumDir = root + "/sum"
+      val input = MemoryStream[(String, String)](spark)
+      // the continuous-ingestion shape: each micro-batch lands in the base
+      // table AND refreshes the materialized sketch summary at O(batch) —
+      // the base is never re-read after its batch is written
+      val q = input.toDF().toDF("event_type", "props").writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          batch.persist()
+          batch.write.mode("append").parquet(baseDir)
+          if (id == 0) {
+            graft.plans.GraftSummaries.buildSummaryTable(
+              spark, baseDir, sumDir, Seq("event_type"), "props", "distinct")
+          } else {
+            graft.plans.GraftSummaries.appendToSummaryTable(
+              spark, baseDir, sumDir, batch, Seq("event_type"), "props", "distinct")
+          }
+          batch.unpersist()
+          ()
         }
-        batch.unpersist()
-        ()
-      }
-      .start()
-    try {
-      input.addData(("click", "p1"), ("click", "p2"), ("view", "p1"))
-      q.processAllAvailable()
-      input.addData(("click", "p2"), ("click", "p3"), ("scroll", "p9"))
-      q.processAllAvailable()
-      spark.read.parquet(baseDir).createOrReplaceTempView("stream_base")
-      val sql =
-        """SELECT event_type, approx_count_distinct_ex(props) AS nd, count(*) AS n
-          |FROM stream_base GROUP BY event_type ORDER BY event_type""".stripMargin
-      val baseline = spark.sql(sql).collect()
-      withSQLConf(graft.plans.GraftSummaries.ENABLED_KEY -> "true") {
-        val fromSummary = spark.sql(sql)
-        // click: distinct {p1,p2,p3} = 3 across batches; counts sum 4
-        assert(fromSummary.collect() === baseline)
-        val plans = fromSummary.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation.toString
+        .start()
+      try {
+        input.addData(("click", "p1"), ("click", "p2"), ("view", "p1"))
+        q.processAllAvailable()
+        input.addData(("click", "p2"), ("click", "p3"), ("scroll", "p9"))
+        q.processAllAvailable()
+        spark.read.parquet(baseDir).createOrReplaceTempView("stream_base")
+        val sql =
+          """SELECT event_type, approx_count_distinct_ex(props) AS nd, count(*) AS n
+            |FROM stream_base GROUP BY event_type ORDER BY event_type""".stripMargin
+        val baseline = spark.sql(sql).collect()
+        withSQLConf(graft.plans.GraftSummaries.ENABLED_KEY -> "true") {
+          val fromSummary = spark.sql(sql)
+          // click: distinct {p1,p2,p3} = 3 across batches; counts sum 4
+          assert(fromSummary.collect() === baseline)
+          val plans = fromSummary.queryExecution.optimizedPlan.collect {
+            case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              l.relation.toString
+          }
+          assert(!plans.mkString.contains("/base"),
+            "summary-maintained stream must answer without re-scanning the base")
         }
-        assert(!plans.mkString.contains("/base"),
-          "summary-maintained stream must answer without re-scanning the base")
+      } finally {
+        q.stop()
+        graft.plans.GraftSummaries.clear()
       }
-    } finally {
-      q.stop()
-      graft.plans.GraftSummaries.clear()
     }
   }
 

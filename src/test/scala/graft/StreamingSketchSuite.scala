@@ -67,33 +67,34 @@ class StreamingSketchSuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("streaming accumulate feeds a batch-combinable parquet summary table") {
-    import java.nio.file.Files
     import spark.implicits._
     // the 100TB pattern: a stream continuously appends per-window sketch
     // summaries to a table; later batch queries combine arbitrary subsets
     val input = MemoryStream[(java.sql.Timestamp, Double)](spark)
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
-    val outDir = Files.createTempDirectory("graft_stream_summary").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
-    val summaries = input.toDF().toDF("t", "v")
-      .withWatermark("t", "1 minute")
-      .groupBy(window($"t", "1 hour"))
-      .agg(expr("approx_percentile_accumulate(v)").as("s"))
-    val q = summaries.writeStream
-      .format("parquet").option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      input.addData((ts("2021-01-01 00:10:00"), 1.0), (ts("2021-01-01 00:20:00"), 2.0),
-        (ts("2021-01-01 00:30:00"), 10.0))
-      q.processAllAvailable()
-      input.addData((ts("2021-01-01 05:00:00"), 99.0)) // advances watermark, closes window 0
-      q.processAllAvailable()
-    } finally q.stop()
-    val est = spark.read.parquet(outDir)
-      .selectExpr("approx_percentile_estimate(approx_percentile_combine(s), 0.5) AS p50")
-      .collect()
-    assert(est.toSeq === Seq(Row(2.0))) // {1,2,10} from the finalized window
+    withTempDir("graft_stream_summary") { outDir =>
+      withTempDir("graft_stream_ckpt") { ckpt =>
+        val summaries = input.toDF().toDF("t", "v")
+          .withWatermark("t", "1 minute")
+          .groupBy(window($"t", "1 hour"))
+          .agg(expr("approx_percentile_accumulate(v)").as("s"))
+        val q = summaries.writeStream
+          .format("parquet").option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append())
+          .start()
+        try {
+          input.addData((ts("2021-01-01 00:10:00"), 1.0), (ts("2021-01-01 00:20:00"), 2.0),
+            (ts("2021-01-01 00:30:00"), 10.0))
+          q.processAllAvailable()
+          input.addData((ts("2021-01-01 05:00:00"), 99.0)) // advances watermark, closes window 0
+          q.processAllAvailable()
+        } finally q.stop()
+        val est = spark.read.parquet(outDir)
+          .selectExpr("approx_percentile_estimate(approx_percentile_combine(s), 0.5) AS p50")
+          .collect()
+        assert(est.toSeq === Seq(Row(2.0))) // {1,2,10} from the finalized window
+      }
+    }
   }
 
   test("theta and reservoir aggregates compose with streaming groupBy") {

@@ -23,7 +23,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * session-conf writes confined to the scoped `withConfs` helper, the
  * catalogue's timezone pin and the CLI mains: graft runs inside the
  * caller's session, so operator code never flips a conf its other
- * queries read.
+ * queries read. Tests create temp dirs only through
+ * `GraftSparkSession.withTempDir`, which deletes them afterwards.
  */
 class StyleSuite extends AnyFunSuite {
 
@@ -93,6 +94,15 @@ class StyleSuite extends AnyFunSuite {
       printlnAllowed.exists(rel.endsWith)) Nil
     else lines.zipWithIndex.collect {
       case (l, i) if l.matches(""".*\bprintln\(.*""") => s"$p:${i + 1}: println"
+    }
+  }
+
+  check("tests create temp dirs only through withTempDir") { (p, lines) =>
+    val rel = p.toString.replace('\\', '/')
+    val needle = "createTemp" + "Directory" // split so this file passes its own gate
+    if (!rel.startsWith("src/test/scala") || rel.endsWith("graft/GraftSparkSession.scala")) Nil
+    else lines.zipWithIndex.collect {
+      case (l, i) if l.contains(needle) => s"$p:${i + 1}: temp dir outside withTempDir"
     }
   }
 

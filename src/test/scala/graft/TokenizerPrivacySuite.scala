@@ -536,23 +536,24 @@ class TokenizerPrivacySuite extends AnyFunSuite with GraftSparkSession {
 
   test("iterative graph ops accept a reliable checkpoint dir (cluster hardening)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
-    val g = (k4 ++ Seq((3L, 4L), (4L, 5L))).toDF("s", "t")
-    val core = graft.operators.Graph.kCore(g, "s", "t", k = 3,
-      checkpointDir = Some(dir))
-    assert(core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      === Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
-    val truss = graft.operators.Graph.kTruss(g, "s", "t", k = 4,
-      checkpointDir = Some(dir))
-    assert(truss.count() === k4.size.toLong)
-    val bfs = graft.operators.Graph.bfsDistances(g, "s", "t",
-      Seq(0L).toDF("seed"), "seed", maxDepth = 2, checkpointDir = Some(dir))
-    assert(bfs.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      === Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 1, 4L -> 2))
-    // the reliable checkpoints actually landed on disk
-    assert(new java.io.File(dir).listFiles() != null &&
-      new java.io.File(dir).listFiles().nonEmpty)
+    withTempDir("graft-ckpt") { dir =>
+      val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
+      val g = (k4 ++ Seq((3L, 4L), (4L, 5L))).toDF("s", "t")
+      val core = graft.operators.Graph.kCore(g, "s", "t", k = 3,
+        checkpointDir = Some(dir))
+      assert(core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        === Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
+      val truss = graft.operators.Graph.kTruss(g, "s", "t", k = 4,
+        checkpointDir = Some(dir))
+      assert(truss.count() === k4.size.toLong)
+      val bfs = graft.operators.Graph.bfsDistances(g, "s", "t",
+        Seq(0L).toDF("seed"), "seed", maxDepth = 2, checkpointDir = Some(dir))
+      assert(bfs.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+        === Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 1, 4L -> 2))
+      // the reliable checkpoints actually landed on disk
+      assert(new java.io.File(dir).listFiles() != null &&
+        new java.io.File(dir).listFiles().nonEmpty)
+    }
   }
 
   test("triangle/truss/core family raises on non-numeric node ids, never drops them") {
