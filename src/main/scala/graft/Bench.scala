@@ -1,28 +1,28 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.tools.{Instrument, Snapshot}
 object Bench {
   def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkEntry.localSession(cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    val inst = new Instrument(spark)
     // fresh-JVM scale probe (see runScaleChild): the r9 closing run
     // measured its x10 ratios at the end of a 23-minute 245-query JVM
     // and read ~35% high vs scoped re-runs — the probe now runs in its
     // own process so the round's O-claims aren't contaminated by the
     // parent's accumulated JIT/GC/codegen state
-    if (sys.env.contains("SPARK_GRAFT_SCALE_CHILD")) { scaleChildMain(); return }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.localSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // noop sink materializes every row without collecting to the driver.
-    def exec(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String = sfDir): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // Per query: one warm pass (JIT + codegen cache + parquet footers +
-    // operator-internal cache population), timed reps, then CLEAR the
-    // cache. Interleaving (vs a global warmup pass over all queries first)
-    // keeps at most one query's operator caches resident: with 67 queries'
-    // cached frames accumulated, block-eviction churn hit whichever
-    // query's timed reps ran late (the r5 q21 2.4x regression).
+    if (sys.env.contains("SPARK_GRAFT_SCALE_CHILD")) { scaleChild(spark, inst, sfDir); return }
+    // Per query: one warm pass (JIT + codegen cache + parquet footers),
+    // then timed reps, each an Instrument pass that clears the cache
+    // first — the pass graft.tools.Profile runs, so both report the same
+    // counters. Interleaving (vs a global warmup pass over all queries
+    // first) keeps at most one query's operator caches resident: with 67
+    // queries' cached frames accumulated, block-eviction churn hit
+    // whichever query's timed reps ran late (the r5 q21 2.4x regression).
     //
     // a failed query reports -1 so a regression can't masquerade as a
     // speedup; min-of-reps damps the shared machine's load noise (up to
@@ -43,49 +43,18 @@ object Bench {
     // >1.5x its own history min with unchanged code is box load, not a
     // regression, and pays one extra rep instead of entering the record
     val histMins = historyMins(histPath, sfDir)
-    // Passive per-query counters (jobs / tasks / shuffle bytes), recorded
-    // into the history line ALONGSIDE wall time: load-independent
-    // evidence a per-query wall regression can be adjudicated against
-    // (this box swings 1.5-3x on identical code). The listener only
-    // increments longs; reset/drain happen OUTSIDE the timed region, so
-    // the timing methodology is unchanged.
-    object Counters extends org.apache.spark.scheduler.SparkListener {
-      @volatile var jobs = 0L
-      @volatile var tasks = 0L
-      @volatile var shufR = 0L
-      @volatile var shufW = 0L
-      def reset(): Unit = { jobs = 0; tasks = 0; shufR = 0; shufW = 0 }
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks += 1
-        val m = t.taskMetrics
-        if (m != null) {
-          shufR += m.shuffleReadMetrics.totalBytesRead
-          shufW += m.shuffleWriteMetrics.bytesWritten
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(Counters)
-    def drainBus(): Unit =
-      org.apache.spark.sql.graft.ListenerBusAccess.drain(spark.sparkContext)
+    // Per-query counters (jobs / stages / tasks / shuffle bytes) and the
+    // operators' op records, written into the history line ALONGSIDE wall
+    // time: load-independent evidence a per-query wall regression can be
+    // adjudicated against (this box swings 1.5-3x on identical code). The
+    // instrument drains and snapshots OUTSIDE the timed region.
     val counters = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
-      try exec(fn) catch {
-        case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
+      timed(inst, s"warmup $name")(exec(spark, fn, sfDir))
       def onePass(): Double = {
-        // drain + reset BEFORE the timer starts: counters always describe
-        // the most recent pass, with no events bleeding across queries
-        drainBus()
-        Counters.reset()
-        val t0 = System.nanoTime()
-        val ok = try { exec(fn); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        val (sec, snap) = timed(inst, name)(exec(spark, fn, sfDir))
+        counters(name) = snap.json // the most recent pass
+        sec
       }
       val times = (1 to reps).map(_ => onePass())
       var best = if (times.contains(-1.0)) -1.0 else times.min
@@ -97,9 +66,6 @@ object Bench {
           if (extra > 0 && best > 0) best = math.min(best, extra)
         }
       }
-      drainBus() // flush the last pass's async events before snapshotting
-      counters(name) = s"""{"jobs":${Counters.jobs},"tasks":${Counters.tasks},""" +
-        s""""shuf_read":${Counters.shufR},"shuf_write":${Counters.shufW}}"""
       spark.sharedState.cacheManager.clearCache()
       SparkEntry.deleteScratchDirs()
       // ContextCleaner reclaims finished queries' broadcasts/shuffles only
@@ -115,16 +81,16 @@ object Bench {
         // forced scoped probe: local iteration — skip the child JVM
         // spin-up AND only replay the scoped heads (a head without a
         // scoped base timing has no ratio to report anyway)
-        scaleSection(spark, sfDir, results, exec, headFilter = only)
+        scaleSection(spark, inst, sfDir, results, headFilter = only)
       } else runScaleChild(results, sfDir) match {
         case Some(j) => j
         case None =>
           System.err.println("[bench] fresh-JVM scale probe failed — running inline")
-          scaleSection(spark, sfDir, results, exec)
+          scaleSection(spark, inst, sfDir, results)
       }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    def obj(m: scala.collection.Map[String, Any]) = m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val qs = obj(results)
+    val total = results.values.sum
     // the driver-facing contract line: per-query map INCLUDED (the r11
     // total-only last line left the driver's PERF comparison empty —
     // n_common: 0 — which cost a whole verdict of phantom-regression
@@ -132,12 +98,10 @@ object Bench {
     val contract =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","reps":$reps$scaleJson}"""
-    val ctrJson = counters.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     // the archival line adds the per-query listener counters — load-
     // independent regression evidence for round-over-round diffs; kept
     // OFF the stdout contract line so its size stays bounded
-    val full = contract.dropRight(1) + s""","counters":$ctrJson}"""
+    val full = contract.dropRight(1) + s""","counters":${obj(counters)}}"""
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json"))
     java.nio.file.Files.write(out, full.getBytes("UTF-8"))
@@ -155,6 +119,18 @@ object Bench {
     // contract line LAST: the driver parses stdout's final line
     println(contract)
     spark.stop()
+  }
+
+  /** `fn`'s result over `dir` into the noop sink, which materializes
+   *  every row without collecting to the driver. */
+  private[graft] def exec(spark: SparkSession, fn: (SparkSession, String) => DataFrame, dir: String): Unit =
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+
+  /** One [[Instrument.pass]] of `body`: its wall seconds, or -1 when it
+   *  fails (logged as `what`), and what it cost. */
+  private def timed(inst: Instrument, what: String)(body: => Unit): (Double, Snapshot) = {
+    val (out, snap) = inst.pass(body)
+    (out.fold(e => { System.err.println(s"[bench] $what failed: ${e.getMessage}"); -1.0 }, identity), snap)
   }
 
   /** Per-query minimum over every prior run in the history file —
@@ -197,22 +173,17 @@ object Bench {
     acc.toMap
   }
 
-  /** Entry point of the fresh-JVM probe: read the parent's base
-   *  timings, run [[scaleSection]] on a brand-new SparkSession, write
-   *  the JSON fragment where the parent expects it. */
-  private def scaleChildMain(): Unit = {
+  /** The fresh-JVM probe, on its brand-new SparkSession: read the
+   *  parent's base timings, run [[scaleSection]], write the JSON fragment
+   *  where the parent expects it. */
+  private def scaleChild(spark: SparkSession, inst: Instrument, sfDir: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val sfDir = sys.env("SPARK_GRAFT_SF_DIR")
-    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files
       .readAllLines(java.nio.file.Paths.get(sys.env("SPARK_GRAFT_SCALE_BASE")))
       .asScala.filter(_.contains("\t")).map { l =>
         val Array(k, v) = l.split("\t", 2); k -> v.toDouble
       }.toMap
-    def exec(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    val json = scaleSection(spark, sfDir, base, exec)
+    val json = scaleSection(spark, inst, sfDir, base)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env("SPARK_GRAFT_SCALE_OUT")),
       json.getBytes("UTF-8"))
@@ -232,6 +203,7 @@ object Bench {
       java.nio.file.Files.write(baseFile,
         base.map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8"))
       val outFile = java.nio.file.Files.createTempFile("graft-scale-out", ".json")
+      Seq(baseFile, outFile).foreach(_.toFile.deleteOnExit())
       val javaBin = java.nio.file.Paths
         .get(sys.props("java.home"), "bin", "java").toString
       val jvmArgs = java.lang.management.ManagementFactory
@@ -245,12 +217,7 @@ object Bench {
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       pb.redirectErrorStream(true)
       val proc = pb.start()
-      val pump = new Thread(() => {
-        val in = proc.getInputStream
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { System.err.write(buf, 0, n); n = in.read(buf) }
-      })
+      val pump = new Thread(() => proc.getInputStream.transferTo(System.err))
       pump.setDaemon(true)
       pump.start()
       val finished = proc.waitFor(40, java.util.concurrent.TimeUnit.MINUTES)
@@ -285,9 +252,9 @@ object Bench {
    */
   private def scaleSection(
       spark: SparkSession,
+      inst: Instrument,
       sfDir: String,
       base: scala.collection.Map[String, Double],
-      exec: ((SparkSession, String) => DataFrame, String) => Unit,
       headFilter: Option[Set[String]] = None): String = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val allHeads = Seq(
@@ -363,40 +330,28 @@ object Bench {
         s"[bench] scale blowup x$factor built in ${(System.nanoTime() - tGen) / 1e9} sec")
       val rows = heads.filter(SparkEntry.queries.contains).map { name =>
         val fn = SparkEntry.queries(name)
-        def onePass(d: String): Double = {
-          val t0 = System.nanoTime()
-          val ok = try { exec(fn, d); true } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] scale $name failed: ${e.getMessage}"); false
-          }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        }
-        def rounds(): Int = name match {
-          case "q184_kcore" =>
-            graft.operators.Graph.IterationDiagnostics.lastKCoreRounds
-          case "q235_label_propagation" =>
-            graft.operators.Graph.IterationDiagnostics.lastLpaRounds
-          case _ => -1
-        }
+        def onePass(d: String) = timed(inst, s"scale $name")(exec(spark, fn, d))
+        // a pass's rounds, from its op record
+        val op = Map("q184_kcore" -> "kCore", "q235_label_propagation" -> "labelPropagation").get(name)
+        def rounds(s: Snapshot): Int = s.ops.filter(r => op.contains(r.op)).lastOption.fold(-1)(_.rounds)
         // SYMMETRIC measurement: the base is re-timed HERE, right before
         // the scaled pass, so numerator and denominator share the same
-        // JVM warmup / codegen / cache state. r10 divided a cold-child
-        // scaled time by the warm PARENT's base and recorded q235 at
-        // 15.8x where a clean same-JVM probe read ~9x; the parent base
-        // is kept in the row (parent_base) for cross-checking only.
+        // JVM warmup / codegen state, and each pass starts from a cleared
+        // cache. r10 divided a cold-child scaled time by the warm PARENT's
+        // base and recorded q235 at 15.8x where a clean same-JVM probe
+        // read ~9x; the parent base is kept in the row (parent_base) for
+        // cross-checking only.
         onePass(sfDir) // warm the head's code path once
-        val t1 = onePass(sfDir)
-        val rBase = rounds()
-        spark.sharedState.cacheManager.clearCache()
-        val first = onePass(dir)
+        val (t1, baseSnap) = onePass(sfDir)
+        val (first, scaledSnap) = onePass(dir)
         // a single scaled pass on a noisy box can read over `factor`x
         // without being superlinear; only such suspicious reads pay a
         // warm re-measure (min of two) — healthy heads stay one pass
         val tN = if (first > 0 && t1 > 0 && first > factor * t1) {
-          val second = onePass(dir)
+          val second = onePass(dir)._1
           if (second > 0) math.min(first, second) else first
         } else first
-        val rScaled = rounds()
+        val (rBase, rScaled) = (rounds(baseSnap), rounds(scaledSnap))
         spark.sharedState.cacheManager.clearCache()
         SparkEntry.deleteScratchDirs()
         System.gc()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionE
 import org.apache.spark.sql.graft.GraftFunctionRegistry
 
 /**
- * Session-extensions entry point: registers all 39 graft SQL functions
+ * Session-extensions entry point: registers all 92 graft SQL functions
  * (the reference's 18 sketch functions plus the theta/sampling/cdf-rank
  * families and the text/vector pipeline primitives).
  * Use with `--conf spark.sql.extensions=graft.GraftExtensions`, or rely on

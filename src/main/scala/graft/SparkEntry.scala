@@ -100,9 +100,6 @@ object SparkEntry {
   private def q(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, (s, d) => { prep(s); fn(s, d) }, Some(oracle))
 
-  private def qNoOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, (s, d) => { prep(s); fn(s, d) }, None)
-
   /** Scratch directories made by [[scratchDir]] and not yet deleted. */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 

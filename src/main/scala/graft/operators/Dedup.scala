@@ -461,12 +461,14 @@ object Dedup {
       .forall(Graph.isIntegral)
     val bcThresh = broadcastThreshold(nodes)
     withCached(edges.select(col("id_a"), col("id_b"))) { cachedEdges =>
-      val local =
-        if (integralIds && bcThresh > 0) LongPairs.collectBounded(cachedEdges, bcThresh / 16)
-        else None
-      local match {
-        case Some(pairs) => localComponents(nodes, pairs, idCol, idType)
-        case None => loopComponents(nodes, cachedEdges, idCol, maxIter)
+      val gate =
+        if (integralIds) fit("pairs", LongPairs.count(cachedEdges).head * 16, bcThresh)
+        else Left("non-integral ids")
+      gate match {
+        case Right(reason) =>
+          record(nodes, "connectedComponents", "local", 0, reason)
+          localComponents(nodes, LongPairs.collect(cachedEdges).head, idCol, idType)
+        case Left(declined) => loopComponents(nodes, cachedEdges, idCol, maxIter, declined)
       }
     }
   }
@@ -513,12 +515,14 @@ object Dedup {
       .select(col("id"), coalesce(col("__cc_comp"), col("id")).as("comp"))
   }
 
-  /** Distributed min-label propagation over the edge-touched subgraph. */
+  /** Distributed min-label propagation over the edge-touched subgraph;
+   *  the driver-local regime was `declined` for the reason given. */
   private def loopComponents(
       nodes: DataFrame,
       edges: DataFrame,
       idCol: String,
-      maxIter: Int): DataFrame = {
+      maxIter: Int,
+      declined: String): DataFrame = {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)")))
@@ -554,6 +558,7 @@ object Dedup {
     // materializes promptly (capClusters, the q35/q64 queries) or
     // releases via spark.catalog.clearCache() in a long-lived session.
     sym.unpersist()
+    record(nodes, "connectedComponents", "distributed", iter, declined)
     nodes.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -1223,38 +1228,38 @@ object Dedup {
     require(window >= 1, s"window must be >= 1, got $window")
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val spark = df.sparkSession
-    val keyed = df.select(col(idCol).as("id"),
+    val keys = df.select(col(idCol).as("id"),
       substring(regexp_replace(lower(col(textCol)), "\\s+", " "), 1, keyLen)
         .as("bk"))
       .where(col("bk").isNotNull) // null text has no sort position
-      .cache()
-    keyed.count() // materialize: bounds pass + rank pass both read it
-    val boundsRow = keyed.agg(call_function(
-      "approx_partition_bounds_str", col("bk"), lit(buckets)).as("bs")).collect()(0)
-    val rankedLazy =
-      if (boundsRow.isNullAt(0)) keyed.withColumn("rank", lit(0L)).where(lit(false))
-      else {
-        val bounds = boundsRow.getSeq[String](0)
-        val bucketed = keyed.withColumn("__b",
-          call_function("graft_bucket_index",
-            array(bounds.map(lit): _*), col("bk")))
-        val counts = bucketed.groupBy("__b").agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val offsets = counts.keys.toSeq.sorted.map { b =>
-          (b, counts.collect { case (b2, c) if b2 < b => c }.sum)
-        }
-        val offDf = broadcast(
-          spark.createDataFrame(offsets).toDF("__b", "__off"))
-        bucketed.join(offDf, Seq("__b"))
-          .withColumn("rank", col("__off") + row_number().over(
-            Window.partitionBy("__b").orderBy(col("bk"), col("id"))))
-          .select(col("id"), col("rank"))
-      }
     // the self-join below reads the rank twice — checkpoint it once so
     // neither side recomputes the window, and release the keyed cache
     // (its last consumer) instead of leaving it to the session
-    val ranked = rankedLazy.localCheckpoint()
-    keyed.unpersist(blocking = false)
+    val ranked = withCached(keys) { keyed =>
+      keyed.count() // materialize: bounds pass + rank pass both read it
+      val boundsRow = keyed.agg(call_function(
+        "approx_partition_bounds_str", col("bk"), lit(buckets)).as("bs")).collect()(0)
+      val rankedLazy =
+        if (boundsRow.isNullAt(0)) keyed.withColumn("rank", lit(0L)).where(lit(false))
+        else {
+          val bounds = boundsRow.getSeq[String](0)
+          val bucketed = keyed.withColumn("__b",
+            call_function("graft_bucket_index",
+              array(bounds.map(lit): _*), col("bk")))
+          val counts = bucketed.groupBy("__b").agg(count(lit(1)).as("c"))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          val offsets = counts.keys.toSeq.sorted.map { b =>
+            (b, counts.collect { case (b2, c) if b2 < b => c }.sum)
+          }
+          val offDf = broadcast(
+            spark.createDataFrame(offsets).toDF("__b", "__off"))
+          bucketed.join(offDf, Seq("__b"))
+            .withColumn("rank", col("__off") + row_number().over(
+              Window.partitionBy("__b").orderBy(col("bk"), col("id"))))
+            .select(col("id"), col("rank"))
+        }
+      rankedLazy.localCheckpoint()
+    }
     val blk = ranked.withColumn("__blk", expr(s"(rank - 1) DIV $window"))
     val right = blk.withColumn("__jblk",
       explode(array(col("__blk"), col("__blk") - 1)))

@@ -23,19 +23,6 @@ object Graph {
   /** Total fixed-point mass distributed across the graph (1e12). */
   val RankScale: Long = 1000000000000L
 
-  /**
-   * Rounds-to-converge counters for the bench's x10 scale probe:
-   * superlinear wall growth on an iterative op is only ATTRIBUTABLE if
-   * the round count is recorded alongside the ratio (a 10x graph may
-   * legitimately need more LPA rounds / deeper k-core peels — that is
-   * data growth, not a plan defect). Last-run-wins volatiles; the
-   * bench is single-flight per JVM, so no further synchronization.
-   */
-  object IterationDiagnostics {
-    @volatile var lastKCoreRounds: Int = -1
-    @volatile var lastLpaRounds: Int = -1
-  }
-
   /** PageRank-family iterations between cache/count barriers: small
    *  enough that a lazy segment's plan stays shallow (each step adds
    *  one join over cached leaves), large enough that per-round job
@@ -69,7 +56,7 @@ object Graph {
       iters: Int,
       dampNum: Int = 85,
       dampDen: Int = 100): DataFrame =
-    pageRankCore("pageRankFp: empty node set", nodes.select(col(idCol).as("id")), None,
+    pageRankCore("pageRankFp", nodes.select(col(idCol).as("id")), None,
       edges.select(col("src"), col("dst")), iters, dampNum, dampDen)
 
   /**
@@ -93,7 +80,7 @@ object Graph {
       iters: Int,
       dampNum: Int = 85,
       dampDen: Int = 100): DataFrame =
-    pageRankCore("personalizedPageRankFp: no seed overlaps the node set",
+    pageRankCore("personalizedPageRankFp",
       nodes.select(col(idCol).as("id")), Some(seeds.select(col(idCol).as("id"))),
       edges.select(col("src"), col("dst")), iters, dampNum, dampDen)
 
@@ -116,7 +103,7 @@ object Graph {
       iters: Int,
       dampNum: Int = 85,
       dampDen: Int = 100): DataFrame =
-    pageRankCore("weightedPageRankFp: empty node set", nodes.select(col(idCol).as("id")), None,
+    pageRankCore("weightedPageRankFp", nodes.select(col(idCol).as("id")), None,
       edges.select(col("src"), col("dst"), col(weightCol).cast("long").as("w")),
       iters, dampNum, dampDen)
 
@@ -146,10 +133,10 @@ object Graph {
    *  - otherwise the same join sort-merges; only the rank vector moves.
    * Document payloads never participate. Distributed iterations
    * re-cache the rank vector and unpersist the previous one, so lineage
-   * stays O(1) regardless of `iters`.
+   * stays O(1) regardless of `iters`. The call posts `op`'s record.
    */
   private def pageRankCore(
-      emptyMessage: String,
+      op: String,
       nodeIds: DataFrame,
       seedIds: Option[DataFrame],
       edges: DataFrame,
@@ -160,6 +147,8 @@ object Graph {
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
     val bcThresh = broadcastThreshold(nodeIds)
+    val emptyMessage =
+      s"$op: ${if (seedIds.isEmpty) "empty node set" else "no seed overlaps the node set"}"
     // (id, is_seed) over the distinct ids, which the distributed rounds
     // join against; its node and seed counts come from one job, which the
     // driver-local regime skips when the raw node rows already fit
@@ -168,6 +157,8 @@ object Graph {
         .join(s.distinct().withColumn("is_seed", lit(true)), Seq("id"), "left")
     }.cache()
     lazy val counts = LongPairs.count(ids, ids.where(col("is_seed")))
+    def distributed(declined: String, e: DataFrame) =
+      distributedRank(op, declined, emptyMessage, ids, counts, e, bcThresh, iters, dampNum, dampDen)
     // Driver-local regime (see [[localGraph]]): every round runs on the
     // driver over primitive arrays — two jobs in all (count, collect)
     // instead of a join, an aggregation and their exchanges per round,
@@ -178,7 +169,7 @@ object Graph {
     val integral = (Seq(nodeIds.schema.head, edges.schema("src"), edges.schema("dst")) ++
       seedIds.map(_.schema.head)).forall(f => isIntegral(f.dataType))
     if (bcThresh <= 0 || !integral) {
-      distributedRank(emptyMessage, ids, counts, edges, bcThresh, iters, dampNum, dampDen)
+      distributed(if (integral) "threshold off" else "non-integral ids", edges)
     } else {
       // the edge list is counted, then collected or read once per
       // iteration — pin it so an expensive upstream (e.g. a similarity
@@ -187,11 +178,10 @@ object Graph {
         localGraph(nodeIds, ids.select(col("id")), counts.head, e, bcThresh, seedIds)
           // a weight the driver rounds cannot take declines (see above);
           // a null weight's slot holds 0
-          .filter(g => g.edges.width < 3 ||
-            g.edges.c.forall(w => w > 0 && w <= MaxLocalWeight)) match {
-          case None =>
-            distributedRank(emptyMessage, ids, counts, e, bcThresh, iters, dampNum, dampDen)
-          case Some(g) =>
+          .filterOrElse(g => g.edges.width < 3 ||
+            g.edges.c.forall(w => w > 0 && w <= MaxLocalWeight), "a weight outside the local range") match {
+          case Left(declined) => distributed(declined, e)
+          case Right(g) =>
             ids.unpersist(blocking = false) // the gate may have cached it to count it
             // a null id matches no seed and no edge; it is a seed only
             // when every node is, and keeps its restart mass alone
@@ -201,6 +191,7 @@ object Graph {
             require(nSeeds > 0, emptyMessage)
             val base = seeded.map(s => if (s) RankScale / nSeeds else 0L)
             val ranks = localRanks(g.ids, base, g.edges, iters, dampNum, dampDen)
+            record(nodeIds, op, "local", iters, g.reason)
             val idField = nodeIds.schema.head
             val rows = ranks.indices.map { i =>
               Row(if (i < g.ids.length) ofLong(g.ids(i), idField.dataType) else null, ranks(i))
@@ -213,8 +204,11 @@ object Graph {
   }
 
   /** [[pageRankCore]]'s Spark rounds over the cached (id, is_seed)
-   *  `ids`, whose `counts` are its rows and its seeds. */
+   *  `ids`, whose `counts` are its rows and its seeds; the driver-local
+   *  regime was `declined` for the reason given. */
   private def distributedRank(
+      op: String,
+      declined: String,
       emptyMessage: String,
       ids: DataFrame,
       counts: => Seq[Long],
@@ -248,7 +242,9 @@ object Graph {
     // not the plan estimate: narrow-projection estimates overestimate
     // severalfold and mis-file moderate graphs into the SMJ regime
     // (see [[labelPropagation]]).
-    val bcast = bcThresh > 0 && n * 32L <= bcThresh
+    val gate = fit("nodes", n * 32L, bcThresh)
+    val bcast = gate.isRight
+    record(ids, op, if (bcast) "broadcast" else "sort-merge", iters, gate.fold(identity, _ => declined))
     val e =
       if (bcast) edges.repartition(col("dst")).cache()
       else edges.withColumn("wsum", sum(expr(w)).over(
@@ -650,10 +646,10 @@ object Graph {
   }
 
   /** A graph on the driver: the node ids sorted and distinct, whether a
-   *  null is among them, the edges, and the seed ids (sorted, distinct,
-   *  nulls dropped) when seeds were given. */
-  private final case class LocalGraph(
-      ids: Array[Long], hasNull: Boolean, edges: LongPairs, seeds: Option[Array[Long]])
+   *  null is among them, the edges, the seed ids (sorted, distinct,
+   *  nulls dropped) when seeds were given, and the gate's comparison. */
+  private final case class LocalGraph(ids: Array[Long], hasNull: Boolean, edges: LongPairs,
+      seeds: Option[Array[Long]], reason: String)
 
   /**
    * The driver-local regime's gate, and its inputs. The regime needs the
@@ -664,7 +660,8 @@ object Graph {
    * seed rows; only when the raw node rows do not fit does the exact
    * distinct count decide, which the distributed regimes need anyway.
    * When all fit, one more job collects the node ids, the edges and the
-   * seeds; `None` otherwise. `cachedEdges` is read twice.
+   * seeds; otherwise the comparison that declined. `cachedEdges` is read
+   * twice.
    */
   private def localGraph(
       nodeIds: DataFrame,
@@ -672,23 +669,23 @@ object Graph {
       distinctCount: => Long,
       cachedEdges: DataFrame,
       bcThresh: Long,
-      seeds: Option[DataFrame] = None): Option[LocalGraph] = {
+      seeds: Option[DataFrame] = None): Either[String, LocalGraph] = {
     val counts = LongPairs.count(nodeIds +: cachedEdges +: seeds.toSeq: _*)
     val Seq(nodeRows, edgeRows) = counts.take(2)
     val seedRows = counts.drop(2).sum
-    val nodeSource =
-      if (edgeRows * 8L * cachedEdges.columns.length > bcThresh) None
-      else if ((nodeRows + seedRows) * 32L <= bcThresh) Some(nodeIds)
-      else if ((distinctCount + seedRows) * 32L <= bcThresh) {
-        Some(distinctIds.select(col(nodeIds.columns.head)))
-      } else None
+    val edgeFit = fit("edges", edgeRows * 8L * cachedEdges.columns.length, bcThresh)
+    val nodeSource = edgeFit.flatMap { _ =>
+      if ((nodeRows + seedRows) * 32L <= bcThresh) Right(nodeIds)
+      else fit("nodes", (distinctCount + seedRows) * 32L, bcThresh)
+        .map(_ => distinctIds.select(col(nodeIds.columns.head)))
+    }
     nodeSource.map { source =>
       val collected = LongPairs.collect(source +: cachedEdges +: seeds.toSeq: _*)
       def sortedIds(p: LongPairs) =
         (0 until p.size).filterNot(p.aNull).map(p.a).distinct.sorted.toArray
       val ns = collected.head
       LocalGraph(sortedIds(ns), (0 until ns.size).exists(ns.aNull), collected(1),
-        collected.lift(2).map(sortedIds))
+        collected.lift(2).map(sortedIds), edgeFit.merge)
     }
   }
 
@@ -958,7 +955,7 @@ object Graph {
     }
     require(converged || it < maxIters,
       s"kCore did not converge within $maxIters rounds")
-    IterationDiagnostics.lastKCoreRounds = it
+    record(edges, "kCore", "distributed", it, "no local regime")
     cur.select(col("a").as("node"))
       .unionAll(cur.select(col("b").as("node")))
       .groupBy(longId(col("node")).as("node"))
@@ -1113,12 +1110,13 @@ object Graph {
     // Driver-local regime (the [[pageRankFp]] rationale): when nodes
     // and edges both fit, the rounds run on the driver with the same
     // rule, tie-break and early stop
-    if (bcThresh <= 0) distributedLabelPropagation(mat, matLabels, n, idEdges, bcThresh, rounds)
+    if (bcThresh <= 0) distributedLabelPropagation(mat, matLabels, n, idEdges, bcThresh, rounds, "threshold off")
     else withCached(idEdges) { pairs =>
       localGraph(nodeIds, matLabels, n, pairs, bcThresh) match {
-        case None => distributedLabelPropagation(mat, matLabels, n, pairs, bcThresh, rounds)
-        case Some(g) =>
-          val labels = localLabelPropagation(g.ids, g.edges, rounds)
+        case Left(declined) => distributedLabelPropagation(mat, matLabels, n, pairs, bcThresh, rounds, declined)
+        case Right(g) =>
+          val (labels, r) = localLabelPropagation(g.ids, g.edges, rounds)
+          record(nodes, "labelPropagation", "local", r, g.reason)
           // a null id joins no edge and keeps its (null) label
           val rows = g.ids.indices.map(i => Row(g.ids(i), labels(i))) ++
             (if (g.hasNull) Seq(Row(null, null)) else Nil)
@@ -1130,15 +1128,18 @@ object Graph {
   }
 
   /** [[labelPropagation]]'s Spark rounds from the materialized label
-   *  vector `labels0` (`n` nodes) over the long-id edges `idEdges`. */
+   *  vector `labels0` (`n` nodes) over the long-id edges `idEdges`; the
+   *  driver-local regime was `declined` for the reason given. */
   private def distributedLabelPropagation(
       mat: DataFrame => DataFrame,
       labels0: DataFrame,
       n: Long,
       idEdges: DataFrame,
       bcThresh: Long,
-      rounds: Int): DataFrame = {
-    val bcastRegime = bcThresh > 0 && n * 32L <= bcThresh
+      rounds: Int,
+      declined: String): DataFrame = {
+    val gate = fit("nodes", n * 32L, bcThresh)
+    val bcastRegime = gate.isRight
     // Pre-partition the adjacency ONCE, by the key every round's dominant
     // exchange would otherwise re-derive (guide §2.4 exchange reuse):
     //  - label side broadcastable (the common case until |V| outgrows the
@@ -1188,7 +1189,8 @@ object Graph {
       pinned.unpersist(blocking = false)
       r += 1
     }
-    IterationDiagnostics.lastLpaRounds = r
+    record(idEdges, "labelPropagation", if (bcastRegime) "broadcast" else "sort-merge", r,
+      gate.fold(identity, _ => declined))
     labels
   }
 
@@ -1198,8 +1200,9 @@ object Graph {
    *  dropped, edges with an endpoint outside `ids` ignored — and so is
    *  the rule: the most frequent neighbor label, ties to the larger
    *  `-label` (`max_by(nl, (c, -nl))`), neighborless nodes keep theirs,
-   *  and a round that changes no label ends the loop. */
-  private def localLabelPropagation(ids: Array[Long], e: LongPairs, rounds: Int): Array[Long] = {
+   *  and a round that changes no label ends the loop. Also returns the
+   *  rounds run. */
+  private def localLabelPropagation(ids: Array[Long], e: LongPairs, rounds: Int): (Array[Long], Int) = {
     val n = ids.length
     // canonical edges as lo * n + hi over node indices, deduplicated
     val keys = new Array[Long](e.size)
@@ -1252,8 +1255,7 @@ object Graph {
       converged = !changed
       r += 1
     }
-    IterationDiagnostics.lastLpaRounds = r
-    labels
+    (labels, r)
   }
 }
 
@@ -1295,16 +1297,10 @@ private[operators] object LongPairs {
     (0 until n).map(t => counts.map(_(t)).sum)
   }
 
-  /** When `df` has at most `maxRows` rows, its columns collected by
-   *  [[collect]]; `None` when it is larger. `df` is read twice, to count
-   *  and to collect: cache it first when its plan is expensive. */
-  def collectBounded(df: DataFrame, maxRows: Long): Option[LongPairs] =
-    if (count(df).head > maxRows) None else Some(collect(df).head)
-
   /** The first one to three columns of each frame, cast to long,
    *  collected in one job. Each partition packs its rows into arrays, so
    *  the driver receives a few arrays per partition, not one object per
-   *  row. The caller bounds the sizes (see [[collectBounded]]). */
+   *  row. The caller bounds the sizes with [[count]]. */
   def collect(frames: DataFrame*): Seq[LongPairs] = {
     val spark = frames.head.sparkSession
     import spark.implicits._

@@ -95,14 +95,12 @@ object IvfIndex {
       .where(Similarity.dot(col("vec"), col("vec")) > 0)
       .join(cents)
       .select(col("id"), col("vec"), Similarity.bestCell(col("vec"), col("cents")).as("cell"))
-    if (skipExistingIds) {
-      val a = assigned.cache()
+    if (skipExistingIds) withCached(assigned) { a =>
       val touched = a.select("cell").distinct().collect().map(_.getLong(0)).toSeq
       val existing = spark.read.parquet(s"$path/cells")
         .where(col("cell").isin(touched: _*)).select("id")
       a.join(existing, Seq("id"), "left_anti")
         .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-      a.unpersist()
     } else {
       assigned.write.mode("append").partitionBy("cell").parquet(s"$path/cells")
     }

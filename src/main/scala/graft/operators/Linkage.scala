@@ -83,33 +83,31 @@ object Linkage {
     // Both type tables feed TWO consumers (the purge counts and the
     // candidate join) — cache + materialize so neither recomputes the
     // distinct/groupBy over the full input (the [[Dedup]] discipline)
-    val dT = dRec.select("dn").distinct()
+    val dTypes = dRec.select("dn").distinct()
       .withColumn("bk", explode(blockKeys("dn")))
-      .cache()
-    val cT = clean
+    val cTypes = clean
       .select(col(cleanId).cast("long").as("clean_id"), col(cleanName).as("cn"))
       .where(col("clean_id").isNotNull && col("cn").isNotNull)
       .groupBy("cn").agg(min(col("clean_id")).as("rep_id"))
       .withColumn("bk", explode(blockKeys("cn")))
-      .cache()
-    dT.count(); cT.count()
-    // block purging: degenerate keys pair everything with everything;
-    // cap the per-key type-pair product and drop offenders
-    val okBks = dT.groupBy("bk").agg(count(lit(1)).as("n_dk"))
-      .join(cT.groupBy("bk").agg(count(lit(1)).as("n_ck")), Seq("bk"))
-      .where(col("n_dk") * col("n_ck") <= maxBlockPairs)
-      .select("bk")
-    // a type pair sharing 2+ surviving keys would score twice —
-    // distinct BEFORE the levenshtein so each candidate is scored once.
     // Checkpointing the candidate set is the last consumer of the two
-    // type-table caches — release them here rather than leaving them to
+    // type-table caches, which are released after it rather than left to
     // accumulate in a long-lived session
-    val cand = dT.join(okBks, Seq("bk")).join(cT, Seq("bk"))
-      .select(col("dn"), col("cn"), col("rep_id"))
-      .distinct()
-      .localCheckpoint()
-    dT.unpersist(blocking = false)
-    cT.unpersist(blocking = false)
+    val cand = withCached(dTypes)(dT => withCached(cTypes) { cT =>
+      dT.count(); cT.count()
+      // block purging: degenerate keys pair everything with everything;
+      // cap the per-key type-pair product and drop offenders
+      val okBks = dT.groupBy("bk").agg(count(lit(1)).as("n_dk"))
+        .join(cT.groupBy("bk").agg(count(lit(1)).as("n_ck")), Seq("bk"))
+        .where(col("n_dk") * col("n_ck") <= maxBlockPairs)
+        .select("bk")
+      // a type pair sharing 2+ surviving keys would score twice —
+      // distinct BEFORE the levenshtein so each candidate is scored once
+      dT.join(okBks, Seq("bk")).join(cT, Seq("bk"))
+        .select(col("dn"), col("cn"), col("rep_id"))
+        .distinct()
+        .localCheckpoint()
+    })
     val byName = cand
       .withColumn("dist", levenshtein(col("dn"), col("cn")))
       .where(col("dist") <= maxDist)

@@ -67,28 +67,38 @@ private[graft] object LocalKmeans {
    * errors and nulls). It also declines when a round leaves a non-empty
    * corpus with no centroid, where the distributed assignment reads past
    * an empty array. `corpus` is read twice: cache it first when its plan
-   * is expensive.
+   * is expensive. The call posts a "kmeans" op record either way.
    */
   def apply(corpus: DataFrame, vecCol: String, nlist: Int, iters: Int): Option[LocalKmeans] = {
-    val bcThresh = broadcastThreshold(corpus)
     val vecType = corpus.schema(vecCol).dataType
     // the means below assume the (38,18) quotient type of the default rule
-    val eligible = bcThresh > 0 && nlist >= 1 && (vecType match {
+    val eligible = nlist >= 1 && (vecType match {
       case ArrayType(DoubleType, _) => true
       case _ => false
     }) && corpus.sparkSession.conf
       .get("spark.sql.decimalOperations.allowPrecisionLoss", "true").toBoolean
-    if (!eligible || charge(corpus, vecCol) > bcThresh) return None
-    val (vecs, seeds) = collect(corpus, vecCol, nlist)
-    var cells = Array.tabulate(seeds.length)(i => i + 1L)
-    var cents = seeds.map(vecs)
-    for (_ <- 0 until iters) {
-      val (c, m) = lloydRound(vecs, cells, cents)
-      cells = c
-      cents = m
-      if (cents.isEmpty && vecs.nonEmpty) return None
+    val threshold = broadcastThreshold(corpus)
+    lazy val bytes = charge(corpus, vecCol)
+    val gate =
+      if (!eligible) Left(s"nlist $nlist, vectors ${vecType.sql} or allowPrecisionLoss off")
+      else if (threshold > 0 && bytes == Long.MaxValue) Left("a null, NaN or out-of-range element")
+      else fit("vectors", bytes, threshold)
+    val km = gate.flatMap { _ =>
+      val (vecs, seeds) = collect(corpus, vecCol, nlist)
+      var cells = Array.tabulate(seeds.length)(i => i + 1L)
+      var cents = seeds.map(vecs)
+      def stuck = cents.isEmpty && vecs.nonEmpty
+      for (_ <- 0 until iters if !stuck) {
+        val (c, m) = lloydRound(vecs, cells, cents)
+        cells = c
+        cents = m
+      }
+      if (stuck) Left("a round left no centroid")
+      else Right(new LocalKmeans(corpus.sparkSession, vecType, cells, cents, iters))
     }
-    Some(new LocalKmeans(corpus.sparkSession, vecType, cells, cents, iters))
+    record(corpus, "kmeans", if (km.isRight) "local" else "distributed", iters,
+      km.fold(identity, _ => gate.merge))
+    km.toOption
   }
 
   /**

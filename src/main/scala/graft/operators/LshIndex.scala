@@ -119,18 +119,18 @@ object LshIndex {
       bands: Int,
       buckets: Int,
       mode: String): Unit = {
-    val sets = shingled(docs, idCol, textCol, n).cache()
-    // bucket-aligned files, as in TextIndex.build: without the
-    // repartition every task emits a file per bucket it sees
-    bandedKeys(sets, numHashes, bands)
-      .withColumn("bucket", pmod(col("key"), lit(buckets.toLong)))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/postings")
-    sets
-      .withColumn("sbucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .repartition(col("sbucket"))
-      .write.mode(mode).partitionBy("sbucket").parquet(s"$path/shingles")
-    sets.unpersist()
+    withCached(shingled(docs, idCol, textCol, n)) { sets =>
+      // bucket-aligned files, as in TextIndex.build: without the
+      // repartition every task emits a file per bucket it sees
+      bandedKeys(sets, numHashes, bands)
+        .withColumn("bucket", pmod(col("key"), lit(buckets.toLong)))
+        .repartition(col("bucket"))
+        .write.mode(mode).partitionBy("bucket").parquet(s"$path/postings")
+      sets
+        .withColumn("sbucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
+        .repartition(col("sbucket"))
+        .write.mode(mode).partitionBy("sbucket").parquet(s"$path/shingles")
+    }
   }
 
   /**

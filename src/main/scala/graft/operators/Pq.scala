@@ -59,13 +59,12 @@ object Pq {
       quantScale: Int = 1000): Seq[Codebook] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
     val sub = dim / m
-    val q = Clustering.quantized(df, idCol, vecCol, quantScale).cache()
-    try {
+    withCached(Clustering.quantized(df, idCol, vecCol, quantScale)) { q =>
       (0 until m).map { b =>
         val qb = q.select(col("id"), slice(col("v"), b * sub + 1, sub).as("v"))
         Clustering.trainCentroids(qb, k, iters)
       }
-    } finally q.unpersist()
+    }
   }
 
   /** Nearest-codeword label for one block, as a single-pass expression. */
@@ -201,9 +200,8 @@ object Pq {
     require(m >= 1 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
     require(nprobe >= 1 && nprobe <= coarseK, "1 <= nprobe <= coarseK")
     val sub = dim / m
-    val q = Clustering.quantized(df, idCol, vecCol, quantScale).cache()
     val (coarse, books, queries) =
-      try {
+      withCached(Clustering.quantized(df, idCol, vecCol, quantScale)) { q =>
         val coarse = Clustering.trainCentroids(q, coarseK, iters)
         val books = (0 until m).map { b =>
           Clustering.trainCentroids(
@@ -212,7 +210,7 @@ object Pq {
         val queries = q.orderBy("id").limit(nq).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         (coarse, books, queries)
-      } finally q.unpersist()
+      }
 
     // cell + codes in ONE projection (all centroid literals in-plan)
     val coded = books.zipWithIndex.foldLeft(

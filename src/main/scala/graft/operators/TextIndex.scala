@@ -94,31 +94,36 @@ object TextIndex {
       path: String,
       buckets: Int = 0): Unit = {
     require(buckets >= 0, "buckets must be positive (or 0 = derive)")
-    val b = if (buckets == 0) adaptiveBuckets(corpus) else buckets
+    write(corpus, idCol, textCol, path, if (buckets == 0) adaptiveBuckets(corpus) else buckets,
+      "overwrite")
+  }
+
+  /** Writes `corpus`'s postings, per-term df rows and stats row into
+   *  `b` buckets with save `mode`: a new index, or one more generation. */
+  private def write(corpus: DataFrame, idCol: String, textCol: String, path: String, b: Int,
+      mode: String): Unit = {
     val toks = corpus.select(col(idCol).as("id"),
         TextOps.words(col(textCol)).as("ws"))
       .select(col("id"), size(col("ws")).cast("long").as("dl"),
         explode(col("ws")).as("term"))
-    val postings = toks
-      .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(b.toLong)))
-      .cache()
-    // bucket-aligned files: without the repartition every write task
-    // emits a file per bucket it sees (tasks x buckets small files);
-    // aligned, each bucket directory gets contiguous files
-    postings.repartition(col("bucket")).write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    postings.groupBy("bucket", "term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/terms")
-    // corpus stats from the postings themselves: n_docs counts distinct
-    // posting docs (== docs with at least one token), tot_tokens sums tf.
-    // The bucket count rides this row — one table serves both purposes,
-    // so query/append pay one metadata read instead of two
-    postings.agg(countDistinct(col("id")).as("n_docs"),
-        sum(col("tf")).as("tot_tokens"))
-      .withColumn("buckets", lit(b))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    postings.unpersist()
+    withCached(toks.groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
+      .withColumn("bucket", pmod(xxhash64(col("term")), lit(b.toLong)))) { postings =>
+      // bucket-aligned files: without the repartition every write task
+      // emits a file per bucket it sees (tasks x buckets small files);
+      // aligned, each bucket directory gets contiguous files
+      postings.repartition(col("bucket")).write.mode(mode).partitionBy("bucket")
+        .parquet(s"$path/postings")
+      postings.groupBy("bucket", "term").agg(count(lit(1)).as("df"))
+        .write.mode(mode).partitionBy("bucket").parquet(s"$path/terms")
+      // corpus stats from the postings themselves: n_docs counts distinct
+      // posting docs (== docs with at least one token), tot_tokens sums tf.
+      // The bucket count rides this row — one table serves both purposes,
+      // so query/append pay one metadata read instead of two
+      postings.agg(countDistinct(col("id")).as("n_docs"),
+          sum(col("tf")).as("tot_tokens"))
+        .withColumn("buckets", lit(b))
+        .write.mode(mode).parquet(s"$path/stats")
+    }
   }
 
   /**
@@ -140,24 +145,7 @@ object TextIndex {
       textCol: String,
       path: String,
       buckets: Int = 0): Unit = {
-    val b = resolveBuckets(corpus.sparkSession, path, buckets)
-    val toks = corpus.select(col(idCol).as("id"),
-        TextOps.words(col(textCol)).as("ws"))
-      .select(col("id"), size(col("ws")).cast("long").as("dl"),
-        explode(col("ws")).as("term"))
-    val postings = toks
-      .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(b.toLong)))
-      .cache()
-    postings.repartition(col("bucket")).write.mode("append").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    postings.groupBy("bucket", "term").agg(count(lit(1)).as("df"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/terms")
-    postings.agg(countDistinct(col("id")).as("n_docs"),
-        sum(col("tf")).as("tot_tokens"))
-      .withColumn("buckets", lit(b))
-      .write.mode("append").parquet(s"$path/stats")
-    postings.unpersist()
+    write(corpus, idCol, textCol, path, resolveBuckets(corpus.sparkSession, path, buckets), "append")
   }
 
   /**

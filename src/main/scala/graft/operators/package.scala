@@ -34,6 +34,7 @@ package graft
 package object operators {
 
   import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.graft.ListenerBusAccess
   import org.apache.spark.sql.functions.{array, element_at, transform}
 
   /**
@@ -65,6 +66,23 @@ package object operators {
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
     }
   }
+
+  /** The gate's comparison of `what`'s `bytes` (not computed when the
+   *  threshold is off) with `threshold`: Right when it fits, Left when it
+   *  declines, e.g. "edges 38200000 bytes > threshold 10485760". */
+  private[operators] def fit(what: String, bytes: => Long, threshold: Long): Either[String, String] =
+    if (threshold <= 0) Left("threshold off")
+    else {
+      val b = bytes
+      val s = s"$what $b bytes ${if (b > threshold) ">" else "<="} threshold $threshold"
+      if (b > threshold) Left(s) else Right(s)
+    }
+
+  /** Posts `op`'s regime decision for [[graft.tools.Instrument]]. It only
+   *  enqueues, so it is safe inside a timed pass. */
+  private[operators] def record(df: DataFrame, op: String, regime: String, rounds: Int,
+      reason: String): Unit =
+    ListenerBusAccess.post(df.sparkSession.sparkContext, graft.tools.OpRecord(op, regime, rounds, reason))
 
   /**
    * Round-robin fan-out for a CPU-heavy per-row stage downstream of an

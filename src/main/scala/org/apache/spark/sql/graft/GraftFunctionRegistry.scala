@@ -17,6 +17,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression,
   ExpressionInfo, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -491,13 +492,15 @@ object GraftFunctionRegistry {
       SketchAccumulate(args, ThetaFamily.fromConf(), "theta_accumulate")
     },
     fd("theta_union",
-      "_FUNC_(sketch) - Merges serialized theta sketches into their union (BINARY).",
-      Seq(1),
+      "_FUNC_(sketch) - Merges serialized theta sketches into their union (BINARY). " +
+        "_FUNC_(a, b[, lgNomEntries]) is Spark's built-in union of two sketches.",
+      Seq(1, 2, 3),
       Seq(sketchArg),
       Seq(("SELECT theta_estimate(_FUNC_(s)) FROM " +
         "(SELECT theta_accumulate(col) s FROM VALUES ('a'), ('b') tab(col) GROUP BY col)") -> "2"),
       "agg_funcs") { args =>
-      SketchCombine(args(0), ThetaFamily.fromConf(), "theta_union")
+      if (args.length == 1) SketchCombine(args(0), ThetaFamily.fromConf(), "theta_union")
+      else FunctionRegistry.builtin.lookupFunctionBuilder(FunctionIdentifier("theta_union")).get(args)
     },
     fd("theta_intersect",
       "_FUNC_(sketch) - Intersects serialized theta sketches (BINARY); NULL for an " +

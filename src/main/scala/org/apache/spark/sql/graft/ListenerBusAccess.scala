@@ -1,16 +1,17 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 
 /**
- * Bridge to the `private[spark]` listener bus: the bench attributes
- * per-query counters (jobs / tasks / shuffle bytes) to the pass that
- * generated them, and listener events are delivered asynchronously — a
- * bounded drain between passes is the only way to keep the attribution
- * exact without sleeping inside the harness. Diagnostic path only;
- * never called inside a timed region.
+ * Bridge to the `private[spark]` listener bus, for `graft.tools.Instrument`.
+ * Operators post their op records through it inside timed passes; posting
+ * only enqueues. Events are delivered asynchronously, so the instrument
+ * drains the bus between passes, never inside one.
  */
 object ListenerBusAccess {
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
+
   /** Block until every queued listener event is delivered, or the
    *  timeout elapses — whichever first. Never throws. */
   def drain(sc: SparkContext, timeoutMs: Long = 2000L): Unit =

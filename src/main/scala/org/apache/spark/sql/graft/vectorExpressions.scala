@@ -174,9 +174,9 @@ case class NearestCells(vec: Expression, cents: Expression, nprobe: Int)
    *  of the list it came from: every row of a plan carries the same
    *  broadcast list, so it is unpacked once per task instead of per row.
    *  The list is matched by content, because a reused row buffer can hold
-   *  a different list at the same address. One immutable snapshot, so
-   *  concurrent callers at worst unpack twice. */
-  @transient @volatile private var unpacked: (ArrayData, Array[Long], Array[Array[Double]]) = _
+   *  a different list at the same address. One immutable snapshot, safely
+   *  published by its final fields: concurrent callers at worst unpack twice. */
+  @transient private var unpacked: (ArrayData, Array[Long], Array[Array[Double]]) = _
 
   def compute(v: ArrayData, cs: ArrayData): ArrayData = {
     var u = unpacked

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Expression, ThetaUnion}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.graft.GraftFunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,5 +46,23 @@ class FunctionContractSuite extends AnyFunSuite with GraftSparkSession {
       d.contains("Arguments:") && d.contains("Examples:")
     }
     assert(undocumented.isEmpty, undocumented.mkString(", "))
+  }
+
+  test("no graft function shares a name with a Spark built-in except theta_union") {
+    val shared = functions.map(_._1).filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shared === Seq("theta_union"))
+  }
+
+  test("theta_union with two or three arguments is Spark's built-in; with one, graft's aggregate") {
+    val sketches = "(SELECT theta_sketch_agg(a) sa, theta_sketch_agg(b) sb FROM VALUES (1, 2), (3, 4), (1, 5) t(a, b))"
+    Seq("theta_union(sa, sb)", "theta_union(sa, sb, 12)").foreach { call =>
+      val df = spark.sql(s"SELECT theta_sketch_estimate($call) FROM $sketches")
+      assert(df.head().getLong(0) === 5L, call)
+      assert(df.queryExecution.analyzed.collectFirst { case p: Project =>
+        p.projectList.head.collectFirst { case u: ThetaUnion => u } }.flatten.isDefined, call)
+    }
+    val graft = spark.sql("SELECT theta_estimate(theta_union(s)) FROM " +
+      "(SELECT theta_accumulate(col) s FROM VALUES ('a'), ('b'), ('a') tab(col) GROUP BY col)")
+    assert(graft.head().getLong(0) === 2L)
   }
 }

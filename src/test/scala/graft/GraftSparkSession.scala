@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.ListenerBusAccess
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
+
+import graft.tools.{Instrument, Snapshot}
 
 /** Shared local SparkSession for the test suites, with graft functions installed. */
 trait GraftSparkSession extends BeforeAndAfterAll { self: Suite =>
@@ -24,21 +24,18 @@ trait GraftSparkSession extends BeforeAndAfterAll { self: Suite =>
     try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
-  /** The Spark jobs `body` starts. Listener events arrive asynchronously,
-   *  so the bus is drained before counting starts and before it ends. */
-  def jobsIn(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
+  /** `body`'s value and the Spark work and op records it caused. */
+  def instrumented[T](body: => T): (T, Snapshot) = {
+    val inst = new Instrument(spark)
     try {
-      body
-      ListenerBusAccess.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
+      inst.reset()
+      val out = body
+      (out, inst.snapshot())
+    } finally inst.close()
   }
+
+  /** The Spark jobs `body` starts. */
+  def jobsIn(body: => Any): Int = instrumented(body)._2.jobs.toInt
 }
 
 object GraftSparkSession {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -11,6 +10,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Graph}
+import graft.tools.Snapshot
 
 /**
  * The iterative graph operators give one answer in every regime:
@@ -56,32 +56,26 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     Seq("local" -> "10485760", "broadcast" -> (n * 32).toString, "sort-merge" -> "-1")
   }
 
-  private def isLocal(df: DataFrame): Boolean = df.queryExecution.logical match {
-    case _: LocalRelation => true
-    case _ => false
-  }
-
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getAs[Number](0).longValue)
 
-  /** Runs `op` in every regime; checks that only the local threshold
-   *  gives a local frame and that all regimes agree. Returns the jobs
-   *  each regime ran, the result's collect included. */
+  /** Runs `op` in every regime; checks that each threshold records its
+   *  regime and that all regimes agree. Returns what each regime ran,
+   *  the result's collect included. */
   private def sameInEveryRegime(nodes: DataFrame, edges: DataFrame)(
-      op: => DataFrame): Map[String, Int] = {
+      op: => DataFrame): Map[String, Snapshot] = {
     val out = regimes(nodes, edges).map { case (name, t) =>
       withSQLConf(Threshold -> t) {
-        var got: (Seq[(String, DataType)], Seq[Row]) = null
-        val jobs = jobsIn {
+        val (got, snap) = instrumented {
           val df = op
-          assert(isLocal(df) === (name == "local"), name)
-          got = (df.schema.map(f => (f.name, f.dataType)), rows(df))
+          (df.schema.map(f => (f.name, f.dataType)), rows(df))
         }
-        (name, got, jobs)
+        assert(snap.ops.map(_.regime) === Seq(name), snap.ops)
+        (name, got, snap)
       }
     }
     out.tail.foreach { case (name, got, _) => assert(got === out.head._2, s"$name vs local") }
-    out.map { case (name, _, jobs) => name -> jobs }.toMap
+    out.map { case (name, _, snap) => name -> snap }.toMap
   }
 
   /** The value of `f`, or the class of its error's root cause. */
@@ -122,6 +116,7 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     test(s"$name: local, broadcast and sort-merge regimes agree ($iters iterations)") {
       Seq(awkward(), intGraph()).foreach { case (nodes, edges) =>
         val jobs = sameInEveryRegime(nodes, edges)(pageRank(name, nodes, edges, iters))
+          .map { case (regime, snap) => regime -> snap.jobs }
         assert(jobs("local") <= 2, jobs)
         Seq("broadcast", "sort-merge").foreach { regime =>
           assert(jobs(regime) <= jobsBefore(name)(iters)(regime), s"$regime: $jobs")
@@ -169,12 +164,12 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
       "a weight whose rank * w overflows" -> firstWeighs(lit(Long.MaxValue / 2))).foreach {
       case (name, w) =>
         val e = weighted(edges).withColumn("w", w)
-        val got = Seq("10485760", "-1").map { t =>
+        val got = Seq("10485760" -> ("broadcast", "a weight outside the local range"),
+          "-1" -> ("sort-merge", "threshold off")).map { case (t, decision) =>
           withSQLConf(Threshold -> t) {
-            outcome(Graph.weightedPageRankFp(nodes, e, "id", "w", 3)).map { df =>
-              assert(!isLocal(df), s"the local regime took $name")
-              rows(df)
-            }
+            val (out, snap) = instrumented(outcome(Graph.weightedPageRankFp(nodes, e, "id", "w", 3)))
+            assert(snap.ops.map(r => (r.regime, r.reason)) === Seq(decision), name)
+            out.map(rows)
           }
         }
         assert(got.head === got.last, name)
@@ -188,13 +183,11 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
   Seq(3, 10).foreach { rounds =>
     test(s"labelPropagation: local, broadcast and sort-merge regimes agree ($rounds rounds)") {
       Seq(awkward(), intGraph()).foreach { case (nodes, edges) =>
-        var counted = Seq.empty[Int]
-        sameInEveryRegime(nodes, edges) {
-          val df = Graph.labelPropagation(nodes, edges, "id", "src", "dst", rounds)
-          counted :+= Graph.IterationDiagnostics.lastLpaRounds
-          df
+        val counted = sameInEveryRegime(nodes, edges)(
+          Graph.labelPropagation(nodes, edges, "id", "src", "dst", rounds)).map { case (regime, snap) =>
+          regime -> snap.ops.head.rounds
         }
-        assert(counted.distinct.size === 1, s"rounds per regime: $counted")
+        assert(counted.values.toSet.size === 1, s"rounds per regime: $counted")
       }
     }
   }
@@ -203,11 +196,41 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     import spark.implicits._
     val nodes = Seq("a", "b", "c").toDF("id")
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "b")).toDF("src", "dst")
-    val (local, smj) = Seq("10485760", "-1").map { t =>
-      withSQLConf(Threshold -> t)(Graph.pageRankFp(nodes, edges, "id", 3))
-    } match { case Seq(a, b) => (a, b) }
-    assert(!isLocal(local))
+    val (local, snap) = withSQLConf(Threshold -> "10485760")(instrumented(Graph.pageRankFp(nodes, edges, "id", 3)))
+    assert(snap.ops.map(r => (r.regime, r.reason)) === Seq(("broadcast", "non-integral ids")))
+    val smj = withSQLConf(Threshold -> "-1")(Graph.pageRankFp(nodes, edges, "id", 3))
     assert(local.collect().toSet === smj.collect().toSet)
+  }
+
+  test("two labelPropagation calls at once each record their own rounds") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // a path: synchronous LPA keeps relabeling it for more than 4 rounds
+    val nodes = (0L until 30L).toDF("id")
+    val edges = (0L until 29L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (_, snap) = instrumented(Await.result(Future.sequence(Seq(1, 4).map(r => Future(
+      Graph.labelPropagation(nodes, edges, "id", "src", "dst", r).collect()))),
+      scala.concurrent.duration.Duration(5, "min")))
+    assert(snap.ops.map(r => (r.op, r.regime, r.rounds)).sortBy(_._3) ===
+      Seq(("labelPropagation", "local", 1), ("labelPropagation", "local", 4)))
+  }
+
+  test("kCore and connectedComponents record their regime and rounds") {
+    import spark.implicits._
+    // a 10-node path peels two ends a round: 5 rounds to the empty 2-core
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (_, core) = instrumented(Graph.kCore(path, "src", "dst", k = 2).collect())
+    assert(core.ops.map(r => (r.op, r.regime, r.rounds)) === Seq(("kCore", "distributed", 5)))
+    val (nodes, edges) = intGraph()
+    val pairs = edges.select(col("src").as("id_a"), col("dst").as("id_b"))
+    val decisions = Seq("10485760", "-1").map { t =>
+      withSQLConf(Threshold -> t)(instrumented(Dedup.connectedComponents(nodes, pairs).collect()))
+        ._2.ops.map(r => (r.op, r.regime, r.reason))
+    }
+    val fits = s"pairs ${edges.count() * 16} bytes <= threshold 10485760"
+    assert(decisions === Seq(Seq(("connectedComponents", "local", fits)),
+      Seq(("connectedComponents", "distributed", "threshold off"))))
   }
 
   test("labelPropagation: non-numeric ids still raise in the local regime") {

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.NearestCells
 import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, IvfIndex, LocalKmeans, Similarity}
+import graft.tools.OpRecord
 
 /**
  * The k-means quantizer behind IVF and semantic dedup gives one answer in
@@ -35,10 +35,15 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     rows.toDF("id", "vec")
   }
 
-  private def isLocal(df: DataFrame): Boolean = df.queryExecution.logical match {
-    case _: LocalRelation => true
-    case _ => false
+  /** `body`'s value and the op record of the one k-means it ran. */
+  private def kmeansRecord[T](body: => T): (T, OpRecord) = {
+    val (out, snap) = instrumented(body)
+    assert(snap.ops.map(_.op) === Seq("kmeans"), snap.ops)
+    (out, snap.ops.head)
   }
+
+  /** The regime of `body`'s one k-means. */
+  private def regimeOf(body: => Any): String = kmeansRecord(body)._2.regime
 
   /** cell -> centroid bits, so -0.0 and NaN payloads count too. */
   private def bits(centroids: DataFrame): Map[Long, Seq[Long]] =
@@ -46,12 +51,13 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
       r.getLong(0) -> r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)
     }.toMap
 
-  /** Both regimes' centroids, asserting which regime each took. */
-  private def bothRegimes(df: DataFrame, nlist: Int, iters: Int): (DataFrame, DataFrame) = {
-    val local = Similarity.kmeansCentroids(df, "vec", nlist, iters)
-    val dist = withSQLConf(Off)(Similarity.kmeansCentroids(df, "vec", nlist, iters))
-    assert(!isLocal(dist))
-    (local, dist)
+  /** The centroids under the default threshold, with the record of the
+   *  regime they took, and under the threshold off, checked distributed. */
+  private def bothRegimes(df: DataFrame, nlist: Int, iters: Int): (DataFrame, OpRecord, DataFrame) = {
+    val (local, record) = kmeansRecord(Similarity.kmeansCentroids(df, "vec", nlist, iters))
+    val (dist, off) = withSQLConf(Off)(kmeansRecord(Similarity.kmeansCentroids(df, "vec", nlist, iters)))
+    assert((off.regime, off.reason) === ("distributed", "threshold off"))
+    (local, record, dist)
   }
 
   /** The outcome of `f`: its value, or the class and message of its error. */
@@ -64,8 +70,9 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
 
   Seq((16, 3), (8, 3), (4, 2), (1, 1), (8, 0)).foreach { case (nlist, iters) =>
     test(s"kmeansCentroids: local centroids are the distributed ones bit for bit ($nlist/$iters)") {
-      val (local, dist) = bothRegimes(corpus(), nlist, iters)
-      assert(isLocal(local))
+      val (local, record, dist) = bothRegimes(corpus(), nlist, iters)
+      assert(record.regime === "local")
+      assert(record.rounds === iters)
       assert(local.schema.map(_.dataType) === dist.schema.map(_.dataType))
       val want = bits(dist)
       if (iters == 0) assert(want.size === nlist)
@@ -81,10 +88,12 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     val (vecs, seeds) = LocalKmeans.collect(df, "vec", 16)
     assert(SizeEstimator.estimate(vecs) <= charged + 64)
     assert(seeds.length === 16)
-    withSQLConf(Threshold -> charged.toString)(
-      assert(isLocal(Similarity.kmeansCentroids(df, "vec", 16, 1))))
-    withSQLConf(Threshold -> (charged - 1).toString)(
-      assert(!isLocal(Similarity.kmeansCentroids(df, "vec", 16, 1))))
+    def gate(threshold: Long) = withSQLConf(Threshold -> threshold.toString)(
+      kmeansRecord(Similarity.kmeansCentroids(df, "vec", 16, 1))._2)
+    assert((gate(charged).regime, gate(charged).reason) ===
+      ("local", s"vectors $charged bytes <= threshold $charged"))
+    assert((gate(charged - 1).regime, gate(charged - 1).reason) ===
+      ("distributed", s"vectors $charged bytes > threshold ${charged - 1}"))
   }
 
   test("build writes the same index in both regimes, locally in at most 5 jobs") {
@@ -94,9 +103,11 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
   private def buildBoth(local: String, dist: String): Unit = {
     val vecs = corpus()
     val queries = vecs.where(col("id") % 20 === 0)
-    val jobs = jobsIn(IvfIndex.build(vecs, "id", "vec", local, nlist = 16, kmeansIters = 3))
-    assert(jobs <= 5, s"$jobs jobs")
-    withSQLConf(Off)(IvfIndex.build(vecs, "id", "vec", dist, nlist = 16, kmeansIters = 3))
+    val (_, built) = instrumented(IvfIndex.build(vecs, "id", "vec", local, nlist = 16, kmeansIters = 3))
+    assert(built.jobs <= 5, s"${built.jobs} jobs")
+    assert(built.ops.map(r => (r.op, r.regime, r.rounds)) === Seq(("kmeans", "local", 3)))
+    assert(withSQLConf(Off)(regimeOf(
+      IvfIndex.build(vecs, "id", "vec", dist, nlist = 16, kmeansIters = 3))) === "distributed")
 
     assert(bits(spark.read.parquet(s"$local/centroids")) ===
       bits(spark.read.parquet(s"$dist/centroids")))
@@ -168,8 +179,8 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     cases.foreach { case (name, vs) =>
       val df = vs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("id", "vec")
       Seq((16, 3), (3, 2), (1, 1), (4, 0)).foreach { case (nlist, iters) =>
-        val (local, dist) = bothRegimes(df, nlist, iters)
-        assert(isLocal(local), s"$name $nlist/$iters")
+        val (local, record, dist) = bothRegimes(df, nlist, iters)
+        assert(record.regime === "local", s"$name $nlist/$iters")
         assert(bits(local) === bits(dist), s"$name $nlist/$iters")
       }
     }
@@ -207,8 +218,10 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     import spark.implicits._
     val df = Seq.fill(5)(Array.empty[Double]).zipWithIndex
       .map { case (x, i) => (i.toLong, x) }.toDF("id", "vec")
-    // one round: every member of the one live cell is empty, so none is left
-    val (local, dist) = bothRegimes(df, 3, 1)
+    // one round: every member of the one live cell is empty, so none is
+    // left, and the local regime declines
+    val (local, record, dist) = bothRegimes(df, 3, 1)
+    assert((record.regime, record.reason) === ("distributed", "a round left no centroid"))
     assert(bits(local).isEmpty && bits(dist).isEmpty)
     // a second round over no centroid: the local regime declines, and both
     // give Spark's answer
@@ -227,8 +240,9 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     bad.foreach { case (name, extra) =>
       val df = (base.map { case (i, x) => i -> x.map(Double.box) } ++ extra).toDF("id", "vec")
       Seq((4, 2), (8, 0)).foreach { case (nlist, iters) =>
-        val local = Similarity.kmeansCentroids(df, "vec", nlist, iters)
-        assert(!isLocal(local), name)
+        val (local, record) = kmeansRecord(Similarity.kmeansCentroids(df, "vec", nlist, iters))
+        assert((record.regime, record.reason) === ("distributed", "a null, NaN or out-of-range element"),
+          name)
         val got = outcome(bits(local))
         assert(got === outcome(withSQLConf(Off)(
           bits(Similarity.kmeansCentroids(df, "vec", nlist, iters)))), s"$name $nlist/$iters")

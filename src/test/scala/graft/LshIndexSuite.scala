@@ -65,4 +65,17 @@ class LshIndexSuite extends AnyFunSuite with GraftSparkSession {
       assert(LshIndex.query(spark, path, novel, "doc_id", "text").count() === 0L)
     }
   }
+
+  test("a failing build leaves no cached plan behind") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where(col("doc_id") < 50)
+    val cache = spark.sharedState.cacheManager
+    withTempDir("graft_lsh_fail") { dir =>
+      // the index's parent is a regular file, so its first write fails
+      val file = new java.io.File(dir, "file")
+      assert(file.createNewFile())
+      cache.clearCache()
+      intercept[Exception](LshIndex.build(docs, "doc_id", "text", s"$file/index"))
+      assert(cache.isEmpty)
+    }
+  }
 }

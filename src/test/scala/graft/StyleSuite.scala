@@ -24,7 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * catalogue's timezone pin and the CLI mains: graft runs inside the
  * caller's session, so operator code never flips a conf its other
  * queries read. Tests create temp dirs only through
- * `GraftSparkSession.withTempDir`, which deletes them afterwards.
+ * `GraftSparkSession.withTempDir`, which deletes them afterwards. No
+ * `@volatile` field holds diagnostics or caches in `src/main/scala`, and
+ * `graft.tools.Instrument` is its one `SparkListener`: Spark work is
+ * counted, and decisions recorded, in one place.
  */
 class StyleSuite extends AnyFunSuite {
 
@@ -103,6 +106,23 @@ class StyleSuite extends AnyFunSuite {
     if (!rel.startsWith("src/test/scala") || rel.endsWith("graft/GraftSparkSession.scala")) Nil
     else lines.zipWithIndex.collect {
       case (l, i) if l.contains(needle) => s"$p:${i + 1}: temp dir outside withTempDir"
+    }
+  }
+
+  check("no @volatile field under src/main/scala") { (p, lines) =>
+    val needle = "@" + "volatile" // split so this file passes its own gate
+    if (!p.toString.replace('\\', '/').startsWith("src/main/scala")) Nil
+    else lines.zipWithIndex.collect {
+      case (l, i) if l.contains(needle) => s"$p:${i + 1}: $needle field"
+    }
+  }
+
+  check("the instrument is the one SparkListener subclass under src/main/scala") { (p, lines) =>
+    val rel = p.toString.replace('\\', '/')
+    if (!rel.startsWith("src/main/scala") || rel.endsWith("graft/tools/Instrument.scala")) Nil
+    else lines.zipWithIndex.collect {
+      case (l, i) if l.matches(""".*\b(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b.*""") =>
+        s"$p:${i + 1}: SparkListener subclass outside graft.tools.Instrument"
     }
   }
 
