@@ -191,6 +191,18 @@ try:
     assert all(r["count"] == 3 for r in per_query), per_query
 finally:
     shutil.rmtree(ivf, ignore_errors=True)
+# product quantization: m = 4 codes a vector; IVF-PQ top-k never returns
+# the query itself
+codes = DataFrame(api.pqEncode(emb._jdf, "vec_id", "embedding", 64, 4, 4, 1), spark)
+assert codes.columns == ["id", "code_0", "code_1", "code_2", "code_3"], codes.columns
+assert codes.count() == n_emb and codes.select("id").distinct().count() == n_emb
+pq_hits = DataFrame(api.pqIvfAdcSearch(emb._jdf, "vec_id", "embedding",
+                                       64, 4, 4, 1, 4, 2, 3, 5), spark).collect()
+assert pq_hits and all(r["query_id"] != r["vec_id"] for r in pq_hits), pq_hits
+per_pq_query = {}
+for r in pq_hits:
+    per_pq_query[r["query_id"]] = per_pq_query.get(r["query_id"], 0) + 1
+assert len(per_pq_query) <= 3 and max(per_pq_query.values()) <= 5, per_pq_query
 cov = DataFrame(api.covarianceN2(emb._jdf, "embedding"), spark)
 assert cov.count() == 64 * 65 // 2
 pca = DataFrame(api.pcaProject(emb._jdf, "vec_id", "embedding", 4), spark)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
  *    stateless projection against BROADCAST centroid literals (k*d
  *    doubles baked into the plan — no join, no shuffle of the corpus),
  *    and the centroid update is one `posexplode` + groupBy(cluster, dim)
- *    shuffle of k*d partial sums with map-side combine. The corpus is
- *    never collected; the driver holds only the k*d centroid matrix per
- *    iteration (the same bounded-scalar contract as the IVF probe-set
- *    collect, `IvfIndex.scala`).
+ *    shuffle of k*d partial sums with map-side combine. One trainer
+ *    ([[train]]) fits every codebook a call needs — product
+ *    quantization's m subspace codebooks and IVF-PQ's coarse quantizer
+ *    ([[Pq]]) — in the same rounds: the views add a `view` key to the
+ *    shuffle, not jobs. The corpus is never collected; the driver holds
+ *    only the centroid matrices per iteration (the same bounded-scalar
+ *    contract as the IVF probe-set collect, `IvfIndex.scala`).
  *  - DETERMINISTIC REPLAY: vectors are quantized to an integer lattice
  *    (`round(x * quantScale)`), centroid updates use the floor of the
  *    per-cluster mean, and ties in the argmin break toward the smallest
@@ -32,12 +35,38 @@ import org.apache.spark.sql.functions._
  */
 object Clustering {
 
+  /** A k-means codebook: (seed label, centroid), id-ascending. */
+  private[operators] type Codebook = Seq[(Long, Array[Double])]
+
+  /** A codebook of `k` centroids over dims [off, off+len) of `v`, or all of `v` if `len < 0`. */
+  private[operators] final case class View(k: Int, off: Int = 0, len: Int = -1) {
+    def of(v: Column): Column = if (len < 0) v else slice(v, off + 1, len)
+    def of(v: Array[Double]): Array[Double] = if (len < 0) v else v.slice(off, off + len)
+
+    /** Nearest-centroid label of this view of `v`, a slice bound once per row. */
+    def label(v: Column, cents: Codebook): Column =
+      if (len < 0) nearest(v, cents) else boundOnce(of(v))(nearest(_, cents))
+  }
+
   /** Squared L2 distance to a centroid literal, sequential over dims. */
-  private def sqDist(v: Column, cent: Array[Double]): Column =
+  private[operators] def sqDist(v: Column, cent: Array[Double]): Column =
     aggregate(
       zip_with(v, typedlit(cent.toSeq), (a, b) => (a - b) * (a - b)),
       lit(0.0d),
       (acc, x) => acc + x)
+
+  /** Distances from `v` to every centroid, in codebook order. */
+  private def sqDists(v: Column, cents: Codebook): Column =
+    array(cents.map { case (_, c) => sqDist(v, c) }: _*)
+
+  /** 1-based position of the first minimum: ties go to the lower seed id. */
+  private def argmin(dists: Column): Column =
+    array_position(dists, array_min(dists)).cast("int")
+
+  /** Nearest-centroid label of `v`: a pure projection against centroid
+   *  literals, no join and no shuffle. */
+  private[operators] def nearest(v: Column, cents: Codebook): Column =
+    element_at(typedlit(cents.map(_._1)), argmin(sqDists(v, cents)))
 
   /**
    * Assign every row to the nearest of `k` centroids after `iters`
@@ -53,8 +82,8 @@ object Clustering {
       iters: Int,
       quantScale: Int = 1000): DataFrame = {
     val q = quantized(df, idCol, vecCol, quantScale)
-    assignToCentroids(q, trainCentroids(q, k, iters))
-      .select(col("id"), col("cluster"))
+    val (Seq(cents), _) = train(q, Seq(View(k)), iters)
+    q.select(col("id"), nearest(col("v"), cents).as("cluster"))
   }
 
   /** Project to (id, v) on the integer lattice — the trainer's input. */
@@ -65,48 +94,44 @@ object Clustering {
       transform(col(vecCol), x => round(x.cast("double") * quantScale).cast("double"))
         .as("v"))
 
-  /** Nearest-centroid label per row: distances array + array_position of
-   *  the min — first match, so ties break toward the earlier (lower seed
-   *  id) centroid; centroid order is kept id-ascending. Pure projection
-   *  against broadcast literals — no join, no shuffle. */
-  private[operators] def assignToCentroids(
-      q: DataFrame, cents: Seq[(Long, Array[Double])]): DataFrame = {
-    val dists = array(cents.map { case (_, c) => sqDist(col("v"), c) }: _*)
-    val labels = typedlit(cents.map(_._1))
-    q.withColumn("cluster",
-      element_at(labels, array_position(dists, array_min(dists)).cast("int")))
-  }
-
   /**
-   * Deterministic Lloyd training over a pre-quantized (id, v) frame:
-   * seeds are the k lowest-id vectors, each round is one shuffle of k*d
-   * partial sums, centroid = floor of the per-cluster mean (stays on the
-   * lattice). Returns the seed-labelled centroid list, id-ascending.
-   * Exposed so subspace trainers (product quantization) can share the
-   * replay contract.
+   * Deterministic Lloyd training of every view's codebook over a quantized
+   * (id, v) frame. One collect seeds each view with its k lowest-id rows
+   * and also returns the `nLowest` lowest-id rows (a query batch). Each
+   * round is one groupBy(view, cluster, dim) shuffle of partial sums,
+   * however many views; centroid = floor of the per-cluster mean (stays on
+   * the lattice), and a cluster no row picks drops out.
    */
-  private[operators] def trainCentroids(
-      q: DataFrame, k: Int, iters: Int): Seq[(Long, Array[Double])] = {
-    require(k >= 1 && iters >= 0, "k >= 1, iters >= 0")
-    // deterministic seed: the k lowest-id vectors (k*d doubles to driver)
-    var cents: Seq[(Long, Array[Double])] = q.orderBy("id").limit(k).collect()
+  private[operators] def train(
+      q: DataFrame,
+      views: Seq[View],
+      iters: Int,
+      nLowest: Int = 0): (Seq[Codebook], Seq[(Long, Array[Double])]) = {
+    require(views.forall(_.k >= 1) && iters >= 0, "k >= 1, iters >= 0")
+    val lowest = q.orderBy("id").limit((nLowest +: views.map(_.k)).max).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-
+    var books: Seq[Codebook] = views.map(w => lowest.take(w.k).map { case (id, v) => (id, w.of(v)) })
     for (_ <- 1 to iters) {
-      // one shuffle of k*d partial sums; floor-of-mean keeps the lattice
-      val sums = assignToCentroids(q, cents)
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
+      val parts = views.zip(books).zipWithIndex.map { case ((view, cents), i) =>
+        struct(lit(i).as("view"), view.label(col("v"), cents).as("cluster"),
+          view.of(col("v")).as("xs"))
+      }
+      val byView = q.select(inline(array(parts: _*)))
+        .select(col("view"), col("cluster"), posexplode(col("xs")).as(Seq("dim", "x")))
+        .groupBy("view", "cluster", "dim")
         .agg(sum("x").as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("dim"), floor(col("s") / col("n")).cast("double").as("c"))
-        .collect()
-      cents = sums.groupBy(_.getLong(0)).map { case (cl, rows) =>
-        val c = new Array[Double](rows.map(_.getInt(1)).max + 1)
-        rows.foreach(r => c(r.getInt(1)) = r.getDouble(2))
-        (cl, c)
-      }.toSeq.sortBy(_._1)
+        .select(col("view"), col("cluster"), col("dim"),
+          floor(col("s") / col("n")).cast("double").as("c"))
+        .collect().groupBy(_.getInt(0))
+      books = views.indices.map { i =>
+        byView.getOrElse(i, Array.empty[Row]).toSeq.groupBy(_.getLong(1)).map { case (cl, rows) =>
+          val c = new Array[Double](rows.map(_.getInt(2)).max + 1)
+          rows.foreach(r => c(r.getInt(2)) = r.getDouble(3))
+          (cl, c)
+        }.toSeq.sortBy(_._1)
+      }
     }
-    cents
+    (books, lowest.take(nLowest))
   }
 
   /**
@@ -134,13 +159,10 @@ object Clustering {
       iters: Int,
       quantScale: Int = 1000): DataFrame = {
     val q = quantized(df, idCol, vecCol, quantScale)
-    val cents = trainCentroids(q, k, iters)
-    val dists = array(cents.map { case (_, c) => sqDist(col("v"), c) }: _*)
-    val labels = typedlit(cents.map(_._1))
-    q.withColumn("dists", dists)
-      .withColumn("pos",
-        array_position(col("dists"), array_min(col("dists"))).cast("int"))
-      .withColumn("cluster", element_at(labels, col("pos")))
+    val (Seq(cents), _) = train(q, Seq(View(k)), iters)
+    q.withColumn("dists", sqDists(col("v"), cents))
+      .withColumn("pos", argmin(col("dists")))
+      .withColumn("cluster", element_at(typedlit(cents.map(_._1)), col("pos")))
       .withColumn("a", element_at(col("dists"), col("pos")))
       // b = nearest OTHER centroid (filter by index); null when k = 1
       .withColumn("b",

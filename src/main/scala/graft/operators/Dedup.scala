@@ -435,13 +435,14 @@ object Dedup {
    *    component is its own id by definition; joining every corpus row
    *    through every round would dominate the loop for zero
    *    information). Per round one shuffle keyed on the endpoints,
-   *    labels cached; rounds = propagation-graph diameter (tiny for dup
-   *    clusters — dense cliques-of-cliques, not long chains). The
-   *    driver-side loop reads ONE aggregated scalar per round (the
-   *    label sum, monotonically decreasing — unchanged sum proves a
-   *    fixpoint since labels only ever decrease), never the labels
-   *    themselves; it sums as DECIMAL(38,0) (exact for any realistic id
-   *    domain).
+   *    labels locally checkpointed (a plan leaf, so the plan does not
+   *    grow with the rounds); rounds = propagation-graph diameter
+   *    (tiny for dup clusters — dense cliques-of-cliques, not long
+   *    chains). The driver-side loop reads ONE aggregated scalar per
+   *    round (the label sum, monotonically decreasing — unchanged sum
+   *    proves a fixpoint since labels only ever decrease), never the
+   *    labels themselves; it sums as DECIMAL(38,0) (exact for any
+   *    realistic id domain).
    *
    * Both paths: empty `nodes`/`edges` degenerate gracefully, labels
    * propagate through edge endpoints even if absent from `nodes` (the
@@ -530,8 +531,11 @@ object Dedup {
     val sym = edges.select(col("id_a").as("id"), col("id_b").as("nbr"))
       .unionByName(edges.select(col("id_b").as("id"), col("id_a").as("nbr")))
       .cache()
-    var labels = sym.select(col("id")).distinct()
-      .select(col("id"), col("id").as("comp")).cache()
+    // each round is materialized to a plan leaf: a cached round's plan
+    // holds the previous round's twice (both join sides), so without the
+    // truncation the plan doubles every round
+    val mat = materializer(nodes, None)
+    var labels = mat(sym.select(col("id")).distinct().select(col("id"), col("id").as("comp")))
     var lastSum = labelSum(labels)
     var converged = false
     var iter = 0
@@ -540,23 +544,19 @@ object Dedup {
         .join(labels.select(col("id").as("nbr"), col("comp").as("nbrComp")), "nbr")
         .groupBy("id")
         .agg(min(col("nbrComp")).as("nmin"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        .cache()
-      val nextSum = labelSum(next)
-      labels.unpersist()
-      labels = next
+      labels = mat(labels.join(nbrMin, Seq("id"), "left")
+        .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp")))
+      val nextSum = labelSum(labels)
       converged = nextSum.compareTo(lastSum) == 0
       lastSum = nextSum
       iter += 1
     }
     // the symmetrized edge frame is internal working state — release it
-    // here (every round has already consumed it, and the loop
-    // materialized the final endpoint labels into their own cache). The
-    // endpoint `labels` frame stays cached: the returned plan reads it
-    // per evaluation, and ownership transfers to the caller, who either
-    // materializes promptly (capClusters, the q35/q64 queries) or
-    // releases via spark.catalog.clearCache() in a long-lived session.
+    // here (every round has already consumed it, and the last round's
+    // labels are materialized on their own). The returned plan reads
+    // that last round's local checkpoint, not a cache:
+    // spark.catalog.clearCache() does not drop it; Spark's context
+    // cleaner frees its blocks once the returned plan is unreachable.
     sym.unpersist()
     record(nodes, "connectedComponents", "distributed", iter, declined)
     nodes.select(col(idCol).as("id"))

@@ -581,40 +581,6 @@ object Graph {
     lab
   }
 
-  /** Per-round materialization for the iterative ops (kCore/kTruss/BFS):
-   *  `localCheckpoint` by default — correct and cheap in a single-app
-   *  run, but its blocks live on executors, so a lost executor on a real
-   *  cluster kills the lineage-truncated frame mid-peel. When the caller
-   *  supplies `checkpointDir` (HDFS/S3-backed on a cluster), rounds use
-   *  RELIABLE `checkpoint()` instead and survive executor loss. Both
-   *  forms are eager AND truncate the plan to a leaf — the thing that
-   *  matters here, since a cached-only loop grows plan text ~3^rounds
-   *  (see [[kCore]]). */
-  private def materializer(
-      anyDf: DataFrame, checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        // NOTE: setCheckpointDir is SparkContext-global (any concurrent
-        // checkpoint user is redirected too), and Spark only deletes
-        // checkpoint files at app exit unless
-        // spark.cleaner.referenceTracking.cleanCheckpoints=true — both
-        // standard Spark checkpoint semantics, called out here because a
-        // 50-round peel writes 50 edge-set snapshots under `dir`.
-        anyDf.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => {
-          // persist first: RDD checkpointing recomputes the lineage a
-          // second time to write the files; the cache turns that second
-          // pass into a read. Unpersist after — the checkpoint files are
-          // the durable copy.
-          df.persist()
-          val out = df.checkpoint(eager = true)
-          df.unpersist(blocking = false)
-          out
-        }
-      case None =>
-        df => df.localCheckpoint(true)
-    }
-
   /** Symmetric (both-directions) edge list (m, x) of a canonical
    *  undirected edge set — the shared first step of BFS, the wedge
    *  join, and the truss delta path. */

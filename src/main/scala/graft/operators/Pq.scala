@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
  * asymmetric-distance (ADC) lookup tables.
  *
  * Scale design:
- *  - Codebook training reuses [[Clustering.trainCentroids]] per block:
- *    each Lloyd round is one shuffle of k*sub partial sums regardless of
- *    corpus size, and the driver holds only m*k*sub doubles. (In a real
- *    deployment you train on a sample; the contract is identical.)
+ *  - Training runs [[Clustering.train]] once per call over all m block
+ *    codebooks (plus IVF-PQ's coarse quantizer): one seed collect, which
+ *    is also the query batch, then one shuffle of partial sums per Lloyd
+ *    round regardless of m or corpus size; the driver holds only m*k*sub
+ *    doubles. (In a real deployment you train on a sample; the contract
+ *    is identical.)
  *  - Encoding is ONE stateless projection — the m codebooks are baked
  *    into the plan as literals, so no join and no shuffle of the corpus.
  *  - ADC search precomputes, per query, an m×k table of subspace
@@ -40,9 +42,30 @@ import org.apache.spark.sql.functions._
  * alongside [[Similarity]] and [[IvfIndex]].
  */
 object Pq {
+  import Clustering.View
 
   /** Codebook for one subspace: (seed label, centroid), id-ascending. */
   type Codebook = Seq[(Long, Array[Double])]
+
+  /** A call's quantized corpus, codebooks, coarse cells (IVF only) and queries. */
+  private final case class Trained(q: DataFrame, sub: Int, books: Seq[Codebook],
+      coarse: Option[Codebook], nprobe: Int, queries: Seq[(Long, Array[Double])])
+
+  /** Validates the arguments, then trains all of a call's codebooks in one
+   *  trainer run; `coarse` is IVF-PQ's (coarseK, nprobe). */
+  private def train(
+      df: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int, k: Int, iters: Int,
+      quantScale: Int, nq: Int = 0, coarse: Option[(Int, Int)] = None): Trained = {
+    require(m >= 1 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
+    coarse.foreach { case (coarseK, nprobe) =>
+      require(nprobe >= 1 && nprobe <= coarseK, "1 <= nprobe <= coarseK")
+    }
+    val sub = dim / m
+    val views = (0 until m).map(b => View(k, b * sub, sub)) ++ coarse.map(c => View(c._1))
+    val q = Clustering.quantized(df, idCol, vecCol, quantScale)
+    val (books, queries) = withCached(q)(Clustering.train(_, views, iters, nq))
+    Trained(q, sub, books.take(m), books.lift(m), coarse.fold(0)(_._2), queries)
+  }
 
   /**
    * Train one codebook per block over the quantized corpus. `dim` must
@@ -56,28 +79,17 @@ object Pq {
       m: Int,
       k: Int,
       iters: Int,
-      quantScale: Int = 1000): Seq[Codebook] = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    val sub = dim / m
-    withCached(Clustering.quantized(df, idCol, vecCol, quantScale)) { q =>
-      (0 until m).map { b =>
-        val qb = q.select(col("id"), slice(col("v"), b * sub + 1, sub).as("v"))
-        Clustering.trainCentroids(qb, k, iters)
-      }
-    }
-  }
+      quantScale: Int = 1000): Seq[Codebook] =
+    train(df, idCol, vecCol, dim, m, k, iters, quantScale).books
 
-  /** Nearest-codeword label for one block, as a single-pass expression. */
-  private def blockCode(v: Column, off: Int, sub: Int, cents: Codebook): Column =
-    boundOnce(slice(v, off + 1, sub)) { vb =>
-      val dists = array(cents.map { case (_, c) =>
-        aggregate(
-          zip_with(vb, typedlit(c.toSeq), (a, x) => (a - x) * (a - x)),
-          lit(0.0d), (acc, x) => acc + x)
-      }: _*)
-      element_at(typedlit(cents.map(_._1)),
-        array_position(dists, array_min(dists)).cast("int"))
-    }
+  /** (id, [cell,] code_0 .. code_{m-1}) of the quantized corpus `q` in one projection. */
+  private def codes(
+      q: DataFrame, sub: Int, books: Seq[Codebook], coarse: Option[Codebook]): DataFrame = {
+    val withCell = coarse.fold(q)(c => q.withColumn("cell", Clustering.nearest(col("v"), c)))
+    books.zipWithIndex.foldLeft(withCell) { case (acc, (cents, b)) =>
+      acc.withColumn(s"code_$b", View(cents.size, b * sub, sub).label(col("v"), cents))
+    }.drop("v")
+  }
 
   /**
    * Encode every vector as m codes: (id, code_0 .. code_{m-1}), where a
@@ -92,10 +104,9 @@ object Pq {
       m: Int,
       k: Int,
       iters: Int,
-      quantScale: Int = 1000): DataFrame = {
-    val books = trainCodebooks(df, idCol, vecCol, dim, m, k, iters, quantScale)
-    encodeWith(df, idCol, vecCol, dim, books, quantScale)
-  }
+      quantScale: Int = 1000): DataFrame =
+    encodeWith(df, idCol, vecCol, dim,
+      trainCodebooks(df, idCol, vecCol, dim, m, k, iters, quantScale), quantScale)
 
   /** Encoding against pre-trained codebooks (the steady-state path). */
   def encodeWith(
@@ -110,11 +121,49 @@ object Pq {
     // doesn't divide dim would silently mis-slice every block
     require(m >= 1 && dim % m == 0,
       s"dim ($dim) must be divisible by the codebook count ($m)")
-    val sub = dim / m
-    val q = Clustering.quantized(df, idCol, vecCol, quantScale)
-    books.zipWithIndex.foldLeft(q) { case (acc, (cents, b)) =>
-      acc.withColumn(s"code_$b", blockCode(col("v"), b * sub, sub, cents))
-    }.drop("v")
+    codes(Clustering.quantized(df, idCol, vecCol, quantScale), dim / m, books, None)
+  }
+
+  /** (vec_id, query_id, d): every query's score `d` of a row, in one scan and no join. */
+  private def perQuery(corpus: DataFrame, queries: Seq[(Long, Array[Double])])(
+      score: Array[Double] => Column): DataFrame =
+    corpus.select(
+      col("id").as("vec_id"),
+      inline(array(queries.map { case (qid, qv) =>
+        struct(lit(qid).as("query_id"), score(qv).as("d"))
+      }: _*)))
+
+  /** The best `n` rows per query by (d, vec_id), self excluded, with their rank `rk`. */
+  private def topK(scored: DataFrame, n: Int): DataFrame =
+    scored.where(col("vec_id") =!= col("query_id"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))))
+      .where(col("rk") <= n)
+
+  /** [[adcSearch]]'s scoring of a trained call; with coarse cells, rows
+   *  outside a query's `nprobe` nearest cells score null and drop out. */
+  private def adcTopK(t: Trained, n: Int): DataFrame = {
+    val coded = codes(t.q, t.sub, t.books, t.coarse)
+    def sqTo(qv: Array[Double], c: Array[Double]): Double =
+      c.indices.map { i => val dlt = qv(i) - c(i); dlt * dlt }.sum
+    // per (query, block) distance table, computed driver-side: all values
+    // are sums of squares of lattice integers — exact in Double
+    def adc(qv: Array[Double]): Column =
+      t.books.zipWithIndex.map { case (cents, b) =>
+        val table = cents.map { case (label, c) => label -> sqTo(qv.drop(b * t.sub), c) }.toMap
+        element_at(typedlit(table), col(s"code_$b"))
+      }.reduce(_ + _)
+    // probe set: nprobe nearest coarse cells, ties to the lower label —
+    // driver-side (nq * coarseK distances); with a by-cell partitioned
+    // layout the same predicate prunes whole files
+    def probes(cells: Codebook, qv: Array[Double]): Seq[Long] =
+      cells.map { case (label, c) => (sqTo(qv, c), label) }.sortBy(identity).take(t.nprobe).map(_._2)
+    val scored = t.coarse.fold(perQuery(coded, t.queries)(adc)) { cells =>
+      perQuery(coded, t.queries)(qv => when(col("cell").isin(probes(cells, qv): _*), adc(qv)))
+        .where(col("d").isNotNull)
+    }
+    topK(scored, n)
+      .select(col("query_id"), col("vec_id"), col("d").cast("long").as("adc"), col("rk"))
   }
 
   /**
@@ -134,51 +183,17 @@ object Pq {
       iters: Int,
       nq: Int,
       topK: Int,
-      quantScale: Int = 1000): DataFrame = {
-    val sub = dim / m
-    val books = trainCodebooks(df, idCol, vecCol, dim, m, k, iters, quantScale)
-
-    // query batch: nq quantized vectors to the driver (nq*dim doubles)
-    val queries = Clustering.quantized(df, idCol, vecCol, quantScale)
-      .orderBy("id").limit(nq).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-
-    val coded = encodeWith(df, idCol, vecCol, dim, books, quantScale)
-
-    // per (query, block) distance table, computed driver-side: all values
-    // are sums of squares of lattice integers — exact in Double
-    def adcExpr(qv: Array[Double]): Column =
-      books.zipWithIndex.map { case (cents, b) =>
-        val table = cents.map { case (label, c) =>
-          label -> c.indices.map { i =>
-            val dlt = qv(b * sub + i) - c(i); dlt * dlt
-          }.sum
-        }.toMap
-        element_at(typedlit(table), col(s"code_$b"))
-      }.reduce(_ + _)
-
-    // one generator per corpus row fans out all nq query scores in a
-    // single scan of the codes; no join
-    val scored = coded.select(
-      col("id").as("vec_id"),
-      inline(array(queries.map { case (qid, qv) =>
-        struct(lit(qid).as("query_id"), adcExpr(qv).as("adc"))
-      }: _*)))
-
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    scored.where(col("vec_id") =!= col("query_id"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= topK)
-      .select(col("query_id"), col("vec_id"), col("adc").cast("long").as("adc"), col("rk"))
-  }
+      quantScale: Int = 1000): DataFrame =
+    adcTopK(train(df, idCol, vecCol, dim, m, k, iters, quantScale, nq), topK)
 
   /**
    * IVF-PQ: coarse-quantize the corpus into `coarseK` cells (same
-   * deterministic Lloyd, full vectors), PQ-encode every row, and answer
-   * each query by ADC over ONLY its `nprobe` nearest cells. At 100 TB
-   * the codes live parquet-partitioned by cell (the [[IvfIndex]] layout)
-   * and the per-query `cell IN (probes)` predicate becomes partition
-   * pruning — a query batch physically reads ~nprobe/coarseK of an
+   * deterministic Lloyd, full vectors, trained in the same rounds as the
+   * block codebooks), PQ-encode every row, and answer each query by ADC
+   * over ONLY its `nprobe` nearest cells. At 100 TB the codes live
+   * parquet-partitioned by cell (the [[IvfIndex]] layout) and the
+   * per-query `cell IN (probes)` predicate becomes partition pruning — a
+   * query batch physically reads ~nprobe/coarseK of an
    * already-64×-compressed table. Here the filter is expressed on the
    * cell column of the same scan, which Catalyst pushes to the source.
    * Raw-vector PQ (no residual encoding) keeps the whole pipeline on
@@ -196,64 +211,16 @@ object Pq {
       nprobe: Int,
       nq: Int,
       topK: Int,
-      quantScale: Int = 1000): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
-    require(nprobe >= 1 && nprobe <= coarseK, "1 <= nprobe <= coarseK")
-    val sub = dim / m
-    val (coarse, books, queries) =
-      withCached(Clustering.quantized(df, idCol, vecCol, quantScale)) { q =>
-        val coarse = Clustering.trainCentroids(q, coarseK, iters)
-        val books = (0 until m).map { b =>
-          Clustering.trainCentroids(
-            q.select(col("id"), slice(col("v"), b * sub + 1, sub).as("v")), k, iters)
-        }
-        val queries = q.orderBy("id").limit(nq).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        (coarse, books, queries)
-      }
+      quantScale: Int = 1000): DataFrame =
+    adcTopK(train(df, idCol, vecCol, dim, m, k, iters, quantScale, nq, Some((coarseK, nprobe))),
+      topK)
 
-    // cell + codes in ONE projection (all centroid literals in-plan)
-    val coded = books.zipWithIndex.foldLeft(
-      Clustering.assignToCentroids(
-        Clustering.quantized(df, idCol, vecCol, quantScale), coarse)
-        .withColumnRenamed("cluster", "cell")) { case (acc, (cents, b)) =>
-      acc.withColumn(s"code_$b", blockCode(col("v"), b * sub, sub, cents))
-    }.drop("v")
-
-    def sqTo(qv: Array[Double], c: Array[Double]): Double =
-      c.indices.map { i => val dlt = qv(i) - c(i); dlt * dlt }.sum
-
-    // per-query probe set: nprobe nearest coarse cells, ties to the
-    // lower cell label — driver-side (nq * coarseK distances)
-    def probes(qv: Array[Double]): Seq[Long] =
-      coarse.map { case (label, c) => (sqTo(qv, c), label) }
-        .sortBy(identity).take(nprobe).map(_._2)
-
-    def adcExpr(qv: Array[Double]): Column =
-      books.zipWithIndex.map { case (cents, b) =>
-        val table = cents.map { case (label, c) =>
-          label -> c.indices.map { i =>
-            val dlt = qv(b * sub + i) - c(i); dlt * dlt
-          }.sum
-        }.toMap
-        element_at(typedlit(table), col(s"code_$b"))
-      }.reduce(_ + _)
-
-    // un-probed cells yield a null adc and drop out — with a by-cell
-    // partitioned layout this same predicate prunes whole files
-    val scored = coded.select(
-      col("id").as("vec_id"),
-      inline(array(queries.map { case (qid, qv) =>
-        struct(
-          lit(qid).as("query_id"),
-          when(col("cell").isin(probes(qv): _*), adcExpr(qv)).as("adc"))
-      }: _*)))
-
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    scored.where(col("adc").isNotNull && col("vec_id") =!= col("query_id"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= topK)
-      .select(col("query_id"), col("vec_id"), col("adc").cast("long").as("adc"), col("rk"))
+  /** The ADC and the exact lattice-L2 top-`n` of one trained call. */
+  private def adcAndExact(df: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int, k: Int,
+      iters: Int, nq: Int, n: Int, quantScale: Int): (DataFrame, DataFrame) = {
+    val t = train(df, idCol, vecCol, dim, m, k, iters, quantScale, nq)
+    val exact = topK(perQuery(t.q, t.queries)(Clustering.sqDist(col("v"), _)), n)
+    (adcTopK(t, n).select("query_id", "vec_id", "rk"), exact.select("query_id", "vec_id", "rk"))
   }
 
   /**
@@ -272,27 +239,7 @@ object Pq {
       nq: Int,
       topK: Int,
       quantScale: Int = 1000): DataFrame = {
-    val approx = adcSearch(df, idCol, vecCol, dim, m, k, iters, nq, topK, quantScale)
-      .select(col("query_id"), col("vec_id"))
-
-    val q = Clustering.quantized(df, idCol, vecCol, quantScale)
-    val queries = q.orderBy("id").limit(nq).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def exactExpr(qv: Array[Double]): Column =
-      aggregate(
-        zip_with(col("v"), typedlit(qv.toSeq), (a, x) => (a - x) * (a - x)),
-        lit(0.0d), (acc, x) => acc + x)
-    val exact = q.select(
-      col("id").as("vec_id"),
-      inline(array(queries.map { case (qid, qv) =>
-        struct(lit(qid).as("query_id"), exactExpr(qv).as("dist"))
-      }: _*)))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))))
-      .where(col("rk") <= topK)
-      .select(col("query_id"), col("vec_id"))
-
+    val (approx, exact) = adcAndExact(df, idCol, vecCol, dim, m, k, iters, nq, topK, quantScale)
     // hits per query: approx rows also in the exact top-k (both sides
     // are topK rows per query — the join is trivially bounded)
     val hits = approx.join(exact, Seq("query_id", "vec_id"))
@@ -323,27 +270,8 @@ object Pq {
       nq: Int,
       topK: Int,
       quantScale: Int = 1000): DataFrame = {
-    val approx = adcSearch(df, idCol, vecCol, dim, m, k, iters, nq, topK, quantScale)
-      .select(col("query_id"), col("vec_id"), col("rk"))
-
-    val q = Clustering.quantized(df, idCol, vecCol, quantScale)
-    val queries = q.orderBy("id").limit(nq).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def exactExpr(qv: Array[Double]): Column =
-      aggregate(
-        zip_with(col("v"), typedlit(qv.toSeq), (a, x) => (a - x) * (a - x)),
-        lit(0.0d), (acc, x) => acc + x)
-    val gold = q.select(
-      col("id").as("gold_id"),
-      inline(array(queries.map { case (qid, qv) =>
-        struct(lit(qid).as("query_id"), exactExpr(qv).as("dist"))
-      }: _*)))
-      .where(col("gold_id") =!= col("query_id"))
-      .withColumn("rk1", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("dist"), col("gold_id"))))
-      .where(col("rk1") === 1)
-      .select(col("query_id"), col("gold_id"))
-
+    val (approx, exact) = adcAndExact(df, idCol, vecCol, dim, m, k, iters, nq, topK, quantScale)
+    val gold = exact.where(col("rk") === 1).select(col("query_id"), col("vec_id").as("gold_id"))
     gold.join(approx,
         gold("query_id") === approx("query_id") && col("gold_id") === col("vec_id"),
         "left")

@@ -17,9 +17,14 @@ package graft
  * plan, and live until released. Operators with a bounded internal loop
  * (`Dedup.connectedComponents`, `IvfIndex.build`, k-means) unpersist
  * their own loop state before returning; the caches backing the
- * ''returned'' plan transfer to the caller. In a long-lived session,
- * release them after the result is materialized (written / collected /
- * no longer re-queried) with either:
+ * ''returned'' plan transfer to the caller. Loops whose rounds are
+ * materialized through [[materializer]] (Graph's kCore, kTruss and BFS,
+ * the distributed connected components) return a plan over the last
+ * round's checkpoint instead: no cache to release, and Spark's context
+ * cleaner frees a local checkpoint's blocks once the plan is
+ * unreachable. In a long-lived session, release the caches after the
+ * result is materialized (written / collected / no longer re-queried)
+ * with either:
  *
  *  - `spark.sharedState.cacheManager.clearCache()` — drop everything
  *    (what `graft.Verify` and `graft.Bench` do between queries), or
@@ -66,6 +71,42 @@ package object operators {
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
     }
   }
+
+  /** Per-round materialization for the iterative ops (Graph's kCore,
+   *  kTruss and BFS, and `Dedup.connectedComponents`' distributed rounds):
+   *  `localCheckpoint` by default — correct and cheap in a single-app
+   *  run, but its blocks live on executors, so a lost executor on a real
+   *  cluster kills the lineage-truncated frame mid-peel. When the caller
+   *  supplies `checkpointDir` (HDFS/S3-backed on a cluster), rounds use
+   *  RELIABLE `checkpoint()` instead and survive executor loss. Both
+   *  forms are eager AND truncate the plan to a leaf — the thing that
+   *  matters here, since a cached-only loop grows plan text ~3^rounds
+   *  (see [[Graph.kCore]]). */
+  private[operators] def materializer(
+      anyDf: DataFrame, checkpointDir: Option[String]): DataFrame => DataFrame =
+    checkpointDir match {
+      case Some(dir) =>
+        // NOTE: setCheckpointDir is SparkContext-global (any concurrent
+        // checkpoint user is redirected too), and Spark only deletes
+        // checkpoint files at app exit unless
+        // spark.cleaner.referenceTracking.cleanCheckpoints=true — both
+        // standard Spark checkpoint semantics, called out here because a
+        // 50-round peel writes 50 edge-set snapshots under `dir`.
+        anyDf.sparkSession.sparkContext.setCheckpointDir(dir)
+        df => {
+          // persist first: RDD checkpointing recomputes the lineage a
+          // second time to write the files; the cache turns that second
+          // pass into a read. Unpersist after — the checkpoint files are
+          // the durable copy.
+          df.persist()
+          val out = df.checkpoint(eager = true)
+          df.unpersist(blocking = false)
+          out
+        }
+      case None =>
+        df => df.localCheckpoint(true)
+    }
+
 
   /** The gate's comparison of `what`'s `bytes` (not computed when the
    *  threshold is off) with `threshold`: Right when it fits, Left when it

@@ -230,4 +230,17 @@ class ErrorPathSuite extends AnyFunSuite with GraftSparkSession {
       assert(d.contains("Arguments:") && d.contains("Examples:"), fn)
     }
   }
+
+  test("PQ search, recall and MRR reject m = 0 with the split message, not a division error") {
+    import spark.implicits._
+    val df = Seq((0L, Seq(1f, 2f)), (1L, Seq(3f, 4f))).toDF("id", "vec")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "adcSearch" -> (() => graft.operators.Pq.adcSearch(df, "id", "vec", 2, 0, 2, 1, 1, 1)),
+      "adcRecall" -> (() => graft.operators.Pq.adcRecall(df, "id", "vec", 2, 0, 2, 1, 1, 1)),
+      "adcMrr" -> (() => graft.operators.Pq.adcMrr(df, "id", "vec", 2, 0, 2, 1, 1, 1)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("dim=2 must be divisible by m=0"), name)
+    }
+  }
 }

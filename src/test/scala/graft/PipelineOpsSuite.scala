@@ -210,6 +210,23 @@ class PipelineOpsSuite extends AnyFunSuite with GraftSparkSession {
     assert(local(15L) === 15L) // singleton
   }
 
+  test("distributed components: the result's plan does not grow with the chain") {
+    import spark.implicits._
+    // each round joins the previous round's labels twice; unless a round
+    // is truncated to a leaf, the plan doubles per round (an 8-node chain
+    // runs 8 rounds)
+    def planNodes(n: Long): Int = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val nodes = (1L to n).toDF("doc_id")
+      val edges = (1L to n).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("id_a", "id_b")
+      val out = Dedup.connectedComponents(nodes, edges, "doc_id")
+      assert(out.collect().forall(_.getLong(1) == 1L))
+      out.queryExecution.analyzed.collect { case p => p }.size
+    }
+    val four = planNodes(4)
+    assert(planNodes(8) === four)
+    assert(planNodes(16) === four)
+  }
+
   test("simhash banding equals brute-force hamming filter (lossless <= 3 of 4 bands)") {
     import spark.implicits._
     val base = docs.select(col("doc_id"), col("text"))
