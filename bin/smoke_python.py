@@ -217,5 +217,16 @@ ranks = DataFrame(api.pageRankFp(nodes._jdf, edges._jdf, "id", 3, 85, 100), spar
 assert sorted(r["id"] for r in ranks) == list(range(6)), ranks
 assert sum(r["rank_fp"] for r in ranks) <= 10 ** 12, ranks
 
+# connected components of a small pair table: two chains (1-2-3 and
+# 10-11-12-13, pairs out of order) and a singleton (20); one row a node,
+# comp = the smallest id of its component
+cc_nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12, 13, 20)], "id long")
+cc_pairs = spark.createDataFrame(
+    [(2, 3), (1, 2), (12, 13), (10, 11), (11, 12)], "id_a long, id_b long")
+cc_rows = DataFrame(api.connectedComponents(cc_nodes._jdf, cc_pairs._jdf, "id"), spark).collect()
+assert len(cc_rows) == 8, cc_rows
+assert {r["id"]: r["comp"] for r in cc_rows} == {
+    1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}, cc_rows
+
 print("PYTHON-SMOKE OK", agg, scalar, js)
 spark.stop()

@@ -424,10 +424,10 @@ object Dedup {
    *  - Edge sets whose pairs, at 16 bytes each, fit the operators' one
    *    gate, `spark.sql.autoBroadcastJoinThreshold` (655,360 pairs at
    *    the default 10 MB — near-dup pair sets are tiny relative to the
-   *    corpus), collect to the driver for UNION-FIND: exact, one job to
-   *    count the pairs and one to collect them, no iteration. The
-   *    resulting endpoint->component map broadcast-joins back to
-   *    `nodes`, so the corpus itself still never moves. The collect is
+   *    corpus), collect to the driver for UNION-FIND ([[DriverLocal]]):
+   *    exact, one job to count the pairs and one to collect them. The
+   *    endpoint->component map, a local relation, broadcast-joins back
+   *    to `nodes`, so the corpus itself still never moves. The collect is
    *    bounded by the threshold exactly as the IVF probe-set collect is
    *    bounded by |queries|*nprobe.
    *  - Larger edge sets run iterative min-label propagation in
@@ -442,7 +442,8 @@ object Dedup {
    *    round (the label sum, monotonically decreasing — unchanged sum
    *    proves a fixpoint since labels only ever decrease), never the
    *    labels themselves; it sums as DECIMAL(38,0) (exact for any
-   *    realistic id domain).
+   *    realistic id domain). `maxIter` bounds these rounds only; a loop
+   *    short of its fixpoint after them raises.
    *
    * Both paths: empty `nodes`/`edges` degenerate gracefully, labels
    * propagate through edge endpoints even if absent from `nodes` (the
@@ -457,20 +458,14 @@ object Dedup {
       edges: DataFrame,
       idCol: String = "id",
       maxIter: Int = 20): DataFrame = {
-    val idType = nodes.schema(nodes.schema.fieldIndex(idCol)).dataType
-    val integralIds = Seq(edges.schema("id_a").dataType, edges.schema("id_b").dataType, idType)
-      .forall(Graph.isIntegral)
-    val bcThresh = broadcastThreshold(nodes)
+    val idType = nodes.schema(idCol).dataType
+    val integralIds = (idType +: Seq("id_a", "id_b").map(edges.schema(_).dataType)).forall(DriverLocal.isIntegral)
     withCached(edges.select(col("id_a"), col("id_b"))) { cachedEdges =>
-      val gate =
-        if (integralIds) fit("pairs", LongPairs.count(cachedEdges).head * 16, bcThresh)
-        else Left("non-integral ids")
-      gate match {
-        case Right(reason) =>
-          record(nodes, "connectedComponents", "local", 0, reason)
-          localComponents(nodes, LongPairs.collect(cachedEdges).head, idCol, idType)
-        case Left(declined) => loopComponents(nodes, cachedEdges, idCol, maxIter, declined)
-      }
+      DriverLocal.gate(nodes, "connectedComponents", Option.when(!integralIds)("non-integral ids")) { t =>
+        fit("pairs", DriverLocal.rows(cachedEdges).head * 16, t).map { reason =>
+          (localComponents(nodes, LongPairs.collect(cachedEdges).head, idCol, idType), 0, reason)
+        }
+      }(loopComponents(nodes, cachedEdges, idCol, maxIter, _))
     }
   }
 
@@ -483,10 +478,10 @@ object Dedup {
       edges: LongPairs,
       idCol: String,
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parent = new java.util.HashMap[Long, Long]()
-    def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
     def find(x: Long): Long = {
       var r = x
       while (parent.get(r) != r) r = parent.get(r)
@@ -497,17 +492,12 @@ object Dedup {
     for (i <- 0 until edges.size if !edges.aNull(i) && !edges.bNull(i)) {
       val a = edges.a(i)
       val b = edges.b(i)
-      add(a); add(b)
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
       val ra = find(a)
       val rb = find(b)
       if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
     }
-    val it = parent.keySet().iterator()
-    val labelRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    while (it.hasNext) { val id = it.next(); labelRows += Row(id, find(id)) }
-    val spark = nodes.sparkSession
-    val labels = spark.createDataFrame(
-      spark.sparkContext.parallelize(labelRows.toSeq, 1),
+    val labels = DriverLocal.frame(nodes.sparkSession, parent.keySet().asScala.toSeq.map(id => Row(id, find(id))),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("__cc_comp", LongType, nullable = false))))
       .select(col("id").cast(idType).as("id"), col("__cc_comp").cast(idType).as("__cc_comp"))
@@ -533,8 +523,9 @@ object Dedup {
       .cache()
     // each round is materialized to a plan leaf: a cached round's plan
     // holds the previous round's twice (both join sides), so without the
-    // truncation the plan doubles every round
-    val mat = materializer(nodes, None)
+    // truncation the plan doubles every round. The checkpoint is lazy:
+    // the round's label-sum job writes it
+    val mat = (df: DataFrame) => df.localCheckpoint(eager = false)
     var labels = mat(sym.select(col("id")).distinct().select(col("id"), col("id").as("comp")))
     var lastSum = labelSum(labels)
     var converged = false
@@ -558,6 +549,7 @@ object Dedup {
     // spark.catalog.clearCache() does not drop it; Spark's context
     // cleaner frees its blocks once the returned plan is unreachable.
     sym.unpersist()
+    require(converged, s"connectedComponents did not converge within $maxIter rounds")
     record(nodes, "connectedComponents", "distributed", iter, declined)
     nodes.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")

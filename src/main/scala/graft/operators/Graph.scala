@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.IsolatedSession
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Graph analytics over corpus-derived graphs (near-dup similarity edges,
@@ -123,10 +122,11 @@ object Graph {
    * `spark.sql.autoBroadcastJoinThreshold` (T; T <= 0 means sort-merge):
    *  - nodes (and seeds) x 32 bytes and edges x 8 bytes a column both
    *    within T, integral ids, and every weight in 1..[[MaxLocalWeight]]:
-   *    the edge list is counted, collected once into primitive arrays,
+   *    the edge list is charged, collected once into primitive arrays,
    *    and every iteration runs on the driver; the result is a local
-   *    frame. A null, non-positive or larger weight declines, so Spark's
-   *    plan keeps owning their nulls and errors.
+   *    frame ([[DriverLocal]]). A null, non-positive or larger weight
+   *    declines in the charge job, before the collect, so Spark's plan
+   *    keeps owning their nulls and errors.
    *  - only nodes x 32 within T: each iteration is one join of the
    *    broadcast (src, rank, wsum) vector against the edge list plus one
    *    partial-aggregable sum by `dst`, with no exchange.
@@ -146,7 +146,6 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    val bcThresh = broadcastThreshold(nodeIds)
     val emptyMessage =
       s"$op: ${if (seedIds.isEmpty) "empty node set" else "no seed overlaps the node set"}"
     // (id, is_seed) over the distinct ids, which the distributed rounds
@@ -156,51 +155,32 @@ object Graph {
       nodeIds.distinct()
         .join(s.distinct().withColumn("is_seed", lit(true)), Seq("id"), "left")
     }.cache()
-    lazy val counts = LongPairs.count(ids, ids.where(col("is_seed")))
-    def distributed(declined: String, e: DataFrame) =
-      distributedRank(op, declined, emptyMessage, ids, counts, e, bcThresh, iters, dampNum, dampDen)
+    lazy val counts = DriverLocal.rows(ids, ids.where(col("is_seed")))
     // Driver-local regime (see [[localGraph]]): every round runs on the
-    // driver over primitive arrays — two jobs in all (count, collect)
+    // driver over primitive arrays — two jobs in all (charge, collect)
     // instead of a join, an aggregation and their exchanges per round,
     // which on a small graph cost far more in per-job latency than the
     // data does. Same integer rule, so the ranks are bit-identical.
     // Integral ids only: the arrays are longs, and other id types keep
-    // Spark's comparison semantics on the distributed paths.
+    // Spark's comparison semantics on the distributed paths. The gate
+    // pins the edges, charged and then collected or read every round, so
+    // an expensive upstream (e.g. a similarity join) runs once.
     val integral = (Seq(nodeIds.schema.head, edges.schema("src"), edges.schema("dst")) ++
-      seedIds.map(_.schema.head)).forall(f => isIntegral(f.dataType))
-    if (bcThresh <= 0 || !integral) {
-      distributed(if (integral) "threshold off" else "non-integral ids", edges)
-    } else {
-      // the edge list is counted, then collected or read once per
-      // iteration — pin it so an expensive upstream (e.g. a similarity
-      // join producing the edges) runs once
-      withCached(edges) { e =>
-        localGraph(nodeIds, ids.select(col("id")), counts.head, e, bcThresh, seedIds)
-          // a weight the driver rounds cannot take declines (see above);
-          // a null weight's slot holds 0
-          .filterOrElse(g => g.edges.width < 3 ||
-            g.edges.c.forall(w => w > 0 && w <= MaxLocalWeight), "a weight outside the local range") match {
-          case Left(declined) => distributed(declined, e)
-          case Right(g) =>
-            ids.unpersist(blocking = false) // the gate may have cached it to count it
-            // a null id matches no seed and no edge; it is a seed only
-            // when every node is, and keeps its restart mass alone
-            val seeded = g.ids.map(id => g.seeds.forall(indexOf(_, id) >= 0)) ++
-              (if (g.hasNull) Seq(seedIds.isEmpty) else Nil)
-            val nSeeds = seeded.count(identity)
-            require(nSeeds > 0, emptyMessage)
-            val base = seeded.map(s => if (s) RankScale / nSeeds else 0L)
-            val ranks = localRanks(g.ids, base, g.edges, iters, dampNum, dampDen)
-            record(nodeIds, op, "local", iters, g.reason)
-            val idField = nodeIds.schema.head
-            val rows = ranks.indices.map { i =>
-              Row(if (i < g.ids.length) ofLong(g.ids(i), idField.dataType) else null, ranks(i))
-            }
-            localFrame(nodeIds.sparkSession, rows,
-              StructType(Seq(idField, StructField("rank_fp", LongType, nullable = true))))
-        }
+      seedIds.map(_.schema.head)).forall(f => DriverLocal.isIntegral(f.dataType))
+    DriverLocal.gate(nodeIds, op, Option.when(!integral)("non-integral ids"), Some(edges)) { t =>
+      localGraph(nodeIds, ids.select(col("id")), counts.head, edges, t, seedIds).map { g =>
+        ids.unpersist(blocking = false) // the gate may have cached it to count it
+        // a null id matches no seed and no edge; it is a seed only
+        // when every node is, and keeps its restart mass alone
+        val seeded = g.ids.map(id => g.seeds.forall(indexOf(_, id) >= 0)) ++
+          (if (g.hasNull) Seq(seedIds.isEmpty) else Nil)
+        val nSeeds = seeded.count(identity)
+        require(nSeeds > 0, emptyMessage)
+        val base = seeded.map(s => if (s) RankScale / nSeeds else 0L)
+        val ranks = localRanks(g.ids, base, g.edges, iters, dampNum, dampDen)
+        (g.frame(nodeIds.schema.head, "rank_fp", ranks.toSeq), iters, g.reason)
       }
-    }
+    }(distributedRank(op, _, emptyMessage, ids, counts, edges, iters, dampNum, dampDen))
   }
 
   /** [[pageRankCore]]'s Spark rounds over the cached (id, is_seed)
@@ -213,7 +193,6 @@ object Graph {
       ids: DataFrame,
       counts: => Seq[Long],
       edges: DataFrame,
-      bcThresh: Long,
       iters: Int,
       dampNum: Int,
       dampDen: Int): DataFrame = {
@@ -242,14 +221,14 @@ object Graph {
     // not the plan estimate: narrow-projection estimates overestimate
     // severalfold and mis-file moderate graphs into the SMJ regime
     // (see [[labelPropagation]]).
-    val gate = fit("nodes", n * 32L, bcThresh)
+    val gate = fit("nodes", n * 32L, broadcastThreshold(ids))
     val bcast = gate.isRight
     record(ids, op, if (bcast) "broadcast" else "sort-merge", iters, gate.fold(identity, _ => declined))
     val e =
       if (bcast) edges.repartition(col("dst")).cache()
       else edges.withColumn("wsum", sum(expr(w)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src")))).cache()
-    LongPairs.count(e) // materialize before the loop references it per iteration
+    DriverLocal.rows(e) // materialize before the loop references it per iteration
     // toDF: fresh attribute ids, so joining the rank side back against
     // the edge cache (wsumF derives FROM e) is not an ambiguous self-join
     val wsumF =
@@ -281,7 +260,7 @@ object Graph {
       // stays O(1) via the rolling pin
       if (i % MaterializeEvery == 0 || i == iters) {
         val c = ranks.cache()
-        LongPairs.count(c)
+        DriverLocal.rows(c)
         if (pinned != null) pinned.unpersist()
         pinned = c
         ranks = c
@@ -600,57 +579,60 @@ object Graph {
       mat: DataFrame => DataFrame, df: DataFrame): DataFrame =
     IsolatedSession.run(df, "spark.sql.adaptive.enabled" -> "false")(mat)
 
-  private[operators] def isIntegral(t: DataType): Boolean =
-    t == LongType || t == IntegerType || t == ShortType || t == ByteType
-
-  /** A long id back as a value of integral type `t`. */
-  private def ofLong(v: Long, t: DataType): Any = t match {
-    case IntegerType => v.toInt
-    case ShortType => v.toShort
-    case ByteType => v.toByte
-    case _ => v
-  }
-
   /** A graph on the driver: the node ids sorted and distinct, whether a
    *  null is among them, the edges, the seed ids (sorted, distinct,
    *  nulls dropped) when seeds were given, and the gate's comparison. */
-  private final case class LocalGraph(ids: Array[Long], hasNull: Boolean, edges: LongPairs,
-      seeds: Option[Array[Long]], reason: String)
+  private final case class LocalGraph(spark: SparkSession, ids: Array[Long], hasNull: Boolean,
+      edges: LongPairs, seeds: Option[Array[Long]], reason: String) {
+    /** `values` in `ids` order, the null id's last, as a local relation. */
+    def frame(id: StructField, value: String, values: Seq[Any]): DataFrame =
+      DriverLocal.frame(spark, values.indices.map(i =>
+        Row(if (i < ids.length) DriverLocal.ofLong(ids(i), id.dataType) else null, values(i))),
+        StructType(Seq(id, StructField(value, LongType, nullable = true))))
+  }
 
   /**
-   * The driver-local regime's gate, and its inputs. The regime needs the
+   * The driver-local regime's graph, or why it declines. The regime needs
+   * the edges at 8 bytes a column (16 a pair, 24 weighted) and the
    * distinct node ids (and any seed rows) at 32 bytes each — the
-   * broadcast regime's own gate — and the edges at 8 bytes a column (16
-   * a pair, 24 weighted) both within `bcThresh`. One job counts the raw
-   * node rows, an upper bound of the distinct ids, the edge rows and the
-   * seed rows; only when the raw node rows do not fit does the exact
-   * distinct count decide, which the distributed regimes need anyway.
-   * When all fit, one more job collects the node ids, the edges and the
-   * seeds; otherwise the comparison that declined. `cachedEdges` is read
-   * twice.
+   * broadcast regime's own gate — both within `threshold`, and every
+   * weight in 1..[[MaxLocalWeight]]. One [[DriverLocal.charge]] job counts
+   * the raw node rows, an upper bound of the distinct ids, the edge rows
+   * with their weights checked, and the seed rows; only when the raw node
+   * rows do not fit does the exact distinct count decide, which the
+   * distributed regimes need anyway. When all fit, one more job collects
+   * the node ids, the edges and the seeds. `edges` is read twice.
    */
   private def localGraph(
       nodeIds: DataFrame,
       distinctIds: => DataFrame,
       distinctCount: => Long,
-      cachedEdges: DataFrame,
-      bcThresh: Long,
+      edges: DataFrame,
+      threshold: Long,
       seeds: Option[DataFrame] = None): Either[String, LocalGraph] = {
-    val counts = LongPairs.count(nodeIds +: cachedEdges +: seeds.toSeq: _*)
-    val Seq(nodeRows, edgeRows) = counts.take(2)
-    val seedRows = counts.drop(2).sum
-    val edgeFit = fit("edges", edgeRows * 8L * cachedEdges.columns.length, bcThresh)
+    val width = edges.columns.length
+    // a weight the driver rounds cannot take charges null; a null weight
+    // is outside the range too
+    val edgeCharge =
+      if (width < 3) lit(8L * width) else when(col("w").between(1L, MaxLocalWeight), 8L * width)
+    val node +: edge +: seedCharges = DriverLocal.charge(
+      Seq(nodeIds -> lit(32L), edges -> edgeCharge) ++ seeds.map(_ -> lit(32L)): _*)
+    val seedRows = seedCharges.map(_.rows).sum
+    val edgeFit = fit("edges", edge.rows * 8L * width, threshold)
     val nodeSource = edgeFit.flatMap { _ =>
-      if ((nodeRows + seedRows) * 32L <= bcThresh) Right(nodeIds)
-      else fit("nodes", (distinctCount + seedRows) * 32L, bcThresh)
+      if ((node.rows + seedRows) * 32L <= threshold) Right(nodeIds)
+      else fit("nodes", (distinctCount + seedRows) * 32L, threshold)
         .map(_ => distinctIds.select(col(nodeIds.columns.head)))
     }
-    nodeSource.map { source =>
-      val collected = LongPairs.collect(source +: cachedEdges +: seeds.toSeq: _*)
+    for {
+      source <- nodeSource
+      _ <- edge.bytes.toRight("a weight outside the local range")
+    } yield {
+      val collected = LongPairs.collect(source +: edges +: seeds.toSeq: _*)
       def sortedIds(p: LongPairs) =
         (0 until p.size).filterNot(p.aNull).map(p.a).distinct.sorted.toArray
       val ns = collected.head
-      LocalGraph(sortedIds(ns), (0 until ns.size).exists(ns.aNull), collected(1),
+      LocalGraph(nodeIds.sparkSession, sortedIds(ns), (0 until ns.size).exists(ns.aNull), collected(1),
         collected.lift(2).map(sortedIds), edgeFit.merge)
     }
   }
@@ -660,12 +642,6 @@ object Graph {
     val i = java.util.Arrays.binarySearch(ids, v)
     if (i >= 0) i else -1
   }
-
-  /** A driver-computed result as a local relation: exact size
-   *  statistics, so later joins can still broadcast it. */
-  private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
 
   /** Node id cast to long that FAILS FAST on non-numeric ids: a string
    *  id casts to null, and `collect_list` would silently drop it —
@@ -1062,7 +1038,6 @@ object Graph {
     val mat = materializer(edges, checkpointDir)
     val idEdges = edges.select(longId(col(srcCol)).as("s"), longId(col(dstCol)).as("d"))
     val nodeIds = nodes.select(longId(col(idCol)).as("node"))
-    val bcThresh = broadcastThreshold(nodes)
     // The regime gate uses the EXACT node count of the just-materialized
     // label vector (one cheap job over its blocks) times a conservative
     // 32 bytes/row, not the optimizer's estimate: the plan estimate of
@@ -1076,21 +1051,14 @@ object Graph {
     // Driver-local regime (the [[pageRankFp]] rationale): when nodes
     // and edges both fit, the rounds run on the driver with the same
     // rule, tie-break and early stop
-    if (bcThresh <= 0) distributedLabelPropagation(mat, matLabels, n, idEdges, bcThresh, rounds, "threshold off")
-    else withCached(idEdges) { pairs =>
-      localGraph(nodeIds, matLabels, n, pairs, bcThresh) match {
-        case Left(declined) => distributedLabelPropagation(mat, matLabels, n, pairs, bcThresh, rounds, declined)
-        case Right(g) =>
-          val (labels, r) = localLabelPropagation(g.ids, g.edges, rounds)
-          record(nodes, "labelPropagation", "local", r, g.reason)
-          // a null id joins no edge and keeps its (null) label
-          val rows = g.ids.indices.map(i => Row(g.ids(i), labels(i))) ++
-            (if (g.hasNull) Seq(Row(null, null)) else Nil)
-          localFrame(nodes.sparkSession, rows, StructType(Seq(
-            StructField("node", LongType, nullable = true),
-            StructField("label", LongType, nullable = true))))
+    DriverLocal.gate(nodes, "labelPropagation", pin = Some(idEdges)) { t =>
+      localGraph(nodeIds, matLabels, n, idEdges, t).map { g =>
+        val (labels, r) = localLabelPropagation(g.ids, g.edges, rounds)
+        // a null id joins no edge and keeps its (null) label
+        (g.frame(StructField("node", LongType, nullable = true), "label",
+          labels.toSeq ++ (if (g.hasNull) Seq(null) else Nil)), r, g.reason)
       }
-    }
+    }(distributedLabelPropagation(mat, matLabels, n, idEdges, rounds, _))
   }
 
   /** [[labelPropagation]]'s Spark rounds from the materialized label
@@ -1101,10 +1069,9 @@ object Graph {
       labels0: DataFrame,
       n: Long,
       idEdges: DataFrame,
-      bcThresh: Long,
       rounds: Int,
       declined: String): DataFrame = {
-    val gate = fit("nodes", n * 32L, bcThresh)
+    val gate = fit("nodes", n * 32L, broadcastThreshold(labels0))
     val bcastRegime = gate.isRight
     // Pre-partition the adjacency ONCE, by the key every round's dominant
     // exchange would otherwise re-derive (guide §2.4 exchange reuse):
@@ -1222,85 +1189,5 @@ object Graph {
       r += 1
     }
     (labels, r)
-  }
-}
-
-/**
- * Rows of one to three long columns collected to the driver as primitive
- * arrays: row `i` is `(a(i), b(i), c(i))` as far as the frame has
- * columns (`width`); `aNull(i)` and `bNull(i)` mark a null (its array
- * slot then holds 0, as does the slot of a null `c`). The driver-local
- * regimes of the PageRanks, [[Graph.labelPropagation]] and
- * [[Dedup.connectedComponents]] hold their node ids, seed ids and edge
- * lists (weighted or not) this way and iterate over them instead of
- * starting Spark jobs per round.
- */
-private[operators] final class LongPairs(cols: Array[Array[Long]], nulls: java.util.BitSet) {
-  def width: Int = cols.length
-  def size: Int = cols(0).length
-  def a: Array[Long] = cols(0)
-  def b: Array[Long] = cols(1)
-  def c: Array[Long] = cols(2)
-  def aNull(i: Int): Boolean = nulls.get(3 * i)
-  def bNull(i: Int): Boolean = nulls.get(3 * i + 1)
-}
-
-private[operators] object LongPairs {
-
-  /** Row counts of the frames in one job: each partition counts its own
-   *  rows, so there is no aggregation exchange (and no second job). */
-  def count(frames: DataFrame*): Seq[Long] = {
-    val spark = frames.head.sparkSession
-    import spark.implicits._
-    val n = frames.length
-    val counts = frames.zipWithIndex.map { case (f, t) => f.select(lit(t).as("t")) }
-      .reduce(_ unionAll _)
-      .mapPartitions { rows =>
-        val c = new Array[Long](n)
-        rows.foreach(r => c(r.getInt(0)) += 1)
-        Iterator(c)
-      }.collect()
-    (0 until n).map(t => counts.map(_(t)).sum)
-  }
-
-  /** The first one to three columns of each frame, cast to long,
-   *  collected in one job. Each partition packs its rows into arrays, so
-   *  the driver receives a few arrays per partition, not one object per
-   *  row. The caller bounds the sizes with [[count]]. */
-  def collect(frames: DataFrame*): Seq[LongPairs] = {
-    val spark = frames.head.sparkSession
-    import spark.implicits._
-    val widths = frames.map(f => math.min(f.columns.length, 3)).toArray
-    val tagged = frames.zipWithIndex.map { case (f, t) =>
-      val cs = f.columns.take(3).map(c => f.col(c).cast("long"))
-        .padTo(3, lit(null).cast("long"))
-      f.select(lit(t).as("t") +: cs.toSeq.zipWithIndex.map { case (c, j) => c.as(s"c$j") }: _*)
-    }.reduce(_ unionAll _)
-    val n = frames.length
-    // per partition and frame: (frame, columns, null slots 3i + column)
-    val parts = tagged.mapPartitions { rows =>
-      val cols = widths.map(w => Array.fill(w)(Array.newBuilder[Long]))
-      val nulls = Array.fill(n)(Array.newBuilder[Int])
-      val len = new Array[Int](n)
-      rows.foreach { r =>
-        val t = r.getInt(0)
-        for (j <- 0 until widths(t)) {
-          if (r.isNullAt(j + 1)) { nulls(t) += 3 * len(t) + j; cols(t)(j) += 0L }
-          else cols(t)(j) += r.getLong(j + 1)
-        }
-        len(t) += 1
-      }
-      Iterator.tabulate(n)(t => (t, cols(t).map(_.result()), nulls(t).result()))
-    }.collect()
-    (0 until n).map { t =>
-      val mine = parts.filter(_._1 == t)
-      val nulls = new java.util.BitSet()
-      var offset = 0
-      mine.foreach { case (_, pc, ns) =>
-        ns.foreach(j => nulls.set(3 * offset + j))
-        offset += pc(0).length
-      }
-      new LongPairs(Array.tabulate(widths(t))(j => mine.flatMap(_._2(j))), nulls)
-    }
   }
 }

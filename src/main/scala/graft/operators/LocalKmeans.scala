@@ -1,9 +1,8 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.NearestCells
 import org.apache.spark.sql.types._
@@ -41,14 +40,13 @@ private[graft] final class LocalKmeans private (
     val schema = StructType(Seq(
       StructField("cell", LongType),
       StructField("centroid", if (iters > 0) ArrayType(DoubleType) else vecType)))
-    spark.createDataFrame(centroidRows.asJava, schema)
+    DriverLocal.frame(spark, centroidRows, schema)
   }
 
   /** [[Similarity.packedCentroids]] of [[centroids]], packed here: a
    *  one-row local relation, so no job builds it. */
   def packed: DataFrame =
-    spark.createDataFrame(
-      java.util.List.of(Row(centroidRows)), Similarity.packedCentroids(centroids).schema)
+    DriverLocal.frame(spark, Seq(Row(centroidRows)), Similarity.packedCentroids(centroids).schema)
 
   private def centroidRows: Seq[Row] = cells.indices.map(i => Row(cells(i), cents(i).toSeq))
 }
@@ -61,67 +59,46 @@ private[graft] object LocalKmeans {
   /**
    * The driver-local k-means of `corpus`, or `None` when the distributed
    * plan must run: the broadcast threshold is off, `nlist < 1`, the
-   * vectors are not `array<double>`, the corpus is over
-   * [[charge]] bytes, or a vector is null or holds a null,
+   * vectors are not `array<double>`, a vector is null or holds a null,
    * NaN, infinite or out-of-range element (so Spark keeps owning those
-   * errors and nulls). It also declines when a round leaves a non-empty
-   * corpus with no centroid, where the distributed assignment reads past
-   * an empty array. `corpus` is read twice: cache it first when its plan
-   * is expensive. The call posts a "kmeans" op record either way.
+   * errors and nulls), or the corpus is over the threshold at
+   * [[bytesOf]] a vector. It also declines when a round leaves a
+   * non-empty corpus with no centroid, where the distributed assignment
+   * reads past an empty array. `corpus` is read twice: cache it first
+   * when its plan is expensive. The call posts a "kmeans" op record
+   * either way.
    */
   def apply(corpus: DataFrame, vecCol: String, nlist: Int, iters: Int): Option[LocalKmeans] = {
     val vecType = corpus.schema(vecCol).dataType
     // the means below assume the (38,18) quotient type of the default rule
-    val eligible = nlist >= 1 && (vecType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }) && corpus.sparkSession.conf
-      .get("spark.sql.decimalOperations.allowPrecisionLoss", "true").toBoolean
-    val threshold = broadcastThreshold(corpus)
-    lazy val bytes = charge(corpus, vecCol)
-    val gate =
-      if (!eligible) Left(s"nlist $nlist, vectors ${vecType.sql} or allowPrecisionLoss off")
-      else if (threshold > 0 && bytes == Long.MaxValue) Left("a null, NaN or out-of-range element")
-      else fit("vectors", bytes, threshold)
-    val km = gate.flatMap { _ =>
-      val (vecs, seeds) = collect(corpus, vecCol, nlist)
-      var cells = Array.tabulate(seeds.length)(i => i + 1L)
-      var cents = seeds.map(vecs)
-      def stuck = cents.isEmpty && vecs.nonEmpty
-      for (_ <- 0 until iters if !stuck) {
-        val (c, m) = lloydRound(vecs, cells, cents)
-        cells = c
-        cents = m
-      }
-      if (stuck) Left("a round left no centroid")
-      else Right(new LocalKmeans(corpus.sparkSession, vecType, cells, cents, iters))
+    val eligible = nlist >= 1 && PartialFunction.cond(vecType) { case ArrayType(DoubleType, _) => true } &&
+      corpus.sparkSession.conf.get("spark.sql.decimalOperations.allowPrecisionLoss", "true").toBoolean
+    DriverLocal.gate[Option[LocalKmeans]](corpus, "kmeans",
+        Option.when(!eligible)(s"nlist $nlist, vectors ${vecType.sql} or allowPrecisionLoss off")) { t =>
+      DriverLocal.charge(corpus -> bytesOf(col(vecCol))).head.bytes
+        .toRight("a null, NaN or out-of-range element")
+        .flatMap(fit("vectors", _, t)).flatMap { reason =>
+          val (vecs, seeds) = collect(corpus, vecCol, nlist)
+          def stuck(cents: Array[Array[Double]]) = cents.isEmpty && vecs.nonEmpty
+          val seeded = (Array.tabulate(seeds.length)(i => i + 1L), seeds.map(vecs))
+          val (cells, cents) = (0 until iters).foldLeft(seeded) {
+            case ((c, m), _) => if (stuck(m)) (c, m) else lloydRound(vecs, c, m)
+          }
+          if (stuck(cents)) Left("a round left no centroid")
+          else Right((Some(new LocalKmeans(corpus.sparkSession, vecType, cells, cents, iters)), iters, reason))
+        }
+    } { declined =>
+      record(corpus, "kmeans", "distributed", iters, declined)
+      None
     }
-    record(corpus, "kmeans", if (km.isRight) "local" else "distributed", iters,
-      km.fold(identity, _ => gate.merge))
-    km.toOption
   }
 
-  /**
-   * What the rounds hold on the driver, in bytes: `rows * 24 + elements * 8`,
-   * the vectors as primitive arrays. Long.MaxValue when a vector is null
-   * or holds an element that is null, not finite or not under [[MaxAbs]].
-   * One job; each partition sums its own rows, so nothing is shuffled.
-   * The collect briefly holds Spark's collected rows beside the arrays,
-   * about twice this.
-   */
-  private[graft] def charge(corpus: DataFrame, vecCol: String): Long = {
-    import corpus.sparkSession.implicits._
-    val v = col(vecCol)
-    val valid = coalesce(forall(v, x => x.isNotNull && !isnan(x) && abs(x) < MaxAbs), lit(false))
-    val parts = corpus.select(coalesce(size(v), lit(0)), valid).as[(Int, Boolean)]
-      .mapPartitions { rs =>
-        var bytes = 0L
-        var ok = true
-        rs.foreach { case (n, fine) => bytes += 24L + 8L * n; ok &&= fine }
-        Iterator((bytes, ok))
-      }.collect()
-    if (parts.forall(_._2)) parts.map(_._1).sum else Long.MaxValue
-  }
+  /** What the rounds hold for vector `v` as a primitive array: 24 + 8
+   *  bytes an element; null when `v` or an element is null, not finite or
+   *  not under [[MaxAbs]]. The collect briefly holds about twice this. */
+  private[graft] def bytesOf(v: Column): Column =
+    when(coalesce(forall(v, x => x.isNotNull && !isnan(x) && abs(x) < MaxAbs), lit(false)),
+      size(v) * 8L + 24L)
 
   /** One job: every vector as a primitive array, and the indices of the
    *  seeds, the `nlist` smallest `(h, s)` hash keys in that order. */

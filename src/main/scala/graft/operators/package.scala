@@ -17,12 +17,13 @@ package graft
  * plan, and live until released. Operators with a bounded internal loop
  * (`Dedup.connectedComponents`, `IvfIndex.build`, k-means) unpersist
  * their own loop state before returning; the caches backing the
- * ''returned'' plan transfer to the caller. Loops whose rounds are
- * materialized through [[materializer]] (Graph's kCore, kTruss and BFS,
- * the distributed connected components) return a plan over the last
- * round's checkpoint instead: no cache to release, and Spark's context
- * cleaner frees a local checkpoint's blocks once the plan is
- * unreachable. In a long-lived session, release the caches after the
+ * ''returned'' plan transfer to the caller; a [[DriverLocal]] regime's
+ * local relation has none. Loops whose rounds are materialized (Graph's
+ * kCore, kTruss and BFS through [[materializer]], the distributed connected
+ * components' lazy local checkpoints) return a plan over the last round's
+ * checkpoint instead: no cache to release, and Spark's context cleaner frees
+ * a local checkpoint's blocks once the plan is unreachable. In a long-lived
+ * session, release the caches after the
  * result is materialized (written / collected / no longer re-queried)
  * with either:
  *
@@ -72,8 +73,7 @@ package object operators {
     }
   }
 
-  /** Per-round materialization for the iterative ops (Graph's kCore,
-   *  kTruss and BFS, and `Dedup.connectedComponents`' distributed rounds):
+  /** Per-round materialization for Graph's kCore, kTruss and BFS:
    *  `localCheckpoint` by default — correct and cheap in a single-app
    *  run, but its blocks live on executors, so a lost executor on a real
    *  cluster kills the lineage-truncated frame mid-peel. When the caller

@@ -243,4 +243,19 @@ class ErrorPathSuite extends AnyFunSuite with GraftSparkSession {
       assert(e.getMessage.contains("dim=2 must be divisible by m=0"), name)
     }
   }
+
+  test("distributed connected components raise rather than return unconverged labels") {
+    import spark.implicits._
+    val nodes = (1L to 4L).toDF("id")
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    // one round leaves node 3 at comp 2, node 4 at comp 3
+    val e = intercept[IllegalArgumentException](
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        graft.operators.Dedup.connectedComponents(nodes, chain, "id", maxIter = 1).collect()
+      })
+    assert(e.getMessage.contains("connectedComponents did not converge within 1 rounds"), e.getMessage)
+    // maxIter bounds only the distributed rounds: the driver's union-find has none
+    assert(graft.operators.Dedup.connectedComponents(nodes, chain, "id", maxIter = 1)
+      .collect().map(_.getLong(1)).toSet === Set(1L))
+  }
 }

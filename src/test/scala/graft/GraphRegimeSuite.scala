@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Graph}
+import graft.operators.{Dedup, Graph, Similarity}
 import graft.tools.Snapshot
 
 /**
@@ -180,6 +180,41 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
         "id", "w", 3))
   }
 
+  test("a zero weight declines weighted PageRank in the charge job, before any collect") {
+    val (nodes, edges) = intGraph()
+    val first = edges.head()
+    val e = weighted(edges).withColumn("w",
+      when(col("src") === first.getInt(0) && col("dst") === first.getInt(1), 0L).otherwise(col("w")))
+    spark.sharedState.cacheManager.clearCache()
+    val (_, snap) = instrumented(Graph.weightedPageRankFp(nodes, e, "id", "w", 3).collect())
+    assert(snap.ops.map(r => (r.regime, r.reason)) === Seq(("broadcast", "a weight outside the local range")))
+    // a gate that collected the edges and then scanned their weights ran 22
+    assert(snap.jobs === 21)
+  }
+
+  test("each driver-local gate takes an input at exactly its charge and declines a byte less") {
+    import spark.implicits._
+    val (nodes, edges) = intGraph()
+    val m = edges.count()
+    val pairs = edges.select(col("src").as("id_a"), col("dst").as("id_b"))
+    val vecs = (0 until 50).map(i => i.toLong -> Array.tabulate(4)(j => math.sin(4.0 * i + j))).toDF("id", "vec")
+    // op, its call, what its gate charges, the bytes, and the regime a decline takes
+    Seq[(String, () => Any, String, Long, String)](
+      ("pageRankFp", () => Graph.pageRankFp(nodes, edges, "id", 3), "edges", m * 16, "broadcast"),
+      ("weightedPageRankFp", () => Graph.weightedPageRankFp(nodes, weighted(edges), "id", "w", 3),
+        "edges", m * 24, "broadcast"),
+      ("labelPropagation", () => Graph.labelPropagation(nodes, edges, "id", "src", "dst", 3),
+        "edges", m * 16, "broadcast"),
+      ("connectedComponents", () => Dedup.connectedComponents(nodes, pairs), "pairs", m * 16, "distributed"),
+      ("kmeans", () => Similarity.kmeansCentroids(vecs, "vec", 4, 2), "vectors", 50L * 24 + 50L * 4 * 8,
+        "distributed")).foreach { case (op, run, what, n, declined) =>
+      def decision(t: Long) = withSQLConf(Threshold -> t.toString)(instrumented(run()))
+        ._2.ops.map(r => (r.op, r.regime, r.reason))
+      assert(decision(n) === Seq((op, "local", s"$what $n bytes <= threshold $n")))
+      assert(decision(n - 1) === Seq((op, declined, s"$what $n bytes > threshold ${n - 1}")))
+    }
+  }
+
   Seq(3, 10).foreach { rounds =>
     test(s"labelPropagation: local, broadcast and sort-merge regimes agree ($rounds rounds)") {
       Seq(awkward(), intGraph()).foreach { case (nodes, edges) =>
@@ -258,6 +293,18 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
     }
     assert(comps("10485760") === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
     assert(comps("-1") === comps("10485760"))
+  }
+
+  test("connectedComponents' distributed rounds write each checkpoint in the round's label-sum job") {
+    import spark.implicits._
+    val nodes = (1L to 4L).toDF("id")
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    spark.sharedState.cacheManager.clearCache()
+    val (labels, snap) = withSQLConf(Threshold -> "-1")(instrumented(
+      Dedup.connectedComponents(nodes, chain, "id").collect().map(_.getLong(1)).toSet))
+    assert(labels === Set(1L))
+    // an eager checkpoint a round, written by a job of its own, ran 36
+    assert(snap.jobs === 31)
   }
 
   test("connectedComponents leaves a pair set the caller cached in the cache") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.NearestCells
 import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, IvfIndex, LocalKmeans, Similarity}
+import graft.operators.{Dedup, DriverLocal, IvfIndex, LocalKmeans, Similarity}
 import graft.tools.OpRecord
 
 /**
@@ -82,7 +82,7 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
 
   test("the gate charges what the rounds hold, and takes a corpus at exactly its charge") {
     val df = corpus(n = 2000, dim = 32)
-    val charged = LocalKmeans.charge(df, "vec")
+    val charged = DriverLocal.charge(df -> LocalKmeans.bytesOf(col("vec"))).head.bytes.get
     assert(charged === 2000L * 24 + 2000L * 32 * 8)
     // the vectors are held as primitive arrays, not as boxed rows
     val (vecs, seeds) = LocalKmeans.collect(df, "vec", 16)
