@@ -228,5 +228,20 @@ assert len(cc_rows) == 8, cc_rows
 assert {r["id"]: r["comp"] for r in cc_rows} == {
     1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}, cc_rows
 
+# MinHash near-dup pairs chained into components: doc 2 is doc 1 with a
+# word appended (Jaccard 10/11 over 5-word shingles), doc 3 shares no
+# shingle, so the one pair is (1, 2) and 3 stays a singleton
+nd_docs = spark.createDataFrame([
+    (1, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (2, "the quick brown fox jumps over the lazy dog near the river bank today again"),
+    (3, "hash join slow scan click here and nothing else is shared at all")],
+    "doc_id long, text string")
+nd_pairs = DataFrame(api.minhashLshPairs(nd_docs._jdf, "doc_id", "text"), spark)
+nd_rows = nd_pairs.collect()
+assert [(r.id_a, r.id_b, r.inter, r.uni) for r in nd_rows] == [(1, 2, 10, 11)], nd_rows
+nd_comps = DataFrame(api.connectedComponents(
+    nd_docs.select("doc_id")._jdf, nd_pairs._jdf, "doc_id"), spark).collect()
+assert {r["id"]: r["comp"] for r in nd_comps} == {1: 1, 2: 1, 3: 3}, nd_comps
+
 print("PYTHON-SMOKE OK", agg, scalar, js)
 spark.stop()

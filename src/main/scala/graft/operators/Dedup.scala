@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.MinHashSignature
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Deduplication operators for large-scale corpus curation: exact,
@@ -229,9 +236,14 @@ object Dedup {
    * under memory pressure are recomputed from lineage. Long-lived
    * sessions cycling many inputs should `spark.catalog.clearCache()`
    * between pipelines (the Verify/Bench harnesses do).
+   * [[minhashLshPairs]]' driver-local regime releases the entry it took.
    */
   private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh")).cache()
+    shingled(df, idCol, textCol, n).cache()
+
+  /** The (id, shingle-hash set) projection, uncached. */
+  private[operators] def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
 
   /**
    * Exact n-gram Jaccard near-duplicate pairs via prefix-filtered inverted
@@ -380,6 +392,13 @@ object Dedup {
    * Output schema matches [[ngramJaccardPairs]]; with default banding the
    * two operators agree with overwhelming probability for thresholds
    * >= 0.8 on corpora whose near-dups sit above j ~ 0.85.
+   *
+   * Two regimes behind the operators' one gate ([[DriverLocal]]): when the
+   * shingle sets, at 24 bytes a document plus 8 a shingle, fit
+   * `spark.sql.autoBroadcastJoinThreshold`, one job charges them and one
+   * collects them, and the driver bands and verifies ([[localLsh]]).
+   * Otherwise, or with non-integral ids, the self-join below runs in
+   * Spark. Both give the same rows.
    */
   def minhashLshPairs(
       df: DataFrame,
@@ -391,23 +410,122 @@ object Dedup {
       num: Int = 4,
       den: Int = 5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
+    // taken before the charge, whose job fills it: the collect, or a
+    // declined call's self-join, reads the shingles instead of computing
+    // them again. The local regime releases it unless an earlier call
+    // left it for plans that still read it
+    val owned = shingled(df, idCol, textCol, n).storageLevel == StorageLevel.NONE
     val sets = shingleSets(df, idCol, textCol, n)
-    val sig = sets.select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
-    // band key = xxhash64 of the band's signature slice: the self-join
-    // shuffles (band, 8-byte long) instead of a stringified slice. A hash
-    // collision only adds candidates, which exact verification removes.
-    val banded = sig.select(col("id"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows))))))
-      .toDF("id", "band", "key")
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    verifyJaccard(candidates, sets, num, den)
+    val idType = sets.schema("id").dataType
+    val ineligible = if (!DriverLocal.isIntegral(idType)) Some("non-integral ids")
+      // size(null) is -1 there, and null shingle sets pair in the plan below
+      else Option.when(SQLConf.get.legacySizeOfNull)("legacy sizeOfNull")
+    // a row with a null id or shingle set never pairs: the driver holds none
+    val held = col("id").isNotNull && col("sh").isNotNull
+    DriverLocal.gate(df, "minhashLshPairs", ineligible) { t =>
+      val bytes = DriverLocal.charge(sets -> when(held, size(col("sh")) * 8L + 24L).otherwise(0L))
+      fit("shingles", bytes.head.bytes.get, t).flatMap { reason =>
+        import df.sparkSession.implicits._
+        val rows = sets.where(held).select(col("id").cast("long"), col("sh"))
+          .as[(Long, Array[Long])].collect()
+        localLsh(rows.map(_._1), rows.map(_._2), numHashes, bands, num, den, t).map { pairs =>
+          if (owned) sets.unpersist(blocking = false)
+          val out = DriverLocal.frame(df.sparkSession, pairs,
+            StructType(Seq("id_a", "id_b", "inter", "uni").map(StructField(_, LongType, nullable = false))))
+            .select(col("id_a").cast(idType), col("id_b").cast(idType), col("inter"), col("uni"))
+          (out, 0, reason)
+        }
+      }
+    } { declined =>
+      record(df, "minhashLshPairs", "distributed", 0, declined)
+      val rows = numHashes / bands
+      val sig = sets.select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
+      // band key = xxhash64 of the band's signature slice: the self-join
+      // shuffles (band, 8-byte long) instead of a stringified slice. A hash
+      // collision only adds candidates, which exact verification removes.
+      val banded = sig.select(col("id"), posexplode(
+        transform(sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows))))))
+        .toDF("id", "band", "key")
+      val candidates = banded.as("a")
+        .join(banded.as("b"),
+          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+            col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      verifyJaccard(candidates, sets, num, den)
+    }
+  }
+
+  /**
+   * [[minhashLshPairs]]' bands and verification on the driver, over row
+   * `i`'s id `ids(i)` and shingle set `sets(i)`, as the distributed plan
+   * computes them: the signature is `graft_minhash`'s, a band key is
+   * Spark's `xxhash64` of the band's slice (each element hashed into the
+   * running hash from seed 42), a candidate is an id pair `a < b` whose
+   * rows share a (band, key), and every row of `a` is verified against
+   * every row of `b`, so duplicate ids give a row per matching row pair.
+   * Returns `(id_a, id_b, inter, uni)` rows, or declines when the row
+   * pairs the buckets can yield, at 16 bytes each, exceed `threshold`:
+   * those grow with the square of a cluster of copies, past anything the
+   * shingle charge bounds.
+   */
+  private def localLsh(
+      ids: Array[Long],
+      sets: Array[Array[Long]],
+      numHashes: Int,
+      bands: Int,
+      num: Int,
+      den: Int,
+      threshold: Long): Either[String, Seq[Row]] = {
+    val minhash = MinHashSignature(Literal.create(null, ArrayType(LongType)), numHashes)
+    val rows = numHashes / bands
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Long]]
+    sets.indices.foreach { i =>
+      val sig = minhash.compute(UnsafeArrayData.fromPrimitiveArray(sets(i))).toLongArray()
+      for (b <- 0 until bands) {
+        val key = (b * rows until (b + 1) * rows).foldLeft(42L)((h, j) => XXH64.hashLong(sig(j), h))
+        buckets.getOrElseUpdate((b, key), mutable.ArrayBuffer.empty) += ids(i)
+      }
+    }
+    val rowsOf = ids.indices.groupBy(ids(_))
+    // per bucket, the row pairs of its distinct ids: (sum m)^2 - sum m^2,
+    // halved, with m an id's rows. It bounds the candidates and the output
+    val rowPairs = buckets.valuesIterator.map { bucket =>
+      val m = bucket.distinct.map(rowsOf(_).length.toLong)
+      (m.sum * m.sum - m.map(x => x * x).sum) / 2
+    }.sum
+    fit("pairs", 16 * rowPairs, threshold).map { _ =>
+      val candidates = mutable.HashSet.empty[(Long, Long)]
+      buckets.valuesIterator.foreach { bucket =>
+        val distinct = bucket.distinct.sorted
+        for (x <- distinct.indices; y <- x + 1 until distinct.length) candidates += distinct(x) -> distinct(y)
+      }
+      // graft_word_shingles' sets hold distinct values, so the size of
+      // array_intersect is a merge of sorted copies
+      val sorted = sets.map(_.sorted)
+      for {
+        (a, b) <- candidates.toSeq.sorted
+        i <- rowsOf(a)
+        j <- rowsOf(b)
+        inter = common(sorted(i), sorted(j))
+        uni = sets(i).length + sets(j).length - inter
+        if inter.toLong * den >= uni.toLong * num
+      } yield Row(a, b, inter.toLong, uni.toLong)
+    }
+  }
+
+  /** How many values two ascending arrays of distinct values share. */
+  private def common(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
   }
 
   /**
@@ -479,8 +597,6 @@ object Dedup {
       idCol: String,
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x

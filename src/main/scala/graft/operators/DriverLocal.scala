@@ -6,9 +6,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 
 /**
  * The one core of the driver-local regimes (the PageRanks,
- * [[Graph.labelPropagation]], [[Dedup.connectedComponents]] and
- * [[LocalKmeans]]), which run every round on the driver when their input
- * fits `spark.sql.autoBroadcastJoinThreshold`: one [[charge]] job, one
+ * [[Graph.labelPropagation]], [[Dedup.connectedComponents]],
+ * [[Dedup.minhashLshPairs]] and [[LocalKmeans]]), which run every round
+ * on the driver when their input fits
+ * `spark.sql.autoBroadcastJoinThreshold`: one [[charge]] job, one
  * [[gate]], a collect into primitive arrays and a local result [[frame]].
  */
 private[graft] object DriverLocal {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -120,13 +120,19 @@ object IvfIndex {
       vecCol: String,
       k: Int,
       nprobe: Int = 4): DataFrame = {
+    // the <= nlist centroids, packed on the driver into a one-row local
+    // relation, as LocalKmeans.packed does: no cache entry to release
     val centroids = spark.read.parquet(s"$path/centroids")
-    val cents = broadcast(Similarity.packedCentroids(centroids).cache())
+    val cents = DriverLocal.frame(spark, Seq(Row(centroids.select("cell", "centroid").collect().toSeq)),
+      Similarity.packedCentroids(centroids).schema)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val probes = q.join(cents)
+    // checkpointed lazily: the probe-cell collect computes the probes
+    // once and the returned plan reads that copy. A local checkpoint takes
+    // no cache entry; its blocks go when the plans holding them do
+    val probes = q.join(broadcast(cents))
       .select(col("query_id"), col("qv"),
         explode(Similarity.probeCells(col("qv"), col("cents"), nprobe)).as("cell"))
-      .cache()
+      .localCheckpoint(eager = false)
     // the probe set (|queries| * nprobe cell ids) prunes the parquet scan
     // statically: only the probed cell partitions are read at all
     val probedCells = probes.select("cell").distinct().collect().map(_.getLong(0)).toSeq

@@ -59,9 +59,6 @@ object LshIndex {
       .toDF("id", "band", "key")
   }
 
-  private def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), Dedup.shingleHashes(col(textCol), n).as("sh"))
-
   private def prune(df: DataFrame, bucketCol: String, bs: Seq[Long]): DataFrame =
     if (bs.isEmpty) df.where(lit(false)) else df.where(col(bucketCol).isin(bs: _*))
 
@@ -119,7 +116,7 @@ object LshIndex {
       bands: Int,
       buckets: Int,
       mode: String): Unit = {
-    withCached(shingled(docs, idCol, textCol, n)) { sets =>
+    withCached(Dedup.shingled(docs, idCol, textCol, n)) { sets =>
       // bucket-aligned files, as in TextIndex.build: without the
       // repartition every task emits a file per bucket it sees
       bandedKeys(sets, numHashes, bands)
@@ -155,9 +152,9 @@ object LshIndex {
         m.getAs[Int]("bands"), m.getAs[Int]("buckets"))
 
     // batch-sized frames are cached across the probe collects and the
-    // returned plan (the IvfIndex.query pattern); long-lived sessions
-    // release them with spark.catalog.clearCache()
-    val qsets = shingled(queryDocs, idCol, textCol, n).cache()
+    // returned plan; long-lived sessions release them with
+    // spark.catalog.clearCache()
+    val qsets = Dedup.shingled(queryDocs, idCol, textCol, n).cache()
     val qkeys = bandedKeys(qsets, numHashes, bands)
       .toDF("qid", "band", "key")
       .withColumn("bucket", pmod(col("key"), lit(buckets.toLong)))

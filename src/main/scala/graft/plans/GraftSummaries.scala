@@ -120,9 +120,13 @@ object GraftSummaries {
    * sketches over `newData` ONLY, union with the existing on-disk
    * summary, and combine per key (sketch merge is associative, so
    * combine-of-combines equals one accumulate over the full history);
-   * stored row counts sum. The refresh costs O(increment), never
-   * O(base) — at 100 TB the base is appended to daily and re-reading it
-   * to rebuild the summary is exactly what this avoids.
+   * stored row counts sum. The refresh never re-reads the base: at
+   * 100 TB the base is appended to daily and re-reading it to rebuild
+   * the summary is exactly what this avoids. It is not O(increment):
+   * every stored summary row is re-combined (shuffled with the
+   * increment's rows by key) and the whole summary is rewritten, so an
+   * append costs O(summary + increment): on a fine summary, about one
+   * base row a key, it does as much work as a rebuild or more.
    *
    * The merged summary replaces `summaryPath` via a staging write +
    * directory swap (parquet cannot overwrite a path it is reading), and

@@ -140,6 +140,21 @@ class IvfRegimeSuite extends AnyFunSuite with GraftSparkSession {
     }
   }
 
+  test("query plus collect leaves no cache entry behind on an index from either regime") {
+    val vecs = corpus()
+    val cache = spark.sharedState.cacheManager
+    Seq(None, Some(Off)).foreach { conf =>
+      withTempDir("graft_ivf_query_cache") { path =>
+        conf.fold(IvfIndex.build(vecs, "id", "vec", path, nlist = 8))(c =>
+          withSQLConf(c)(IvfIndex.build(vecs, "id", "vec", path, nlist = 8)))
+        cache.clearCache()
+        assert(IvfIndex.query(spark, path, vecs.where(col("id") % 20 === 0), "id", "vec", k = 3)
+          .collect().nonEmpty)
+        assert(cache.isEmpty, s"threshold ${conf.fold("default")(_._2)}")
+      }
+    }
+  }
+
   test("ivfKnn and semanticDedup agree across regimes and cache nothing locally") {
     val vecs = corpus(n = 180, dim = 8, seed = 11)
     // planted near-copies, so dedup has pairs to find

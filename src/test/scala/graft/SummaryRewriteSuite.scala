@@ -141,8 +141,8 @@ class SummaryRewriteSuite extends AnyFunSuite with GraftSparkSession {
         GraftSummaries.buildSummaryTable(
           spark, baseDir, summaryDir, Seq("event_type"), "props", "distinct", "sk")
         // the increment lands in the base table AND refreshes the summary —
-        // the refresh aggregates ONLY the new batch (O(increment), the
-        // 100 TB contract), then sketch-combines with the stored state
+        // the refresh aggregates ONLY the new batch (the base is never
+        // re-read), then sketch-combines it with every stored row
         half2.write.mode("append").parquet(baseDir)
         GraftSummaries.appendToSummaryTable(
           spark, baseDir, summaryDir, half2, Seq("event_type"), "props", "distinct", "sk")
