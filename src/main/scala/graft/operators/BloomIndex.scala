@@ -60,7 +60,7 @@ object BloomIndex {
       .agg(graft.functions.bloom_union(col("filter"), maxItems, fpp).as("filter"))
       .select(col("filter"), lit(maxItems).as("max_items"), lit(fpp).as("fpp"))
     // parquet cannot overwrite a path it is reading: stage + swap (the
-    // appendToSummaryTable pattern)
+    // compactSummaryTable pattern)
     val staging = path.stripSuffix("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
     val target = new org.apache.hadoop.fs.Path(path)

@@ -880,19 +880,17 @@ object Graph {
       val deg = cur.select(col("a").as("node"))
         .unionAll(cur.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      val weak = deg.where(col("deg") < k).select("node").cache()
-      if (weak.count() == 0L) {
-        converged = true
-        weak.unpersist(blocking = false)
-      } else {
-        val next = mat(cur
-          .join(weak.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
-          .join(weak.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
-        // eager: materialized before parents drop
-        cur.unpersist(blocking = false)
-        weak.unpersist(blocking = false)
-        cur = next
-        it += 1
+      withCached(deg.where(col("deg") < k).select("node")) { weak =>
+        if (weak.count() == 0L) converged = true
+        else {
+          val next = mat(cur
+            .join(weak.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
+            .join(weak.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
+          // eager: materialized before parents drop
+          cur.unpersist(blocking = false)
+          cur = next
+          it += 1
+        }
       }
     }
     require(converged || it < maxIters,

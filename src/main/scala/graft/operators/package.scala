@@ -121,7 +121,7 @@ package object operators {
 
   /** Posts `op`'s regime decision for [[graft.tools.Instrument]]. It only
    *  enqueues, so it is safe inside a timed pass. */
-  private[operators] def record(df: DataFrame, op: String, regime: String, rounds: Int,
+  private[graft] def record(df: DataFrame, op: String, regime: String, rounds: Int,
       reason: String): Unit =
     ListenerBusAccess.post(df.sparkSession.sparkContext, graft.tools.OpRecord(op, regime, rounds, reason))
 

@@ -1,7 +1,12 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.{call_function, col, count, lit, sum}
 import org.apache.spark.sql.graft.SummaryCatalog
+
+import graft.operators.record
 
 /**
  * Public API for the automatic summary-table rewrite (see
@@ -102,38 +107,39 @@ object GraftSummaries {
       countCol: String = "n_rows"): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column is required")
     val (accumulate, _) = SummaryCatalog.functions(kind)
-    import org.apache.spark.sql.functions.{call_function, col, count, lit}
     val base = spark.read.parquet(basePath)
     base.groupBy(keyCols.map(col): _*)
       .agg(call_function(accumulate, col(valueCol)).as(sketchCol),
         count(lit(1)).as(countCol))
       .write.mode("overwrite").parquet(summaryPath)
-    val summary = spark.read.parquet(summaryPath)
-    SummaryCatalog.register(basePath, summary, keyCols, valueCol, sketchCol, kind,
-      countCol = Some(countCol))
-    summary
+    serve(spark.read.parquet(summaryPath), basePath, keyCols, valueCol, sketchCol, kind,
+      countCol)
   }
 
   /**
    * Incrementally refresh a built summary with a NEW batch of base rows
    * — the ingestion path of the materialized-view workflow: accumulate
-   * sketches over `newData` ONLY, union with the existing on-disk
-   * summary, and combine per key (sketch merge is associative, so
-   * combine-of-combines equals one accumulate over the full history);
-   * stored row counts sum. The refresh never re-reads the base: at
-   * 100 TB the base is appended to daily and re-reading it to rebuild
-   * the summary is exactly what this avoids. It is not O(increment):
-   * every stored summary row is re-combined (shuffled with the
-   * increment's rows by key) and the whole summary is rewritten, so an
-   * append costs O(summary + increment): on a fine summary, about one
-   * base row a key, it does as much work as a rebuild or more.
+   * sketches over `newData` ONLY and append the increment's `(keys,
+   * sketch, count)` rows to `summaryPath` as one more write (a delta).
+   * No stored row is read, combined or rewritten, so an append costs
+   * O(increment); the base is never re-read either. A summary may then
+   * hold several rows for one key, which every reader re-aggregates: the
+   * summary rewrite combines the sketches per group and answers
+   * `count(*)` as `sum(countCol)`, explicit rollups group and combine.
    *
-   * The merged summary replaces `summaryPath` via a staging write +
-   * directory swap (parquet cannot overwrite a path it is reading), and
-   * the registration for `basePath` is refreshed to serve rewrites from
-   * the new file. Callers append `newData` to the base table themselves
-   * (this mirrors how the data lands there in the first place); the
-   * sketch params frozen at build time must still be in effect.
+   * Each delta costs every later scan of the summary one more file, so
+   * once the deltas since the last build or compaction would exceed
+   * `defaultParallelism` (one wave of scan tasks) the append folds its
+   * increment into a [[compactSummaryTable]] instead. Deltas are counted
+   * from the directory listing: every file of one Spark write carries
+   * that write's job UUID.
+   *
+   * Before any file lands the stored summary must have the key, sketch
+   * and count columns with the increment's types; the registration for
+   * `basePath` is then refreshed to serve rewrites from the grown
+   * summary. Callers append `newData` to the base table themselves (this
+   * mirrors how the data lands there in the first place); the sketch
+   * params frozen at build time must still be in effect.
    */
   def appendToSummaryTable(
       spark: org.apache.spark.sql.SparkSession,
@@ -146,28 +152,104 @@ object GraftSummaries {
       sketchCol: String = "sketch",
       countCol: String = "n_rows"): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column is required")
-    val (accumulate, combine) = SummaryCatalog.functions(kind)
-    import org.apache.spark.sql.functions.{call_function, col, count, lit, sum}
+    val (accumulate, _) = SummaryCatalog.functions(kind)
     val existing = spark.read.parquet(summaryPath)
     require(existing.columns.contains(countCol),
       s"existing summary at $summaryPath has no count column $countCol " +
         "(built before counts were stored? rebuild with buildSummaryTable)")
-    val old = existing.select((keyCols.map(col) :+ col(sketchCol) :+ col(countCol)): _*)
     val delta = newData.groupBy(keyCols.map(col): _*)
       .agg(call_function(accumulate, col(valueCol)).as(sketchCol),
         count(lit(1)).as(countCol))
-    val merged = old.unionByName(delta)
+    val names = keyCols :+ sketchCol :+ countCol
+    names.zip(delta.schema.fields).foreach { case (name, field) =>
+      val stored = existing.schema.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"existing summary at $summaryPath has no column $name"))
+      if (!DataTypeUtils.sameType(stored.dataType, field.dataType)) {
+        throw new IllegalArgumentException(
+          s"existing summary at $summaryPath stores column $name as " +
+            s"${stored.dataType.simpleString}, the increment has ${field.dataType.simpleString}")
+      }
+    }
+    val deltas = deltaWrites(existing) + 1
+    val bound = spark.sparkContext.defaultParallelism
+    if (deltas > bound) {
+      compact(spark, basePath, summaryPath, existing, Some(delta), keyCols, valueCol, kind,
+        sketchCol, countCol, deltas, s"deltas $deltas > parallelism $bound")
+    } else {
+      delta.select(existing.columns.filter(names.contains).map(col): _*)
+        .write.mode("append").parquet(summaryPath)
+      record(delta, "summary_append", "delta", deltas, s"deltas $deltas <= parallelism $bound")
+      serve(spark.read.schema(existing.schema).parquet(summaryPath), basePath, keyCols,
+        valueCol, sketchCol, kind, countCol)
+    }
+  }
+
+  /**
+   * Combine a summary's rows per key into one row a key and register the
+   * result: the deltas [[appendToSummaryTable]] wrote since the last build
+   * or compaction fold into one write, so later scans read as few files
+   * as a fresh build. Sketch merge is associative, so combine-of-combines
+   * equals one accumulate over the full history; stored row counts sum.
+   * The combined summary replaces `summaryPath` via a staging write +
+   * directory swap (parquet cannot overwrite a path it is reading).
+   */
+  def compactSummaryTable(
+      spark: org.apache.spark.sql.SparkSession,
+      basePath: String,
+      summaryPath: String,
+      keyCols: Seq[String],
+      valueCol: String,
+      kind: String,
+      sketchCol: String = "sketch",
+      countCol: String = "n_rows"): DataFrame = {
+    require(keyCols.nonEmpty, "at least one key column is required")
+    val existing = spark.read.parquet(summaryPath)
+    compact(spark, basePath, summaryPath, existing, None, keyCols, valueCol, kind, sketchCol,
+      countCol, deltaWrites(existing), "requested")
+  }
+
+  private def compact(
+      spark: org.apache.spark.sql.SparkSession,
+      basePath: String,
+      summaryPath: String,
+      existing: DataFrame,
+      increment: Option[DataFrame],
+      keyCols: Seq[String],
+      valueCol: String,
+      kind: String,
+      sketchCol: String,
+      countCol: String,
+      deltas: Int,
+      reason: String): DataFrame = {
+    val (_, combine) = SummaryCatalog.functions(kind)
+    val old = existing.select((keyCols.map(col) :+ col(sketchCol) :+ col(countCol)): _*)
+    val merged = increment.fold(old)(old.unionByName)
       .groupBy(keyCols.map(col): _*)
       .agg(call_function(combine, col(sketchCol)).as(sketchCol),
         sum(col(countCol)).cast("long").as(countCol))
     val staging = summaryPath.stripSuffix("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
-    val target = new org.apache.hadoop.fs.Path(summaryPath)
+    val target = new Path(summaryPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(target, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), target),
+    require(fs.rename(new Path(staging), target),
       s"failed to move refreshed summary into place at $summaryPath")
-    val summary = spark.read.parquet(summaryPath)
+    record(existing, "summary_append", "compact", deltas, reason)
+    serve(spark.read.parquet(summaryPath), basePath, keyCols, valueCol, sketchCol, kind,
+      countCol)
+  }
+
+  /** Writes [[appendToSummaryTable]] made since `summary` was built or
+   *  compacted: its files' distinct write UUIDs, less the build's. */
+  private def deltaWrites(summary: DataFrame): Int =
+    math.max(0, summary.inputFiles.flatMap(WriteUuid.findFirstMatchIn).map(_.group(1))
+      .distinct.length - 1)
+
+  /** Spark names a write's files `part-<split>-<job uuid>...`. */
+  private val WriteUuid = "/part-\\d+-([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})".r
+
+  private def serve(summary: DataFrame, basePath: String, keyCols: Seq[String],
+      valueCol: String, sketchCol: String, kind: String, countCol: String): DataFrame = {
     SummaryCatalog.register(basePath, summary, keyCols, valueCol, sketchCol, kind,
       countCol = Some(countCol))
     summary

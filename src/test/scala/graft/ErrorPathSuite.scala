@@ -139,6 +139,26 @@ class ErrorPathSuite extends AnyFunSuite with GraftSparkSession {
     assert(noCounts.getMessage.contains("buildSummaryTable"), noCounts.getMessage)
   }
 
+  test("summary append rejects an increment of another type before any file lands") {
+    SparkEntry.prep(spark)
+    withTempDir("err_sum3") { tmp =>
+      val (base, dir) = (s"$tmp/base", s"$tmp/s")
+      spark.range(20).selectExpr("id % 3 AS k", "cast(id AS string) AS v").write.parquet(base)
+      try {
+        graft.plans.GraftSummaries.buildSummaryTable(spark, base, dir, Seq("k"), "v", "distinct")
+        val files = new java.io.File(dir).list().sorted
+        val e = intercept[IllegalArgumentException] {
+          graft.plans.GraftSummaries.appendToSummaryTable(spark, base, dir,
+            spark.range(5).selectExpr("cast(id AS string) AS k", "cast(id AS string) AS v"),
+            Seq("k"), "v", "distinct")
+        }
+        assert(e.getMessage.contains("column k as bigint, the increment has string"),
+          e.getMessage)
+        assert(new java.io.File(dir).list().sorted === files, "no file may land")
+      } finally graft.plans.GraftSummaries.clear()
+    }
+  }
+
   test("registered confs are visible in SET -v with docs and defaults") {
     val rows = spark.sql("SET -v").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))

@@ -75,9 +75,9 @@ class StreamingPipelineSuite extends AnyFunSuite with GraftSparkSession {
       val sumDir = root + "/sum"
       val input = MemoryStream[(String, String)](spark)
       // the continuous-ingestion shape: each micro-batch lands in the base
-      // table AND refreshes the materialized sketch summary, re-combining
-      // the stored summary with the batch — the base is never re-read
-      // after its batch is written
+      // table AND refreshes the materialized sketch summary, appending the
+      // batch's sketch rows as a delta — the base is never re-read after
+      // its batch is written
       val q = input.toDF().toDF("event_type", "props").writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           batch.persist()

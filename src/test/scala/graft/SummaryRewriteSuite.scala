@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -142,7 +143,7 @@ class SummaryRewriteSuite extends AnyFunSuite with GraftSparkSession {
           spark, baseDir, summaryDir, Seq("event_type"), "props", "distinct", "sk")
         // the increment lands in the base table AND refreshes the summary —
         // the refresh aggregates ONLY the new batch (the base is never
-        // re-read), then sketch-combines it with every stored row
+        // re-read) and appends its rows to the summary as a delta
         half2.write.mode("append").parquet(baseDir)
         GraftSummaries.appendToSummaryTable(
           spark, baseDir, summaryDir, half2, Seq("event_type"), "props", "distinct", "sk")
@@ -159,6 +160,151 @@ class SummaryRewriteSuite extends AnyFunSuite with GraftSparkSession {
           // tiny cardinality: combine-of-combines is exact, counts sum exactly
           assert(rewritten.collect() === baseline)
         }
+      } finally GraftSummaries.clear()
+    }
+  }
+
+  /** The distinct writes (job UUIDs) among the summary files in `dir`. */
+  private def writes(dir: String): Set[String] =
+    new java.io.File(dir).list().toSet.filter(_.startsWith("part-"))
+      .map(_.split("-").slice(2, 7).mkString("-"))
+
+  /** A distinct summary of `event_type` at `tmp/summary`, built over the
+   *  first of `n + 1` slices of the events, which becomes the base table
+   *  at `tmp/base`. `body` gets both paths and `append(i)`, which lands
+   *  slice i in the base table and appends it to the summary. */
+  private def withDeltas[T](n: Int)(body: (String, String, Int => Unit) => T): T = {
+    import org.apache.spark.sql.functions.col
+    SparkEntry.prep(spark)
+    withTempDir("graft_delta") { tmp =>
+      val (baseDir, summaryDir) = (tmp + "/base", tmp + "/summary")
+      val events = spark.read.parquet(basePath)
+      def slice(i: Int) = events.where(col("event_id") % (n + 1) === i)
+      def append(i: Int): Unit = {
+        slice(i).write.mode("append").parquet(baseDir)
+        GraftSummaries.appendToSummaryTable(
+          spark, baseDir, summaryDir, slice(i), Seq("event_type"), "props", "distinct")
+      }
+      try {
+        slice(0).write.parquet(baseDir)
+        GraftSummaries.buildSummaryTable(
+          spark, baseDir, summaryDir, Seq("event_type"), "props", "distinct")
+        body(baseDir, summaryDir, append)
+      } finally GraftSummaries.clear()
+    }
+  }
+
+  /** The full-history rollup of `value` by `key` over the base at
+   *  `baseDir`: as the base scan answers it, and as the summary rewrite
+   *  does, reading no base file. */
+  private def rollups(baseDir: String, key: String, value: String): (Seq[Row], Seq[Row]) = {
+    spark.read.parquet(baseDir).createOrReplaceTempView("sr_delta_base")
+    val sql = s"""SELECT $key, approx_count_distinct_ex($value) AS nd, count(*) AS n
+                 |FROM sr_delta_base GROUP BY $key ORDER BY $key""".stripMargin
+    val base = spark.sql(sql).collect().toSeq
+    withSQLConf(GraftSummaries.ENABLED_KEY -> "true") {
+      val rewritten = spark.sql(sql)
+      assert(!scannedPaths(rewritten).exists(_.endsWith("/base")),
+        "the rollup must read only the summary")
+      (base, rewritten.collect().toSeq)
+    }
+  }
+
+  test("appends write deltas; compactSummaryTable folds them with identical rollups") {
+    import org.apache.spark.sql.functions.{call_function, col, sum}
+    withDeltas(3) { (baseDir, summaryDir, append) =>
+      val (_, snap) = instrumented((1 to 3).foreach(append))
+      assert(snap.ops.map(r => (r.op, r.regime, r.rounds)) ===
+        (1 to 3).map(("summary_append", "delta", _)))
+      assert(writes(summaryDir).size === 4, "the build plus one write an append")
+      val baseRows = spark.read.parquet(baseDir).count()
+      def stored() = spark.read.parquet(summaryDir)
+      def explicit() = stored().groupBy("event_type")
+        .agg(call_function("approx_count_distinct_combine", col("sketch")).as("sk"),
+          sum("n_rows").as("n"))
+        .selectExpr("event_type", "approx_count_distinct_estimate(sk)", "n")
+        .orderBy("event_type").collect().toSeq
+      val (base, delta) = rollups(baseDir, "event_type", "props")
+      assert(delta === base)
+      val explicitDelta = explicit()
+      assert(stored().count() > base.size, "several rows a key before the compaction")
+      assert(stored().agg(sum("n_rows")).head.getLong(0) === baseRows)
+
+      val (_, c) = instrumented(GraftSummaries.compactSummaryTable(
+        spark, baseDir, summaryDir, Seq("event_type"), "props", "distinct"))
+      assert(c.ops.map(r => (r.op, r.regime, r.rounds, r.reason)) ===
+        Seq(("summary_append", "compact", 3, "requested")))
+      assert(writes(summaryDir).size === 1)
+      assert(stored().count() === base.size, "one row a key after the compaction")
+      assert(rollups(baseDir, "event_type", "props") === ((base, delta)))
+      assert(explicit() === explicitDelta)
+      assert(stored().agg(sum("n_rows")).head.getLong(0) === baseRows)
+    }
+  }
+
+  test("the append past defaultParallelism deltas compacts the summary into one write") {
+    val p = spark.sparkContext.defaultParallelism
+    withDeltas(p + 1) { (baseDir, summaryDir, append) =>
+      for (i <- 1 to p) {
+        append(i)
+        assert(writes(summaryDir).size === i + 1)
+      }
+      val (_, snap) = instrumented(append(p + 1))
+      assert(snap.ops.map(r => (r.regime, r.rounds, r.reason)) ===
+        Seq(("compact", p + 1, s"deltas ${p + 1} > parallelism $p")))
+      assert(writes(summaryDir).size === 1, "the automatic compaction fired")
+      val (base, rewritten) = rollups(baseDir, "event_type", "props")
+      assert(rewritten === base)
+      assert(spark.read.parquet(summaryDir).count() === base.size)
+    }
+  }
+
+  test("a rebuild after deltas leaves only the rebuild's files") {
+    withDeltas(2) { (baseDir, summaryDir, append) =>
+      append(1)
+      append(2)
+      val before = writes(summaryDir)
+      assert(before.size === 3)
+      GraftSummaries.buildSummaryTable(
+        spark, baseDir, summaryDir, Seq("event_type"), "props", "distinct")
+      val after = writes(summaryDir)
+      assert(after.size === 1 && (after & before).isEmpty, s"$before -> $after")
+      val (base, rewritten) = rollups(baseDir, "event_type", "props")
+      assert(rewritten === base)
+    }
+  }
+
+  test("a one-row-per-key summary written before deltas takes deltas and compacts") {
+    import spark.implicits._
+    // src/test/resources/golden/summary_v1 is buildSummaryTable(base, _,
+    // Seq("k"), "v", "distinct") over these 30 rows, written by the
+    // version before appends wrote deltas: one row a key, one write
+    val golden = new java.io.File(getClass.getResource("/golden/summary_v1").toURI)
+    def rows(r: Range, keys: String, mod: Int) =
+      r.map(i => (keys(i % keys.length).toString, s"u${i * 7 % mod}")).toDF("k", "v")
+    withTempDir("graft_golden") { tmp =>
+      val (baseDir, summaryDir) = (tmp + "/base", tmp + "/summary")
+      org.apache.commons.io.FileUtils.copyDirectory(golden, new java.io.File(summaryDir))
+      rows(0 until 30, "abc", 11).write.parquet(baseDir)
+      try {
+        GraftSummaries.registerDistinctSummary(baseDir, spark.read.parquet(summaryDir),
+          Seq("k"), "v", "sketch", countCol = Some("n_rows"))
+        val (base, rewritten) = rollups(baseDir, "k", "v")
+        assert(rewritten === base)
+        assert(base.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ===
+          Seq(("a", 10L, 10L), ("b", 10L, 10L), ("c", 10L, 10L)))
+        for (r <- Seq(30 until 50, 50 until 80)) {
+          val delta = rows(r, "abcd", 23)
+          delta.write.mode("append").parquet(baseDir)
+          GraftSummaries.appendToSummaryTable(
+            spark, baseDir, summaryDir, delta, Seq("k"), "v", "distinct")
+        }
+        assert(writes(summaryDir).size === 3)
+        val appended = rollups(baseDir, "k", "v")
+        assert(appended._2 === appended._1)
+        GraftSummaries.compactSummaryTable(spark, baseDir, summaryDir, Seq("k"), "v", "distinct")
+        assert(writes(summaryDir).size === 1)
+        assert(rollups(baseDir, "k", "v") === appended)
       } finally GraftSummaries.clear()
     }
   }
