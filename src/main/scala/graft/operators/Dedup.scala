@@ -553,8 +553,9 @@ object Dedup {
    *    component is its own id by definition; joining every corpus row
    *    through every round would dominate the loop for zero
    *    information). Per round one shuffle keyed on the endpoints,
-   *    labels locally checkpointed (a plan leaf, so the plan does not
-   *    grow with the rounds); rounds = propagation-graph diameter
+   *    labels a plan leaf ([[Rounds.step]]: reliable when the
+   *    SparkContext has a checkpoint dir, local otherwise), so the plan
+   *    does not grow with the rounds; rounds = propagation-graph diameter
    *    (tiny for dup clusters — dense cliques-of-cliques, not long
    *    chains). The driver-side loop reads ONE aggregated scalar per
    *    round (the label sum, monotonically decreasing — unchanged sum
@@ -637,36 +638,32 @@ object Dedup {
     val sym = edges.select(col("id_a").as("id"), col("id_b").as("nbr"))
       .unionByName(edges.select(col("id_b").as("id"), col("id_a").as("nbr")))
       .cache()
-    // each round is materialized to a plan leaf: a cached round's plan
-    // holds the previous round's twice (both join sides), so without the
-    // truncation the plan doubles every round. The checkpoint is lazy:
-    // the round's label-sum job writes it
-    val mat = (df: DataFrame) => df.localCheckpoint(eager = false)
-    var labels = mat(sym.select(col("id")).distinct().select(col("id"), col("id").as("comp")))
-    var lastSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // each round is a plan leaf (a cached round's plan holds the previous
+    // round's twice, both join sides, so without the truncation the plan
+    // doubles every round), written by the round's label-sum job
+    var labels: DataFrame = null
+    var lastSum: java.math.BigDecimal = null
+    def summed(df: DataFrame): Boolean = {
+      val last = lastSum
+      val (leaf, s) = Rounds.step(df)(labelSum)
+      labels = leaf; lastSum = s
+      last == null || s.compareTo(last) != 0
+    }
+    // the symmetrized edge frame is internal working state — released
+    // once the rounds end (the last round's labels are materialized on
+    // their own). The returned plan reads that last round's leaf, not a
+    // cache: spark.catalog.clearCache() does not drop it; Spark's context
+    // cleaner frees its blocks once the returned plan is unreachable.
+    try Rounds.loop(nodes, "connectedComponents", maxIter, raises = true, reason = declined) {
+      summed(sym.select(col("id")).distinct().select(col("id"), col("id").as("comp")))
+    } { _ =>
       val nbrMin = sym
         .join(labels.select(col("id").as("nbr"), col("comp").as("nbrComp")), "nbr")
         .groupBy("id")
         .agg(min(col("nbrComp")).as("nmin"))
-      labels = mat(labels.join(nbrMin, Seq("id"), "left")
+      summed(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp")))
-      val nextSum = labelSum(labels)
-      converged = nextSum.compareTo(lastSum) == 0
-      lastSum = nextSum
-      iter += 1
-    }
-    // the symmetrized edge frame is internal working state — release it
-    // here (every round has already consumed it, and the last round's
-    // labels are materialized on their own). The returned plan reads
-    // that last round's local checkpoint, not a cache:
-    // spark.catalog.clearCache() does not drop it; Spark's context
-    // cleaner frees its blocks once the returned plan is unreachable.
-    sym.unpersist()
-    require(converged, s"connectedComponents did not converge within $maxIter rounds")
-    record(nodes, "connectedComponents", "distributed", iter, declined)
+    } finally sym.unpersist()
     nodes.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))

@@ -335,11 +335,13 @@ object Graph {
    * the dominant term on large graphs; below `deltaMinEdges` surviving
    * edges (or when a round sheds over a third of the graph) a round
    * censuses the shrunk graph instead, which is cheaper there. Each
-   * round's frames are
-   * materialized (the [[kCore]] plan-explosion discipline; reliable
-   * checkpoints when `checkpointDir` is set), and the driver holds one
-   * scalar per round. Peel depth, not |E|, bounds the rounds. Node ids
-   * must be long-castable (non-numeric ids raise).
+   * round's support is a plan leaf ([[Rounds.step]], the [[kCore]]
+   * plan-explosion discipline: reliable when the SparkContext has a
+   * checkpoint dir, local otherwise), written by the job that counts its
+   * surviving edges, the one scalar the driver holds per round; the
+   * surviving edges are the leaf's strong rows. Peel depth, not |E|,
+   * bounds the rounds. Node ids must be long-castable (non-numeric ids
+   * raise).
    */
   def kTruss(
       edges: DataFrame,
@@ -347,88 +349,84 @@ object Graph {
       dstCol: String,
       k: Int,
       maxIters: Int = 50,
-      checkpointDir: Option[String] = None,
       deltaMinEdges: Long = 200000L): DataFrame = {
     require(k >= 3, s"k must be >= 3 for a triangle-based truss, got $k")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val mat = materializer(edges, checkpointDir)
-    // normalize ids to LONG at the boundary: downstream the census mixes
-    // original-typed endpoints with exploded BIGINT common-neighbors
-    // (least/struct would fail analysis on string ids with a cryptic
-    // DATATYPE_MISMATCH); normalizing here makes numeric-string ids work
-    // and non-numeric ids raise longId's message, as documented
-    var cur = mat(canonical(edges, srcCol, dstCol)
-      .select(longId(col("a")).as("a"), longId(col("b")).as("b")))
-    var curCount = cur.count()
-    // full triangle census exactly once up front (the expensive step)
-    var sup = mat(edgeSupport(cur))
-    var it = 0
-    var result: DataFrame = null
-    while (result == null && it < maxIters) {
-      val strong = sup.where(col("support") >= k - 2)
+    // the surviving edges, and their count
+    var cur: DataFrame = null
+    var curCount = 0L
+    // their triangle support (a leaf), and how many of them keep >= k-2
+    var sup: DataFrame = null
+    var strongCount = 0L
+    def strong = sup.where(col("support") >= k - 2)
+    def supported(s: DataFrame): Boolean = {
+      val (leaf, n) = Rounds.step(s)(_.where(col("support") >= k - 2).count())
+      sup = leaf
+      strongCount = n
+      n < curCount
+    }
+    Rounds.loop(edges, "kTruss", maxIters, raises = true) {
+      // ids normalized to LONG at the boundary (the census mixes endpoints
+      // with exploded BIGINT common neighbors; numeric strings work, other
+      // ids raise longId's message), then made canonical: distinct long
+      // pairs with a < b, so every support row is one of the edges
+      val (c, n) = Rounds.step(canonical(
+        edges.select(longId(col(srcCol)).as("s"), longId(col(dstCol)).as("d")), "s", "d"))(_.count())
+      cur = c
+      curCount = n
+      // full triangle census exactly once up front (the expensive step)
+      supported(edgeSupport(cur))
+    } { _ =>
       // edges in no triangle never reach `sup` (inner joins inside the
-      // census): the semi-join drops them too, exactly as support
-      // 0 < k-2 requires
-      val next = mat(cur.join(strong, Seq("a", "b"), "left_semi"))
-      val nextCount = next.count()
-      val nDropped = curCount - nextCount
-      if (nDropped == 0L) result = strong // fixpoint
+      // census), so they drop too, exactly as support 0 < k-2 requires
+      val kept = strong
+      val nDropped = curCount - strongCount
+      // a census of the SHRUNK graph beats decrementing a huge frontier
+      // when a round sheds over a third of the graph (the classic 1/3 peel
+      // heuristic: every edge outside a triangle dies in round 1), and on a
+      // small surviving graph (< `deltaMinEdges`), where a census is a few
+      // fixed-latency stages and the delta path five. The delta path runs
+      // on big graphs peeling small frontiers
+      val census = nDropped * 3L > curCount || strongCount < deltaMinEdges
+      val prev = cur
+      cur = kept.select(col("a"), col("b"))
+      curCount = strongCount
+      if (census) supported(edgeSupport(cur))
       else {
-        // incremental maintenance pays off only when a census would be
-        // expensive: early rounds can shed most of the graph at once
-        // (every edge outside a triangle dies in round 1) — there a
-        // fresh census of the SHRUNK graph beats decrementing a huge
-        // frontier (the classic 1/3 peel heuristic) — and on a small
-        // surviving graph (< `deltaMinEdges`) one census is a few
-        // fixed-latency stages while the delta machinery is five, so
-        // census wins there too. Both comparisons are driver-local
-        // longs, no extra job; the delta path engages exactly where it
-        // matters, on big graphs peeling small frontiers.
-        sup = if (nDropped * 3L > curCount || nextCount < deltaMinEdges) {
-          mat(edgeSupport(next))
-        } else {
-          // triangles destroyed this round: each dropped edge (a,b)
-          // killed the triangles {a,b,c} for c in commonNbrs(a,b) of the
-          // PRE-drop graph. Adjacency lists are built ONLY for nodes
-          // touching a dropped edge (left_semi against the frontier's
-          // endpoints — AQE broadcasts it), so this stage is
-          // frontier-sized, not O(|E|). DISTINCT canonical node-triples
-          // before decrementing: a triangle losing two edges in the same
-          // round dies once, so its surviving edge loses exactly one
-          // triangle, not two. `dropped` stays lazy: both its consumers
-          // are frontier-sized jobs over two already-materialized leaves.
-          val dropped = cur.join(strong, Seq("a", "b"), "left_anti")
-          val ends = dropped.select(col("a").as("m"))
-            .unionAll(dropped.select(col("b").as("m"))).distinct()
-          val adjacency = symmetric(cur)
-            .join(ends, Seq("m"), "left_semi")
-            .groupBy("m")
-            .agg(sort_array(collect_list(longId(col("x")))).as("nbrs"))
-          val destroyed = dropped
-            .join(adjacency.select(col("m").as("a"), col("nbrs").as("na")), Seq("a"))
-            .join(adjacency.select(col("m").as("b"), col("nbrs").as("nb")), Seq("b"))
-            .select(longId(col("a")).as("ta"), longId(col("b")).as("tb"),
-              explode(graft.functions.graft_sorted_intersect(col("na"), col("nb"))).as("tc"))
-            .select(array_sort(array(col("ta"), col("tb"), col("tc"))).as("t"))
-            .distinct()
-          val lost = destroyed.select(explode(array(
-              struct(col("t")(0).as("a"), col("t")(1).as("b")),
-              struct(col("t")(0).as("a"), col("t")(2).as("b")),
-              struct(col("t")(1).as("a"), col("t")(2).as("b")))).as("e"))
-            .select(col("e.a").as("a"), col("e.b").as("b"))
-            .groupBy("a", "b").agg(count(lit(1)).as("lost"))
-          mat(strong.join(lost, Seq("a", "b"), "left")
-            .select(col("a"), col("b"),
-              (col("support") - coalesce(col("lost"), lit(0L))).as("support"))
-            .where(col("support") > 0))
-        }
-        cur = next
-        curCount = nextCount
-        it += 1
+        // triangles destroyed this round: each dropped edge (a,b) killed
+        // {a,b,c} for c in commonNbrs(a,b) of the PRE-drop graph, and the
+        // adjacency lists are built ONLY for nodes touching a dropped edge
+        // (a left_semi AQE broadcasts), so the stage is frontier-sized.
+        // DISTINCT triples before decrementing: a triangle losing two edges
+        // in one round dies once. `dropped` stays lazy: both its consumers
+        // are frontier-sized jobs over leaves.
+        val dropped = prev.join(kept, Seq("a", "b"), "left_anti")
+        val ends = dropped.select(col("a").as("m"))
+          .unionAll(dropped.select(col("b").as("m"))).distinct()
+        val adjacency = symmetric(prev)
+          .join(ends, Seq("m"), "left_semi")
+          .groupBy("m")
+          .agg(sort_array(collect_list(longId(col("x")))).as("nbrs"))
+        val destroyed = dropped
+          .join(adjacency.select(col("m").as("a"), col("nbrs").as("na")), Seq("a"))
+          .join(adjacency.select(col("m").as("b"), col("nbrs").as("nb")), Seq("b"))
+          .select(longId(col("a")).as("ta"), longId(col("b")).as("tb"),
+            explode(graft.functions.graft_sorted_intersect(col("na"), col("nb"))).as("tc"))
+          .select(array_sort(array(col("ta"), col("tb"), col("tc"))).as("t"))
+          .distinct()
+        val lost = destroyed.select(explode(array(
+            struct(col("t")(0).as("a"), col("t")(1).as("b")),
+            struct(col("t")(0).as("a"), col("t")(2).as("b")),
+            struct(col("t")(1).as("a"), col("t")(2).as("b")))).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"))
+          .groupBy("a", "b").agg(count(lit(1)).as("lost"))
+        supported(kept.join(lost, Seq("a", "b"), "left")
+          .select(col("a"), col("b"),
+            (col("support") - coalesce(col("lost"), lit(0L))).as("support"))
+          .where(col("support") > 0))
       }
     }
-    require(result != null, s"kTruss did not converge within $maxIters rounds")
-    result
+    strong
   }
 
   /** Reference implementation of [[kTruss]] that re-runs the full
@@ -484,12 +482,14 @@ object Graph {
    *
    * Scale shape: classic frontier expansion — each round joins the
    * CURRENT frontier (not the whole label set) against the symmetric
-   * adjacency, anti-joins the labels accumulated so far, and
-   * checkpoints ONLY the new frontier; the visited set stays a lazy
-   * union over the already-checkpointed frontier leaves (linear plan
-   * growth — not the 3^rounds blowup [[kCore]]'s discipline guards
-   * against). Rounds = maxDepth, each one edge-list join whose probe
-   * side only ever shrinks on expander-like graphs.
+   * adjacency, anti-joins the labels accumulated so far, and makes ONLY
+   * the new frontier a plan leaf ([[Rounds.step]]: reliable when the
+   * SparkContext has a checkpoint dir, local otherwise), written by the
+   * job that counts it; the visited set stays a lazy union over the
+   * frontier leaves (linear plan growth — not the 3^rounds blowup
+   * [[kCore]]'s discipline guards against). Rounds = maxDepth at most,
+   * each one edge-list join whose probe side only ever shrinks on
+   * expander-like graphs; an empty frontier ends the loop early.
    */
   def bfsDistances(
       edges: DataFrame,
@@ -497,65 +497,39 @@ object Graph {
       dstCol: String,
       seeds: DataFrame,
       seedCol: String,
-      maxDepth: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    val mat = materializer(edges, checkpointDir)
     val canon = canonical(edges, srcCol, dstCol)
     val seedsFrame = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("dist", lit(0))
-    // Pre-partition the adjacency once by the key of each round's dominant
-    // exchange (the [[labelPropagation]] rationale, mirrored): with a
-    // broadcastable frontier the per-round join is forced to a STATIC
-    // broadcast (checkpointed frontiers report unknown stats, so the
-    // planner would stage a sort-merge join whose ~2|E| adjacency
-    // exchange is fully written before AQE flips it — measured 21 MB
-    // dead exchange per round at sf0.1); the adjacency is partitioned by
-    // `x`, which the joined output keeps, so the neighbor DISTINCT needs
-    // no exchange either. With a frontier too big to broadcast the join
-    // legitimately sort-merges on `m`: partition by `m` so only the
-    // frontier side moves. The hint is gated on the EXACT row count of
-    // each materialized frontier (one cheap job over its checkpointed
-    // blocks, doubling as the emptiness probe) times a deliberately
-    // generous 64 bytes/row — plan estimates of narrow projections
-    // overestimate several-fold and would mis-file moderate graphs into
-    // the SMJ regime (see [[labelPropagation]]); a frontier that truly
-    // outgrows the threshold demotes the hint for all later rounds, and
-    // the adjacency is re-partitioned by `m` once, at the demotion, so
-    // the sort-merge rounds after it move only the frontier.
+    // The adjacency is partitioned by each round's dominant exchange key
+    // ([[distributedLabelPropagation]]'s rationale): by `x` while the
+    // frontier is broadcast (statically: a leaf reports unknown stats),
+    // which the joined output keeps, so the neighbor DISTINCT needs no
+    // exchange; by `m` once a frontier's EXACT row count (its leaf's job)
+    // times a generous 64 bytes outgrows the threshold, so the sort-merge
+    // rounds move only the frontier. A demotion holds for all later rounds.
     val bcThresh = broadcastThreshold(seedsFrame)
-    var lab = mat(seedsFrame)
-    var frontierRows = lab.count()
-    var hintFrontier = bcThresh > 0 && frontierRows * 64L <= bcThresh
-    var adjKey = if (hintFrontier) "x" else "m"
-    var adj = matPartitioned(mat, symmetric(canon).repartition(col(adjKey)))
-    // the visited accumulator stays a LAZY union of the per-round
-    // checkpointed frontiers: each leaf is already materialized, so
-    // re-checkpointing the whole union every round (a full copy of all
-    // labels, O(depth · |reached|) writes over the loop) bought nothing —
-    // the union plan grows linearly in rounds over leaf nodes, not
-    // exponentially (the kCore hazard this discipline guards against)
-    var labParts = Vector(lab)
-    var frontier = lab
-    var d = 1
-    while (d <= maxDepth && frontierRows > 0) {
-      if (!hintFrontier && adjKey == "x") {
-        adj = matPartitioned(mat, adj.repartition(col("m")))
-        adjKey = "m"
-      }
-      val fSide = if (hintFrontier) broadcast(frontier) else frontier
+    var hintFrontier = bcThresh > 0
+    // the frontier leaves, the last the current one; the visited set is
+    // their lazy union, whose plan grows linearly in rounds
+    var labParts = Vector.empty[DataFrame]
+    def lab = labParts.reduce(_ unionAll _)
+    def reached(f: DataFrame): Boolean = {
+      val (leaf, n) = Rounds.step(f)(_.count())
+      labParts :+= leaf
+      hintFrontier &&= n * 64L <= bcThresh
+      n > 0
+    }
+    var adjKey = ""
+    var adj = symmetric(canon)
+    Rounds.loop(edges, "bfsDistances", maxDepth, raises = false)(reached(seedsFrame)) { d =>
+      val key = if (hintFrontier) "x" else "m"
+      if (key != adjKey) { adj = matPartitioned(adj.repartition(col(key))); adjKey = key }
+      val fSide = if (hintFrontier) broadcast(labParts.last) else labParts.last
       val nbrs = fSide.join(adj, fSide("node") === adj("m"))
         .select(col("x").as("node")).distinct()
-      val fresh = mat(nbrs.join(lab, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d)))
-      // one cheap job over the just-checkpointed blocks: doubles as the
-      // emptiness probe AND the next round's broadcast-hint gate
-      frontierRows = fresh.count()
-      hintFrontier = hintFrontier && frontierRows * 64L <= bcThresh
-      labParts :+= fresh
-      lab = labParts.reduce(_ unionAll _)
-      frontier = fresh
-      d += 1
+      reached(nbrs.join(lab, Seq("node"), "left_anti").withColumn("dist", lit(d)))
     }
     lab
   }
@@ -567,17 +541,13 @@ object Graph {
     canon.select(col("a").as("m"), col("b").as("x"))
       .unionAll(canon.select(col("b").as("m"), col("a").as("x")))
 
-  /** Materialize a deliberately-partitioned frame with AQE off for that
-   *  one eager action: AQE coalesces the repartition's shuffle read and
-   *  records UnknownPartitioning on the checkpointed RDD — erasing
-   *  exactly the layout the pre-partition paid for. Without AQE the
-   *  LogicalRDD keeps its HashPartitioning, and every later consumer
-   *  (with AQE on) skips its exchange when the layout satisfies its
-   *  distribution. The action runs on a clone of the caller's session,
-   *  so the caller's own queries never see AQE off. */
-  private def matPartitioned(
-      mat: DataFrame => DataFrame, df: DataFrame): DataFrame =
-    IsolatedSession.run(df, "spark.sql.adaptive.enabled" -> "false")(mat)
+  /** A deliberately-partitioned frame as a leaf ([[Rounds.step]], written
+   *  by a count) with AQE off, on a clone of the caller's session: AQE
+   *  would coalesce the shuffle read and record UnknownPartitioning on the
+   *  checkpointed RDD. Without it the leaf keeps its HashPartitioning, and
+   *  later consumers skip their exchange when it satisfies them. */
+  private def matPartitioned(df: DataFrame): DataFrame =
+    IsolatedSession.run(df, "spark.sql.adaptive.enabled" -> "false")(Rounds.step(_)(_.count())._1)
 
   /** A graph on the driver: the node ids sorted and distinct, whether a
    *  null is among them, the edges, the seed ids (sorted, distinct,
@@ -849,9 +819,10 @@ object Graph {
    * Scale shape: each round is one degree aggregation over the current
    * edge list plus two anti-joins against the (small, shrinking) set of
    * peeled nodes — AQE broadcasts the weak side; the edge list only
-   * ever shrinks. The driver holds ONE scalar per round (the peeled
-   * count); the surviving edge set is re-cached and the parent
-   * unpersisted, so lineage stays O(1) across rounds. Synchronous
+   * ever shrinks. Each round's edge set is a plan leaf ([[Rounds.step]]:
+   * reliable when the SparkContext has a checkpoint dir, local
+   * otherwise), written by the job that caches and counts its weak nodes,
+   * the one scalar the driver holds per round. Synchronous
    * peeling converges in O(peel-depth) rounds — single digits on
    * real corpus graphs — not O(|V|).
    */
@@ -860,42 +831,36 @@ object Graph {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxIters: Int = 100,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIters: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    // each round is CHECKPOINTED, not just cached: a cached round's plan
-    // embeds the previous round's plan THREE times (both anti-join sides
-    // carry the degree pass), so plan TEXT grows ~3^rounds and the
-    // explain string Spark builds per executed query OOMs the driver by
-    // round 5 (measured; the data itself is tiny). Materialization
-    // (local by default, reliable when `checkpointDir` is set — see
-    // [[materializer]]) persists the shrinking edge set AND truncates
-    // the plan to a leaf — the standard iterative-algorithm hygiene.
-    val mat = materializer(edges, checkpointDir)
-    var cur = mat(canonical(edges, srcCol, dstCol))
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val deg = cur.select(col("a").as("node"))
-        .unionAll(cur.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      withCached(deg.where(col("deg") < k).select("node")) { weak =>
-        if (weak.count() == 0L) converged = true
-        else {
-          val next = mat(cur
-            .join(weak.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
-            .join(weak.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
-          // eager: materialized before parents drop
-          cur.unpersist(blocking = false)
-          cur = next
-          it += 1
+    // each round is a leaf, not just cached: a cached round's plan embeds
+    // the previous round's plan THREE times (both anti-join sides carry
+    // the degree pass), so plan TEXT grows ~3^rounds and the explain
+    // string Spark builds per executed query OOMs the driver by round 5
+    // (measured; the data itself is tiny)
+    var cur: DataFrame = null
+    // cached: its count and the next round's anti-joins both read it
+    var weak: DataFrame = null
+    def peeled(edgeSet: DataFrame): Boolean = {
+      val prev = weak
+      try {
+        val (leaf, n) = Rounds.step(edgeSet) { l =>
+          weak = l.select(col("a").as("node"))
+            .unionAll(l.select(col("b").as("node")))
+            .groupBy("node").agg(count(lit(1)).as("deg"))
+            .where(col("deg") < k).select("node").cache()
+          weak.count()
         }
-      }
+        cur = leaf
+        n > 0
+      } finally if (prev != null) prev.unpersist(blocking = false)
     }
-    require(converged || it < maxIters,
-      s"kCore did not converge within $maxIters rounds")
-    record(edges, "kCore", "distributed", it, "no local regime")
+    try Rounds.loop(edges, "kCore", maxIters, raises = true)(peeled(canonical(edges, srcCol, dstCol))) { _ =>
+      peeled(cur
+        .join(weak.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
+        .join(weak.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
+    } finally if (weak != null) weak.unpersist(blocking = false)
     cur.select(col("a").as("node"))
       .unionAll(cur.select(col("b").as("node")))
       .groupBy(longId(col("node")).as("node"))
@@ -1019,10 +984,11 @@ object Graph {
    * Otherwise, per round, one join of the (node, label) vector
    * (broadcast while nodes x 32 fits) against the symmetric edge list,
    * one partial-aggregable (node, label) count, one argmax aggregation
-   * and one left join back — all keyed on node. Distributed rounds
-   * materialize via [[materializer]] (localCheckpoint, or reliable
-   * `checkpoint()` when `checkpointDir` is set) so lineage stays O(1)
-   * in `rounds`.
+   * and one left join back — all keyed on node. Each distributed
+   * round's labels are a plan leaf ([[Rounds.step]]: reliable when the
+   * SparkContext has a checkpoint dir, local otherwise), written by the
+   * job that counts the labels that changed, so lineage stays O(1) in
+   * `rounds`.
    */
   def labelPropagation(
       nodes: DataFrame,
@@ -1030,40 +996,36 @@ object Graph {
       idCol: String,
       srcCol: String,
       dstCol: String,
-      rounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val mat = materializer(edges, checkpointDir)
     val idEdges = edges.select(longId(col(srcCol)).as("s"), longId(col(dstCol)).as("d"))
     val nodeIds = nodes.select(longId(col(idCol)).as("node"))
-    // The regime gate uses the EXACT node count of the just-materialized
-    // label vector (one cheap job over its blocks) times a conservative
+    // The regime gate uses the EXACT node count of the label vector (the
+    // job that writes its leaf) times a conservative
     // 32 bytes/row, not the optimizer's estimate: the plan estimate of
     // an 8-byte projection overestimates 3-5x and mis-filed the bench's
     // x10 probe (200k nodes ~ 6 MB of broadcast) into the SMJ regime,
     // putting the per-round exchanges back at exactly the scale the
     // probe measures. At true cluster scale the count is billions and
     // the gate still flips to SMJ.
-    lazy val matLabels = mat(nodeIds.distinct().withColumn("label", col("node")))
-    lazy val n = matLabels.count()
+    lazy val (labels0, n) = Rounds.step(nodeIds.distinct().withColumn("label", col("node")))(_.count())
     // Driver-local regime (the [[pageRankFp]] rationale): when nodes
     // and edges both fit, the rounds run on the driver with the same
     // rule, tie-break and early stop
     DriverLocal.gate(nodes, "labelPropagation", pin = Some(idEdges)) { t =>
-      localGraph(nodeIds, matLabels, n, idEdges, t).map { g =>
+      localGraph(nodeIds, labels0, n, idEdges, t).map { g =>
         val (labels, r) = localLabelPropagation(g.ids, g.edges, rounds)
         // a null id joins no edge and keeps its (null) label
         (g.frame(StructField("node", LongType, nullable = true), "label",
           labels.toSeq ++ (if (g.hasNull) Seq(null) else Nil)), r, g.reason)
       }
-    }(distributedLabelPropagation(mat, matLabels, n, idEdges, rounds, _))
+    }(distributedLabelPropagation(labels0, n, idEdges, rounds, _))
   }
 
-  /** [[labelPropagation]]'s Spark rounds from the materialized label
-   *  vector `labels0` (`n` nodes) over the long-id edges `idEdges`; the
+  /** [[labelPropagation]]'s Spark rounds from the label vector leaf
+   *  `labels0` (`n` nodes) over the long-id edges `idEdges`; the
    *  driver-local regime was `declined` for the reason given. */
   private def distributedLabelPropagation(
-      mat: DataFrame => DataFrame,
       labels0: DataFrame,
       n: Long,
       idEdges: DataFrame,
@@ -1086,16 +1048,11 @@ object Graph {
     //    sort-merges on `x` — partition by `x` so only the (unavoidably
     //    shuffled) label side moves each round.
     // Either way: one 2|E| exchange at setup vs one or two per round.
-    // The materialization runs with AQE off ([[matPartitioned]]) so the
-    // checkpointed RDD RECORDS the hash partitioning.
-    val canon = canonical(idEdges, "s", "d")
-    val adjKey = if (bcastRegime) "m" else "x"
-    val adj = matPartitioned(mat, symmetric(canon).repartition(col(adjKey)))
-    var matLabels = labels0
-    var labels = matLabels
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    lazy val adj = matPartitioned(symmetric(canonical(idEdges, "s", "d"))
+      .repartition(col(if (bcastRegime) "m" else "x")))
+    var labels = labels0
+    Rounds.loop(idEdges, "labelPropagation", rounds, raises = false,
+        if (bcastRegime) "broadcast" else "sort-merge", gate.fold(identity, _ => declined))(true) { _ =>
       // neighbor-label histogram: for edge (m, x), m sees x's label.
       // argmax via max_by on the (count, -label) pair — one extra hash
       // agg instead of a partitioned window's repartition + SORT; the
@@ -1111,17 +1068,11 @@ object Graph {
       val next = labels.join(bestSide, labels("node") === best("m"), "left")
         .select(labels("node"), coalesce(col("nl"), col("label")).as("label"),
           (coalesce(col("nl"), col("label")) =!= labels("label")).as("__chg"))
-      val pinned = matLabels
-      matLabels = mat(next)
-      // convergence probe reads the just-materialized round — one
-      // partial-aggregable count, no recompute
-      converged = matLabels.where(col("__chg")).limit(1).isEmpty
-      labels = matLabels.select(col("node"), col("label"))
-      pinned.unpersist(blocking = false)
-      r += 1
+      // the changed labels, counted by the job that writes the round
+      val (leaf, changed) = Rounds.step(next)(_.where(col("__chg")).count())
+      labels = leaf.select(col("node"), col("label"))
+      changed > 0
     }
-    record(idEdges, "labelPropagation", if (bcastRegime) "broadcast" else "sort-merge", r,
-      gate.fold(identity, _ => declined))
     labels
   }
 

@@ -18,14 +18,14 @@ package graft
  * (`Dedup.connectedComponents`, `IvfIndex.build`, k-means) unpersist
  * their own loop state before returning; the caches backing the
  * ''returned'' plan transfer to the caller; a [[DriverLocal]] regime's
- * local relation has none. Loops whose rounds are materialized (Graph's
- * kCore, kTruss and BFS through [[materializer]], the distributed connected
- * components' lazy local checkpoints) return a plan over the last round's
- * checkpoint instead: no cache to release, and Spark's context cleaner frees
- * a local checkpoint's blocks once the plan is unreachable. In a long-lived
- * session, release the caches after the
- * result is materialized (written / collected / no longer re-queried)
- * with either:
+ * local relation has none. The round loops of [[Rounds]] (Graph's kCore,
+ * kTruss, BFS and distributed label propagation, the distributed connected
+ * components) return a plan over the last round's leaf instead, reliable
+ * when the SparkContext has a checkpoint dir, local otherwise: no cache to
+ * release, and Spark's context cleaner frees a local checkpoint's blocks
+ * once the plan is unreachable. In a long-lived session, release the
+ * caches after the result is materialized (written / collected / no
+ * longer re-queried) with either:
  *
  *  - `spark.sharedState.cacheManager.clearCache()` — drop everything
  *    (what `graft.Verify` and `graft.Bench` do between queries), or
@@ -72,41 +72,6 @@ package object operators {
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
     }
   }
-
-  /** Per-round materialization for Graph's kCore, kTruss and BFS:
-   *  `localCheckpoint` by default — correct and cheap in a single-app
-   *  run, but its blocks live on executors, so a lost executor on a real
-   *  cluster kills the lineage-truncated frame mid-peel. When the caller
-   *  supplies `checkpointDir` (HDFS/S3-backed on a cluster), rounds use
-   *  RELIABLE `checkpoint()` instead and survive executor loss. Both
-   *  forms are eager AND truncate the plan to a leaf — the thing that
-   *  matters here, since a cached-only loop grows plan text ~3^rounds
-   *  (see [[Graph.kCore]]). */
-  private[operators] def materializer(
-      anyDf: DataFrame, checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        // NOTE: setCheckpointDir is SparkContext-global (any concurrent
-        // checkpoint user is redirected too), and Spark only deletes
-        // checkpoint files at app exit unless
-        // spark.cleaner.referenceTracking.cleanCheckpoints=true — both
-        // standard Spark checkpoint semantics, called out here because a
-        // 50-round peel writes 50 edge-set snapshots under `dir`.
-        anyDf.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => {
-          // persist first: RDD checkpointing recomputes the lineage a
-          // second time to write the files; the cache turns that second
-          // pass into a read. Unpersist after — the checkpoint files are
-          // the durable copy.
-          df.persist()
-          val out = df.checkpoint(eager = true)
-          df.unpersist(blocking = false)
-          out
-        }
-      case None =>
-        df => df.localCheckpoint(true)
-    }
-
 
   /** The gate's comparison of `what`'s `bytes` (not computed when the
    *  threshold is off) with `threshold`: Right when it fits, Left when it

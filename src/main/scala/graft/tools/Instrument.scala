@@ -16,13 +16,27 @@ case class OpRecord(op: String, regime: String, rounds: Int, reason: String)
     s""""reason":"${reason.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
 }
 
-/** One completed stage: its first name line, tasks, wall ms and shuffle bytes. */
-case class StageRow(id: Int, name: String, tasks: Int, ms: Long, shuffleRead: Long, shuffleWrite: Long)
+/** One completed stage: its first name line, tasks, wall ms, shuffle
+ *  bytes, and the round of the job that ran it (see [[Snapshot.jobOps]]). */
+case class StageRow(id: Int, name: String, tasks: Int, ms: Long, shuffleRead: Long, shuffleWrite: Long, op: String)
 
-/** What an [[Instrument]] counted since its last reset. */
-case class Snapshot(jobs: Long = 0, stages: Seq[StageRow] = Vector.empty, tasks: Long = 0,
+/** One op round's share of a [[Snapshot]]: its jobs, their stages and shuffle bytes. */
+case class RoundRow(op: String, jobs: Int, stages: Int, shuffleRead: Long, shuffleWrite: Long)
+
+/** What an [[Instrument]] counted since its last reset. `jobOps` holds
+ *  each job's `graft.op` local property, `<op>#<round>` for a job of an
+ *  operator's round loop ([[graft.operators.Rounds]]), "" for any other. */
+case class Snapshot(jobOps: Seq[String] = Vector.empty, stages: Seq[StageRow] = Vector.empty, tasks: Long = 0,
     shuffleRead: Long = 0, shuffleWrite: Long = 0, ops: Seq[OpRecord] = Vector.empty,
     batches: Seq[StreamingQueryProgress] = Vector.empty) {
+  def jobs: Long = jobOps.size
+
+  /** One row per op round, in the order their first jobs started. */
+  def rounds: Seq[RoundRow] = jobOps.filter(_.nonEmpty).distinct.map { op =>
+    val mine = stages.filter(_.op == op)
+    RoundRow(op, jobOps.count(_ == op), mine.size, mine.map(_.shuffleRead).sum, mine.map(_.shuffleWrite).sum)
+  }
+
   def json: String = s"""{"jobs":$jobs,"stages":${stages.size},"tasks":$tasks,""" +
     s""""shuf_read":$shuffleRead,"shuf_write":$shuffleWrite,"ops":[${ops.map(_.json).mkString(",")}]}"""
 }
@@ -33,23 +47,31 @@ case class Snapshot(jobs: Long = 0, stages: Seq[StageRow] = Vector.empty, tasks:
  * streaming queries' micro-batch progress. It listens on `spark`'s
  * context from construction until [[close]]. Listener events arrive
  * asynchronously, so [[reset]] and [[snapshot]] drain the bus first: the
- * counts then describe exactly the work in between. `graft.Bench`,
- * `graft.tools.Profile` and the tests measure through it.
+ * counts then describe exactly the work in between. Each stage is
+ * attributed to the `graft.op` of the first job that listed it.
+ * `graft.Bench`, `graft.tools.Profile` and the tests measure through it.
  */
 final class Instrument(spark: SparkSession) extends SparkListener {
   private var counts = Snapshot()
+  // stage id -> the graft.op of the first job that listed it
+  private var stageOps = Map.empty[Int, String]
 
   private def add(f: Snapshot => Snapshot): Unit = synchronized { counts = f(counts) }
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = add(c => c.copy(jobs = c.jobs + 1))
+  override def onJobStart(e: SparkListenerJobStart): Unit = add { c =>
+    val op = Option(e.properties).flatMap(p => Option(p.getProperty(graft.operators.Rounds.OpProperty)))
+      .getOrElse("")
+    stageOps ++= e.stageIds.filterNot(stageOps.contains).map(_ -> op)
+    c.copy(jobOps = c.jobOps :+ op)
+  }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
     val ms = si.submissionTime.flatMap(t => si.completionTime.map(_ - t)).getOrElse(-1L)
     val m = Option(si.taskMetrics)
-    val row = StageRow(si.stageId, si.name.linesIterator.nextOption().getOrElse(""), si.numTasks,
-      ms, m.fold(0L)(_.shuffleReadMetrics.totalBytesRead), m.fold(0L)(_.shuffleWriteMetrics.bytesWritten))
-    add(c => c.copy(stages = c.stages :+ row))
+    add(c => c.copy(stages = c.stages :+ StageRow(si.stageId, si.name.linesIterator.nextOption().getOrElse(""),
+      si.numTasks, ms, m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
+      m.fold(0L)(_.shuffleWriteMetrics.bytesWritten), stageOps.getOrElse(si.stageId, ""))))
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -68,7 +90,7 @@ final class Instrument(spark: SparkSession) extends SparkListener {
   /** Drains the bus, then zeroes every count. */
   def reset(): Unit = {
     ListenerBusAccess.drain(spark.sparkContext)
-    synchronized { counts = Snapshot() }
+    synchronized { counts = Snapshot(); stageOps = Map.empty }
   }
 
   /** Drains the bus, then returns what was counted since the last reset. */

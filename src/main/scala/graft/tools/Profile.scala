@@ -7,7 +7,9 @@ import graft.SparkEntry
  * bench's noop-sink methodology and report, per query, the wall time of
  * the [[Instrument]] pass `graft.Bench` times after its warm run, plus
  * the job/stage/task counts and total shuffle read/write bytes that pass
- * generated, then one line per op record the operators posted. The
+ * generated, then one line per op record the operators posted and one
+ * per round of an operator's round loop (its jobs, stages and shuffle
+ * bytes, from the `graft.op` local property of each job). The
  * per-query fixed cost at bench scale is (jobs x job latency) +
  * (exchanges x shuffle setup), so these counters say WHERE a second goes
  * before any rewrite is chosen (guide section 1: measure first).
@@ -46,6 +48,8 @@ object Profile {
             f"shufR=${r.shuffleRead / 1e6}%8.2f MB shufW=${r.shuffleWrite / 1e6}%8.2f MB ${r.name}")
         }
         snap.ops.foreach(r => println(s"  [op ${r.op}] ${r.regime}, ${r.rounds} rounds: ${r.reason}"))
+        snap.rounds.foreach(r => println(f"  [round ${r.op}] jobs=${r.jobs}%3d stages=${r.stages}%3d " +
+          f"shufR=${r.shuffleRead / 1e6}%8.2f MB shufW=${r.shuffleWrite / 1e6}%8.2f MB"))
         // per micro-batch of a streaming query: durationMs separates
         // driver-side planning / offset-log / state-commit / addBatch
         // time, the fixed costs of a bounded replay, from batch compute

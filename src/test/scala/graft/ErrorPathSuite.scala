@@ -278,4 +278,20 @@ class ErrorPathSuite extends AnyFunSuite with GraftSparkSession {
     assert(graft.operators.Dedup.connectedComponents(nodes, chain, "id", maxIter = 1)
       .collect().map(_.getLong(1)).toSet === Set(1L))
   }
+
+  test("kCore and kTruss raise when the peel outlasts maxIters, and return when it ends within it") {
+    import spark.implicits._
+    import graft.operators.Graph
+    // a 10-node path peels two ends a round: 5 rounds to the empty 2-core
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e1 = intercept[IllegalArgumentException](Graph.kCore(path, "src", "dst", k = 2, maxIters = 1))
+    assert(e1.getMessage.contains("kCore did not converge within 1 rounds"), e1.getMessage)
+    assert(Graph.kCore(path, "src", "dst", k = 2, maxIters = 5).count() === 0L)
+    // a triangle strip: the 4-truss drops every (i, i+2) edge and both end
+    // edges in round 1, and the rest, in no triangle then, in round 2
+    val strip = ((0L until 7L).map(i => (i, i + 1)) ++ (0L until 6L).map(i => (i, i + 2))).toDF("src", "dst")
+    val e2 = intercept[IllegalArgumentException](Graph.kTruss(strip, "src", "dst", k = 4, maxIters = 1))
+    assert(e2.getMessage.contains("kTruss did not converge within 1 rounds"), e2.getMessage)
+    assert(Graph.kTruss(strip, "src", "dst", k = 4, maxIters = 2).count() === 0L)
+  }
 }

@@ -268,6 +268,35 @@ class GraphRegimeSuite extends AnyFunSuite with GraftSparkSession with AdaptiveS
       Seq(("connectedComponents", "distributed", "threshold off"))))
   }
 
+  test("kTruss and bfsDistances post one record each") {
+    import spark.implicits._
+    // K4 plus a tail 3-4-5: the 4-truss drops the tail in one round, and
+    // BFS from 0 reaches the tail's end in round 3 and stops in round 4
+    val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
+    val g = (k4 ++ Seq((3L, 4L), (4L, 5L))).toDF("s", "t")
+    val (_, truss) = instrumented(Graph.kTruss(g, "s", "t", k = 4).collect())
+    assert(truss.ops.map(r => (r.op, r.regime, r.rounds, r.reason)) ===
+      Seq(("kTruss", "distributed", 1, "no local regime")))
+    val (_, bfs) = instrumented(Graph.bfsDistances(g, "s", "t", Seq(0L).toDF("id"), "id", maxDepth = 5).collect())
+    assert(bfs.ops.map(r => (r.op, r.regime, r.rounds, r.reason)) ===
+      Seq(("bfsDistances", "distributed", 4, "no local regime")))
+  }
+
+  test("kCore's jobs add up over its per-round rows, and the caller's graft.op is restored") {
+    import spark.implicits._
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    sc.setLocalProperty(graft.operators.Rounds.OpProperty, "caller")
+    try {
+      val (_, snap) = withSQLConf(Threshold -> "-1")(instrumented(Graph.kCore(path, "src", "dst", k = 2)))
+      assert(sc.getLocalProperty(graft.operators.Rounds.OpProperty) === "caller")
+      // the setup is round 0; five peel rounds follow
+      assert(snap.rounds.map(_.op) === (0 to 5).map(r => s"kCore#$r"))
+      assert(snap.rounds.map(_.jobs).sum === snap.jobs)
+      assert(snap.rounds.map(_.stages).sum === snap.stages.size)
+    } finally sc.setLocalProperty(graft.operators.Rounds.OpProperty, null)
+  }
+
   test("labelPropagation: non-numeric ids still raise in the local regime") {
     import spark.implicits._
     val nodes = Seq("docA", "docB").toDF("id")

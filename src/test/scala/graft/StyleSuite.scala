@@ -27,7 +27,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * `GraftSparkSession.withTempDir`, which deletes them afterwards. No
  * `@volatile` field holds diagnostics or caches in `src/main/scala`, and
  * `graft.tools.Instrument` is its one `SparkListener`: Spark work is
- * counted, and decisions recorded, in one place.
+ * counted, and decisions recorded, in one place. No operator sets the
+ * SparkContext's checkpoint dir, which every session on it shares.
  */
 class StyleSuite extends AnyFunSuite {
 
@@ -134,6 +135,13 @@ class StyleSuite extends AnyFunSuite {
       case (l, i) if l.matches(""".*\bconf\.(set|unset)\w*\(.*""") &&
         !(rel.endsWith("graft/SparkEntry.scala") && l.trim == timezonePin) =>
         s"$p:${i + 1}: session conf write"
+    }
+  }
+
+  check("no setCheckpointDir under src/main/scala") { (p, lines) =>
+    if (!p.toString.replace('\\', '/').startsWith("src/main/scala")) Nil
+    else lines.zipWithIndex.collect {
+      case (l, i) if l.contains("setCheckpointDir") => s"$p:${i + 1}: SparkContext-global checkpoint dir write"
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -535,24 +537,44 @@ class TokenizerPrivacySuite extends AnyFunSuite with GraftSparkSession {
   }
 
   test("iterative graph ops accept a reliable checkpoint dir (cluster hardening)") {
+    // the SparkContext's dir, when set, makes every round loop write reliable
+    // checkpoints under it; with none set the rounds are local
     import spark.implicits._
+    val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
+    val g = (k4 ++ Seq((3L, 4L), (4L, 5L))).toDF("s", "t")
+    val nodes = (0L to 5L).toDF("id")
+    val pairs = g.select(col("s").as("id_a"), col("t").as("id_b"))
+    // the distributed regimes of label propagation and components
+    def answers(): Seq[Any] = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Seq(
+        graft.operators.Graph.kCore(g, "s", "t", k = 3).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        graft.operators.Graph.kTruss(g, "s", "t", k = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        graft.operators.Graph.bfsDistances(g, "s", "t", Seq(0L).toDF("seed"), "seed", maxDepth = 2)
+          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap,
+        graft.operators.Graph.labelPropagation(nodes, g, "id", "s", "t", rounds = 3)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        Dedup.connectedComponents(nodes, pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
+    def files(dir: String): Set[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(root.relativize(_).toString).toSet
+      finally walk.close()
+    }
     withTempDir("graft-ckpt") { dir =>
-      val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
-      val g = (k4 ++ Seq((3L, 4L), (4L, 5L))).toDF("s", "t")
-      val core = graft.operators.Graph.kCore(g, "s", "t", k = 3,
-        checkpointDir = Some(dir))
-      assert(core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        === Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
-      val truss = graft.operators.Graph.kTruss(g, "s", "t", k = 4,
-        checkpointDir = Some(dir))
-      assert(truss.count() === k4.size.toLong)
-      val bfs = graft.operators.Graph.bfsDistances(g, "s", "t",
-        Seq(0L).toDF("seed"), "seed", maxDepth = 2, checkpointDir = Some(dir))
-      assert(bfs.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-        === Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 1, 4L -> 2))
-      // the reliable checkpoints actually landed on disk
-      assert(new java.io.File(dir).listFiles() != null &&
-        new java.io.File(dir).listFiles().nonEmpty)
+      val reliable = org.apache.spark.sql.graft.CheckpointDirs.withCheckpointDir(spark.sparkContext, dir)(answers())
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      assert(reliable.take(3) === Seq(
+        Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L),
+        k4.toSet,
+        Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 1, 4L -> 2)))
+      assert(reliable(4) === (0L to 5L).map(_ -> 0L).toMap)
+      // the reliable checkpoints landed under the dir
+      val written = files(dir)
+      assert(written.nonEmpty)
+      // with no dir set the rounds are local: the same answers, nothing written
+      assert(answers() === reliable)
+      assert(files(dir) === written)
     }
   }
 
@@ -584,5 +606,9 @@ class TokenizerPrivacySuite extends AnyFunSuite with GraftSparkSession {
     val numStr = Seq(("1", "2"), ("2", "3"), ("1", "3")).toDF("s", "t")
     assert(graft.operators.Graph.kTruss(numStr, "s", "t", k = 3)
       .collect().map(_.getLong(2)).toSeq === Seq(1L, 1L, 1L))
+    // ordered as longs, not as strings ("10" < "8" < "9")
+    val unordered = Seq(("8", "9"), ("9", "10"), ("8", "10")).toDF("s", "t")
+    assert(graft.operators.Graph.kTruss(unordered, "s", "t", k = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((8L, 9L), (9L, 10L), (8L, 10L)))
   }
 }
